@@ -354,13 +354,18 @@ def run(argv: list[str], engine, out=None) -> int:
         engine.optimize()
         return 0
     if args.cmd == "query":
-        rows = engine.query_documents(
-            args.text,
-            limit=args.limit,
-            scope=args.scope,
-            max_distance=args.max_distance,
-            grouping=args.grouping,
-        ).collect()
+        from .plans.cache import persist_scope
+
+        # unpersist the query's bounded intermediates once collected, as
+        # the MCP server does per request
+        with persist_scope():
+            rows = engine.query_documents(
+                args.text,
+                limit=args.limit,
+                scope=args.scope,
+                max_distance=args.max_distance,
+                grouping=args.grouping,
+            ).collect()
         emit({"results": [r.asDict() for r in rows]})
         return 0
     if args.cmd == "list":

@@ -36,19 +36,18 @@ from __future__ import annotations
 
 import math
 import os
-from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 
 from ..embedder import embed_query
 from ..plans.raw_data import path_to_source
-from .vector_serve import SCORE_DECIMALS, VectorSearchServer, _exact_round
-
-K1 = 1.2
-B = 0.75
-CANDIDATE_MULTIPLIER = 2
-GROUPING_STD_MULTIPLIER = 1.5
-DEFAULT_HYBRID_WEIGHT = 0.6
+from .bm25 import B, K1
+from .search import (
+    CANDIDATE_MULTIPLIER,
+    DEFAULT_HYBRID_WEIGHT,
+    GROUPING_STD_MULTIPLIER,
+)
+from .vector_serve import VectorSearchServer, _exact_round
 
 
 class HybridSearchServer:

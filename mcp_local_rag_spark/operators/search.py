@@ -27,12 +27,12 @@ from pyspark.sql import functions as F
 from ..functions.paths import scope_predicate
 from ..plans.cache import persisted
 from ..functions.vector import dot_distance, vec_lit
+from .vector_serve import SCORE_DECIMALS
 
 # reference constants
 CANDIDATE_MULTIPLIER = 2  # src/vectordb/types.ts:10
 DEFAULT_HYBRID_WEIGHT = 0.6  # src/vectordb/types.ts:19
 GROUPING_STD_MULTIPLIER = 1.5  # src/vectordb/search-filters.ts:10
-SCORE_DECIMALS = 6
 
 
 def _rounded(col: Column) -> Column:

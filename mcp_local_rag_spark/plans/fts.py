@@ -102,13 +102,14 @@ def index_has_data(path: str) -> bool:
     Distinguishes 'genuinely empty index' (fresh, or every document
     deleted — only meta/_SUCCESS remain, a schemaless dir Spark cannot
     read) from a populated one, WITHOUT a Spark call and without
-    swallowing real read errors as emptiness."""
+    swallowing real read errors as emptiness. Stops at the first data
+    file: it gates every sidecar-served query (``index_is_fresh``)."""
     import glob
 
-    return bool(
-        glob.glob(os.path.join(path, "bucket=*", "*.parquet"))
-        or glob.glob(os.path.join(path, "*.parquet"))
-    )
+    for pattern in ("bucket=*/*.parquet", "*.parquet"):
+        if next(glob.iglob(os.path.join(path, pattern)), None) is not None:
+            return True
+    return False
 
 
 def _aggregate_fts_stats(spark: SparkSession, path: str) -> dict | None:

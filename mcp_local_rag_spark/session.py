@@ -35,12 +35,34 @@ def get_spark(app_name: str = "mcp-local-rag-spark") -> SparkSession:
         # collect+rebroadcast, ~7x slower end-to-end). Small dims still
         # broadcast; operators place explicit broadcast() hints where the
         # cluster plan needs them.
+        # List the bucketed tables (chunks, postings, term postings: one
+        # bucket=N dir per populated bucket, 64 by default) on the driver.
+        # Above this many subdirectories Spark lists with a distributed job,
+        # and it lists again on every read, so at the default of 32 every
+        # chunks()/_postings() read paid a job with one task per bucket dir.
+        # Measured on local disk (local[4], one file per dir): driver
+        # listing 22 ms at 64 dirs, 63 ms at 1024, 363 ms at 4096; the job
+        # 372 ms, 3.6 s, 14 s. There is no crossover on a local filesystem;
+        # the job can only pay off where listing a directory is a remote
+        # round trip, i.e. for cluster-sized tables such as plans/ingest's
+        # 2048-bucket 100 TB layout, which stay above this threshold. Safe:
+        # the file set is still listed on every read, so no query sees a
+        # stale one.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # The engine's candidate windows are bounded on purpose (top-k rows),
+    # so WindowExec's "No Partition Defined" warning is known-benign spam;
+    # every other WARN line stays.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.window.WindowExec",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     return spark
 
 

@@ -59,6 +59,27 @@ def test_cli_surface_end_to_end(spark, tmp_path):
     assert status3["documentCount"] == 1
 
 
+def test_cli_query_leaves_no_persisted_frames(spark, tmp_path):
+    """The query command unpersists its own intermediates, as the MCP
+    server's per-request persist_scope does."""
+    d = tmp_path / "docs"
+    d.mkdir()
+    (d / "a.md").write_text(DOC)
+    eng = RagEngine(spark, str(tmp_path / "chunks_cli_persist"))
+    _run(eng, "ingest", str(d))
+
+    def persisted_ids():
+        # ids, not a count: the context cleaner may drop other tests'
+        # unreferenced caches meanwhile
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted_ids()
+    for _ in range(2):
+        (res,) = _run(eng, "query", "broadcast joins", "--limit", "3")
+        assert res["results"]
+    assert persisted_ids() <= before
+
+
 def test_cli_ann_build(spark, tmp_path):
     d = tmp_path / "docs"
     d.mkdir()

@@ -387,3 +387,30 @@ def test_refresh_deleting_last_document(spark, tmp_path):
     assert glob.glob(f"{path}/bucket=*") == []
     stats = read_fts_stats(path)
     assert stats["n"] == 0 and stats["total_dl"] == 0 and stats["avgdl"] == 0.0
+
+
+def test_index_has_data_cases(tmp_path):
+    """Only a parquet data file, in a bucket dir or at the root, counts as
+    data; metadata files and empty bucket dirs do not."""
+    from mcp_local_rag_spark.plans.fts import index_has_data
+
+    meta_only = tmp_path / "meta_only"
+    meta_only.mkdir()
+    (meta_only / "_table_meta.json").write_text("{}")
+    (meta_only / "_SUCCESS").write_text("")
+    assert not index_has_data(str(meta_only))
+
+    empty_bucket = tmp_path / "empty_bucket"
+    (empty_bucket / "bucket=3").mkdir(parents=True)
+    assert not index_has_data(str(empty_bucket))
+
+    bucketed = tmp_path / "bucketed"
+    (bucketed / "bucket=0").mkdir(parents=True)
+    (bucketed / "bucket=1").mkdir()
+    (bucketed / "bucket=1" / "part-0.parquet").write_bytes(b"")
+    assert index_has_data(str(bucketed))
+
+    flat = tmp_path / "flat"
+    flat.mkdir()
+    (flat / "part-0.parquet").write_bytes(b"")
+    assert index_has_data(str(flat))
