@@ -26,10 +26,12 @@ def entry(spark: SparkSession) -> DataFrame:
     The steady-state INDEXED hybrid pipeline: persisted chunks table +
     persisted BM25 postings index with table-property corpus statistics
     (the reference's production shape — queries hit LanceDB's maintained
-    FTS index, src/vectordb/index.ts:243-324). Per-query cost carries no
-    full-corpus stats aggregate and is nearly scale-flat (BENCH_SF1:
-    1.11x time for 10x data); the index-free twin stays available as
-    ``queries()['hybrid_search']`` for the ad-hoc no-index shape."""
+    FTS index, src/vectordb/index.ts:243-324). Spark runs the vector
+    top-k and one pruned postings aggregate, with no full-corpus stats
+    aggregate; the driver reranks the candidates, so the frame returned
+    here is a LocalRelation of the answer rows. The index-free twin
+    stays available as ``queries()['hybrid_search']`` for the ad-hoc
+    no-index shape."""
     from mcp_local_rag_spark.queries.rag import q_hybrid_search_indexed
 
     return q_hybrid_search_indexed(spark, "/root/testdata/sf0.001")

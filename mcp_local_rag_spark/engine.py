@@ -1596,10 +1596,13 @@ class RagEngine:
     def keyword_search(self, query_text: str, *, limit: int = 10) -> DataFrame:
         postings = self._postings()
         stats = self._fts_stats() if postings is not None else None
-        if postings is None:
+        # only the per-query build is worth caching: the maintained index
+        # is a pruned parquet scan, and a persist of it is never released
+        built = postings is None
+        if built:
             postings = build_postings(self.chunks(), tokenizer="unigram")
         terms = _query_terms(query_text)
-        scores = bm25_scores(postings, terms, stats=stats)
+        scores = bm25_scores(postings, terms, stats=stats, materialize=built)
         return (
             scores.orderBy(F.col("_score").desc(), "filePath", "chunkIndex")
             .limit(max(1, min(20, limit)))

@@ -15,6 +15,7 @@ Formula (Lucene/Okapi as used by Lance's FTS, k1=1.2 b=0.75):
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
@@ -115,6 +116,39 @@ def bm25_term_score(
         * (tf_col * (k1 + 1))
         / (tf_col + k1 * (1 - b + b * dl_col / avgdl_col))
     )
+
+
+def bm25_sum(
+    terms: Sequence[str],
+    term_hits: dict,
+    n: int,
+    avgdl: float,
+    keys,
+    *,
+    k1: float = K1,
+    b: float = B,
+) -> dict:
+    """``bm25_term_score`` on the driver, summed per document in
+    sorted-term order: ``{key: score}`` for the ``keys`` with >= 1 hit.
+
+    ``term_hits`` maps a term to ``(df, {key: (tf, dl)})`` — df over the
+    whole corpus, the hits covering at least ``keys``. The arithmetic
+    follows the column expression operation for operation (same idf
+    floor), with glibc ``math.log`` in place of the JVM's StrictMath."""
+    scores: dict = {}
+    for t in sorted(set(terms)):
+        df, hits = term_hits.get(t, (0, {}))
+        if df == 0:
+            continue
+        idf = math.log(max(1.0, 1.0 + (n - df + 0.5) / (df + 0.5)))
+        for key in keys:
+            hit = hits.get(key)
+            if hit is None:
+                continue
+            tf, dl = hit
+            s = idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))
+            scores[key] = scores.get(key, 0.0) + s
+    return scores
 
 
 def bm25_scores(
@@ -278,6 +312,27 @@ def bm25_scores_ngram_scan(
     return d.filter(any_match).select(*id_cols, score.alias("_score"))
 
 
+def _scan_tokens(text_col: str):
+    """The index-free scorers' unigram tokenizer (build_postings' split)."""
+    return F.array_remove(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), "")
+
+
+def _term_freq(toks, term: str):
+    # codegen-friendly tf, no lambda HOF: tokens minus tokens-without-term
+    return F.size(toks) - F.size(F.array_remove(toks, term))
+
+
+def scan_tf_dl(terms: Sequence[str], text_col: str = "text") -> list:
+    """``_dl`` and ``_tf{i}`` (one per term, in order) of a row's own
+    text: the tokenizer and tf the index-free scorer uses, as columns a
+    caller can project onto a bounded row set (hybrid_search folds them
+    into the top-k's projection)."""
+    toks = _scan_tokens(text_col)
+    return [F.size(toks).alias("_dl")] + [
+        _term_freq(toks, t).alias(f"_tf{i}") for i, t in enumerate(terms)
+    ]
+
+
 def corpus_stats_scan(
     chunks: DataFrame,
     terms: Sequence[str],
@@ -295,7 +350,7 @@ def corpus_stats_scan(
     Zero-token docs are excluded, matching the postings path.
     """
     terms = list(dict.fromkeys(terms))
-    toks = F.array_remove(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), "")
+    toks = _scan_tokens(text_col)
     d = chunks.select(toks.alias("_toks")).filter(F.size("_toks") > 0)
     row = d.agg(
         F.count("*").alias("n"),
@@ -357,20 +412,12 @@ def bm25_scores_scan(
         return src.select(
             *id_cols, F.lit(None).cast("double").alias("_score")
         ).limit(0)
-    toks = F.array_remove(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), "")
-
-    if candidates is not None and text_col in candidates.columns:
-        # the candidate rows already carry their text (hybrid_search's
-        # persisted <=2k top-k set): tokenize THEM instead of re-scanning
-        # the corpus and semi-joining — same values, one less full scan
-        cand = candidates.select(*id_cols, toks.alias("_toks"))
-    else:
-        d = chunks.select(*id_cols, toks.alias("_toks"))
-        cand = d
-        if candidates is not None:
-            cand = d.join(
-                F.broadcast(candidates.select(*id_cols)), list(id_cols), "left_semi"
-            )
+    toks = _scan_tokens(text_col)
+    cand = chunks.select(*id_cols, toks.alias("_toks"))
+    if candidates is not None:
+        cand = cand.join(
+            F.broadcast(candidates.select(*id_cols)), list(id_cols), "left_semi"
+        )
     cand = cand.withColumn("_dl", F.size("_toks"))
 
     if stats is not None:
@@ -413,7 +460,7 @@ def bm25_scores_scan(
         # stats with df > n would otherwise drive it <= 0 and a NULL term
         # score would silently null the document's whole _score
         idf = F.log(F.greatest(F.lit(1.0), F.lit(1.0) + (n_col - df + 0.5) / (df + 0.5)))
-        tf = F.size("_toks") - F.size(F.array_remove("_toks", t))
+        tf = _term_freq(F.col("_toks"), t)
         score = score + F.when(
             df > 0,
             idf

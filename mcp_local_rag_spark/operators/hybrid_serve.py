@@ -12,19 +12,11 @@ the boost formula, the per-file filter, the final top-k — all in-process.
 
 PARITY IS THE CONTRACT: results are row-identical to
 ``RagEngine.query_documents`` at the same settings (pinned by
-tests/test_hybrid_serve.py). The stage-by-stage float discipline that
-makes that hold:
-
-  * vector stage — VectorSearchServer (decimal HALF_UP at 6, shared
-    total order);
-  * grouping stats — gap mean accumulated SEQUENTIALLY in window order
-    and stddev_pop via the same Welford recurrence Spark's
-    CentralMomentAgg runs (numpy pairwise summation would diverge by
-    ulps and flip boundary decisions);
-  * BM25 — the bm25_term_score formula verbatim (idf floored at 1.0),
-    per-doc term sum in sorted-term order;
-  * boost — round(score / (1 + kw_norm * weight), 6) through decimal
-    HALF_UP, like every persisted score in the engine.
+tests/test_hybrid_serve.py). The vector stage is VectorSearchServer
+(decimal HALF_UP at 6, shared total order); steps 5-8 are the driver tail
+``search.hybrid_search`` itself reranks with (``group_candidates``,
+``bm25.bm25_sum``, ``boost_rows``, ``file_cut``, ``top_rows``), so only
+the candidate and postings sources differ between the two paths.
 
 Maintenance contract: ``invalidate()`` after ingest/delete/optimize,
 same as the other sidecars. Serving correctness requires a FRESH index
@@ -34,20 +26,20 @@ a serving tier swaps snapshots only after optimize()).
 
 from __future__ import annotations
 
-import math
 import os
-
-import numpy as np
 
 from ..embedder import embed_query
 from ..plans.raw_data import path_to_source
-from .bm25 import B, K1
+from .bm25 import bm25_sum
 from .search import (
     CANDIDATE_MULTIPLIER,
     DEFAULT_HYBRID_WEIGHT,
-    GROUPING_STD_MULTIPLIER,
+    boost_rows,
+    file_cut,
+    group_candidates,
+    top_rows,
 )
-from .vector_serve import VectorSearchServer, _exact_round
+from .vector_serve import VectorSearchServer
 
 
 class HybridSearchServer:
@@ -257,36 +249,14 @@ class HybridSearchServer:
             scope=scope, max_distance=max_distance,
             at_version=at_version,
         )
-        # step 5: relevance-gap grouping on the raw candidate set
-        cands = _grouping_filter(cands, grouping)
-        # step 6: BM25 over the persisted postings, restricted to candidates
+        # steps 5-8: the shared driver tail — grouping on the raw
+        # candidates, BM25 over the persisted postings restricted to them,
+        # boost, top-N files by best chunk, final top-k
+        cands = group_candidates(cands, grouping)
         kw = self._bm25(terms, {(r["filePath"], r["chunkIndex"]) for r in cands})
-        # step 7: boost = distance / (1 + kw_norm * weight)
-        mx = max(kw.values(), default=0.0)
-        boosted = []
-        for r in cands:
-            kw_norm = (kw.get((r["filePath"], r["chunkIndex"]), 0.0) / mx) if mx > 0 else 0.0
-            boosted.append(
-                {
-                    **r,
-                    "score": _exact_round(r["score"] / (1.0 + kw_norm * hybrid_weight)),
-                }
-            )
-        # step 8: top-N files by best chunk, then final top-k
-        if max_files is not None:
-            best: dict[str, float] = {}
-            for r in boosted:
-                s = best.get(r["filePath"])
-                best[r["filePath"]] = r["score"] if s is None else min(s, r["score"])
-            keep = {
-                p
-                for p, _ in sorted(best.items(), key=lambda kv: (kv[1], kv[0]))[
-                    :max_files
-                ]
-            }
-            boosted = [r for r in boosted if r["filePath"] in keep]
-        boosted.sort(key=lambda r: (r["score"], r["filePath"], r["chunkIndex"]))
-        out = boosted[:limit]
+        out = top_rows(
+            file_cut(boost_rows(cands, kw, hybrid_weight), max_files), limit
+        )
         # step 9: response shaping — payload columns + raw-data source
         payload = self._load_payload()
         rows = []
@@ -331,11 +301,11 @@ class HybridSearchServer:
     def _bm25(
         self, terms: list[str], candidates: set[tuple[str, int]]
     ) -> dict[tuple[str, int], float]:
-        cache = self._term_cache  # local snapshot ref (see __init__)
         """bm25_scores over the persisted index: per-term pyarrow reads
         (term-sorted row groups prune), df from ALL matched rows (global
         term weights — candidate restriction must not change them),
-        scoring summed per doc in sorted-term order."""
+        scored by ``bm25_sum``."""
+        cache = self._term_cache  # local snapshot ref (see __init__)
         terms = sorted(dict.fromkeys(terms))
         if not terms or not candidates:
             return {}
@@ -375,9 +345,9 @@ class HybridSearchServer:
             fetched = tbl.to_pandas()
             if len(cache) + len(missing) > self.MAX_CACHED_TERMS:
                 # evict, but seed the replacement with THIS query's hit
-                # terms — the scoring loop below reads cache[t] for every
-                # query term, so dropping a term that was a hit this
-                # query would KeyError once >MAX_CACHED_TERMS distinct
+                # terms — bm25_sum below reads cache[t] for every query
+                # term, so dropping a term that was a hit this query
+                # would score it as absent once >MAX_CACHED_TERMS distinct
                 # terms accumulate and a query mixes cached + new terms
                 cache = {t: cache[t] for t in terms if t in cache}
                 self._term_cache = cache
@@ -399,62 +369,4 @@ class HybridSearchServer:
                             )
                         },
                     )
-        # score candidates term by term in sorted-term order (the
-        # documented per-doc sum order)
-        scores: dict[tuple[str, int], float] = {}
-        for t in terms:
-            df_count, rows = cache[t]
-            if df_count == 0:
-                continue
-            idf = math.log(max(1.0, 1.0 + (n - df_count + 0.5) / (df_count + 0.5)))
-            for key in candidates:
-                hit = rows.get(key)
-                if hit is None:
-                    continue
-                tf_, dl_ = hit
-                s = idf * (tf_ * (K1 + 1)) / (
-                    tf_ + K1 * (1 - B + B * dl_ / avgdl)
-                )
-                scores[key] = scores.get(key, 0.0) + s
-        return scores
-
-
-def _grouping_filter(cands: list[dict], mode: str | None) -> list[dict]:
-    """operators/search.grouping_filter re-expressed over the in-memory
-    candidate list, with Spark's exact float behavior: sequential mean in
-    window order and the Welford/CentralMomentAgg stddev_pop recurrence."""
-    if mode is None or len(cands) == 0:
-        return cands
-    cuts = {"similar": 1, "related": 2}[mode]
-    # cands arrive already in (score, filePath, chunkIndex) order
-    gaps = [
-        cands[i + 1]["score"] - cands[i]["score"] for i in range(len(cands) - 1)
-    ]
-    if not gaps:
-        return cands
-    # TWO distinct float recurrences, matching Spark's two aggregates:
-    # F.mean is Average = sequential sum / count, while F.stddev_pop is
-    # CentralMomentAgg's Welford recurrence (n += 1; delta = x - mean;
-    # mean += delta / n; m2 += delta * (x - mean)) whose internal mean is
-    # NOT the Average — conflating them drifts by ulps and can flip a
-    # boundary decision.
-    total = 0.0
-    cnt, wmean, m2 = 0.0, 0.0, 0.0
-    for g in gaps:
-        total += g
-        cnt += 1.0
-        delta = g - wmean
-        wmean += delta / cnt
-        m2 += delta * (g - wmean)
-    mean = total / cnt
-    std = math.sqrt(m2 / cnt)
-    threshold = mean + GROUPING_STD_MULTIPLIER * std
-    kept = []
-    boundaries = 0
-    for i, r in enumerate(cands):
-        if boundaries >= cuts:
-            break
-        kept.append(r)
-        if i < len(gaps) and gaps[i] > threshold:
-            boundaries += 1
-    return kept
+        return bm25_sum(terms, cache, n, avgdl, candidates)

@@ -6,11 +6,22 @@ distance with optional scope/max-distance pushdown -> statistical grouping
 filter on raw distances -> BM25 keyword scores restricted to candidate files
 -> LEFT OUTER boost join -> re-sort -> top-N-files filter -> LIMIT k.
 
-Spark-first shape: one declarative DAG. The top-k is ``orderBy(...).limit``
-(physical ``TakeOrderedAndProject`` — per-partition heaps + driver merge, no
-global sort shuffle; survives 1000 executors). The candidate set is small
-(2k <= 40 rows) after that, so every later stage (grouping stats, boost join,
-file filter) operates on a tiny DataFrame the optimizer will broadcast.
+Distributed candidates, local merge: Spark runs only the stages that touch
+the corpus. The vector top-k is ``orderBy(...).limit`` (physical
+``TakeOrderedAndProject`` — per-partition heaps + driver merge, no global
+sort shuffle; survives 1000 executors) and, on the indexed path, one
+term-grouped aggregate over the query terms' postings rows. What follows is
+a rerank of <= 2k candidate rows, which ``hybrid_search`` runs on the driver
+through the pure functions below (``group_candidates``, ``boost_rows``,
+``file_cut``, ``top_rows``, plus ``bm25.bm25_sum``) — the same code the
+pyarrow sidecar (operators/hybrid_serve) serves with, so the rerank has one
+Python implementation. Run as Spark plans, the tail cost ~9 jobs of
+submission overhead for <= 20 output rows.
+
+The Spark forms of the tail (``grouping_filter``, ``keyword_boost``,
+``file_topn_filter``, ``final_topk``) stay: the batched pipeline and their
+own registry lanes use them, and tests/test_search.py pins the driver
+functions row-identical to them.
 
 Determinism contract (for the duckdb oracle): ranking keys are
 (round(score, 6), *id_cols) — rounding first removes float32-accumulation
@@ -19,6 +30,7 @@ last-bit noise, the id tie-break makes LIMIT a total order.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -27,7 +39,7 @@ from pyspark.sql import functions as F
 from ..functions.paths import scope_predicate
 from ..plans.cache import persisted
 from ..functions.vector import dot_distance, vec_lit
-from .vector_serve import SCORE_DECIMALS
+from .vector_serve import SCORE_DECIMALS, _exact_round
 
 # reference constants
 CANDIDATE_MULTIPLIER = 2  # src/vectordb/types.ts:10
@@ -332,6 +344,152 @@ def final_topk(
     )
 
 
+# -- the driver tail ------------------------------------------------------
+# Steps 5-8 over a bounded candidate list of row dicts, each carrying
+# "score" and the id columns (extra keys ride along untouched). The float
+# discipline reproduces the Spark operators above row for row.
+
+
+def _rank_key(id_cols: Sequence[str]):
+    return lambda r: (r["score"], *(r[c] for c in id_cols))
+
+
+def group_candidates(
+    cands: list[dict],
+    mode: str | None,
+    *,
+    id_cols: Sequence[str] = ("filePath", "chunkIndex"),
+) -> list[dict]:
+    """``grouping_filter`` over the candidate list: rows up to the 1st
+    ('similar') or 2nd ('related') relevance gap, in (score, *id_cols)
+    order. Spark's exact float behaviour: the gap mean accumulates
+    SEQUENTIALLY in window order (Average), the stddev_pop through the
+    Welford recurrence CentralMomentAgg runs — numpy pairwise summation
+    would diverge by ulps and flip boundary decisions."""
+    if mode is None:
+        return cands
+    cuts = {"similar": 1, "related": 2}[mode]
+    cands = sorted(cands, key=_rank_key(id_cols))
+    gaps = [b["score"] - a["score"] for a, b in zip(cands, cands[1:])]
+    if not gaps:
+        return cands
+    # TWO distinct recurrences, matching Spark's two aggregates: the
+    # Welford internal mean is NOT the Average, and conflating them drifts
+    total, cnt, wmean, m2 = 0.0, 0.0, 0.0, 0.0
+    for g in gaps:
+        total += g
+        cnt += 1.0
+        delta = g - wmean
+        wmean += delta / cnt
+        m2 += delta * (g - wmean)
+    threshold = total / cnt + GROUPING_STD_MULTIPLIER * math.sqrt(m2 / cnt)
+    kept = []
+    boundaries = 0
+    for i, r in enumerate(cands):
+        if boundaries >= cuts:
+            break
+        kept.append(r)
+        if i < len(gaps) and gaps[i] > threshold:
+            boundaries += 1
+    return kept
+
+
+def boost_rows(
+    rows: list[dict],
+    kw: dict,
+    weight: float = DEFAULT_HYBRID_WEIGHT,
+    *,
+    id_cols: Sequence[str] = ("filePath", "chunkIndex"),
+) -> list[dict]:
+    """``keyword_boost``: score / (1 + kw / max(kw) * weight), rounded
+    like ``_rounded`` (decimal HALF_UP at 6, -0.0 canonicalized). ``kw``
+    maps an id tuple to its BM25 score; unmatched rows keep kw = 0."""
+    mx = max(kw.values(), default=0.0)
+    out = []
+    for r in rows:
+        s = kw.get(tuple(r[c] for c in id_cols), 0.0)
+        norm = s / mx if mx > 0 else 0.0
+        out.append(
+            {**r, "score": _exact_round(r["score"] / (1.0 + norm * weight)) + 0.0}
+        )
+    return out
+
+
+def file_cut(
+    rows: list[dict], max_files: int | None, *, file_col: str = "filePath"
+) -> list[dict]:
+    """``file_topn_filter``: keep the rows of the ``max_files`` files with
+    the best (lowest) chunk score, files ranked by (best, file); rows with
+    a NULL file drop out whenever the cut applies."""
+    if max_files is None:
+        return rows
+    best: dict = {}
+    for r in rows:
+        f = r[file_col]
+        if f is not None:
+            best[f] = min(best.get(f, r["score"]), r["score"])
+    ranked = sorted((s, f) for f, s in best.items())
+    keep = {f for _, f in ranked[: max(0, max_files)]}
+    return [r for r in rows if r[file_col] in keep]
+
+
+def top_rows(
+    rows: list[dict], k: int, *, id_cols: Sequence[str] = ("filePath", "chunkIndex")
+) -> list[dict]:
+    """``final_topk``: the first ``k`` rows in (score, *id_cols) order."""
+    return sorted(rows, key=_rank_key(id_cols))[:k]
+
+
+def _sql_literal(value, dtype) -> str:
+    """``value`` as Spark SQL text of type ``dtype``: a string as UTF-8
+    hex (nothing to quote or escape), an int as its digits."""
+    if isinstance(value, str):
+        text = f"X'{value.encode().hex()}'"
+    elif isinstance(value, int):
+        text = str(value)
+    else:
+        raise TypeError(f"unsupported candidate key value {value!r}")
+    return f"CAST({text} AS {dtype.simpleString()})"
+
+
+def keyword_postings(
+    postings: DataFrame,
+    terms: Sequence[str],
+    keys: Sequence[tuple],
+    *,
+    id_cols: Sequence[str] = ("filePath", "chunkIndex"),
+) -> DataFrame:
+    """One row per matched query term: ``df`` over ALL its postings rows
+    (global term weights — restricting candidates must not change them)
+    and ``hits``, the (*id_cols, tf, dl) of the candidate ``keys`` only.
+    The terms push into the parquet scan; the keys ride as one SQL IN
+    list (one parse, not a py4j call per literal), so a corpus-common
+    term ships <= len(keys) hits to the driver."""
+    if tuple(id_cols) == ("filePath", "chunkIndex"):
+        # the postings key is (filePath, chunkIndex, term): row count ==
+        # distinct-doc count, without countDistinct's extra aggregate
+        df_count = F.count("*")
+    else:
+        df_count = F.countDistinct(*id_cols)
+    cols = ", ".join(f"`{c}`" for c in id_cols)
+    types = [postings.schema[c].dataType for c in id_cols]
+    in_list = ", ".join(
+        "struct(" + ", ".join(
+            f"{_sql_literal(v, t)} AS `{c}`"
+            for v, t, c in zip(key, types, id_cols)
+        ) + ")"
+        for key in keys
+    )
+    hit = F.expr(
+        f"CASE WHEN struct({cols}) IN ({in_list}) THEN struct({cols}, tf, dl) END"
+    )
+    return (
+        postings.filter(F.col("term").isin(list(terms)))
+        .groupBy("term")
+        .agg(df_count.alias("df"), F.collect_list(hit).alias("hits"))
+    )
+
+
 def hybrid_search(
     chunks: DataFrame,
     query_vec: Sequence[float],
@@ -352,55 +510,92 @@ def hybrid_search(
 ) -> DataFrame:
     """The full query_documents pipeline (reference §3.1 steps 4-8).
 
-    The candidate set (<= 2k rows) is persisted AND materialized eagerly:
-    five downstream stages reference it (grouping, BM25 restriction, boost
-    join, file filter, final top-k), several of them from broadcast/subquery
-    jobs that would otherwise race a lazy cache and re-run the corpus scan +
-    distance top-k each. Eager stage boundaries mirror the reference's own
-    sequential pipeline (§3.1).
+    Spark work is one bounded collect per corpus-touching stage: the
+    vector top-k (one job), and with ``postings`` one ``keyword_postings``
+    aggregate. The driver reranks the candidates and returns them as a
+    LocalRelation built from Arrow, so collecting the result submits no
+    job (a Python row list would be RDD-backed: one job per collect).
 
-    Keyword scoring has two shapes. ``postings`` lets callers pass a
-    prebuilt/persisted BM25 index — the production shape, where the index
-    is a bucketed table and scoring joins are shuffle-free. With no index,
-    ``bm25_scores_scan`` scores directly off the chunks scan: one
-    shuffle-free aggregate for corpus stats plus per-row array math on the
-    candidate rows only — far cheaper than building a full postings table
-    for a single query.
+    Keyword scoring has two shapes. ``postings`` is the maintained BM25
+    index and ``bm25_stats`` its persisted corpus statistics
+    (plans/fts.read_fts_stats); a pre-stats index pays one (N, avgdl)
+    aggregate. With no index, tf/dl are projected from the candidates'
+    own text inside the top-k (evaluated on the merged rows only, not the
+    corpus), and N/avgdl/df come from ``bm25_stats`` (a
+    ``corpus_stats_scan`` result, computed once per corpus snapshot) or
+    one ``corpus_stats_scan`` job.
     """
-    from .bm25 import bm25_scores, bm25_scores_scan
+    import pyarrow as pa
 
-    cands = persisted(vector_topk(
+    from .bm25 import bm25_sum, corpus_stats_scan, scan_tf_dl
+
+    terms = sorted(dict.fromkeys(query_terms))
+    top = vector_topk(
         chunks, query_vec, k, vec_col=vec_col, id_cols=id_cols,
         scope=scope, max_distance=max_distance,
-    ))
-    cands.count()
-    # grouped derives from the persisted <=2k candidate rows; persist keeps
-    # its window result stable across the three downstream uses but an
-    # eager count() would only add a job (recompute off the cache is
-    # window-over-20-rows cheap).
-    grouped = persisted(grouping_filter(cands, grouping, id_cols=id_cols))
-    if postings is not None:
-        # bm25_stats here is the index's PERSISTED corpus statistics
-        # (plans/fts.read_fts_stats): with them the per-query plan touches
-        # only the matched terms' row groups; without them it pays a
-        # full-index distinct+aggregate for N/avgdl every query
-        kw = bm25_scores(
-            postings, query_terms, id_cols=id_cols, candidates=grouped,
-            materialize=False, stats=bm25_stats,
+    )
+    schema = top.schema
+    need = [*id_cols, "score"]
+    if max_files is not None and file_col not in need:
+        need.append(file_col)
+    if postings is None and terms:
+        top = top.select("*", *scan_tf_dl(terms, text_col))
+        need += ["_dl", *(f"_tf{i}" for i in range(len(terms)))]
+    table = top.toArrow()
+    rows = table.select(need).to_pylist()
+    for i, r in enumerate(rows):
+        r["_row"] = i
+    cands = group_candidates(rows, grouping, id_cols=id_cols)
+    kw: dict = {}
+    if terms and cands:
+        keys = [tuple(r[c] for c in id_cols) for r in cands]
+        if postings is not None:
+            hits = {
+                r["term"]: (r["df"], {
+                    tuple(h[c] for c in id_cols): (h["tf"], h["dl"])
+                    for h in r["hits"]
+                })
+                for r in keyword_postings(
+                    postings, terms, keys, id_cols=id_cols
+                ).collect()
+            }
+            stats = bm25_stats
+            if stats is None:
+                stats = (
+                    postings.select(*id_cols, "dl").distinct()
+                    .agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl"))
+                    .first().asDict()
+                )
+        else:
+            stats = bm25_stats
+            if stats is None:
+                stats = corpus_stats_scan(chunks, terms, text_col=text_col)
+            hits = {
+                t: (stats["df"].get(t, 0), {
+                    key: (r[f"_tf{i}"], r["_dl"])
+                    for key, r in zip(keys, cands)
+                    if (r[f"_tf{i}"] or 0) > 0
+                })
+                for i, t in enumerate(terms)
+            }
+        kw = bm25_sum(
+            terms, hits, int(stats["n"]), float(stats["avgdl"] or 0.0), keys
         )
-    else:
-        # bm25_stats (corpus_stats_scan result, computed once per corpus
-        # snapshot) removes the per-query stats job of the index-free path
-        kw = bm25_scores_scan(
-            chunks, query_terms, id_cols=id_cols, text_col=text_col,
-            candidates=grouped, stats=bm25_stats,
-        )
-    # no persist on boosted (round 13): since the r12 window-chain file
-    # filter, the tail — file rank, file cut, final top-k — is one LINEAR
-    # consumer, so the persist only added a materialization job
-    boosted = keyword_boost(grouped, kw, on=id_cols, weight=weight)
-    filtered = file_topn_filter(boosted, max_files, file_col=file_col)
-    return final_topk(filtered, k, id_cols=id_cols)
+    ranked = top_rows(
+        file_cut(
+            boost_rows(cands, kw, weight, id_cols=id_cols),
+            max_files, file_col=file_col,
+        ),
+        k, id_cols=id_cols,
+    )
+    out = table.select(schema.names).take(
+        pa.array([r["_row"] for r in ranked], pa.int64())
+    )
+    out = out.set_column(
+        out.schema.get_field_index("score"), "score",
+        pa.array([r["score"] for r in ranked], pa.float64()),
+    )
+    return chunks.sparkSession.createDataFrame(out, schema=schema)
 
 
 def hybrid_search_batch(

@@ -102,6 +102,12 @@ def test_hybrid_search_end_to_end(spark):
     ).collect()
     assert len(out) == 2
     assert out[0].filePath == "/a" and out[0].chunkIndex == 0
+    # a scope that matches nothing: an empty answer with the same columns
+    empty = search.hybrid_search(
+        chunks, [1.0, 0.0], ["spark"], k=2, scope=["/none"]
+    )
+    assert empty.columns == ["filePath", "chunkIndex", "text", "score"]
+    assert empty.collect() == []
 
 
 def test_vector_topk_batch_matches_single_queries(spark):
@@ -349,3 +355,99 @@ def test_hybrid_search_batch_scope_and_max_distance(spark):
         ]
         assert sorted(got.get(qid, [])) == sorted(single), qid
         assert all(fp.startswith("/in/") for fp, _, _ in single)
+
+
+def _tail_case(rng, n, *, tie=False):
+    """``n`` candidates over 4 files: clustered rounded distances (so the
+    grouping gaps bite), unique chunkIndex, BM25 scores for about half."""
+    base = [0.1, 0.12, 0.13, 0.14, 0.45, 0.46, 0.48, 0.9, 0.91, 0.95, 1.3, 1.31]
+    rows = [
+        {
+            # file names do not sort in best-score order
+            "filePath": f"/f{3 * i % 4}.md",
+            "chunkIndex": i,
+            "score": round(base[i % len(base)] + 0.001 * rng.rand(), 6),
+        }
+        for i in range(n)
+    ]
+    if tie and n >= 3:
+        # same distance and no keyword hit: only the id tie-break orders
+        rows[1]["score"] = rows[2]["score"] = rows[0]["score"]
+    kw = {
+        (r["filePath"], r["chunkIndex"]): float(rng.rand() * 5)
+        for r in rows
+        if rng.rand() < 0.5 and not (tie and r["chunkIndex"] in (1, 2))
+    }
+    return rows, kw
+
+
+def test_driver_tail_matches_spark_operators(spark):
+    """The driver rerank (group_candidates -> boost_rows -> file_cut ->
+    top_rows) is row-identical to the Spark operators it replaced in
+    hybrid_search (grouping_filter -> keyword_boost -> file_topn_filter
+    -> final_topk) over the same candidates and keyword scores."""
+    import numpy as np
+
+    rng = np.random.RandomState(7)
+    full, full_kw = _tail_case(rng, 12)
+    tied, tied_kw = _tail_case(rng, 10, tie=True)
+    one, one_kw = _tail_case(rng, 1)
+    ids = ("filePath", "chunkIndex")
+    cases = [
+        ("related", 2, full, full_kw, ids),
+        ("similar", None, full, full_kw, ids),
+        (None, 3, full, full_kw, ids),
+        ("related", None, full, {}, ids),  # a query with no terms
+        (None, 2, tied, tied_kw, ids),
+        ("similar", 1, one, one_kw, ids),
+        ("related", 2, [], {}, ids),  # a scope that matches nothing
+        ("related", 2, full, full_kw, ("chunkIndex",)),
+        ("similar", None, tied, tied_kw, ("chunkIndex",)),
+    ]
+    # the fixture is not degenerate: grouping cuts, and 'similar' cuts first
+    assert len(search.group_candidates(full, "similar")) < len(
+        search.group_candidates(full, "related")
+    ) < len(full)
+    k = 5
+    for mode, max_files, rows, kw_full, id_cols in cases:
+        kw = {tuple(key[1:]) if id_cols == ("chunkIndex",) else key: s
+              for key, s in kw_full.items()}
+        hits = spark.createDataFrame(
+            [(r["filePath"], r["chunkIndex"], r["score"]) for r in rows],
+            "filePath string, chunkIndex int, score double",
+        )
+        grouped = search.grouping_filter(hits, mode, id_cols=id_cols)
+        kw_df = spark.createDataFrame(
+            [(*key, s) for key, s in kw.items()],
+            ", ".join(
+                [{"filePath": "filePath string", "chunkIndex": "chunkIndex int"}[c]
+                 for c in id_cols] + ["_score double"]
+            ),
+        ).join(grouped.select(*id_cols), list(id_cols), "left_semi")
+        want = [
+            (r.filePath, r.chunkIndex, r.score)
+            for r in search.final_topk(
+                search.file_topn_filter(
+                    search.keyword_boost(grouped, kw_df, on=id_cols, weight=0.6),
+                    max_files,
+                ),
+                k, id_cols=id_cols,
+            ).collect()
+        ]
+        kept = search.group_candidates(rows, mode, id_cols=id_cols)
+        kept_keys = {tuple(r[c] for c in id_cols) for r in kept}
+        got = [
+            (r["filePath"], r["chunkIndex"], r["score"])
+            for r in search.top_rows(
+                search.file_cut(
+                    search.boost_rows(
+                        kept,
+                        {key: s for key, s in kw.items() if key in kept_keys},
+                        0.6, id_cols=id_cols,
+                    ),
+                    max_files,
+                ),
+                k, id_cols=id_cols,
+            )
+        ]
+        assert got == want, (mode, max_files, len(rows), id_cols)

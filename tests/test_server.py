@@ -287,8 +287,9 @@ def test_request_cache_hygiene(served, spark):
     a pre-warmed cached frame must survive unrelated requests, and a
     request loop must not grow the cache manager."""
     server, _ = served
-    # force the SPARK query path (the hybrid sidecar never persists):
-    # its hybrid_search pipeline persists candidates/grouped/boosted
+    # force the SPARK query path: the hybrid sidecar never persists, and
+    # neither does hybrid_search (collected stages, LocalRelation answer)
+    # — the loop pins that no request leaves a cache behind
     server.engine.index_is_fresh = lambda: False
     warm = spark.range(100).selectExpr("id", "id * 2 as v").persist()
     assert warm.count() == 100

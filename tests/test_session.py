@@ -1,6 +1,7 @@
 """Session factory settings (session.get_spark) that the engine's read
-paths depend on: driver-side listing of the bucketed tables, and the one
-silenced benign warning."""
+paths depend on — driver-side listing of the bucketed tables, and the one
+silenced benign warning — and the Spark jobs and persisted RDDs each
+read path costs."""
 
 from __future__ import annotations
 
@@ -27,6 +28,12 @@ def _jobs(spark, fn) -> int:
     finally:
         sc.setJobGroup(None, None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _persisted_ids(spark) -> set:
+    # ids, not a count: the context cleaner may drop other tests'
+    # unreferenced caches meanwhile
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
 @pytest.fixture(scope="module")
@@ -71,3 +78,37 @@ def test_window_warning_silenced_other_warnings_kept(spark):
     assert window.getLevel().toString() == "ERROR"
     other = manager.getLogger("org.apache.spark.sql.catalyst.analysis.HintErrorLogger")
     assert other.isWarnEnabled()
+
+
+def test_query_documents_is_three_jobs_and_persists_nothing(
+    spark, wide_engine, monkeypatch
+):
+    """Spark runs the vector top-k (one job) and one term-grouped postings
+    aggregate; the driver reranks the candidates and returns a
+    LocalRelation, so collecting the answer submits no job, and no RDD
+    stays persisted — with no plans.cache.persist_scope around the call."""
+    eng = wide_engine
+    query = "shared words about topic7"
+    eng.query_documents(query, limit=5).collect()  # warm the schema caches
+    before = _persisted_ids(spark)
+    frames, rows = [], []
+    assert _jobs(spark, lambda: frames.append(
+        eng.query_documents(query, limit=5)
+    )) <= 3
+    assert _jobs(spark, lambda: rows.extend(frames[0].collect())) == 0
+    assert rows and _persisted_ids(spark) <= before
+    # the scan fallback (mutations pending): the vector top-k, plus the
+    # corpus-statistics aggregate the maintained index would have carried
+    monkeypatch.setattr(eng, "index_is_fresh", lambda: False)
+    assert _jobs(spark, lambda: rows.extend(
+        eng.query_documents(query, limit=5).collect()
+    )) <= 3
+    assert _persisted_ids(spark) <= before
+
+
+def test_keyword_search_on_fresh_index_persists_nothing(spark, wide_engine):
+    """The maintained index is read as a pruned scan, not cached."""
+    before = _persisted_ids(spark)
+    rows = wide_engine.keyword_search("shared words", limit=3).collect()
+    assert len(rows) == 3
+    assert _persisted_ids(spark) <= before

@@ -115,19 +115,20 @@ COMMENTARY = {
         "with no Python in the path."
     ),
     "hybrid_search": (
-        "Vector top-k (TakeOrderedAndProject) feeds grouping, BM25 boost, "
-        "and file filtering over a persisted <=2k candidate set; corpus BM25 "
-        "stats ride in as a broadcast 1-row cross join, so the index-free "
-        "keyword side adds no driver round trip and no data shuffle."
+        "Spark runs the vector top-k (TakeOrderedAndProject) with the "
+        "candidates' tf/dl folded into its projection, plus one shuffle-"
+        "free corpus-stats aggregate; the driver reranks the <=2k "
+        "candidates (grouping, BM25, boost, file filter) and returns a "
+        "LocalRelation, so the plan shown is a LocalTableScan."
     ),
     "hybrid_search_indexed": (
-        "The steady-state shape: same pipeline, but BM25 reads the "
-        "PERSISTED bucketed postings table with its persisted corpus "
-        "statistics folded in as literals — the term IN-filter pushes into "
-        "the term-sorted parquet scan (row-group pruning), and no "
-        "full-corpus aggregate appears anywhere in the per-query plan. "
-        "At 100 TB the per-query cost is bounded by the matched terms' "
-        "row groups, not corpus size (sf1 check: 10x data -> 1.11x time)."
+        "The steady-state shape: the vector top-k plus ONE term-grouped "
+        "aggregate over the PERSISTED bucketed postings table — the term "
+        "IN-filter pushes into the term-sorted parquet scan (row-group "
+        "pruning), the persisted corpus statistics are literals, and only "
+        "the candidates' (tf, dl) reach the driver, which reranks and "
+        "returns a LocalRelation. Per-query cost is bounded by the matched "
+        "terms' row groups, not corpus size."
     ),
     "knn_lsh_hyperplane": (
         "Model-free ANN: a map-only Arrow kernel signs every vector into "
