@@ -421,26 +421,15 @@ class RagEngine:
         qvecs = {
             str(i): self._embed_query(t) for i, t in enumerate(query_texts)
         }
+        # overfetch=1: exactly ``limit`` rows per query, not the
+        # hybrid-boost candidate pool
         out = search.vector_topk_batch(
             self.chunks(),
             qvecs,
             k=limit,
             id_cols=("filePath", "chunkIndex"),
             payload_cols=("text",),
-        )
-        # vector_topk_batch returns the overfetched candidate pool (k *
-        # CANDIDATE_MULTIPLIER rows per query, the hybrid-boost input);
-        # this public serving entry point returns exactly ``limit`` rows
-        # per query, matching query_documents
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").asc(), F.col("filePath").asc(), F.col("chunkIndex").asc()
-        )
-        out = (
-            out.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= limit)
-            .drop("_rn")
+            overfetch=1,
         )
         return out.withColumnRenamed("query_id", "query_index")
 
@@ -461,7 +450,10 @@ class RagEngine:
         Per-query results are row-identical to N query_documents calls at
         the same settings; the keyword side reads the maintained postings
         index when fresh (one pruned scan shared by all queries' terms)
-        and falls back to a batch-built postings frame otherwise.
+        and otherwise scores the candidates' own text, with one corpus
+        statistics pass for the batch. The rerank runs on the driver, so
+        the result is a LocalRelation (nothing persisted, no job to
+        collect).
         ``scope``/``max_distance``/``grouping`` apply to the whole batch
         (one request, one filter set — per-query filters belong in
         per-query query_documents calls). Returns (query_index, filePath,

@@ -96,9 +96,10 @@ def bm25_term_score(
     b: float = B,
 ):
     """The per-(doc, term) Okapi score as a column expression — the ONE
-    definition both the single-query scorer (``bm25_scores``) and the
-    batched hybrid pipeline fold into their plans, so a formula change
-    (e.g. the idf floor below) can never desynchronize them.
+    definition the Spark scorers (``bm25_scores``,
+    ``bm25_scores_ngram_scan``) fold into their plans and ``bm25_sum``
+    mirrors on the driver, so a formula change (e.g. the idf floor below)
+    can never desynchronize them.
 
     The idf log argument is floored at 1.0 (idf >= 0): with consistent
     stats df <= N keeps it > 1 anyway, but stale persisted counters

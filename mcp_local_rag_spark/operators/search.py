@@ -9,19 +9,20 @@ filter on raw distances -> BM25 keyword scores restricted to candidate files
 Distributed candidates, local merge: Spark runs only the stages that touch
 the corpus. The vector top-k is ``orderBy(...).limit`` (physical
 ``TakeOrderedAndProject`` — per-partition heaps + driver merge, no global
-sort shuffle; survives 1000 executors) and, on the indexed path, one
+sort shuffle; survives 1000 executors), or for a batch of queries one
+Arrow kernel pass (``vector_topk_batch``), and, on the indexed path, one
 term-grouped aggregate over the query terms' postings rows. What follows is
-a rerank of <= 2k candidate rows, which ``hybrid_search`` runs on the driver
-through the pure functions below (``group_candidates``, ``boost_rows``,
-``file_cut``, ``top_rows``, plus ``bm25.bm25_sum``) — the same code the
-pyarrow sidecar (operators/hybrid_serve) serves with, so the rerank has one
-Python implementation. Run as Spark plans, the tail cost ~9 jobs of
-submission overhead for <= 20 output rows.
+a rerank of <= 2k candidate rows per query, which ``hybrid_search`` and
+``hybrid_search_batch`` both run on the driver through one helper and the
+pure functions below (``group_candidates``, ``boost_rows``, ``file_cut``,
+``top_rows``, plus ``bm25.bm25_sum``) — the same code the pyarrow sidecar
+(operators/hybrid_serve) serves with, so the rerank has one Python
+implementation. Run as Spark plans, the tail cost ~9 jobs of submission
+overhead for <= 20 output rows.
 
 The Spark forms of the tail (``grouping_filter``, ``keyword_boost``,
-``file_topn_filter``, ``final_topk``) stay: the batched pipeline and their
-own registry lanes use them, and tests/test_search.py pins the driver
-functions row-identical to them.
+``file_topn_filter``, ``final_topk``) stay for their own registry lanes,
+and tests/test_search.py pins the driver functions row-identical to them.
 
 Determinism contract (for the duckdb oracle): ranking keys are
 (round(score, 6), *id_cols) — rounding first removes float32-accumulation
@@ -35,9 +36,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.paths import scope_predicate
-from ..plans.cache import persisted
 from ..functions.vector import dot_distance, vec_lit
 from .vector_serve import SCORE_DECIMALS, _exact_round
 
@@ -206,7 +207,6 @@ def grouping_filter(
     *,
     score_col: str = "score",
     id_cols: Sequence[str] = ("filePath", "chunkIndex"),
-    part_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Statistical relevance-gap grouping (reference W3).
 
@@ -217,18 +217,16 @@ def grouping_filter(
     BEFORE boost, deliberately (src/vectordb/index.ts:372-376).
 
     The candidate set is tiny (<= 2k rows) so the single-partition window is
-    free; at scale this stage always follows a top-k. ``part_cols`` applies
-    the whole statistic PER GROUP (the batch shape: one grouping decision
-    per query_id over that query's own candidates).
+    free; at scale this stage always follows a top-k.
     """
     if mode is None:
         return hits
     cuts = {"similar": 1, "related": 2}[mode]
     order = [F.col(score_col).asc()] + [F.col(c).asc() for c in id_cols]
-    w = Window.partitionBy(*part_cols).orderBy(*order)
+    w = Window.orderBy(*order)
     gap = F.lead(score_col).over(w) - F.col(score_col)
     df = hits.withColumn("_gap", gap)
-    stats = Window.partitionBy(*part_cols)
+    stats = Window.partitionBy()
     df = df.withColumn("_mean", F.mean("_gap").over(stats)).withColumn(
         "_std", F.stddev_pop("_gap").over(stats)
     )
@@ -292,12 +290,9 @@ def file_topn_filter(
     *,
     file_col: str = "filePath",
     score_col: str = "score",
-    part_cols: Sequence[str] = (),
 ) -> DataFrame:
     """W4: rank files by their best (lowest) chunk score, keep chunks of the
     top ``max_files`` files (src/vectordb/search-filters.ts:76-101).
-    ``part_cols`` applies the ranking PER GROUP (the batch shape: one
-    file ranking per query_id).
 
     Two windows, no join: best = min(score) over the file's rows, then
     dense_rank over (best, file) — equal to row_number over the DISTINCT
@@ -309,8 +304,8 @@ def file_topn_filter(
     (a NULL join key never matched)."""
     if max_files is None:
         return hits
-    per_file = Window.partitionBy(*part_cols, file_col)
-    rank_w = Window.partitionBy(*part_cols).orderBy(
+    per_file = Window.partitionBy(file_col)
+    rank_w = Window.orderBy(
         F.col("_ftf_best").asc(), F.col(file_col).asc()
     )
     return (
@@ -328,20 +323,10 @@ def final_topk(
     *,
     score_col: str = "score",
     id_cols: Sequence[str] = ("filePath", "chunkIndex"),
-    part_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Ungrouped: orderBy().limit() -> TakeOrderedAndProject. With
-    ``part_cols``, a per-group row_number window (the batch shape —
-    bounded input by construction: each group is a <= 2k candidate set)."""
+    """orderBy().limit() -> TakeOrderedAndProject."""
     order = [F.col(score_col).asc()] + [F.col(c).asc() for c in id_cols]
-    if not part_cols:
-        return hits.orderBy(*order).limit(k)
-    w = Window.partitionBy(*part_cols).orderBy(*order)
-    return (
-        hits.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return hits.orderBy(*order).limit(k)
 
 
 # -- the driver tail ------------------------------------------------------
@@ -490,6 +475,116 @@ def keyword_postings(
     )
 
 
+def _rerank(
+    chunks: DataFrame,
+    top: DataFrame,
+    schema: StructType,
+    query_terms: dict,
+    *,
+    k: int,
+    id_cols: Sequence[str],
+    text_col: str,
+    grouping: str | None,
+    weight: float,
+    max_files: int | None,
+    file_col: str,
+    postings: DataFrame | None,
+    bm25_stats: dict | None,
+    query_col: str | None = None,
+) -> DataFrame:
+    """Steps 5-8 on the driver over the candidates of ``top``, one rerank
+    per query: ``query_terms`` maps a ``query_col`` value (None when
+    ``top`` answers one query) to its terms. Spark work is the one Arrow
+    collect of ``top`` plus the keyword stage, shared by every query:
+    with ``postings``, one ``keyword_postings`` aggregate over the union
+    of the queries' terms and grouped candidate keys; without, tf/dl are
+    projected onto ``top`` itself (the bounded candidate rows, not the
+    corpus) and N/avgdl/df come from ``bm25_stats`` or one
+    ``corpus_stats_scan``. Returns the ranked rows (``schema``'s columns,
+    a subset of ``top``'s) as a LocalRelation built from Arrow, so
+    collecting it submits no job."""
+    import pyarrow as pa
+
+    from .bm25 import bm25_sum, corpus_stats_scan, scan_tf_dl
+
+    terms_of = {q: sorted(set(ts or ())) for q, ts in query_terms.items()}
+    all_terms = sorted({t for ts in terms_of.values() for t in ts})
+    need = [*id_cols, "score"]
+    if query_col is not None:
+        need.append(query_col)
+    if max_files is not None and file_col not in need:
+        need.append(file_col)
+    if postings is None and all_terms:
+        top = top.select("*", *scan_tf_dl(all_terms, text_col))
+        need += ["_dl", *(f"_tf{i}" for i in range(len(all_terms)))]
+    table = top.toArrow()
+    by_query: dict = {}
+    for i, r in enumerate(table.select(need).to_pylist()):
+        r["_row"], r["_key"] = i, tuple(r[c] for c in id_cols)
+        by_query.setdefault(r[query_col] if query_col else None, []).append(r)
+    cands = {
+        q: group_candidates(rows, grouping, id_cols=id_cols)
+        for q, rows in sorted(by_query.items())
+    }
+    scored = [q for q, rows in cands.items() if rows and terms_of.get(q)]
+    kw_terms = sorted({t for q in scored for t in terms_of[q]})
+    scored_rows = [r for q in scored for r in cands[q]]
+    hits: dict = {}
+    stats = bm25_stats
+    if kw_terms and postings is not None:
+        keys = list(dict.fromkeys(r["_key"] for r in scored_rows))
+        hits = {
+            r["term"]: (r["df"], {
+                tuple(h[c] for c in id_cols): (h["tf"], h["dl"])
+                for h in r["hits"]
+            })
+            for r in keyword_postings(
+                postings, kw_terms, keys, id_cols=id_cols
+            ).collect()
+        }
+        if stats is None:
+            # a pre-stats index: one (N, avgdl) aggregate over it
+            stats = (
+                postings.select(*id_cols, "dl").distinct()
+                .agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl"))
+                .first().asDict()
+            )
+    elif kw_terms:
+        if stats is None:
+            stats = corpus_stats_scan(chunks, kw_terms, text_col=text_col)
+        hits = {
+            t: (stats["df"].get(t, 0), {
+                r["_key"]: (r[f"_tf{i}"], r["_dl"])
+                for r in scored_rows
+                if (r[f"_tf{i}"] or 0) > 0
+            })
+            for i, t in enumerate(all_terms)
+        }
+    ranked = []
+    for q, rows in cands.items():
+        kw: dict = {}
+        if q in scored:
+            kw = bm25_sum(
+                terms_of[q], hits, int(stats["n"]), float(stats["avgdl"] or 0.0),
+                [r["_key"] for r in rows],
+            )
+        ranked += top_rows(
+            file_cut(
+                boost_rows(rows, kw, weight, id_cols=id_cols),
+                max_files, file_col=file_col,
+            ),
+            k, id_cols=id_cols,
+        )
+    out = table.select(schema.names).take(
+        pa.array([r["_row"] for r in ranked], pa.int64())
+    )
+    out = out.set_column(
+        out.schema.get_field_index("score"), "score",
+        pa.array([r["score"] for r in ranked], pa.float64()),
+    )
+    return chunks.sparkSession.createDataFrame(out, schema=schema)
+
+
 def hybrid_search(
     chunks: DataFrame,
     query_vec: Sequence[float],
@@ -525,77 +620,16 @@ def hybrid_search(
     ``corpus_stats_scan`` result, computed once per corpus snapshot) or
     one ``corpus_stats_scan`` job.
     """
-    import pyarrow as pa
-
-    from .bm25 import bm25_sum, corpus_stats_scan, scan_tf_dl
-
-    terms = sorted(dict.fromkeys(query_terms))
     top = vector_topk(
         chunks, query_vec, k, vec_col=vec_col, id_cols=id_cols,
         scope=scope, max_distance=max_distance,
     )
-    schema = top.schema
-    need = [*id_cols, "score"]
-    if max_files is not None and file_col not in need:
-        need.append(file_col)
-    if postings is None and terms:
-        top = top.select("*", *scan_tf_dl(terms, text_col))
-        need += ["_dl", *(f"_tf{i}" for i in range(len(terms)))]
-    table = top.toArrow()
-    rows = table.select(need).to_pylist()
-    for i, r in enumerate(rows):
-        r["_row"] = i
-    cands = group_candidates(rows, grouping, id_cols=id_cols)
-    kw: dict = {}
-    if terms and cands:
-        keys = [tuple(r[c] for c in id_cols) for r in cands]
-        if postings is not None:
-            hits = {
-                r["term"]: (r["df"], {
-                    tuple(h[c] for c in id_cols): (h["tf"], h["dl"])
-                    for h in r["hits"]
-                })
-                for r in keyword_postings(
-                    postings, terms, keys, id_cols=id_cols
-                ).collect()
-            }
-            stats = bm25_stats
-            if stats is None:
-                stats = (
-                    postings.select(*id_cols, "dl").distinct()
-                    .agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl"))
-                    .first().asDict()
-                )
-        else:
-            stats = bm25_stats
-            if stats is None:
-                stats = corpus_stats_scan(chunks, terms, text_col=text_col)
-            hits = {
-                t: (stats["df"].get(t, 0), {
-                    key: (r[f"_tf{i}"], r["_dl"])
-                    for key, r in zip(keys, cands)
-                    if (r[f"_tf{i}"] or 0) > 0
-                })
-                for i, t in enumerate(terms)
-            }
-        kw = bm25_sum(
-            terms, hits, int(stats["n"]), float(stats["avgdl"] or 0.0), keys
-        )
-    ranked = top_rows(
-        file_cut(
-            boost_rows(cands, kw, weight, id_cols=id_cols),
-            max_files, file_col=file_col,
-        ),
-        k, id_cols=id_cols,
+    return _rerank(
+        chunks, top, top.schema, {None: query_terms}, k=k, id_cols=id_cols,
+        text_col=text_col, grouping=grouping, weight=weight,
+        max_files=max_files, file_col=file_col, postings=postings,
+        bm25_stats=bm25_stats,
     )
-    out = table.select(schema.names).take(
-        pa.array([r["_row"] for r in ranked], pa.int64())
-    )
-    out = out.set_column(
-        out.schema.get_field_index("score"), "score",
-        pa.array([r["score"] for r in ranked], pa.float64()),
-    )
-    return chunks.sparkSession.createDataFrame(out, schema=schema)
 
 
 def hybrid_search_batch(
@@ -620,133 +654,40 @@ def hybrid_search_batch(
     """The FULL hybrid pipeline for N concurrent queries in ONE corpus
     scan — `hybrid_search` amortized the way `vector_topk_batch` amortizes
     W1. Per-query results are row-identical to N separate `hybrid_search`
-    calls (pytest-pinned): the vector stage is one Arrow scan for all
-    queries; every later stage (grouping, BM25 restricted to candidates,
-    boost normalization, file filter, final top-k) is a window or join
-    PARTITIONED BY query_id over each query's <= 2k candidate rows, so
-    per-query work stays bounded and the plan has no per-query corpus
-    re-scan anywhere.
+    calls (pytest-pinned): the two functions differ only in their vector
+    stage, here one Arrow kernel pass for all queries, collected once.
+    The keyword stage and the driver rerank are `hybrid_search`'s, run
+    per query over that query's <= 2k candidate rows; the indexed
+    keyword side is one postings aggregate over the union of all
+    queries' terms, so no stage re-scans the corpus per query.
 
     BM25 semantics match the single path exactly: per-term df and the
     corpus statistics are GLOBAL (restricting candidates must not change
-    term weights); with `postings` + `bm25_stats` (the persisted index
-    and its table-property counters) the keyword side touches only the
-    union of all queries' terms — one pruned scan shared by every query.
+    term weights).
 
     ``query_vecs``: {query_id: vector}; ``query_terms``: {query_id:
     [terms]} (missing/empty term lists mean vector-only for that query).
     Output: (query_id, *id_cols[, payload], score), exactly k rows/query
     before the file filter trims further.
     """
-    from .bm25 import build_postings
-
-    spark = chunks.sparkSession
-    qids = sorted(query_vecs)
     payload = list(payload_cols)
     if max_files is not None and file_col not in id_cols and file_col not in payload:
         payload.append(file_col)
-    cands = persisted(vector_topk_batch(
+    extra = []
+    if (
+        postings is None and any(query_terms.values())
+        and text_col not in (*id_cols, *payload)
+    ):
+        # the index-free keyword side reads tf/dl off the candidates' text
+        extra.append(text_col)
+    top = vector_topk_batch(
         chunks, query_vecs, k, vec_col=vec_col, id_cols=id_cols,
-        payload_cols=payload, scope=scope, max_distance=max_distance,
-    ))
-    # EAGER materialization is load-bearing, not belt-and-braces: the
-    # keyword chain references this cache from broadcast-build futures
-    # that run CONCURRENTLY — racing an unmaterialized cache, each future
-    # re-runs the corpus scan + top-k (a 14 s pile-up at the 10x replica)
-    cands.count()
-    # grouping=None must not re-persist the same frame (a second cache of
-    # identical bytes plus its materialization job)
-    grouped = cands if grouping is None else persisted(grouping_filter(
-        cands, grouping, id_cols=id_cols, part_cols=("query_id",)
-    ))
-
-    pairs = [
-        (str(q), t)
-        for q in qids
-        for t in dict.fromkeys(query_terms.get(q) or query_terms.get(str(q)) or [])
-    ]
-    if pairs:
-        from .bm25 import bm25_term_score
-
-        # Job discipline (round 13): the BOUNDED side broadcasts. The
-        # candidate set (<= 2k rows/query) crossed with the term list is
-        # small by construction, so it broadcasts INTO the pruned
-        # postings scan; the postings rows for the query's terms are
-        # CORPUS-proportional (a hot term matches O(corpus) documents)
-        # and must stay distributed AND uncached — broadcasting or
-        # persisting them was a 14 s regression at the 10x replica and a
-        # scale-killer at 100 TB. Per-term df stays a map-side-combinable
-        # aggregate over the pruned scan (a window-over-term variant read
-        # nicer on paper but runs inside kw's CACHED — hence non-AQE —
-        # plan, where it cost 4 s at the 10x replica vs the aggregate's
-        # ~0.5). Net on the sf0.1 bench: 23 -> ~15 jobs, zero shuffles of
-        # the candidate frame, and matched is two pruned scans instead of
-        # a corpus-proportional cache.
-        terms_df = spark.createDataFrame(pairs, "query_id string, term string")
-        all_terms = sorted({t for _, t in pairs})
-        if postings is None:
-            # one tokenize for the whole batch — amortized over N queries,
-            # where the single-query path would prefer the scan scorer.
-            # Persisted: unlike the indexed shape, BOTH matched readers
-            # would otherwise re-run the full-corpus tokenize
-            postings = persisted(build_postings(
-                chunks, id_cols=id_cols, text_col=text_col
-            ))
-        matched = postings.filter(F.col("term").isin(all_terms))
-        dfreq = F.broadcast(
-            matched.groupBy("term").agg(
-                F.countDistinct(*id_cols).alias("_df")
-            )
-        )
-        if bm25_stats is not None:
-            n_col = F.lit(int(bm25_stats["n"]))
-            avgdl_col = F.lit(float(bm25_stats["avgdl"] or 0.0))
-            stats_join = None
-        else:
-            stats_join = (
-                postings.select(*id_cols, "dl").distinct()
-                .agg(F.count("*").alias("_n"), F.avg("dl").alias("_avgdl"))
-            )
-            n_col, avgdl_col = F.col("_n"), F.col("_avgdl")
-        cand_terms = F.broadcast(
-            grouped.select("query_id", *id_cols).join(terms_df, "query_id")
-        )
-        scored = matched.join(cand_terms, [*id_cols, "term"]).join(
-            dfreq, "term"
-        )
-        if stats_join is not None:
-            scored = scored.crossJoin(F.broadcast(stats_join))
-        # the ONE Okapi definition, shared with bm25_scores — formula
-        # changes (idf floor etc.) cannot desynchronize batch from single
-        term_score = bm25_term_score(
-            n_col, avgdl_col, F.col("_df"), F.col("tf"), F.col("dl")
-        )
-        kw = scored.groupBy("query_id", *id_cols).agg(
-            F.sum(term_score).alias("_s")
-        )
-        # per-query max-normalizer as a window over the (bounded) scored
-        # frame — one exchange instead of a second aggregate + join
-        # (same tail-job discipline as keyword_boost)
-        kw = kw.withColumn(
-            "_mx", F.max("_s").over(Window.partitionBy("query_id"))
-        )
-        norm = F.coalesce(
-            F.when(F.col("_mx") > 0, F.col("_s") / F.col("_mx")), F.lit(0.0)
-        )
-        boosted = (
-            grouped.join(F.broadcast(kw), ["query_id", *id_cols], "left")
-            .withColumn(
-                "score",
-                _rounded(F.col("score") / (F.lit(1.0) + norm * F.lit(weight))),
-            )
-            .drop("_s", "_mx")
-        )
-    else:
-        boosted = grouped
-    # no persist on boosted: the r12 aggregate+join file filter read it
-    # twice, but the window-chain tail below is one LINEAR consumer —
-    # file rank, file cut, and final top-k all evaluate in a single pass
-    filtered = file_topn_filter(
-        boosted, max_files, file_col=file_col, part_cols=("query_id",)
+        payload_cols=payload + extra, scope=scope, max_distance=max_distance,
     )
-    return final_topk(filtered, k, id_cols=id_cols, part_cols=("query_id",))
+    schema = StructType([f for f in top.schema.fields if f.name not in extra])
+    return _rerank(
+        chunks, top, schema, {str(q): ts for q, ts in query_terms.items()},
+        k=k, id_cols=id_cols, text_col=text_col, grouping=grouping,
+        weight=weight, max_files=max_files, file_col=file_col,
+        postings=postings, bm25_stats=bm25_stats, query_col="query_id",
+    )

@@ -1,11 +1,11 @@
 """Request-scoped persist tracking for the serving adapter.
 
-Some per-query pipelines (operators/search.hybrid_search_batch,
-operators/bm25.bm25_scores over a per-query postings build) persist
-bounded intermediates that the returned plan still references, so they
-cannot unpersist before the caller collects. (The single-query
-``hybrid_search`` persists nothing: it collects its two Spark stages and
-returns a LocalRelation.) A long-running server must still free them — Spark's
+Some per-query pipelines (operators/bm25.bm25_scores over a per-query
+postings build) persist bounded intermediates that the returned plan
+still references, so they cannot unpersist before the caller collects.
+(``hybrid_search`` and ``hybrid_search_batch`` persist nothing: they
+collect their Spark stages and return a LocalRelation.) A long-running
+server must still free them — Spark's
 CacheManager entries are not GC'd — but a blanket
 ``spark.catalog.clearCache()`` per request (the previous posture) also
 evicts every cache the request did NOT create: pre-warmed tables, other

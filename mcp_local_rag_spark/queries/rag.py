@@ -849,9 +849,10 @@ def q_hybrid_search_indexed(spark, sf_dir):
 # serving amortization extended from W1-only (vector_topk_batch) to the
 # whole §3.1 chain: per-query BM25 boost with GLOBAL corpus statistics,
 # per-query max-normalization, per-query top-files filter, per-query final
-# top-k, all as query_id-partitioned windows/joins over <= 2k candidate
-# rows each. Steady-state: reads the persisted postings index + its
-# table-property stats (one pruned scan shared by every query's terms).
+# top-k, reranked on the driver per query over its <= 2k candidate rows
+# (hybrid_search's rerank). Steady-state: reads the persisted postings
+# index + its table-property stats (one pruned scan shared by every
+# query's terms).
 
 _BATCH_QTERMS = {"0": ["spark", "join"], "1": ["filter", "merge"], "2": ["spark", "filter"]}
 

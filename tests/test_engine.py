@@ -561,16 +561,29 @@ def test_sync_reconciles_lookalike_record_filename(spark, corpus, tmp_path):
 def test_vector_search_batch_returns_exactly_limit(spark, corpus, tmp_path):
     """The public serving entry point returns exactly ``limit`` rows per
     query (matching query_documents), never the overfetched internal
-    candidate pool (ADVICE r5)."""
+    candidate pool: the first ``limit`` rows, in (score, ids) order, of a
+    single vector_topk call."""
+    from mcp_local_rag_spark.operators.search import vector_topk
+
     eng = RagEngine(spark, str(tmp_path / "chunks_lim"))
     n = eng.ingest_directory(str(corpus))
     limit = min(3, n)
-    out = eng.vector_search_batch(["shuffle partitioning", "broadcast joins"], limit=limit)
+    texts = ["shuffle partitioning", "broadcast joins"]
+    out = eng.vector_search_batch(texts, limit=limit)
     by_q = {}
     for r in out.collect():
-        by_q.setdefault(r.query_index, []).append(r)
+        by_q.setdefault(r.query_index, []).append(
+            (r.score, r.filePath, r.chunkIndex)
+        )
     assert set(by_q) == {"0", "1"}
     assert all(len(v) == limit for v in by_q.values())
+    for i, t in enumerate(texts):
+        single = [
+            (r.score, r.filePath, r.chunkIndex)
+            for r in vector_topk(eng.chunks(), eng._embed_query(t), limit)
+            .collect()
+        ]
+        assert sorted(by_q[str(i)]) == sorted(single)[:limit], t
 
 
 def test_sync_migrates_legacy_record_tables(spark, corpus, tmp_path):

@@ -112,3 +112,32 @@ def test_keyword_search_on_fresh_index_persists_nothing(spark, wide_engine):
     rows = wide_engine.keyword_search("shared words", limit=3).collect()
     assert len(rows) == 3
     assert _persisted_ids(spark) <= before
+
+
+def test_query_documents_batch_is_four_jobs_and_persists_nothing(
+    spark, wide_engine, monkeypatch
+):
+    """The batch runs hybrid_search's stages once for all its queries:
+    the Arrow vector kernel pass and one postings aggregate over the
+    union of the queries' terms (two jobs each), then the driver rerank;
+    collecting the LocalRelation answer submits no job and nothing stays
+    persisted. The scan fallback swaps the postings aggregate for one
+    corpus-statistics pass."""
+    eng = wide_engine
+    queries = ["shared words about topic7", "listing topic12", "document"]
+    eng.query_documents_batch(queries, limit=5).collect()  # warm schema caches
+    before = _persisted_ids(spark)
+    frames, rows = [], []
+    assert _jobs(spark, lambda: frames.append(
+        eng.query_documents_batch(queries, limit=5)
+    )) <= 4
+    assert _jobs(spark, lambda: rows.extend(frames[0].collect())) == 0
+    assert {r["query_index"] for r in rows} == {"0", "1", "2"}
+    assert _persisted_ids(spark) <= before
+    monkeypatch.setattr(eng, "index_is_fresh", lambda: False)
+    scan_rows = []
+    assert _jobs(spark, lambda: scan_rows.extend(
+        eng.query_documents_batch(queries, limit=5).collect()
+    )) <= 4
+    assert sorted(map(tuple, scan_rows)) == sorted(map(tuple, rows))
+    assert _persisted_ids(spark) <= before

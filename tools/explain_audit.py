@@ -168,13 +168,12 @@ COMMENTARY = {
     ),
     "hybrid_search_batch": (
         "The FULL hybrid pipeline amortized over N concurrent queries: "
-        "one cached Arrow scan serves every query's vector stage (the "
-        "downstream stages read its InMemoryTableScan), the keyword side "
-        "is one postings scan with the UNION of all queries' terms pushed "
-        "down, and grouping/boost/file-filter/top-k run as query_id-"
-        "partitioned windows over <= 2k candidate rows per query. N "
-        "queries cost ~one query's corpus work plus per-query small-data "
-        "stages."
+        "one Arrow kernel pass serves every query's vector stage and is "
+        "collected once, and the keyword side is one term-grouped "
+        "postings aggregate with the UNION of all queries' terms pushed "
+        "down. The driver reranks each query's <= 2k candidates with "
+        "hybrid_search's code and returns a LocalRelation; the plan shown "
+        "is the lane's final ORDER BY over that LocalTableScan."
     ),
     "knn_recall_report": (
         "ANN quality instrumentation: brute-force truth computed once "
