@@ -15,7 +15,6 @@ Layout:
   sources/    — ingest sources and parsers
   chunking/   — sentence splitting + Max-Min semantic chunking
   plans/      — composed end-to-end pipelines
-  streaming/  — Structured Streaming ingest (extension; reference is batch-only)
 """
 
 __version__ = "0.1.0"

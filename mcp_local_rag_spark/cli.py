@@ -71,7 +71,7 @@ def _parser() -> argparse.ArgumentParser:
         "--reclaim-rowless", action="store_true",
         help="also repack registered shards with ZERO live rows (by "
              "default they are skipped: indistinguishable from a crashed "
-             "streaming micro-batch whose replay still needs the tar)",
+             "ingest whose replay still needs the tar)",
     )
 
     ee = sub.add_parser(

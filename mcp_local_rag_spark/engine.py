@@ -925,7 +925,7 @@ class RagEngine:
         into full new shards under the repack intent protocol (see
         plans/repack — crash-recoverable; output samples are re-keyed, so
         epoch cursors do not survive a repack; wholly-rowless shards are
-        skipped unless ``reclaim_rowless`` vouches no watcher is
+        skipped unless ``reclaim_rowless`` vouches no writer is
         mid-flight)."""
         from .plans.repack import repack_shards
 

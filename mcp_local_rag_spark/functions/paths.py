@@ -70,19 +70,7 @@ def base64url_decode(col: Column) -> Column:
     return F.unbase64(F.translate(padded, "-_", "+/")).cast("string")
 
 
-def is_raw_data_path(path_col: Column, db_path: str = "/data/db") -> Column:
-    """Managed raw-data rows live under <db>/raw-data/ and are never pruned."""
-    return path_col.startswith(db_path.rstrip("/") + "/raw-data/")
-
-
 def basename(path_col: Column) -> Column:
     return F.element_at(F.split(path_col, "/"), -1)
 
 
-def extension(path_col: Column) -> Column:
-    """Lowercased extension without dot; '' when absent."""
-    name = basename(path_col)
-    return F.when(
-        name.rlike("\\.[A-Za-z0-9]+$"),
-        F.lower(F.regexp_extract(name, "\\.([A-Za-z0-9]+)$", 1)),
-    ).otherwise(F.lit(""))

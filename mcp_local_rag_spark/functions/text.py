@@ -79,53 +79,6 @@ def word_shingles(col: Column, k: int) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# chunk-quality predicates (reference parity)
-
-# decoration-only lines like '----' (reference semantic-chunker.ts:73)
-_DECOR_RE = "^[-=_.*#|~`@!%^&*()\\[\\]{}\\\\/<>:+\\s]+$"
-
-
-def is_garbage_chunk(col: Column) -> Column:
-    """Reference P8 (src/chunker/semantic-chunker.ts:65-84), exact order:
-    empty -> garbage; any ASCII alphanumeric -> keep; decoration-only ->
-    garbage; >80% single-char repetition -> garbage.
-    """
-    trimmed = F.trim(col)
-    n = F.length(trimmed)
-    has_alnum = trimmed.rlike("[a-zA-Z0-9]")
-    # dominant single character ratio: max occurrences of any char / length,
-    # computed via aggregate over the distinct chars of the string. The
-    # O(len x distinct_chars) interpreted HOF is gated behind a CASE WHEN
-    # (whose branches evaluate lazily per row, unlike boolean AND): it only
-    # runs for the rare no-alnum strings, never on ordinary text.
-    chars = F.split(trimmed, "")
-    top_char_count = F.when(
-        ~has_alnum,
-        F.array_max(
-            F.transform(
-                F.array_distinct(chars),
-                lambda c: F.size(F.filter(chars, lambda x: x == c)),
-            )
-        ),
-    )
-    return (n == 0) | (
-        ~has_alnum
-        & (
-            trimmed.rlike(_DECOR_RE)
-            | ((n > 0) & ((top_char_count.cast("double") / n) > 0.8))
-        )
-    )
-
-
-def passes_min_length(col: Column, min_len: int = 50, atomic: Column | None = None) -> Column:
-    """Reference P9: keep iff len >= min_len OR the chunk is an atomic unit."""
-    ok = F.length(col) >= min_len
-    if atomic is not None:
-        ok = ok | atomic
-    return ok
-
-
-# ---------------------------------------------------------------------------
 # training-data analytics
 
 # tiny marker-word lists per language for the n-gram/stopword heuristic.
@@ -135,10 +88,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "de": ("der", "die", "und", "das", "ein", "nicht", "ist"),
     "fr": ("le", "la", "les", "et", "des", "une", "est"),
 }
-
-EN_STOPWORDS = (
-    "the a an and or of to in is are was for on with as by at from".split()
-)
 
 
 def lang_marker_score(col: Column, lang: str) -> Column:
@@ -160,16 +109,6 @@ def predict_lang(col: Column, default: str = "und") -> Column:
         expr = F.when(score > best, F.lit(lang)).otherwise(expr)
         best = F.greatest(score, best)
     return F.when(best <= 0, F.lit(default)).otherwise(expr)
-
-
-def stopword_ratio(col: Column) -> Column:
-    toks = tokens(col)
-    stop = F.array(*[F.lit(s) for s in EN_STOPWORDS])
-    return F.when(
-        F.size(toks) > 0,
-        F.size(F.filter(toks, lambda t: F.array_contains(stop, t))).cast("double")
-        / F.size(toks),
-    ).otherwise(F.lit(0.0))
 
 
 def punct_ratio(col: Column) -> Column:

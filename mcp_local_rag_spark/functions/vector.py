@@ -121,19 +121,3 @@ def cosine_pairs_pandas() -> "object":
     return pandas_udf(_cos, "double")
 
 
-def l2_normalize(a: Column) -> Column:
-    """Scale an array column to unit L2 norm (zero vectors pass through).
-
-    The norm is let-bound via a 1-element ``transform`` (the
-    word_shingles discipline): referencing ``l2_norm(a)`` inside the
-    per-element lambda would inline — and re-run — the whole O(d)
-    norm fold at every element, making normalization O(d^2) per row."""
-    return F.element_at(
-        F.transform(
-            F.array(l2_norm(a)),
-            lambda n: F.when(
-                n > 0, F.transform(a, lambda x: x.cast("double") / n)
-            ).otherwise(F.transform(a, lambda x: x.cast("double"))),
-        ),
-        1,
-    )

@@ -14,7 +14,7 @@ lexicographic MIN over hex digests is a valid min-hash).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
@@ -184,8 +184,8 @@ def lsh_candidate_pairs(
     ``materialize`` persists the band table before the self-join: both
     join sides (and Spark's plan for each) otherwise re-run the whole
     shingle→minhash→band pipeline — measured as two extra full
-    aggregations. In production the signature table is a persisted
-    artifact anyway (it is also what incremental dedup diffs against).
+    aggregations. In production the band table is a persisted artifact
+    anyway (plans/dedup_index.write_band_index).
     """
     bands = band_keys(sigs, id_col=id_col, band_size=band_size)
     if materialize:
@@ -260,8 +260,8 @@ def minhash_jaccard_estimate(
 
     This is the verification tier that never touches shingles again:
     two equi-joins against the narrow signature table and an O(n)
-    column expression per pair — O(pairs * n) total, vs
-    ``jaccard_verify``'s O(pairs * shingles) intersection join. At
+    column expression per pair — O(pairs * n) total, vs the exact
+    verify's O(pairs * shingles) set intersection. At
     100 TB the exact verify re-joins the exploded shingle stream twice;
     this reads 16 longs per side. Exactness contract: matches/16 is a
     1/16 multiple, exactly representable in binary floating point, so
@@ -323,38 +323,6 @@ def incremental_candidate_pairs(
     return pairs
 
 
-def jaccard_verify(
-    pairs: DataFrame,
-    shingles: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Exact n-gram Jaccard on candidate pairs; keep pairs >= threshold.
-    ``shingles`` must be DISTINCT per (id, shingle) — ``shingle_sets``'
-    contract.
-
-    r16 shape: each document's shingle set is packed into ONE array row
-    (``collect_set`` — one map-side-combined shuffle of the stream, same
-    keying as the old per-doc size aggregate), then |A ∩ B| is a per-pair
-    ``array_intersect`` after two narrow id joins. The previous form
-    expanded every candidate pair into |A| (id2, shingle) rows and
-    shuffled THAT through a second equi-join plus a per-pair re-aggregate
-    — O(pairs x shingles) rows through two exchanges (guide §2.3). Packed
-    arrays move strictly fewer bytes (no per-row id/shingle duplication),
-    the pair-expanded exchange and the re-aggregate disappear, and the
-    per-pair intersection is a linear hash-set pass. Integer counts and
-    the identical round() arithmetic keep the scores bit-for-bit equal to
-    the join form (pytest-pinned); ``c >= 1`` reproduces the old inner
-    join's drop of zero-intersection pairs for any threshold.
-
-    Callers that already hold packed sets (``doc_profiles``) skip the
-    ``collect_set`` and call ``jaccard_verify_sets`` directly.
-    """
-    sets_ = shingles.groupBy(id_col).agg(F.collect_set("shingle").alias("_sh"))
-    return jaccard_verify_sets(pairs, sets_, id_col=id_col, threshold=threshold)
-
-
 def jaccard_verify_sets(
     pairs: DataFrame,
     sets_: DataFrame,
@@ -363,9 +331,16 @@ def jaccard_verify_sets(
     set_col: str = "_sh",
     threshold: float = 0.7,
 ) -> DataFrame:
-    """``jaccard_verify`` over PRE-PACKED sets: (id, set_col array) rows,
-    one per document (``doc_profiles`` / a prior ``collect_set``). Same
-    semantics, same rounding, same ``c >= 1`` inner-join reproduction."""
+    """Exact n-gram Jaccard on candidate pairs over PRE-PACKED sets:
+    (id, set_col array) rows, one per document (``doc_profiles`` / a
+    ``collect_set`` of distinct shingles); keep pairs >= threshold.
+
+    |A ∩ B| is a per-pair ``array_intersect`` after two narrow id joins,
+    never a pair-expanded (id2, shingle) join plus a re-aggregate: packed
+    arrays move strictly fewer bytes and the intersection is a linear
+    hash-set pass. Integer counts and round(x, 6) keep scores bit-for-bit
+    equal to the exploded-join form (pytest-pinned); ``c >= 1`` drops
+    zero-intersection pairs for any threshold, as an inner join would."""
     s1 = sets_.select(F.col(id_col).alias("id1"), F.col(set_col).alias("_sh1"))
     s2 = sets_.select(F.col(id_col).alias("id2"), F.col(set_col).alias("_sh2"))
     c = F.size(F.array_intersect("_sh1", "_sh2"))

@@ -27,14 +27,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     DoubleType,
-    FloatType,
     IntegerType,
     StringType,
     StructField,
     StructType,
 )
+
 
 def media_table(df: DataFrame, *, id_col: str, content_col: str, modality: str) -> DataFrame:
     """Normalize any (id, binary) source into the canonical media schema:
@@ -129,8 +128,6 @@ def encode_bmp(img: np.ndarray) -> bytes:
     header = struct.pack("<2sIHHI", b"BM", 54 + len(data), 0, 0, 54)
     info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0)
     return header + info + data
-
-
 
 
 def _lzw_decode(data: bytes, mcs: int) -> list[int]:
@@ -311,8 +308,6 @@ def encode_gif(img: np.ndarray) -> bytes:
         out += chunk
     out += b"\x00\x3b"
     return bytes(out)
-
-
 
 
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
@@ -513,89 +508,6 @@ def resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     return img[ys][:, xs].copy()
 
 
-def resize_bilinear(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Bilinear resize with half-pixel centers (align_corners=False), float32."""
-    h, w = img.shape[:2]
-    fy = np.clip((np.arange(out_h) + 0.5) * h / out_h - 0.5, 0, h - 1)
-    fx = np.clip((np.arange(out_w) + 0.5) * w / out_w - 0.5, 0, w - 1)
-    y0 = np.floor(fy).astype(int)
-    x0 = np.floor(fx).astype(int)
-    y1 = np.minimum(y0 + 1, h - 1)
-    x1 = np.minimum(x0 + 1, w - 1)
-    wy = (fy - y0)[:, None]
-    wx = (fx - x0)[None, :]
-    if img.ndim == 3:
-        wy = wy[..., None]
-        wx = wx[..., None]
-    a = img[y0][:, x0].astype(np.float32)
-    b = img[y0][:, x1].astype(np.float32)
-    c = img[y1][:, x0].astype(np.float32)
-    d = img[y1][:, x1].astype(np.float32)
-    return (a * (1 - wy) * (1 - wx) + b * (1 - wy) * wx
-            + c * wy * (1 - wx) + d * wy * wx)
-
-
-def fake_image_decoder(content: bytes) -> np.ndarray:
-    """Deterministic stand-in decoder: 8x8x3 uint8 'image' seeded from the
-    byte hash — lets the full pipeline run and be asserted in tests."""
-    h = hashlib.sha256(content).digest()
-    rng = np.frombuffer((h * 6)[: 8 * 8 * 3], dtype=np.uint8)
-    return rng.reshape(8, 8, 3).copy()
-
-
-IMAGE_FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("height", IntegerType()),
-        StructField("width", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("mean_luma", FloatType()),
-        StructField("embedding", ArrayType(FloatType())),
-    ]
-)
-
-
-def image_features(
-    media: DataFrame,
-    *,
-    decode_fn: Callable[[bytes], np.ndarray] = default_image_decoder,
-    embed_dim: int = 16,
-) -> DataFrame:
-    """Decode -> feature-extract per image, Arrow-batched.
-
-    Output embedding = channel-mean histogram (a deterministic, model-free
-    feature); swap decode_fn/feature math for a real vision model without
-    touching the Spark plumbing.
-    """
-
-    def _feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                img = decode_fn(bytes(content))
-                luma = float(img.mean())
-                hist = np.histogram(img, bins=embed_dim, range=(0, 255))[0]
-                total = hist.sum() or 1
-                rows.append(
-                    (
-                        mid,
-                        int(img.shape[0]),
-                        int(img.shape[1]),
-                        int(img.shape[2]) if img.ndim == 3 else 1,
-                        luma,
-                        [float(x) / total for x in hist],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "height", "width", "channels", "mean_luma", "embedding"],
-            )
-
-    return media.filter(F.col("modality") == "image").select(
-        "media_id", "content"
-    ).mapInPandas(_feats, IMAGE_FEATURES_SCHEMA)
-
-
 FRAME_SAMPLE_SCHEMA = StructType(
     [
         StructField("media_id", StringType()),
@@ -703,18 +615,6 @@ def sample_frames(
 # signal features. Compressed codecs (mp3/flac/ogg) would need an external
 # decoder — same import-gate stance as image decode.
 
-AUDIO_WINDOW_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("window_index", IntegerType()),
-        StructField("start_sec", DoubleType()),
-        StructField("n_samples", IntegerType()),
-        StructField("rms", DoubleType()),
-        StructField("zero_crossing_rate", DoubleType()),
-    ]
-)
-
-
 def default_audio_decoder(content: bytes) -> tuple[np.ndarray, int]:
     """Decode PCM16 WAV bytes to (mono float64 in [-1, 1], sample_rate).
 
@@ -736,58 +636,6 @@ def default_audio_decoder(content: bytes) -> tuple[np.ndarray, int]:
     if ch > 1:
         x = x.reshape(-1, ch).mean(axis=1)
     return x, sr
-
-
-def audio_window_features(
-    media: DataFrame,
-    *,
-    window_sec: float = 1.0,
-    decoder: Callable[[bytes], tuple[np.ndarray, int]] | None = None,
-) -> DataFrame:
-    """Windowed audio features: one row per (media, window) with RMS and
-    zero-crossing rate — the UDTF fan-out shape (1 row in, N windows out)
-    a speech/audio curation pipeline filters on (silence, clipping,
-    voice-activity proxies). Arrow-batched mapInPandas; decode+feature
-    math is numpy over one window at a time, so memory is bounded by the
-    batch's audio bytes, not the corpus."""
-    dec = decoder or default_audio_decoder
-
-    def _windows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                x, sr = dec(bytes(content))
-                step = max(1, int(window_sec * sr))
-                for j in range(0, max(len(x), 1), step):
-                    seg = x[j : j + step]
-                    if not len(seg):
-                        continue
-                    zc = float(np.mean(np.abs(np.diff(np.sign(seg))) > 0)) if len(seg) > 1 else 0.0
-                    rows.append(
-                        (
-                            mid,
-                            j // step,
-                            j / sr,
-                            int(len(seg)),
-                            float(np.sqrt(np.mean(seg**2))),
-                            zc,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "window_index",
-                    "start_sec",
-                    "n_samples",
-                    "rms",
-                    "zero_crossing_rate",
-                ],
-            )
-
-    return media.filter(F.col("modality") == "audio").select(
-        "media_id", "content"
-    ).mapInPandas(_windows, AUDIO_WINDOW_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

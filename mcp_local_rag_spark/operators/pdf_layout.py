@@ -46,74 +46,6 @@ SMALL_FONT_RATIO = 0.7
 EDGE_BAND_RATIO = 0.10
 
 
-def assemble_text(
-    items: DataFrame,
-    *,
-    doc_col: str = "doc",
-    page_col: str = "page",
-    y_round: int = 0,
-) -> DataFrame:
-    """(doc, page, x, y, font_size?, text) -> (doc, page, text).
-
-    Lines = items sharing rounded Y; within a line X ascending; lines in
-    reading order (Y descending — PDF origin is bottom-left after the
-    reference's inversion). array_sort over collected structs keeps the
-    whole assembly deterministic and shuffle-minimal (one groupBy).
-    """
-    line_items = items.groupBy(
-        doc_col, page_col, F.round(F.col("y"), y_round).alias("_line_y")
-    ).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col("x"), F.col("text")))),
-                lambda s: s["text"],
-            ),
-            " ",
-        ).alias("_line_text")
-    )
-    pages = line_items.groupBy(doc_col, page_col).agg(
-        F.array_join(
-            F.reverse(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct(F.col("_line_y"), F.col("_line_text")))),
-                    lambda s: s["_line_text"],
-                )
-            ),
-            "\n",
-        ).alias("text")
-    )
-    return pages
-
-
-def header_footer_hints(
-    items: DataFrame,
-    *,
-    doc_col: str = "doc",
-    page_col: str = "page",
-    page_height_col: str = "page_height",
-) -> DataFrame:
-    """Stage-1 block hints: small-font items in the top/bottom 10% bands.
-
-    Output: (doc, page, y, text, is_header_hint, is_footer_hint).
-    Median font size per page via exact percentile (A7).
-    """
-    med = items.groupBy(doc_col, page_col).agg(
-        F.percentile("font_size", F.lit(0.5)).alias("_med_font")
-    )
-    joined = items.join(med, [doc_col, page_col])
-    small = F.col("font_size") < SMALL_FONT_RATIO * F.col("_med_font")
-    top_band = F.col("y") >= (1 - EDGE_BAND_RATIO) * F.col(page_height_col)
-    bottom_band = F.col("y") <= EDGE_BAND_RATIO * F.col(page_height_col)
-    return joined.select(
-        doc_col,
-        page_col,
-        "y",
-        "text",
-        (small & top_band).alias("is_header_hint"),
-        (small & bottom_band).alias("is_footer_hint"),
-    )
-
-
 def visual_candidates(
     blocks: DataFrame,
     *,

@@ -20,9 +20,10 @@ pure functions below (``group_candidates``, ``boost_rows``, ``file_cut``,
 implementation. Run as Spark plans, the tail cost ~9 jobs of submission
 overhead for <= 20 output rows.
 
-The Spark forms of the tail (``grouping_filter``, ``keyword_boost``,
-``file_topn_filter``, ``final_topk``) stay for their own registry lanes,
-and tests/test_search.py pins the driver functions row-identical to them.
+The Spark forms of the tail stay as references: ``grouping_filter`` and
+``keyword_boost`` serve their own registry lanes, while ``file_topn_filter``
+and ``final_topk`` have no lane and are kept as the Spark reference that
+tests/test_search.py pins the driver functions row-identical to.
 
 Determinism contract (for the duckdb oracle): ranking keys are
 (round(score, 6), *id_cols) — rounding first removes float32-accumulation
@@ -668,7 +669,9 @@ def hybrid_search_batch(
     ``query_vecs``: {query_id: vector}; ``query_terms``: {query_id:
     [terms]} (missing/empty term lists mean vector-only for that query).
     Output: (query_id, *id_cols[, payload], score), exactly k rows/query
-    before the file filter trims further.
+    before the file filter trims further, already in
+    (query_id, score, *id_cols) order — callers need no Sort (which
+    would cost an Exchange and jobs over a LocalRelation).
     """
     payload = list(payload_cols)
     if max_files is not None and file_col not in id_cols and file_col not in payload:

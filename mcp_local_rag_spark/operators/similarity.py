@@ -327,7 +327,7 @@ def embedding_near_dups(
     cross join. A fixed 5-value label column is fine for a 500-vector
     oracle demo and catastrophically quadratic at 100x that — pass
     ivf_assign labels (or hyperplane-LSH buckets) as block_col at scale,
-    and cap stragglers with operators/skew.cap_bucket_size.
+    and cap stragglers (drop over-limit blocks before the pair join).
     """
     from ..functions.vector import cosine_pairs_pandas
 

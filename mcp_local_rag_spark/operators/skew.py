@@ -44,28 +44,6 @@ def salted_count(
     return partial.groupBy(*keys).agg(*final_aggs)
 
 
-def cap_bucket_size(
-    bands: DataFrame,
-    *,
-    bucket_cols: Sequence[str] = ("band", "band_key"),
-    id_col: str = "doc_id",
-    max_bucket: int = 200,
-) -> tuple[DataFrame, DataFrame]:
-    """Split banded LSH rows into (kept, dropped_buckets).
-
-    ``dropped_buckets`` lists each over-limit bucket with its size so the
-    caller can log coverage loss instead of silently skewing or exploding
-    the pair join (a bucket of b docs yields b*(b-1)/2 pairs)."""
-    sizes = bands.groupBy(*bucket_cols).agg(F.count("*").alias("bucket_size"))
-    kept = bands.join(
-        sizes.filter(F.col("bucket_size") <= max_bucket).select(*bucket_cols),
-        list(bucket_cols),
-        "left_semi",
-    )
-    dropped = sizes.filter(F.col("bucket_size") > max_bucket)
-    return kept, dropped
-
-
 def heavy_hitters_exact(
     df: DataFrame,
     key_col: str,

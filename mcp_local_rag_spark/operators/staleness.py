@@ -1,10 +1,11 @@
 """Uniform staleness / AS-OF contract for the serving tier.
 
-plans/secondary.SecondaryReader already enforces it for warehouse
-lookups: a serving read either proves it reflects the source's current
-version, serves a caller-PINNED version, or fails loudly — silent
-staleness is never an option. This module gives the RAG serving sidecars
-(operators/vector_serve, hybrid_serve, ivf_serve) the same two keywords:
+plans/secondary already enforces it for warehouse lookups
+(``lookup_by`` / ``range_lookup``): a serving read either proves it
+reflects the source's current version, serves a caller-PINNED version,
+or fails loudly — silent staleness is never an option. This module
+gives the RAG serving sidecars (operators/vector_serve, hybrid_serve,
+ivf_serve) the same two keywords:
 
   at_version=V   serve EXACTLY the snapshot stamped ``V`` (the chunks
                  table's content stamp, plans/ingest.bump_table_version):
@@ -18,10 +19,11 @@ staleness is never an option. This module gives the RAG serving sidecars
                  ivf_serve's index vs the table it was built from):
                  False (default) raises StaleServingError with the two
                  versions; True serves the artifact as-of its own stamp —
-                 the SecondaryReader escape hatch, now spelled the same
-                 everywhere. Artifacts without a covers stamp (built by
-                 plain write_postings / write_ivf_index outside the
-                 engine) carry no proof and serve as before.
+                 the ``stale_ok`` escape hatch of plans/secondary's
+                 lookups, spelled the same everywhere. Artifacts
+                 without a covers stamp (built by plain write_postings
+                 / write_ivf_index outside the engine) carry no proof
+                 and serve as before.
 
 The reference has one serving process over one always-current table, so
 no counterpart exists; semantics follow plans/secondary's

@@ -1,16 +1,10 @@
-"""Persisted MinHash signature table — the dedup twin of the FTS postings
-index (plans/fts): computed once when a corpus is ingested, appended per
-arriving batch, and diffed incrementally so deduplication cost scales
-with the batch, not the corpus.
-
-Layout: one row per document, (id, sig0..sig{n-1}), plain parquet.
-Signatures are deterministic (operators/dedup constants), so an
-incremental run against the stored table returns exactly the pairs a
-full recompute would — pinned by tests/test_dedup.py. At 100 TB the
-table would be bucketed by id hash like the chunks table so the
-band-key build co-partitions with other per-doc artifacts; the row
-volume (one narrow row per doc) makes even the plain layout cheap
-relative to the corpus it indexes.
+"""Persisted MinHash band index — the dedup twin of the FTS postings
+index (plans/fts): the exploded band-key table is computed once per
+corpus generation (``write_band_index``) and candidate pairs are read
+back from it (``banded_candidate_pairs``) instead of re-signing the
+corpus per query. Signatures are deterministic (operators/dedup
+constants), so the stored index returns exactly the pairs a full
+recompute would — pinned by tests/test_dedup.py.
 """
 
 from __future__ import annotations
@@ -22,19 +16,8 @@ from ..session import read_parquet
 
 from ..operators.dedup import (
     band_keys,
-    incremental_candidate_pairs,
     minhash_signatures_docs,
 )
-
-
-def _has_data(path: str) -> bool:
-    """Whether the signature table holds any parquet data files (same
-    posture as plans/fts.index_has_data: no Spark call, and real read
-    errors are never mapped to 'empty')."""
-    import glob
-    import os
-
-    return bool(glob.glob(os.path.join(path, "*.parquet")))
 
 
 # -- staleness contract (operators/staleness, r13 item 7 -> r14) ------------
@@ -48,7 +31,7 @@ def _has_data(path: str) -> bool:
 #   covers_source_stamp   the SOURCE content stamp (plans/ingest.
 #                         table_content_stamp of the docs table, or any
 #                         caller-chosen generation token) the index was
-#                         built from / last appended under. Readers pass
+#                         built from. Readers pass
 #                         the source's CURRENT stamp as ``at_source`` and
 #                         get check_covers semantics: mismatch raises
 #                         StaleServingError unless stale_ok. Unstamped
@@ -81,40 +64,29 @@ def index_stamp(path: str) -> tuple[str | None, bool]:
     return (str(c) if c else None, os.path.exists(_refresh_marker(path)))
 
 
-def _stamp_index(
-    path: str,
-    *,
-    covers: str | None,
-    rebuilt: bool = False,
-    n_buckets: int | None = None,
-) -> None:
-    """Post-write stamping. ``rebuilt=True`` marks the completion of an
-    OVERWRITE rebuild: it clears the torn-rebuild marker (ONLY then — an
-    append completing must never silence a marker some crashed rebuild
-    left behind, r14 review finding) and rewrites the covers stamp even
-    when ``covers`` is None — a rebuild from an unstated generation must
-    CLEAR the old stamp, not inherit coverage of a corpus it was not
-    built from. Append paths (rebuilt=False) only advance the stamp when
-    the caller supplies one. ``n_buckets`` records the layout's actual
-    bucket count (write_band_index's 16), never the 64-bucket fallback a
-    fresh meta would guess."""
+def _stamp_index(path: str, *, covers: str | None, n_buckets: int) -> None:
+    """Post-rebuild stamping: marks the completion of an OVERWRITE
+    rebuild. It rewrites the covers stamp even when ``covers`` is None —
+    a rebuild from an unstated generation must CLEAR the old stamp, not
+    inherit coverage of a corpus it was not built from — and only then
+    clears the torn-rebuild marker. ``n_buckets`` records the layout's
+    actual bucket count (write_band_index's 16), never the 64-bucket
+    fallback a fresh meta would guess."""
     import os
 
-    from .ingest import table_n_buckets, write_table_meta
+    from .ingest import write_table_meta
 
-    if rebuilt or covers is not None:
-        write_table_meta(
-            path,
-            n_buckets if n_buckets is not None else table_n_buckets(path),
-            extra={
-                "covers_source_stamp": str(covers) if covers is not None else None
-            },
-        )
-    if rebuilt:
-        try:
-            os.remove(_refresh_marker(path))
-        except FileNotFoundError:
-            pass
+    write_table_meta(
+        path,
+        n_buckets,
+        extra={
+            "covers_source_stamp": str(covers) if covers is not None else None
+        },
+    )
+    try:
+        os.remove(_refresh_marker(path))
+    except FileNotFoundError:
+        pass
 
 
 def _mark_refreshing(path: str) -> None:
@@ -140,61 +112,6 @@ def check_index_fresh(
             "rebuild, or pass stale_ok=True to read it as-is"
         )
     check_covers("dedup band index", covered, at_source, stale_ok)
-
-
-def write_signatures(
-    docs: DataFrame,
-    path: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    mode: str = "overwrite",
-    covers: str | None = None,
-) -> None:
-    """Shingle + sign ``docs`` and persist the signature table.
-    ``covers`` stamps the source generation the table reflects."""
-    sigs = minhash_signatures_docs(docs, id_col=id_col, text_col=text_col)
-    if mode == "overwrite":
-        _mark_refreshing(path)
-    sigs.write.mode(mode).parquet(path)
-    _stamp_index(path, covers=covers, rebuilt=(mode == "overwrite"))
-
-
-def read_signatures(spark: SparkSession, path: str) -> DataFrame:
-    return read_parquet(spark, path)
-
-
-def append_signature_batch(
-    docs: DataFrame,
-    path: str,
-    *,
-    batch_id: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """IDEMPOTENT per-batch signature append for at-least-once streaming
-    sinks: the batch's signatures land as ONE deterministically-named
-    parquet file (``batch-<id>``) via an atomic tmp+rename, so a replayed
-    micro-batch overwrites identical bytes instead of appending duplicate
-    rows — replay is a no-op, whatever the crash point.
-
-    Driver-side write is bounded by construction: a micro-batch holds at
-    most ``maxFilesPerTrigger`` documents and each contributes one narrow
-    signature row, so the Arrow collect is a few KB regardless of corpus
-    size. The tmp name is dot-prefixed so Spark's file listing never sees
-    a half-written footer.
-    """
-    import os
-
-    import pyarrow.parquet as pq
-
-    sigs = minhash_signatures_docs(docs, id_col=id_col, text_col=text_col)
-    table = sigs.toArrow()
-    os.makedirs(path, exist_ok=True)
-    final = os.path.join(path, f"batch-{batch_id}.snappy.parquet")
-    tmp = os.path.join(path, f".batch-{batch_id}.tmp")
-    pq.write_table(table, tmp, compression="snappy")
-    os.replace(tmp, final)
 
 
 def write_band_index(
@@ -231,7 +148,7 @@ def write_band_index(
         .mode("overwrite")
         .parquet(path)
     )
-    _stamp_index(path, covers=covers, rebuilt=True, n_buckets=n_buckets)
+    _stamp_index(path, covers=covers, n_buckets=n_buckets)
 
 
 def _equi_join_pairs(src: DataFrame, id_col: str) -> DataFrame:
@@ -413,47 +330,3 @@ def banded_candidate_pairs(
     return small_pairs.unionByName(hot_pairs).distinct()
 
 
-def incremental_dedup(
-    spark: SparkSession,
-    path: str,
-    new_docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    append: bool = True,
-    covers: str | None = None,
-) -> DataFrame:
-    """Candidate pairs of ``new_docs`` against the stored corpus (plus
-    new-vs-new), then — by default — append the batch's signatures so the
-    table stays current. The corpus is never re-shingled; the batch signs
-    map-only and band-joins the stored bands (operators/dedup.
-    incremental_candidate_pairs). Returns (id1, id2), materialized before
-    the append so the result is stable against the table mutation.
-    """
-    new_sigs = minhash_signatures_docs(
-        new_docs, id_col=id_col, text_col=text_col
-    ).persist()
-    new_sigs.count()
-    if _has_data(path):
-        corpus_sigs = read_signatures(spark, path)
-    else:
-        # bootstrap: a first batch against a missing/empty table dedups
-        # only within itself (empty corpus side) and then seeds the table
-        # — the streaming watcher needs no separate first-run code path
-        corpus_sigs = spark.createDataFrame([], new_sigs.schema)
-    # localCheckpoint (eager) rather than persist: the result must be
-    # materialized before the append mutates the table it was derived
-    # from, but a persist would stay pinned in executor storage for every
-    # maintenance-loop iteration until driver GC — checkpoint blocks are
-    # released as soon as the returned frame goes out of scope
-    pairs = incremental_candidate_pairs(
-        new_sigs, corpus_sigs, id_col=id_col
-    ).localCheckpoint()
-    if append:
-        new_sigs.write.mode("append").parquet(path)
-        spark.catalog.refreshByPath(path)
-        # the batch moved the table to a new source generation — record
-        # it so subsequent at_source reads have the fresh proof
-        _stamp_index(path, covers=covers)
-    new_sigs.unpersist()
-    return pairs

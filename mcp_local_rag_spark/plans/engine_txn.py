@@ -187,39 +187,6 @@ def clear_fts_intent(table_path: str) -> None:
             pass
 
 
-def retire_fts_paths(table_path: str, paths, *, stamped: bool = True) -> None:
-    """Scoped clear for a COOPERATING writer (the streaming watcher):
-    remove only the paths THIS writer just re-derived, preserving any
-    pre-existing recovery work it did not touch — a crashed engine
-    mutation's recorded paths, or the ``full``/``refreshing`` flags from
-    a torn optimize(). A blanket ``clear_fts_intent`` here would erase
-    that record while the writer's covers stamp presents the index as
-    fresh: silent stale postings with no recovery trigger left.
-
-    ``stamped`` = this writer just wrote ``covers_table_version`` at the
-    current table version, which makes the attributed version chain
-    redundant (chain_reaches walks current->covered, now equal), so the
-    ``derived`` map is pruned; without a stamp the chain stays — any
-    remaining foreign paths still need it to prove bounded recovery."""
-    it = read_intent(table_path)
-    if it is None:
-        return
-    rest = set(it.get("paths") or ()) - set(paths)
-    if rest:
-        it["paths"] = sorted(rest)
-    else:
-        it.pop("paths", None)
-    if stamped:
-        it.pop("derived", None)
-    if any(it.get(k) for k in _FTS_KEYS) or it.get("ann"):
-        _write(table_path, it)
-    else:
-        try:
-            os.unlink(_intent_path(table_path))
-        except FileNotFoundError:
-            pass
-
-
 def clear_ann_intent(table_path: str) -> None:
     it = read_intent(table_path)
     if it is None or "ann" not in it:

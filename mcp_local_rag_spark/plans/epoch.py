@@ -24,18 +24,18 @@ Epoch ordering is a pure function of (seed, shard, sample_key):
 md5 (not xxhash64) because both Spark and DuckDB compute identical md5
 hex — the ordering is therefore oracle-checkable bit-for-bit.
 
-Scale honesty: ``epoch_order`` is ONE range-partitioned sort — an
-exchange that does move sample rows (content included) once, with the
-shard rank leading so output partitions hold whole shards. That is the
-right shape for a materialized epoch (write the epoch-ordered corpus
-once, stream it N times). A 100 TB reader that must NOT materialize uses
-``epoch_shard_order`` instead: the shard sequence is a pure driver-side
-function of (seed, shard), each worker takes a deterministic slice of
-that list and reads its shards with the within-shard keys applied
-map-side — zero exchanges, the WebDataset consumer pattern. The two
-orders are IDENTICAL by construction (same md5 keys; property-pinned in
-tests), so a pipeline can switch between them without changing what the
-model sees.
+Scale honesty: sorting on the ``epoch_keys`` columns is ONE
+range-partitioned sort — an exchange that does move sample rows (content
+included) once, with the shard rank leading so output partitions hold
+whole shards. That is the right shape for a materialized epoch (write the
+epoch-ordered corpus once, stream it N times). A 100 TB reader that must
+NOT materialize sorts the shard paths on the driver instead —
+md5(seed | shard) ascending, path as tiebreak — so each worker takes a
+deterministic slice of that list and reads its shards with the
+within-shard keys applied map-side: zero exchanges, the WebDataset
+consumer pattern. The two orders are IDENTICAL by construction (same md5
+keys; pinned in tests), so a pipeline can switch between them without
+changing what the model sees.
 
 Token packing (``pack_token_spans``) is the GPT-style concat-and-chunk:
 within each partition (shard/source), documents concatenate in epoch
@@ -102,51 +102,6 @@ def epoch_keys(
     return out
 
 
-def epoch_order(
-    samples: DataFrame,
-    *,
-    seed: int,
-    buffer: int | None = None,
-    shard_col: str = "shard",
-    key_col: str = "sample_key",
-    index_col: str | None = "first_member_index",
-) -> DataFrame:
-    """``epoch_keys`` + the global sort into the seeded epoch order (the
-    materialized-epoch form; see the module docstring for when to use
-    ``epoch_shard_order`` instead)."""
-    return epoch_keys(
-        samples,
-        seed=seed,
-        buffer=buffer,
-        shard_col=shard_col,
-        key_col=key_col,
-        index_col=index_col,
-    ).orderBy(
-        "epoch_shard_ord",
-        shard_col,
-        "epoch_block",
-        "epoch_intra",
-        key_col,
-    )
-
-
-def epoch_shard_order(shard_paths: list[str], *, seed: int) -> list[str]:
-    """The epoch's SHARD sequence as a pure driver-side function — the
-    zero-exchange consumer path (see module docstring): md5(seed | shard)
-    ascending, shard path as tiebreak, bit-identical to the
-    ``epoch_shard_ord`` column ``epoch_order`` computes in-plan (pinned
-    by tests/test_epoch.py). A 1000-worker reader gives worker w the
-    slice ``order[w::1000]`` and every worker's traffic is sequential
-    whole-tar reads."""
-    import hashlib
-
-    s = str(int(seed))
-    return sorted(
-        shard_paths,
-        key=lambda p: (hashlib.md5(f"{s}|{p}".encode()).hexdigest(), p),
-    )
-
-
 def epoch_rank_in_shard(ordered: DataFrame, *, shard_col: str = "shard",
                         key_col: str = "sample_key") -> DataFrame:
     """Per-shard epoch position (1-based) — a PARTITIONED window, so it
@@ -156,22 +111,6 @@ def epoch_rank_in_shard(ordered: DataFrame, *, shard_col: str = "shard",
         "epoch_block", "epoch_intra", key_col
     )
     return ordered.withColumn("epoch_rank", F.row_number().over(w))
-
-
-def epoch_samples(
-    spark,
-    shard_paths: list[str],
-    *,
-    seed: int,
-    buffer: int | None = None,
-):
-    """The composed reader over REAL tar shards: expand -> assemble ->
-    seeded epoch order. Returns assembled sample rows (shard, sample_key,
-    slots map, ...) sorted into the epoch order."""
-    from ..sources.webdataset import assemble_samples, read_webdataset
-
-    samples = assemble_samples(read_webdataset(spark, shard_paths))
-    return epoch_order(samples, seed=seed, buffer=buffer)
 
 
 def pack_token_spans(
@@ -254,7 +193,7 @@ def epoch_universe(shard_paths: list[str]) -> str:
     Mint this alongside the cursor and hand it to ``epoch_after``'s
     ``universe``/``shard_paths`` pair to fail loudly instead. Shard
     CONTENT is deliberately not hashed: shards are immutable-by-name
-    (streaming/watch contract; sync_shards replaces a changed shard's
+    (sync_shards replaces a changed shard's
     rows, and repack re-keys), so the path set is the identity — and the
     check stays zero-IO on a million-shard corpus."""
     import hashlib
@@ -282,7 +221,8 @@ def epoch_after(
     the full epoch, list-exact; pinned in tests/test_epoch.py across
     shard and buffer-block boundaries).
 
-    Scale shape, mirroring ``epoch_shard_order``'s zero-exchange story:
+    Scale shape, mirroring the driver-side shard order's zero-exchange
+    story:
     every epoch key is a pure hash, so the shard-level cut is a pure
     DRIVER comparison (md5(seed|shard) vs the cursor shard's) — whole
     later shards pass with no per-row work beyond the hash compare, and
@@ -290,9 +230,10 @@ def epoch_after(
     in-shard position, and that is resolved inside the same
     shard-partitioned window ``epoch_keys`` already computes (the
     cursor's block looked up as a windowed max over the one shard) — no
-    additional exchange anywhere. A streaming consumer does the same cut
-    driver-side: take ``epoch_shard_order(...)`` after the cursor shard,
-    plus the cursor shard re-read with this frame's in-shard predicate.
+    additional exchange anywhere. A non-materializing consumer does the
+    same cut driver-side: take the shards after the cursor shard in the
+    md5(seed | shard) order, plus the cursor shard re-read with this
+    frame's in-shard predicate.
 
     ``validate=True`` (one bounded existence probe) rejects a cursor
     that names no sample: with ``buffer`` set, a missing cursor has no
@@ -351,7 +292,7 @@ def epoch_after(
         f"{s}|{cursor_shard}|{cursor_key}".encode()
     ).hexdigest()
     # whole-shard cut: pure hash comparison (shard path as tiebreak,
-    # matching epoch_order's sort)
+    # matching the epoch sort)
     later_shard = (F.col("epoch_shard_ord") > F.lit(cur_ord)) | (
         (F.col("epoch_shard_ord") == F.lit(cur_ord))
         & (F.col(shard_col) > F.lit(cursor_shard))

@@ -1,24 +1,17 @@
 """Training-shard export — the pipeline's LAST MILE: take the curated
-corpus (post dedup/decontaminate/quality, i.e. the keep-set of
-corpus_curation_pipeline) and materialize trainer-consumable shards.
+corpus and materialize trainer-consumable shards.
 
 Two shapes:
 
-  * ``export_jsonl_shards`` — line-JSON shards (what most data loaders
-    stream), one directory per (lang) shard key, files size-bounded via
-    ``maxRecordsPerFile``. JSONL because the consumer is a sequential
-    reader, not an analytical engine.
-  * ``export_packed_parquet`` — the sequence-packed form: documents
-    carry their (shard_key, bin) assignment from the same running-budget
-    rule ``documents_pack_bins`` verifies, written bucketed by bin so a
-    trainer's sampler reads one bin = one context-budget group per file.
+  * ``export_webdataset_shards`` — size-bounded POSIX tar shards with a
+    sha256 manifest (``verify_webdataset_export`` re-checks it).
+  * ``export_packed_epoch`` — one seeded training epoch of a WebDataset
+    corpus as packed-sequence shards.
 
 Scale posture: assignment is a per-shard-key window (partitioned, never
-a global sort); the write is ONE job with the same one-file-per-bucket
-discipline as plans/ingest.write_chunks; nothing collects to the
-driver. Determinism: shard and bin assignment are pure functions of
-(shard key, doc order), so re-running the export reproduces the same
-shards byte-for-byte (modulo parquet metadata).
+a global sort); nothing collects to the driver. Determinism: shard
+assignment is a pure function of (shard key, doc order), so re-running
+the export reproduces the same shards byte-for-byte.
 """
 
 from __future__ import annotations
@@ -26,203 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
-
-from ..session import read_parquet
-
-DEFAULT_BIN_BUDGET = 8192  # chars per packed context bin (pack_bins rule)
-
-
-def assign_pack_bins(
-    docs: DataFrame,
-    *,
-    shard_col: str = "lang",
-    order_col: str = "doc_id",
-    length_col: str = "n_chars",
-    budget: int = DEFAULT_BIN_BUDGET,
-) -> DataFrame:
-    """The streaming-packing assignment (bin = start offset // budget),
-    per shard key — the SAME rule the oracle-paired documents_pack_bins
-    aggregates, exposed row-level for the export sinks."""
-    w = (
-        Window.partitionBy(shard_col)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return docs.withColumn(
-        "bin",
-        (
-            (F.sum(length_col).over(w) - F.col(length_col)) / F.lit(budget)
-        ).cast("long"),
-    )
-
-
-def export_jsonl_shards(
-    docs: DataFrame,
-    path: str,
-    *,
-    shard_col: str = "lang",
-    max_records_per_file: int = 10_000,
-) -> None:
-    """Write line-JSON shards partitioned by ``shard_col``; each file
-    holds at most ``max_records_per_file`` records. One Spark job; the
-    repartition clusters each shard into one task so a shard's files are
-    written contiguously (the writer splits them by the record cap)."""
-    (
-        docs.repartition(F.col(shard_col))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy(shard_col)
-        .json(path)
-    )
-
-
-def export_packed_parquet(
-    docs: DataFrame,
-    path: str,
-    *,
-    shard_col: str = "lang",
-    order_col: str = "doc_id",
-    length_col: str = "n_chars",
-    budget: int = DEFAULT_BIN_BUDGET,
-) -> None:
-    """Sequence-packed parquet: rows carry (shard, bin) from
-    ``assign_pack_bins`` and land partitioned by shard with one
-    bin-sorted file per shard, so a sampler's read of a context-budget
-    group is one contiguous row-group range."""
-    packed = assign_pack_bins(
-        docs,
-        shard_col=shard_col,
-        order_col=order_col,
-        length_col=length_col,
-        budget=budget,
-    )
-    (
-        packed.repartition(F.col(shard_col))
-        .sortWithinPartitions(shard_col, "bin", order_col)
-        .write.mode("overwrite")
-        .partitionBy(shard_col)
-        .parquet(path)
-    )
-
-
-MANIFEST_FILE = "_manifest.json"
-
-
-def _shard_files(path: str, shard_col: str) -> dict[str, dict]:
-    """Per-shard data-file census (count + bytes) from the directory
-    layout — no Spark job."""
-    import glob
-    import os
-
-    out: dict[str, dict] = {}
-    for d in sorted(glob.glob(os.path.join(path, f"{shard_col}=*"))):
-        key = os.path.basename(d).split("=", 1)[1]
-        files = [
-            f
-            for f in glob.glob(os.path.join(d, "*"))
-            if os.path.isfile(f) and not os.path.basename(f).startswith((".", "_"))
-        ]
-        out[key] = {
-            "n_files": len(files),
-            "bytes": sum(os.path.getsize(f) for f in files),
-        }
-    return out
-
-
-def write_export_manifest(
-    spark,
-    path: str,
-    *,
-    fmt: str = "parquet",
-    shard_col: str = "lang",
-) -> dict:
-    """Stamp the export with a verifiable manifest: per-shard record
-    counts, an ORDER-INSENSITIVE content checksum (sum of bounded row
-    hashes over the sorted column set — one grouped aggregate, no
-    collect beyond the shard table), and the file census. The manifest is
-    what a training run records next to its data config; `verify_export_
-    manifest` recomputes everything from the shards and reports drift —
-    the reproducibility handshake for the pipeline's last mile."""
-    import json
-    import os
-
-    df = spark.read.json(path) if fmt == "json" else read_parquet(spark, path)
-    cols = sorted(c for c in df.columns)
-    row_hash = F.pmod(
-        F.xxhash64(*[F.col(c).cast("string") for c in cols]), F.lit(2**32)
-    )
-    per = {
-        str(r["shard"]): {"records": r["records"], "content_sum": r["content_sum"]}
-        for r in df.groupBy(F.col(shard_col).cast("string").alias("shard"))
-        .agg(
-            F.count("*").alias("records"),
-            F.sum(row_hash).alias("content_sum"),
-        )
-        .collect()
-    }
-    files = _shard_files(path, shard_col)
-    manifest = {
-        "format": fmt,
-        "shard_col": shard_col,
-        "columns": cols,
-        "total_records": sum(s["records"] for s in per.values()),
-        "shards": {
-            k: {**per.get(k, {"records": 0, "content_sum": 0}), **files.get(k, {})}
-            for k in sorted(set(per) | set(files))
-        },
-    }
-    with open(os.path.join(path, MANIFEST_FILE), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    return manifest
-
-
-def verify_export_manifest(spark, path: str) -> list[str]:
-    """Recompute the manifest from the shards and diff — [] means the
-    export is byte-movement-safe (counts, content checksums, and the
-    file census all reproduce)."""
-    import json
-    import os
-
-    with open(os.path.join(path, MANIFEST_FILE)) as f:
-        want = json.load(f)
-    # recompute WITHOUT rewriting the stamp
-    df = (
-        spark.read.json(path)
-        if want["format"] == "json"
-        else read_parquet(spark, path)
-    )
-    cols = sorted(df.columns)
-    problems: list[str] = []
-    if cols != want["columns"]:
-        problems.append(f"columns drifted: {cols} != {want['columns']}")
-        return problems
-    row_hash = F.pmod(
-        F.xxhash64(*[F.col(c).cast("string") for c in cols]), F.lit(2**32)
-    )
-    per = {
-        str(r["shard"]): (r["records"], r["content_sum"])
-        for r in df.groupBy(
-            F.col(want["shard_col"]).cast("string").alias("shard")
-        )
-        .agg(F.count("*").alias("records"), F.sum(row_hash).alias("content_sum"))
-        .collect()
-    }
-    files = _shard_files(path, want["shard_col"])
-    for k, rec in want["shards"].items():
-        got_r, got_c = per.get(k, (0, 0))
-        if got_r != rec["records"]:
-            problems.append(f"shard {k}: records {got_r} != {rec['records']}")
-        if got_c != rec["content_sum"]:
-            problems.append(f"shard {k}: content checksum drifted")
-        fc = files.get(k, {"n_files": 0, "bytes": 0})
-        if rec.get("n_files") is not None and fc["n_files"] != rec["n_files"]:
-            problems.append(
-                f"shard {k}: file count {fc['n_files']} != {rec['n_files']}"
-            )
-    extra = set(per) - set(want["shards"])
-    for k in sorted(extra):
-        problems.append(f"unexpected shard {k}")
-    return problems
 
 
 # ---------------------------------------------------------------------------

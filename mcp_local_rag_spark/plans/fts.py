@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..session import read_parquet
 
 from ..operators.bm25 import build_postings
-from .ingest import N_BUCKETS, atomic_rewrite, table_n_buckets, write_table_meta
+from .ingest import N_BUCKETS, table_n_buckets, write_table_meta
 
 
 def write_postings(
@@ -66,7 +66,7 @@ def write_postings(
     # as index properties at build time — Lucene-style — so per-query
     # scoring folds them in as literals instead of paying a full-index
     # distinct+aggregate per query. Appends update them incrementally
-    # (streaming file sources never re-deliver a document, so + is exact).
+    # (an append never re-delivers an indexed document, so + is exact).
     row = (
         postings.select("filePath", "chunkIndex", "dl").distinct()
         .agg(F.count("*").alias("n"), F.coalesce(F.sum("dl"), F.lit(0)).alias("tdl"))
@@ -205,59 +205,6 @@ def read_fts_stats(path: str) -> dict | None:
     except (KeyError, ValueError, TypeError):
         return None
     return {"n": n, "avgdl": (tdl / n) if n else 0.0, "total_dl": tdl}
-
-
-def compact_postings(spark: SparkSession, path: str) -> None:
-    """Fold the small files that per-micro-batch streaming appends leave in
-    each bucket back into ONE term-sorted file per bucket.
-
-    The term sort is the index's pruning property (per-query scoring scans
-    prune to the row groups holding the query's terms via parquet min/max
-    stats) — plain compaction that merely concatenates batch files would
-    silently lose it, so compaction here re-sorts within the bucket. The
-    chunks-table twin is plans/ingest.compact_chunks.
-
-    Writes to a temp sibling + rename (plans/ingest.atomic_rewrite): the
-    live index stays intact until the full replacement exists, so a
-    mid-write executor loss cannot silently destroy it.
-    """
-    nb = table_n_buckets(path)
-    # replayed appends that slipped past the batch markers can only leave
-    # full-row duplicates ((filePath, chunkIndex, term) carries one (tf, dl)
-    # per document version) — compaction is the declared dedup cover
-    df = read_parquet(spark, path).dropDuplicates(
-        ["filePath", "chunkIndex", "term"]
-    )
-
-    def _write(tmp: str) -> None:
-        (
-            df.repartition(nb, "bucket")
-            .sortWithinPartitions("bucket", "term", "filePath", "chunkIndex")
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        # the replayed appends this dedup removes each incremented the
-        # persisted counters — carrying the old meta forward would leave
-        # BM25's n/avgdl double-counted. Recompute from the DEDUPED frame
-        # (same distinct+aggregate as refresh_postings) and write it into
-        # tmp's meta, which wins the atomic_rewrite merge.
-        row = (
-            df.select("filePath", "chunkIndex", "dl").distinct()
-            .agg(
-                F.count("*").alias("n"),
-                F.coalesce(F.sum("dl"), F.lit(0)).alias("tdl"),
-            )
-            .first()
-        )
-        write_table_meta(
-            tmp,
-            nb,
-            extra={"fts_n_docs": int(row["n"]), "fts_total_dl": int(row["tdl"])},
-        )
-
-    atomic_rewrite(path, _write)
-    spark.catalog.refreshByPath(path)
 
 
 def refresh_postings(

@@ -67,14 +67,14 @@ def write_table_meta(
     keeps Spark's file index from treating it as a data file.
 
     Besides the bucket count this records the embedding space the table was
-    written under (backend + dim) so appenders — the streaming watchers in
-    particular — embed new rows in the SAME space instead of silently
-    mixing incompatible vectors. ``None`` preserves whatever an existing
-    meta file already recorded (read-modify-write), so routing-only writers
-    (FTS refresh, compaction) never erase the embedding record. Keys the
-    caller doesn't set are carried over unchanged (the FTS index keeps its
-    persisted corpus statistics here); ``extra`` merges additional
-    properties in."""
+    written under (backend + dim) so appenders (``RagEngine`` ingests into
+    an existing table) embed new rows in the SAME space instead of
+    silently mixing incompatible vectors. ``None`` preserves whatever an
+    existing meta file already recorded (read-modify-write), so
+    routing-only writers (FTS refresh, compaction) never erase the
+    embedding record. Keys the caller doesn't set are carried over
+    unchanged (the FTS index keeps its persisted corpus statistics here);
+    ``extra`` merges additional properties in."""
     os.makedirs(path, exist_ok=True)
     prev = read_table_meta(path)
     meta = {**prev, "format_version": 2, "n_buckets": int(n_buckets)}
@@ -89,11 +89,11 @@ def write_table_meta(
 
 
 # tables whose version bumps should be ATTRIBUTED to the index-sync
-# intent (plans/engine_txn): the engine (and any cooperating writer, e.g.
-# the streaming watcher) enters attribute_mutations() around its
-# mutations, and bump_table_version then appends (new -> prev) to the
-# intent's version chain — the proof a restarted engine needs that every
-# bump since the last covering stamp belongs to a recorded mutation,
+# intent (plans/engine_txn): the engine enters attribute_mutations()
+# around its mutations, and bump_table_version then appends
+# (new -> prev) to the intent's version chain — the proof a restarted
+# engine needs that every bump since the last covering stamp belongs to
+# a recorded mutation,
 # which is the condition for BOUNDED crash recovery instead of a full
 # O(corpus) index rebuild. A contextvar (not a registry) so a direct
 # plans/ingest call OUTSIDE the engine never self-attributes.
@@ -194,31 +194,6 @@ def table_embedding(path: str, *, default_backend: str = "pseudo", default_dim: 
     except (ValueError, TypeError):
         dim = default_dim
     return str(backend), dim
-
-
-def atomic_rewrite(table_path: str, write_to) -> None:
-    """Full-table rewrite without a destroy-then-write window.
-
-    ``mode('overwrite')`` onto the table's own path clears the directory
-    before the new files land — an executor/block loss mid-write leaves
-    the table destroyed (localCheckpoint protects the lineage, not the
-    files). Instead: ``write_to(tmp)`` builds the complete replacement in
-    a sibling directory, then two renames swap it in; the old table is
-    only removed after the swap. Meta properties the rewrite didn't set
-    (embedding space) are carried over from the old table's meta file.
-    """
-    base = table_path.rstrip("/")
-    tmp, old = base + "__rewrite_tmp", base + "__rewrite_old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    write_to(tmp)
-    merged = {**read_table_meta(base), **read_table_meta(tmp)}
-    if merged:
-        with open(os.path.join(tmp, _TABLE_META), "w") as f:
-            json.dump(merged, f)
-    os.rename(base, old)
-    os.rename(tmp, base)
-    shutil.rmtree(old)
 
 
 def ingest_directory(
@@ -366,7 +341,7 @@ def write_chunks(
     writes only and is persisted as the table property.
 
     ``backend``/``dim`` record the embedding space in the table meta so
-    later appenders (streaming watchers) embed in the same space.
+    later appenders embed in the same space.
     """
     if mode == "append":
         nb = table_n_buckets(path)

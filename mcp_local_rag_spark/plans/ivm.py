@@ -42,7 +42,6 @@ from .merge import (
     _dir_bucket_rows,
     _trim_applied,
     _write_data_version,
-    read_manifest,
     read_snapshot,
 )
 
@@ -307,10 +306,10 @@ def ivm_apply(
     deletes). Returns the committed version.
 
     ``batch_key`` makes the fold EXACTLY-ONCE under at-least-once
-    delivery (streaming foreachBatch): the key is recorded inside the
-    same atomic manifest commit that makes the fold visible, so a replay
-    whose fold already landed is a no-op — there is no window where the
-    data committed but the key did not."""
+    delivery (e.g. a changefeed sync replayed after a crash): the key
+    is recorded inside the same atomic manifest commit that makes the
+    fold visible, so a replay whose fold already landed is a no-op —
+    there is no window where the data committed but the key did not."""
     manifest = _writer_manifest(table_path)
     applied = manifest.get("applied", [])
     if batch_key is not None and batch_key in applied:
@@ -466,54 +465,6 @@ def ivm_commit_key(spark: SparkSession, table_path: str, batch_key: str) -> int:
         new_version,
     )
     return new_version
-
-
-def hist_quantile(map_col, q: float):
-    """Approximate quantile from a ``hist`` measure with NUMERIC bin
-    labels: the bin holding the q-th ranked row (smallest bin whose
-    cumulative count reaches ceil(q * total)). With log-spaced bins
-    (e.g. floor(log2(x))) the true quantile lies inside the returned
-    bin, i.e. bounded RELATIVE error set by the bin base — the classic
-    mergeable-quantile trade, maintained incrementally and retractably
-    because it rides the invertible hist measure. Pure JVM expression.
-
-    Returns the bin label as a string (null for an empty map)."""
-    m = F.col(map_col) if isinstance(map_col, str) else map_col
-    ents = F.array_sort(
-        F.map_entries(m),
-        lambda a, b: F.when(
-            a["key"].cast("double") < b["key"].cast("double"), F.lit(-1)
-        )
-        .when(a["key"].cast("double") > b["key"].cast("double"), F.lit(1))
-        .otherwise(F.lit(0)),
-    )
-    total = F.aggregate(
-        F.map_values(m), F.lit(0).cast("long"), lambda acc, v: acc + v
-    )
-    target = F.ceil(F.lit(q) * total.cast("double")).cast("long")
-
-    # target is let-bound: referencing it directly inside the cumulative
-    # lambda would re-run the O(bins) total fold once per bin
-    def _scan_for(tgt):
-        return F.aggregate(
-            ents,
-            F.struct(
-                F.lit(0).cast("long").alias("cum"),
-                F.lit(None).cast("string").alias("ans"),
-            ),
-            lambda acc, e: F.struct(
-                (acc["cum"] + e["value"]).alias("cum"),
-                F.when(
-                    acc["ans"].isNull() & (acc["cum"] + e["value"] >= tgt),
-                    e["key"],
-                )
-                .otherwise(acc["ans"])
-                .alias("ans"),
-            ),
-            lambda acc: acc["ans"],
-        )
-
-    return F.element_at(F.transform(F.array(target), _scan_for), 1)
 
 
 def ivm_read(

@@ -28,8 +28,7 @@ Scale posture (the 100 TB question):
     list — the Iceberg snapshot model.
   * Data dirs are immutable once committed: a crashed merge leaves a
     data_v{N} dir with no manifest/CURRENT pointing at it — invisible to
-    readers, safely re-written by the retry (same idempotence contract as
-    streaming/dedup's batch files).
+    readers, safely re-written by the retry.
 """
 
 from __future__ import annotations
@@ -795,10 +794,10 @@ def merge_into(
     only the touched buckets. Old snapshots keep their old schema.
 
     ``batch_key`` makes the merge EXACTLY-ONCE under at-least-once
-    delivery (streaming foreachBatch): the key is recorded inside the
-    same atomic manifest commit that makes the merge visible, so a
-    replay whose merge already landed is a no-op — the contract
-    streaming/merge_sink relies on (same protocol as ivm_apply).
+    delivery (e.g. a CDC batch replayed after a crash): the key is
+    recorded inside the same atomic manifest commit that makes the merge
+    visible, so a replay whose merge already landed is a no-op (same
+    protocol as ivm_apply).
 
     ``expectations``: Delta-style CHECK constraints on the WRITTEN rows
     — [(rule name, SQL predicate a good row satisfies)], evaluated over
@@ -884,8 +883,7 @@ def _merge_once(
     # sanity stats: a source with duplicate keys would fan out the
     # full-outer join and silently write duplicate rows (Delta's MERGE
     # raises on multiple matches — so do we); a NULL key has no bucket
-    # identity. Streaming CDC sources collapse duplicates first via
-    # stream_merge(order_col=...).
+    # identity.
     stats = src.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("_n"),
         F.count(key).alias("_nk"),
@@ -903,8 +901,8 @@ def _merge_once(
         raise ValueError(
             f"merge source carries duplicate {key!r} keys "
             f"({n_keys} rows, {n_distinct} distinct): a MERGE source must "
-            "be unique per key (collapse duplicates first — a CDC stream "
-            "can use stream_merge(order_col=...) for last-write-wins)"
+            "be unique per key (collapse duplicates first, e.g. keep the "
+            "last row per key for last-write-wins)"
         )
     touched = sorted(r["bucket"] for r in stats)
     if not touched:

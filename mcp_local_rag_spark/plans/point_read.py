@@ -199,185 +199,3 @@ class SnapshotReader:
         return [n for n in anchor.schema.names if n != "bucket"]
 
 
-class SecondaryReader:
-    """Serving-path non-key lookup: value -> source rows through a
-    sharded secondary index (plans/secondary), all pyarrow. The index's
-    S candidate state keys are computed locally (ivm_key_of), their
-    posting maps read from the index's bucket dirs, and the pks fanned
-    into SnapshotReader.lookup_many on the source.
-
-    Serving reads are for SELECTIVE values (a dashboard fetching one
-    entity's rows); ``cap`` bounds the pk materialization and raises
-    past it — the skewed-value path belongs to the distributed plan
-    (plans/secondary.lookup_by), not a sidecar."""
-
-    def __init__(self, index_path: str, source_table: str | None = None):
-        from .changefeed import load_view_spec
-
-        self._index_path = index_path
-        spec = load_view_spec(index_path)
-        if "secondary" not in spec:
-            raise ValueError(
-                f"{index_path} is not a sharded secondary index"
-            )
-        self._sec = spec["secondary"]
-        self._cols = self._sec["cols"]
-        self._src = source_table or spec["source_table"]
-        self._index = SnapshotReader(index_path)
-        self._source = SnapshotReader(self._src)
-
-    def invalidate(self) -> None:
-        self._index.invalidate()
-        self._source.invalidate()
-
-    def _check_fresh(self) -> None:
-        """THE freshness contract — plans/secondary._check_fresh itself,
-        not a serving-side copy: a lagging index silently MISSES rows,
-        so a serving read against a stale index raises unless the caller
-        opted into as-of-the-cursor semantics. Driver-local metadata
-        only (two tiny JSON reads, uncached: freshness must see the
-        latest commit)."""
-        from .secondary import _check_fresh
-
-        _check_fresh(self._index_path, self._src)
-
-    def _resolve_versions(
-        self, stale_ok: bool, at_source_version: int | None
-    ) -> tuple[int, int]:
-        """(index version, source version) for one serving lookup —
-        PINNED up front in every mode (plans/secondary's
-        _resolve_idx_version contract): a commit landing mid-lookup must
-        never make the freshness check, the posting read, and the source
-        read see three different instants. AS-OF resolves the index
-        version by its recorded changefeed cursor — the same
-        metadata-only walk as the in-plan lanes."""
-        if at_source_version is not None:
-            from .secondary import _index_version_for_source
-
-            return (
-                _index_version_for_source(
-                    self._index_path, at_source_version
-                ),
-                at_source_version,
-            )
-        if not stale_ok:
-            self._check_fresh()
-        return (
-            current_version(self._index_path),
-            current_version(self._src),
-        )
-
-    def lookup_by(
-        self,
-        value,
-        *,
-        columns: list[str] | None = None,
-        cap: int = 10_000,
-        stale_ok: bool = False,
-        at_source_version: int | None = None,
-    ) -> list[dict[str, Any]]:
-        import pyarrow.dataset as ds
-
-        from .ivm import ivm_key_of
-
-        vals = tuple(value) if isinstance(value, (tuple, list)) else (value,)
-        if len(vals) != len(self._cols):
-            raise ValueError(
-                f"index keys {self._cols} need {len(self._cols)} value(s)"
-            )
-        idx_version, src_version = self._resolve_versions(
-            stale_ok, at_source_version
-        )
-        shards = self._sec["pk_shards"]
-        manifest = self._index._manifest(idx_version)
-        nb = manifest["n_buckets"]
-        keys = [ivm_key_of([*vals, s]) for s in range(shards)]
-        by_bucket: dict[int, list[str]] = {}
-        for k in keys:
-            by_bucket.setdefault(bucket_of(k, nb), []).append(k)
-        pks: list[str] = []
-        for b, ks in sorted(by_bucket.items()):
-            data_dir = manifest["buckets"].get(str(b))
-            if data_dir is None:
-                continue
-            tbl = self._index._dataset(data_dir, b).to_table(
-                columns=["_pks"],
-                filter=ds.field("_ivm_key").isin(ks),
-            )
-            for m in tbl.column("_pks").to_pylist():
-                if m:
-                    pks.extend(k for k, _ in m)
-            if len(pks) > cap:
-                raise ValueError(
-                    f"value {vals!r} has > {cap} matching rows — a "
-                    "serving point read is for selective values; use "
-                    "plans.secondary.lookup_by (distributed) instead"
-                )
-        if not pks:
-            return []
-        # posting-map keys are the pk's STRING cast; lookup_many types
-        # them back from the source file schema itself
-        return self._source.lookup_many(
-            sorted(set(pks)), columns=columns, version=src_version
-        )
-
-    def range_lookup(
-        self,
-        lo,
-        hi,
-        *,
-        inclusive: bool = True,
-        columns: list[str] | None = None,
-        cap: int = 10_000,
-        stale_ok: bool = False,
-        at_source_version: int | None = None,
-    ) -> list[dict[str, Any]]:
-        """Serving twin of plans/secondary.range_lookup: source rows whose
-        (single-column) indexed value lies in [lo, hi] ([lo, hi) with
-        ``inclusive=False``). A range admits no candidate-key enumeration,
-        so the index is scanned with the range pushed as a pyarrow
-        predicate — correct at serving latency because the index is
-        O(distinct values x S) rows, orders of magnitude smaller than the
-        source; the SOURCE read stays a bounded lookup_many over the
-        matching posting maps' pks. ``cap`` bounds the pk fan-out exactly
-        as lookup_by does — wide ranges belong to the distributed plan."""
-        import pyarrow.dataset as ds
-
-        if len(self._cols) != 1:
-            raise ValueError(
-                f"range_lookup needs a single-column index, got keys "
-                f"{self._cols}"
-            )
-        idx_version, src_version = self._resolve_versions(
-            stale_ok, at_source_version
-        )
-        col = self._cols[0]
-        manifest = self._index._manifest(idx_version)
-        pks: list[str] = []
-        for b in sorted(int(k) for k in manifest["buckets"]):
-            data_dir = manifest["buckets"].get(str(b))
-            if data_dir is None:
-                continue
-            dset = self._index._dataset(data_dir, b)
-            ctype = dset.schema.field(col).type
-            f_lo = ds.field(col) >= _coerce_arrow(lo, ctype)
-            f_hi = (
-                ds.field(col) <= _coerce_arrow(hi, ctype)
-                if inclusive
-                else ds.field(col) < _coerce_arrow(hi, ctype)
-            )
-            tbl = dset.to_table(columns=["_pks"], filter=f_lo & f_hi)
-            for m in tbl.column("_pks").to_pylist():
-                if m:
-                    pks.extend(k for k, _ in m)
-            if len(pks) > cap:
-                raise ValueError(
-                    f"range [{lo!r}, {hi!r}] has > {cap} matching rows — "
-                    "a serving range read is for selective ranges; use "
-                    "plans.secondary.range_lookup (distributed) instead"
-                )
-        if not pks:
-            return []
-        return self._source.lookup_many(
-            sorted(set(pks)), columns=columns, version=src_version
-        )

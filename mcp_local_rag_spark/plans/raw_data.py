@@ -14,10 +14,10 @@ import base64
 import os
 from urllib.parse import urlsplit, urlunsplit
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.paths import base64url_decode, base64url_encode
+from ..functions.paths import base64url_decode
 
 
 def normalize_source(source: str) -> str:
@@ -72,29 +72,3 @@ def restore_sources(df: DataFrame, path_col: str = "filePath", db_path: str = "/
     )
 
 
-def raw_data_side_table(
-    spark: SparkSession, records: list[dict], db_path: str = "/data/db"
-) -> DataFrame:
-    """(source, title, format, content) -> sidecar rows with managed paths."""
-    rows = [
-        (
-            r["source"],
-            normalize_source(r["source"]),
-            source_to_path(r["source"], db_path),
-            r.get("title"),
-            r.get("format", "markdown"),
-            r["content"],
-        )
-        for r in records
-    ]
-    return spark.createDataFrame(
-        rows,
-        "source string, normalized_source string, filePath string,"
-        " title string, format string, content string",
-    )
-
-
-def roundtrip_check_expr(path_col="filePath"):
-    """Spark expression asserting path->source->path identity (test hook)."""
-    key = F.regexp_extract(F.col(path_col), r"/raw-data/(.+)\.md$", 1)
-    return base64url_encode(base64url_decode(key)) == key

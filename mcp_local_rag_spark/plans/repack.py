@@ -1,7 +1,8 @@
 """Shard re-pack maintenance (VERDICT r14 item 6): compaction at the
 SHARD grain.
 
-Shards are immutable-by-name (streaming/watch contract) and curation
+Shards are immutable-by-name (``ingest_shards`` keys rows by shard
+path; a changed shard is re-synced, never edited in place) and curation
 deletes samples, so a long-lived corpus accumulates sparse shards — a
 tar whose live fraction is 10% still costs a full sequential read every
 epoch. ``repack_shards`` merges sparse/small shards' LIVE samples into
@@ -23,13 +24,11 @@ destroy source bytes. A sample with no text members at all (e.g.
 json-only metadata) was never in the table and is always KEPT.
 
 A registered shard with text members but ZERO live samples is excluded
-from candidacy entirely (reported under ``skipped_rowless``): the
-streaming watcher registers shards BEFORE their rows land
-(streaming/watch registration-first ordering), so a wholly-rowless shard
-is indistinguishable from a crashed micro-batch whose checkpoint replay
-still needs the original tar on disk. Pass ``reclaim_rowless=True`` only
-when no watcher is mid-flight on the directory (e.g. between epochs,
-watchers quiesced) to let fully-curated shards reclaim.
+from candidacy entirely (reported under ``skipped_rowless``): a shard
+registered BEFORE its rows land is indistinguishable from a crashed
+ingest whose replay still needs the original tar on disk. Pass
+``reclaim_rowless=True`` only when no writer is mid-flight on the
+directory (e.g. between epochs) to let fully-curated shards reclaim.
 
 Sample identity / epoch purity: output members are RE-KEYED as
 ``<md5(source_shard)[:8]>-<sample_key>`` — globally unique across merged
@@ -268,7 +267,7 @@ def repack_shards(
             if kept < total * min_utilization or total < small
         )
         # wholly-rowless text-bearing shards: indistinguishable from a
-        # crashed streaming micro-batch whose replay still needs the tar
+        # crashed ingest whose replay still needs the tar
         # (see module docstring) — excluded unless the caller vouches
         skipped_rowless = sorted(
             s

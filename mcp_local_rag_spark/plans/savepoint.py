@@ -11,8 +11,7 @@ of a 100 TB training pipeline (MLflow dataset tags / DVC pins / Delta's
 "read all inputs at one timestamp", in engine-native form).
 
 Savepoints are metadata-only (a few hundred bytes per table, no data
-copied) and compose with vacuum: `protect_versions_of` yields the pin
-floor per table so retention can keep what savepoints still reference.
+copied).
 
 Consistency note: the pin records each table's CURRENT at create time,
 in path order. Writers racing the create can land between reads — pin
@@ -26,9 +25,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .merge import _snap_path, current_version, read_manifest, read_snapshot
+from .merge import _snap_path, current_version, read_manifest
 
 
 def _sp_path(root: str, name: str) -> str:
@@ -77,21 +74,6 @@ def list_savepoints(root: str) -> list[str]:
     )
 
 
-def read_at_savepoint(
-    spark: SparkSession, root: str, name: str, table: str
-) -> DataFrame:
-    """``table`` exactly as the savepoint pinned it — a plain
-    time-travel read of the recorded version."""
-    record = load_savepoint(root, name)
-    key = os.path.abspath(table)
-    if key not in record["tables"]:
-        raise KeyError(
-            f"savepoint {name!r} does not pin {key} "
-            f"(pins: {sorted(record['tables'])})"
-        )
-    return read_snapshot(spark, key, version=record["tables"][key])
-
-
 def verify_savepoint(root: str, name: str) -> dict:
     """Metadata-only check that every pinned (table, version) is still
     readable — i.e. vacuum has not retired a pinned manifest. Returns
@@ -107,15 +89,3 @@ def verify_savepoint(root: str, name: str) -> dict:
     return out
 
 
-def protect_versions_of(root: str, table: str) -> int | None:
-    """The OLDEST version of ``table`` any savepoint under ``root`` still
-    pins — vacuum's retention floor (pass the result's manifests into
-    keep decisions, or simply keep_versions spanning it). None when no
-    savepoint pins the table."""
-    key = os.path.abspath(table)
-    pins = [
-        load_savepoint(root, n)["tables"].get(key)
-        for n in list_savepoints(root)
-    ]
-    pins = [p for p in pins if p is not None]
-    return min(pins) if pins else None

@@ -216,11 +216,10 @@ def write_zordered(
         splits = _bucket_boundaries(df, cols, bits, sample_expr)
         bucketed = [_bucket_col(c, s, bits) for c, s in zip(cols, splits)]
         zdf = _with_key(df, bucketed, bits, curve)
-        _write_clustered(zdf, path, n_files, mode="overwrite")
+        _write_clustered(zdf, path, n_files)
     finally:
         df.unpersist()
-    # persist the bucket boundaries: appends MUST bucketize against the
-    # same splits or the key stops being a pure function of the row.
+    # record the layout (columns, bits, bucket splits, curve) with
     # tmp+rename, and LAST: meta presence therefore implies a complete
     # layout (zorder_is_built), closing the crash window between the
     # data write and the sidecar
@@ -234,23 +233,6 @@ def write_zordered(
     os.replace(tmp, os.path.join(path, ZORDER_META))
 
 
-def append_zordered(df: DataFrame, path: str, *, n_files: int = 4) -> None:
-    """Append a batch to an existing z-ordered layout using the PERSISTED
-    bucket boundaries — the batch gets its own key-sorted files (cost ~
-    batch, no rewrite); values beyond the original value range land in
-    the edge buckets, so locality degrades only if the distribution
-    drifts, in which case rewrite with write_zordered (the OPTIMIZE
-    analog). Key assignment is identical to the base write's — pinned by
-    tests — so readers see ONE consistent keyed space."""
-    meta = read_zorder_meta(path)
-    bits = meta["bits"]
-    bucketed = [
-        _bucket_col(c, s, bits) for c, s in zip(meta["cols"], meta["splits"])
-    ]
-    zdf = _with_key(df, bucketed, bits, meta.get("curve", "morton"))
-    _write_clustered(zdf, path, n_files, mode="append")
-
-
 def zorder_is_built(path: str) -> bool:
     """Whether ``path`` holds a COMPLETE z-ordered layout — the meta
     sidecar is written last via rename, so its presence implies the data
@@ -259,12 +241,7 @@ def zorder_is_built(path: str) -> bool:
     return os.path.isfile(os.path.join(path, ZORDER_META))
 
 
-def read_zorder_meta(path: str) -> dict:
-    with open(os.path.join(path, ZORDER_META)) as f:
-        return json.load(f)
-
-
-def _write_clustered(zdf: DataFrame, path: str, n_files: int, mode: str):
+def _write_clustered(zdf: DataFrame, path: str, n_files: int):
     conf = zdf.sparkSession.conf
     key = "spark.sql.parquet.outputTimestampType"
     prev = conf.get(key, None)
@@ -276,7 +253,7 @@ def _write_clustered(zdf: DataFrame, path: str, n_files: int, mode: str):
             zdf.repartitionByRange(n_files, F.col(ZKEY))
             .sortWithinPartitions(ZKEY)
             .drop(ZKEY)
-            .write.mode(mode)
+            .write.mode("overwrite")
             .parquet(path)
         )
     finally:
@@ -286,35 +263,3 @@ def _write_clustered(zdf: DataFrame, path: str, n_files: int, mode: str):
             conf.set(key, prev)
 
 
-def rowgroup_prune_stats(path: str, col: str, lo, hi) -> tuple[int, int]:
-    """(total row groups, row groups a [lo, hi] predicate on ``col``
-    could match by min/max stats) across the layout — the data-skipping
-    evidence a reader's pushdown realizes. Driver-side footer reads only."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    total = matching = 0
-    names = sorted(
-        f for f in os.listdir(path) if f.endswith(".parquet")
-    )
-    for name in names:
-        md = pq.read_metadata(os.path.join(path, name))
-        sch = md.schema.to_arrow_schema()
-        idx = sch.get_field_index(col)
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(idx).statistics
-            total += 1
-            if st is None or not st.has_min_max:
-                matching += 1
-            else:
-                mn, mx = st.min, st.max
-                # TIMESTAMP stats come back tz-aware (UTC) while Spark
-                # collect() hands out naive datetimes — compare naive
-                if hasattr(mn, "tzinfo") and mn.tzinfo is not None:
-                    if getattr(lo, "tzinfo", None) is None:
-                        mn = mn.replace(tzinfo=None)
-                        mx = mx.replace(tzinfo=None)
-                if not (mx < lo or mn > hi):
-                    matching += 1
-    return total, matching

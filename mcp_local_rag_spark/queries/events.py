@@ -10,7 +10,7 @@ tie-break key (user_id).
 
 from __future__ import annotations
 
-from pyspark.sql import Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import load, read_parquet
@@ -889,14 +889,66 @@ def q_events_cohort_matrix(spark, sf_dir):
     )
 
 
-# Interval-join click attribution — the BATCH twin of the watermarked
-# stream-stream join (streaming/joins.attribute_clicks_stream, whose
-# availableNow drain is pytest-pinned row-identical to this operator).
-# Registering the batch form gives the streaming semantics a DuckDB
-# oracle: view impressions joined to clicks of the same user landing
-# inside the 30-minute attribution window. Plan shape: user-keyed
-# equi-join (one shuffle per side) with the range condition as a
-# post-filter — never a theta-join cartesian.
+# Interval-join click attribution: view impressions joined to clicks of
+# the same user landing inside the 30-minute attribution window. Plan
+# shape: user-keyed equi-join (one shuffle per side) with the range
+# condition as a post-filter — never a theta-join cartesian.
+
+ATTRIBUTION_WINDOW_S = 1800  # 30 min attribution window
+
+
+def _attribution_condition(window_seconds: int):
+    return (
+        (F.col("imp.user_id") == F.col("clk.user_id"))
+        & (F.col("clk.ts") >= F.col("imp.ts"))
+        & (F.col("clk.ts") <= F.col("imp.ts") + F.expr(f"interval {window_seconds} seconds"))
+    )
+
+
+def attribute_clicks_batch(
+    impressions: DataFrame,
+    clicks: DataFrame,
+    *,
+    window_seconds: int = ATTRIBUTION_WINDOW_S,
+) -> DataFrame:
+    """Attributed (impression, click) pairs, with the attribution latency
+    for downstream windowed aggregation. Spark plans it as a user-keyed
+    equi-join with the range condition as a post-filter — one shuffle
+    per side, never a theta-join cartesian."""
+    imp = impressions.alias("imp")
+    clk = clicks.alias("clk")
+    return imp.join(clk, _attribution_condition(window_seconds)).select(
+        F.col("imp.user_id").alias("user_id"),
+        F.col("imp.event_id").alias("impression_id"),
+        F.col("clk.event_id").alias("click_id"),
+        F.col("imp.ts").alias("impression_ts"),
+        F.col("clk.ts").alias("click_ts"),
+        (
+            F.col("clk.ts").cast("double") - F.col("imp.ts").cast("double")
+        ).alias("latency_s"),
+    )
+
+
+def unattributed_impressions_batch(
+    impressions: DataFrame,
+    clicks: DataFrame,
+    *,
+    window_seconds: int = ATTRIBUTION_WINDOW_S,
+) -> DataFrame:
+    """Impressions with NO click inside the attribution window. A
+    left_anti join beats filtering an outer join's nulls: the anti form
+    never materializes the matched fan-out at all (an impression with 50
+    clicks contributes 50 joined rows to the outer shape, zero here)."""
+    imp = impressions.alias("imp")
+    clk = clicks.alias("clk")
+    return imp.join(
+        clk, _attribution_condition(window_seconds), "left_anti"
+    ).select(
+        F.col("user_id"),
+        F.col("event_id").alias("impression_id"),
+        F.col("ts").alias("impression_ts"),
+    )
+
 
 @register(
     "events_click_attribution",
@@ -911,8 +963,6 @@ JOIN (SELECT * FROM events WHERE event_type = 'click') c
 ORDER BY impression_id, click_id""",
 )
 def q_events_click_attribution(spark, sf_dir):
-    from ..streaming.joins import attribute_clicks_batch
-
     e = load(spark, sf_dir, "events")
     out = attribute_clicks_batch(
         e.filter(F.col("event_type") == "view").select("event_id", "user_id", "ts"),
@@ -925,11 +975,8 @@ def q_events_click_attribution(spark, sf_dir):
     ).orderBy("impression_id", "click_id")
 
 
-# The LEFT-OUTER attribution shape's batch twin (streaming/joins.
-# attribute_impressions_stream_outer drains to the same rows —
-# pytest-pinned): impressions NO click attributes within the window,
-# i.e. exactly what the streaming outer join emits at watermark expiry.
-# The batch plan is a left_anti user-keyed equi-join with the range
+# Unattributed impressions: those NO click attributes within the window.
+# The plan is a left_anti user-keyed equi-join with the range
 # post-filter — one shuffle per side, and the matched fan-out (an
 # impression with many clicks) is never materialized at all.
 
@@ -945,8 +992,6 @@ WHERE NOT EXISTS (
 ORDER BY impression_id""",
 )
 def q_events_impressions_unattributed(spark, sf_dir):
-    from ..streaming.joins import unattributed_impressions_batch
-
     e = load(spark, sf_dir, "events")
     out = unattributed_impressions_batch(
         e.filter(F.col("event_type") == "view").select("event_id", "user_id", "ts"),

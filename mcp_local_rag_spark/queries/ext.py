@@ -1876,8 +1876,8 @@ def q_rag_eval_ndcg(spark, sf_dir):
 # corpus makes the near-dup graph edge-quadratic per duplicate family
 # (k copies -> a k-clique -> k(k-1)/2 edges). Production ordering is
 # dedup first, diagnose the representative graph after — or cap family
-# size via operators/skew.cap_bucket_size before the pair join (same
-# rule as the LSH bucket cap; the replica-based scale probe excluded
+# size before the pair join (same rule as an LSH bucket cap; the
+# replica-based scale probe excluded
 # this query for exactly that reason, see BENCH_SCALE_r07).
 
 @register(

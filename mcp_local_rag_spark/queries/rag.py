@@ -924,9 +924,8 @@ def q_hybrid_search_batch(spark, sf_dir):
         ch, qvecs, _BATCH_QTERMS, k=10, id_cols=("chunkIndex",),
         grouping=None, max_files=3, postings=postings, bm25_stats=stats,
     )
-    return out.select("query_id", "filePath", "chunkIndex", "score").orderBy(
-        "query_id", "score", "chunkIndex"
-    )
+    # already in (query_id, score, chunkIndex) order: no Sort, no job
+    return out.select("query_id", "filePath", "chunkIndex", "score")
 
 
 # W5: neighbor frame — chunkIndex in [target-2, target+2] of one document

@@ -119,9 +119,9 @@ def spread(df):
 # ever comes from a stale state.
 #
 # Keyed by (abspath, base_path) -> (signature, schema): a rewrite mints a
-# new signature and REPLACES the old entry, so long-lived processes (e.g.
-# streaming watch loops re-reading per batch) hold one entry per live
-# path, not one per historical version.
+# new signature and REPLACES the old entry, so long-lived processes (the
+# MCP server re-reading after every write) hold one entry per live path,
+# not one per historical version.
 _PQ_SCHEMA_CACHE: dict = {}
 
 

@@ -98,30 +98,6 @@ def parse_text_bytes(path: str, content: bytes) -> dict:
     raise ValueError(f"unsupported extension: {path}")
 
 
-def title_udf():
-    """Arrow-batched (pandas UDF) title extraction for text-source rows
-    where content is already a string (streaming hot path) — md gets the
-    frontmatter/H1 chain, everything else the txt first-line chain. The
-    binary ingest path uses parse_files instead."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _title(paths, texts):
-        # case-insensitive extension, matching parse_text_bytes — a
-        # README.MD must get the same title chain on both ingest paths
-        return pd.Series(
-            [
-                extract_md_title(t or "", p)
-                if p.lower().endswith(".md")
-                else extract_txt_title(t or "", p)
-                for p, t in zip(paths, texts)
-            ]
-        )
-
-    _title.__annotations__ = {"paths": pd.Series, "texts": pd.Series, "return": pd.Series}
-    return pandas_udf(_title, "string")
-
-
 PARSED_SCHEMA = StructType(
     [
         StructField("path", StringType()),

@@ -118,8 +118,8 @@ def expand_shards(
 
     ``errors='record'`` turns a corrupt/oversized shard into one row
     with slot ``__corrupt__`` and the error text as content (coverage,
-    not crash — the streaming watcher's posture, where one bad shard
-    must not wedge the checkpointed stream); the default raises."""
+    not crash — one bad shard must not wedge a long ingest); the default
+    raises."""
     import pandas as pd
 
     if errors not in ("raise", "record"):

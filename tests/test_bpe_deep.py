@@ -108,7 +108,7 @@ def test_export_packed_epoch_bpe_deep(spark, tmp_path):
     Reading the packs back must reproduce each source shard's epoch
     token stream under the SAME tokenizer, and token accounting is
     exact."""
-    from mcp_local_rag_spark.plans.epoch import epoch_samples
+    from tests.test_epoch import epoch_samples
     from mcp_local_rag_spark.plans.export import (
         export_packed_epoch,
         verify_webdataset_export,

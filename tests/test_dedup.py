@@ -28,7 +28,8 @@ def test_minhash_lsh_finds_identical_pair(spark):
 def test_jaccard_verify_scores_identical_as_one(spark):
     shingles = dedup.shingle_sets(_docs(spark)).persist()
     pairs = dedup.lsh_candidate_pairs(dedup.minhash_signatures(shingles))
-    out = dedup.jaccard_verify(pairs, shingles, threshold=0.5).collect()
+    sets_ = shingles.groupBy("doc_id").agg(F.collect_set("shingle").alias("_sh"))
+    out = dedup.jaccard_verify_sets(pairs, sets_, threshold=0.5).collect()
     exact = [r for r in out if (r.id1, r.id2) == (1, 2)]
     assert exact and exact[0].jaccard == 1.0
 
@@ -97,8 +98,9 @@ def test_jaccard_verify_array_form_matches_join_form(spark):
         )
         return jac.filter(F.col("jaccard") >= threshold).select("id1", "id2", "jaccard")
 
+    sets_ = shingles.groupBy("doc_id").agg(F.collect_set("shingle").alias("_sh"))
     for thr in (0.0, 0.2, 0.7):
-        got = {tuple(r) for r in dedup.jaccard_verify(pairs, shingles, threshold=thr).collect()}
+        got = {tuple(r) for r in dedup.jaccard_verify_sets(pairs, sets_, threshold=thr).collect()}
         want = {tuple(r) for r in join_form(pairs, shingles, thr).collect()}
         assert got == want, (thr, got, want)
     shingles.unpersist()
@@ -208,50 +210,6 @@ def test_incremental_lsh_matches_full_run(spark):
     }
     expected = {(a, b) for a, b in full if a in new_ids or b in new_ids}
     assert inc == expected and len(expected) > 0
-
-
-def test_persisted_signature_table_incremental(spark, tmp_path):
-    """The signature table is a build-once artifact: an arriving batch
-    dedups against it without re-signing the corpus, and the append keeps
-    the table current for the NEXT batch."""
-    from mcp_local_rag_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-        shingle_sets,
-    )
-    from mcp_local_rag_spark.plans.dedup_index import (
-        incremental_dedup,
-        read_signatures,
-        write_signatures,
-    )
-
-    base = (
-        "spark shuffles data between executors and broadcast joins avoid "
-        "that data movement across the cluster entirely today"
-    )
-    all_rows = [(i, base + f" variant group {i // 3}") for i in range(12)]
-    corpus = spark.createDataFrame(all_rows[:9], "doc_id long, text string")
-    batch = spark.createDataFrame(all_rows[9:], "doc_id long, text string")
-    path = str(tmp_path / "sigs")
-    write_signatures(corpus, path)
-    assert read_signatures(spark, path).count() == 9
-
-    pairs = {
-        (r.id1, r.id2) for r in incremental_dedup(spark, path, batch).collect()
-    }
-    full_docs = spark.createDataFrame(all_rows, "doc_id long, text string")
-    full = {
-        (r.id1, r.id2)
-        for r in lsh_candidate_pairs(
-            minhash_signatures(shingle_sets(full_docs))
-        ).collect()
-    }
-    new_ids = {9, 10, 11}
-    assert pairs == {(a, b) for a, b in full if a in new_ids or b in new_ids}
-    assert len(pairs) > 0
-    # append happened: the table now covers all 12 docs, and a SECOND
-    # batch sees the first batch as corpus
-    assert read_signatures(spark, path).count() == 12
 
 
 def test_integer_pagerank_star_hub_wins_and_is_partition_stable(spark):
@@ -547,41 +505,6 @@ def test_dedup_index_mid_rebuild_reads_fail_loudly(spark, tmp_path, monkeypatch)
     assert di.banded_candidate_pairs(spark, path, at_source="gen-2").count() > 0
 
 
-def test_incremental_dedup_advances_the_covers_stamp(spark, tmp_path):
-    """The signature table's stamp follows the appends: a batch appended
-    under covers=gen-2 makes at_source=gen-2 reads pass and gen-1 reads
-    fail — the freshness proof moves WITH the data."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from mcp_local_rag_spark.operators.staleness import StaleServingError
-    from mcp_local_rag_spark.plans.dedup_index import (
-        check_index_fresh,
-        incremental_dedup,
-        index_stamp,
-        write_signatures,
-    )
-
-    path = str(tmp_path / "sigs")
-    write_signatures(_staleness_docs(spark), path, covers="gen-1")
-    assert index_stamp(path) == ("gen-1", False)
-
-    batch = spark.range(30, 40).select(
-        F.col("id").alias("doc_id"),
-        F.concat(
-            F.lit("shared shingle prose  body number "),
-            (F.col("id") % 5).cast("string"),
-            F.lit(" with enough repeated words to band together nicely"),
-        ).alias("text"),
-    )
-    pairs = incremental_dedup(spark, path, batch, covers="gen-2")
-    assert pairs.count() > 0
-    assert index_stamp(path) == ("gen-2", False)
-    check_index_fresh(path, at_source="gen-2")  # passes
-    with _pytest.raises(StaleServingError, match="stale"):
-        check_index_fresh(path, at_source="gen-3")
-
-
 def test_dedup_rebuild_without_covers_clears_stale_stamp(spark, tmp_path):
     """r14 review: an overwrite rebuild with covers=None must CLEAR the
     previous stamp — inheriting it would let at_source reads treat a
@@ -603,42 +526,6 @@ def test_dedup_rebuild_without_covers_clears_stale_stamp(spark, tmp_path):
     from mcp_local_rag_spark.plans.ingest import table_n_buckets
 
     assert table_n_buckets(path) == 16
-
-
-def test_dedup_append_never_clears_a_torn_rebuild_marker(
-    spark, tmp_path, monkeypatch
-):
-    """r14 review: incremental appends must not remove the .refreshing
-    marker a crashed rebuild left — an append completing proves nothing
-    about the torn overwrite underneath it."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from mcp_local_rag_spark.operators.staleness import StaleServingError
-    from mcp_local_rag_spark.plans import dedup_index as di
-
-    path = str(tmp_path / "sigs")
-    di.write_signatures(_staleness_docs(spark), path, covers="gen-1")
-
-    def _boom(*a, **k):
-        raise RuntimeError("injected crash mid-rebuild")
-
-    monkeypatch.setattr(di, "_stamp_index", _boom)
-    with _pytest.raises(RuntimeError, match="injected"):
-        di.write_signatures(_staleness_docs(spark, tag="v2"), path, covers="gen-2")
-    monkeypatch.undo()
-    assert di.index_stamp(path)[1] is True
-
-    batch = spark.range(50, 55).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("appended prose shingle body "),
-                 F.col("id").cast("string")).alias("text"),
-    )
-    di.incremental_dedup(spark, path, batch, covers="gen-3")
-    # the marker SURVIVES the append; reads still fail loudly
-    assert di.index_stamp(path)[1] is True
-    with _pytest.raises(StaleServingError, match="mid-rebuild"):
-        di.check_index_fresh(path)
 
 
 def test_boilerplate_storm_salting_bounds_the_straggler(spark):

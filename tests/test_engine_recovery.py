@@ -269,152 +269,12 @@ def test_sync_crash_recovers_bounded(spark, tmp_path, docs_dir):
     assert got == want
 
 
-def test_watcher_batch_crash_recovers_bounded(spark, tmp_path, docs_dir, monkeypatch):
-    """The streaming watcher is a COOPERATING writer (round 13): its
-    micro-batch sink publishes the batch's paths as an intent and runs
-    its bumps attributed, so a crash between the chunks append and the
-    postings append leaves a proven bounded-recovery record — a restarted
-    engine re-derives exactly the batch's paths, never the full corpus."""
-    import mcp_local_rag_spark.streaming.watch as watch_mod
-    from mcp_local_rag_spark.plans.engine_txn import read_intent
-    from mcp_local_rag_spark.plans.ingest import build_chunks
-
-    eng, table = _mk_engine(spark, tmp_path, docs_dir)
-
-    docs = spark.createDataFrame(
-        [(
-            "/stream/w1.md",
-            "A streamed document about watermark semantics in micro batches.",
-            "W1", "h-w1", 63,
-        )],
-        "path string, text string, title string, contentHash string, length long",
-    )
-    batch = build_chunks(docs, dim=64, backend="pseudo")
-
-    import mcp_local_rag_spark.plans.fts as fts_mod
-
-    real = fts_mod.write_postings
-    monkeypatch.setattr(
-        fts_mod, "write_postings",
-        lambda *a, **k: (_ for _ in ()).throw(RuntimeError("killed mid-batch")),
-    )
-    with pytest.raises(RuntimeError, match="killed mid-batch"):
-        watch_mod._append_chunk_batch(batch, table, eng.postings_path, "unigram")
-    monkeypatch.setattr(fts_mod, "write_postings", real)
-
-    it = read_intent(table)
-    assert it is not None and "/stream/w1.md" in (it.get("paths") or [])
-
-    eng2 = RagEngine(spark, table)
-    assert not eng2._needs_full_index  # attributed: bounded, not O(corpus)
-    assert "/stream/w1.md" in eng2._dirty_upserts
-    assert eng2.recover_indexes()["fts"] is True
-    assert eng2.index_is_fresh()
-    assert _hits(eng2, "watermark") == {"/stream/w1.md"}
-    assert read_intent(table) is None
-
-    # a CLEAN batch closes its own window (intent cleared, index covered)
-    docs2 = spark.createDataFrame(
-        [(
-            "/stream/w2.md",
-            "Another streamed document about checkpoint commit ordering rules.",
-            "W2", "h-w2", 66,
-        )],
-        "path string, text string, title string, contentHash string, length long",
-    )
-    watch_mod._append_chunk_batch(
-        build_chunks(docs2, dim=64, backend="pseudo"), table,
-        eng2.postings_path, "unigram",
-    )
-    assert read_intent(table) is None
-    eng3 = RagEngine(spark, table)
-    assert eng3.index_is_fresh()  # covers stamp written by the batch
-    assert _hits(eng3, "checkpoint") == {"/stream/w2.md"}
-
-
-def test_watcher_batch_preserves_foreign_intent(spark, tmp_path, docs_dir):
-    """A clean watcher batch must close only ITS OWN crash window: a
-    pre-existing intent from a crashed ENGINE mutation (recorded paths
-    the batch never re-derived) survives the batch's scoped retire
-    (plans/engine_txn.retire_fts_paths) — a blanket clear here would
-    erase the record while the batch's covers stamp presents the index
-    as fresh, leaving silently-stale postings with no recovery trigger."""
-    import mcp_local_rag_spark.streaming.watch as watch_mod
-    from mcp_local_rag_spark.plans.ingest import build_chunks
-
-    eng, table = _mk_engine(spark, tmp_path, docs_dir)
-    c = docs_dir / "c.md"
-    c.write_text("# Gamma\n\nSalting splits pathological hot keys apart across partitions.")
-    eng.ingest_file(str(c))  # crash window: table written, NO optimize
-    assert str(c) in (read_intent(table).get("paths") or [])
-
-    # "restart as a watcher": one clean micro-batch on the same table
-    docs2 = spark.createDataFrame(
-        [(
-            "/stream/w3.md",
-            "A streamed document about offset tracking between micro batches.",
-            "W3", "h-w3", 64,
-        )],
-        "path string, text string, title string, contentHash string, length long",
-    )
-    watch_mod._append_chunk_batch(
-        build_chunks(docs2, dim=64, backend="pseudo"), table,
-        eng.postings_path, "unigram",
-    )
-    it = read_intent(table)
-    assert it is not None and str(c) in (it.get("paths") or [])  # preserved
-    assert "/stream/w3.md" not in (it.get("paths") or [])  # own window closed
-
-    eng2 = RagEngine(spark, table)
-    assert str(c) in eng2._dirty_upserts  # adopted, not hidden by the stamp
-    assert not eng2.index_is_fresh()
-    assert eng2.recover_indexes()["fts"] is True
-    assert read_intent(table) is None
-    assert _hits(eng2, "salting") == {str(c)}
-    assert _hits(eng2, "offset") == {"/stream/w3.md"}
-
-
-def test_watcher_batch_preserves_refreshing_flag(spark, tmp_path, docs_dir):
-    """A torn optimize() (crash inside the postings bucket rewrite,
-    'refreshing' flag) still degrades to the full rebuild even when a
-    watcher batch lands in between — the batch's scoped retire must not
-    drop the flag."""
-    import mcp_local_rag_spark.streaming.watch as watch_mod
-    from mcp_local_rag_spark.plans.ingest import build_chunks
-
-    eng, table = _mk_engine(spark, tmp_path, docs_dir)
-    publish_intent(table, refreshing=True)  # torn-rewrite window open
-
-    docs2 = spark.createDataFrame(
-        [(
-            "/stream/w4.md",
-            "A streamed document about trigger intervals and batch sizing.",
-            "W4", "h-w4", 61,
-        )],
-        "path string, text string, title string, contentHash string, length long",
-    )
-    watch_mod._append_chunk_batch(
-        build_chunks(docs2, dim=64, backend="pseudo"), table,
-        eng.postings_path, "unigram",
-    )
-    it = read_intent(table)
-    assert it is not None and it.get("refreshing")  # preserved
-
-    eng2 = RagEngine(spark, table)
-    assert eng2._needs_full_index  # torn bucket: full rebuild, not bounded
-    assert eng2.recover_indexes()["fts"] is True
-    assert read_intent(table) is None
-    assert eng2.index_is_fresh()
-    assert _hits(eng2, "trigger") == {"/stream/w4.md"}
-
-
 def test_intent_algebra_fuzz(tmp_path):
     """Randomized model check of the intent-protocol algebra (the same
     method as test_txn's interleaving fuzz, file-op speed): every
-    publish/record/retire/clear sequence leaves the sidecar semantically
-    equal to a pure-python model — sticky full, path-set merge, scoped
-    retire, stamped chain pruning, ann/fts partitioning, file removal
-    exactly when nothing remains."""
+    publish/record/clear sequence leaves the sidecar semantically
+    equal to a pure-python model — sticky full, path-set merge,
+    ann/fts partitioning, file removal exactly when nothing remains."""
     import random
 
     from mcp_local_rag_spark.plans.engine_txn import (
@@ -423,7 +283,6 @@ def test_intent_algebra_fuzz(tmp_path):
         publish_intent,
         read_intent,
         record_derived_version,
-        retire_fts_paths,
     )
 
     def sem(it):
@@ -443,7 +302,7 @@ def test_intent_algebra_fuzz(tmp_path):
         os.makedirs(table, exist_ok=True)
         m_full, m_paths, m_refr, m_der, m_ann = False, set(), False, {}, None
         for _ in range(rng.randrange(3, 18)):
-            op = rng.randrange(6)
+            op = rng.randrange(5)
             if op == 0:
                 ps = set(rng.sample(pool, rng.randrange(0, 4)))
                 fl = rng.random() < 0.15
@@ -458,14 +317,6 @@ def test_intent_algebra_fuzz(tmp_path):
                 record_derived_version(table, new, prev)
                 m_der[new] = prev
             elif op == 3:
-                ps = set(rng.sample(pool, rng.randrange(0, 4)))
-                st = rng.random() < 0.7
-                retire_fts_paths(table, ps, stamped=st)
-                if m_full or m_paths or m_refr or m_der or m_ann:
-                    m_paths -= ps
-                    if st:
-                        m_der = {}
-            elif op == 4:
                 clear_fts_intent(table)
                 if m_full or m_paths or m_refr or m_der or m_ann:
                     m_full, m_paths, m_refr, m_der = False, set(), False, {}

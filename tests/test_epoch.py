@@ -2,13 +2,39 @@
 tar shards, buffer-bounded displacement, shard-contiguous streaming, and
 exact concat-and-chunk token accounting through to a packed shard export."""
 
+import hashlib
 import os
 
 from pyspark.sql import functions as F
 
-from mcp_local_rag_spark.sources.webdataset import write_tar_shard
+from mcp_local_rag_spark.plans.epoch import epoch_keys
+from mcp_local_rag_spark.sources.webdataset import (
+    assemble_samples,
+    read_webdataset,
+    write_tar_shard,
+)
 
 BODY = "tok%d word filler"
+
+
+def epoch_samples(spark, shard_paths, *, seed, buffer=None):
+    """Reference reader over real tar shards: expand -> assemble ->
+    ``epoch_keys`` -> one global sort into the seeded epoch order (the
+    materialized-epoch form the package operators must agree with)."""
+    samples = assemble_samples(read_webdataset(spark, shard_paths))
+    return epoch_keys(samples, seed=seed, buffer=buffer).orderBy(
+        "epoch_shard_ord", "shard", "epoch_block", "epoch_intra", "sample_key"
+    )
+
+
+def epoch_shard_order(shard_paths, *, seed):
+    """The epoch's shard sequence as a pure driver-side function:
+    md5(seed | shard) ascending, shard path as tiebreak."""
+    s = str(int(seed))
+    return sorted(
+        shard_paths,
+        key=lambda p: (hashlib.md5(f"{s}|{p}".encode()).hexdigest(), p),
+    )
 
 
 def _make_shards(tmp_path, n_shards=4, samples=6):
@@ -27,8 +53,6 @@ def _make_shards(tmp_path, n_shards=4, samples=6):
 
 
 def _order(spark, paths, seed, buffer=None):
-    from mcp_local_rag_spark.plans.epoch import epoch_samples
-
     return [
         (r["shard"], r["sample_key"])
         for r in epoch_samples(spark, paths, seed=seed, buffer=buffer)
@@ -81,10 +105,7 @@ def test_epoch_buffer_bounds_displacement(spark, tmp_path):
     """buffer=B block shuffle: a sample's displacement from archive order
     within its shard is < B (WebDataset's bounded-buffer contract —
     sequential tar reads stay sequential)."""
-    from mcp_local_rag_spark.plans.epoch import (
-        epoch_rank_in_shard,
-        epoch_samples,
-    )
+    from mcp_local_rag_spark.plans.epoch import epoch_rank_in_shard
 
     paths = _make_shards(tmp_path, n_shards=2, samples=12)
     B = 3
@@ -167,7 +188,7 @@ def test_epoch_pack_export_roundtrip(spark, tmp_path):
     pack's token stream by slicing documents at doc_tok_offset -> export
     the packed sequences as NEW tar shards -> read back and verify the
     per-shard token stream equals the epoch-ordered concatenation."""
-    from mcp_local_rag_spark.plans.epoch import epoch_samples, pack_token_spans
+    from mcp_local_rag_spark.plans.epoch import pack_token_spans
     from mcp_local_rag_spark.plans.export import export_webdataset_shards
     from mcp_local_rag_spark.sources.webdataset import read_webdataset
 
@@ -259,8 +280,6 @@ def test_epoch_shard_order_matches_in_plan_rank(spark, tmp_path):
     is bit-identical to the in-plan epoch_shard_ord ordering — a pipeline
     can switch between the materialized and the streamed consumer without
     changing what the model sees."""
-    from mcp_local_rag_spark.plans.epoch import epoch_samples, epoch_shard_order
-
     paths = _make_shards(tmp_path, n_shards=6, samples=2)
     for seed in (1, 7, 42):
         in_plan = []
@@ -284,7 +303,6 @@ def test_export_packed_epoch_cli_roundtrip(spark, tmp_path):
 
     from mcp_local_rag_spark.cli import run
     from mcp_local_rag_spark.engine import RagEngine
-    from mcp_local_rag_spark.plans.epoch import epoch_samples
     from mcp_local_rag_spark.plans.export import verify_webdataset_export
     from mcp_local_rag_spark.sources.webdataset import read_webdataset
 
@@ -464,11 +482,7 @@ def test_epoch_universe_guards_resume_across_shard_set_changes(
     universe stamp (md5 of the sorted shard set) fails loudly instead."""
     import pytest as _pytest
 
-    from mcp_local_rag_spark.plans.epoch import (
-        epoch_after,
-        epoch_samples,
-        epoch_universe,
-    )
+    from mcp_local_rag_spark.plans.epoch import epoch_after, epoch_universe
 
     paths = _make_shards(tmp_path, n_shards=3, samples=4)
     # identity is the SET: order-insensitive, member-sensitive

@@ -1,163 +1,10 @@
-"""Training-shard export sinks (plans/export): completeness, shard
-routing, file-size bounds, and pack-bin agreement with the oracle-paired
-documents_pack_bins rule."""
+"""Training-shard export sinks (plans/export): WebDataset tar shards,
+their manifest verification, and the curate -> export -> re-ingest loop."""
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-
-from pyspark.sql import functions as F
-
-from mcp_local_rag_spark.plans.export import (
-    assign_pack_bins,
-    export_jsonl_shards,
-    export_packed_parquet,
-)
-from mcp_local_rag_spark.session import load
-
-SF = "/root/testdata/sf0.001"
-
-
-def test_jsonl_shards_complete_and_bounded(spark, tmp_path):
-    docs = load(spark, SF, "documents").select("doc_id", "text", "lang")
-    out = str(tmp_path / "shards")
-    export_jsonl_shards(docs, out, max_records_per_file=50)
-
-    files = glob.glob(os.path.join(out, "lang=*", "*.json"))
-    assert files
-    seen = set()
-    for f in files:
-        with open(f) as fh:
-            lines = [json.loads(line) for line in fh if line.strip()]
-        assert len(lines) <= 50  # record cap respected
-        lang = f.split("lang=")[1].split(os.sep)[0]
-        for rec in lines:
-            seen.add(rec["doc_id"])
-            assert "text" in rec and rec["text"]
-        # every record in a shard dir belongs to that shard key
-        back = {r.doc_id for r in docs.filter(F.col("lang") == lang).collect()}
-        assert all(rec["doc_id"] in back for rec in lines)
-    assert seen == {r.doc_id for r in docs.collect()}  # nothing dropped
-
-
-def test_packed_parquet_matches_pack_bins_oracle(spark, tmp_path):
-    """The exported (lang, bin) assignment aggregates to EXACTLY the
-    documents_pack_bins result — the export is the row-level face of the
-    oracle-checked rule."""
-    from mcp_local_rag_spark.queries.ext import q_documents_pack_bins
-
-    docs = load(spark, SF, "documents").select("doc_id", "text", "lang", "n_chars")
-    out = str(tmp_path / "packed")
-    export_packed_parquet(docs, out)
-
-    back = spark.read.parquet(out)
-    assert back.count() == docs.count()
-    agg = {
-        (r.lang, r.bin): (r.n_docs, r.bin_chars)
-        for r in back.groupBy("lang", "bin")
-        .agg(F.count("*").alias("n_docs"), F.sum("n_chars").alias("bin_chars"))
-        .collect()
-    }
-    expected = {
-        (r.lang, r.bin): (r.n_docs, r.bin_chars)
-        for r in q_documents_pack_bins(spark, SF).collect()
-    }
-    assert agg == expected
-
-
-def test_assign_pack_bins_budget_bound(spark):
-    """No bin's START offset exceeds its budget slot: doc i sits in bin
-    floor(start_i / budget), so within a shard the bins are monotone and
-    a bin's accumulated chars exceed the budget only via its LAST doc
-    (the streaming-packing overflow rule)."""
-    docs = load(spark, SF, "documents").select("doc_id", "lang", "n_chars")
-    packed = assign_pack_bins(docs, budget=4096)
-    rows = sorted(
-        packed.collect(), key=lambda r: (r.lang, r.doc_id)
-    )
-    by_shard: dict = {}
-    for r in rows:
-        by_shard.setdefault(r.lang, []).append(r)
-    for lang, rs in by_shard.items():
-        start = 0
-        for r in rs:
-            assert r.bin == start // 4096, (lang, r.doc_id)
-            start += r.n_chars
-
-
-def test_materialization_run_end_to_end(spark, tmp_path):
-    """The full curation-to-trainer path: run the composed pipeline, keep
-    only disposition='keep' docs, export them as JSONL shards keyed by
-    their train/val/test split, and verify the shards reproduce the
-    pipeline's split counts exactly — nothing dropped, nothing leaked
-    from the benchmark/contaminated/duplicate/quality rejects."""
-    from mcp_local_rag_spark.queries.curation import q_corpus_curation_pipeline
-
-    pipe = q_corpus_curation_pipeline(spark, SF).cache()
-    keep = pipe.filter(F.col("disposition") == "keep").select("doc_id", "split")
-    docs = load(spark, SF, "documents").join(keep, "doc_id")
-    out = str(tmp_path / "train_shards")
-    export_jsonl_shards(
-        docs.select("doc_id", "text", "split"), out,
-        shard_col="split", max_records_per_file=200,
-    )
-    back = spark.read.json(out)
-    got = {
-        (r.split, r.n): None
-        for r in back.groupBy("split").agg(F.count("*").alias("n")).collect()
-    }
-    expected = {
-        (r.split, r.n): None
-        for r in pipe.filter(F.col("disposition") == "keep")
-        .groupBy("split")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert got == expected
-    # rejects never reach the shards
-    rejects = {
-        r.doc_id
-        for r in pipe.filter(F.col("disposition") != "keep").collect()
-    }
-    exported = {r.doc_id for r in back.select("doc_id").collect()}
-    assert not (rejects & exported)
-    pipe.unpersist()
-
-
-def test_export_manifest_roundtrip_and_drift_detection(spark, tmp_path):
-    """write_export_manifest stamps per-shard counts + order-insensitive
-    content checksums + file census; verify reproduces [] on an intact
-    export and names the shard when a data file disappears."""
-    import glob
-    import os
-
-    from mcp_local_rag_spark.plans.export import (
-        export_packed_parquet,
-        verify_export_manifest,
-        write_export_manifest,
-    )
-    from mcp_local_rag_spark.session import load
-
-    docs = load(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "text", "lang", "n_chars"
-    )
-    path = str(tmp_path / "shards")
-    export_packed_parquet(docs, path)
-    manifest = write_export_manifest(spark, path, fmt="parquet")
-    assert manifest["total_records"] == docs.count()
-    assert manifest["shards"] and all(
-        s["records"] > 0 and s["n_files"] >= 1 for s in manifest["shards"].values()
-    )
-    assert verify_export_manifest(spark, path) == []
-    # tamper: drop one shard's data file -> verify names that shard
-    victim_dir = sorted(glob.glob(os.path.join(path, "lang=*")))[0]
-    victim_key = os.path.basename(victim_dir).split("=", 1)[1]
-    os.remove(glob.glob(os.path.join(victim_dir, "*.parquet"))[0])
-    spark.catalog.refreshByPath(path)
-    problems = verify_export_manifest(spark, path)
-    assert problems and any(victim_key in p for p in problems)
 
 
 def test_webdataset_export_roundtrip_and_verify(spark, tmp_path):

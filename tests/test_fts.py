@@ -107,42 +107,6 @@ def test_refreshed_index_scores_equal_full_rebuild(spark, tmp_path):
     assert via_refresh == via_rebuild
 
 
-def test_compact_postings_folds_stream_appends(spark, tmp_path):
-    """Per-micro-batch appends leave multiple files per bucket; compaction
-    folds each bucket to one term-sorted file with identical content."""
-    import glob
-
-    from mcp_local_rag_spark.plans.fts import compact_postings, read_postings, write_postings
-    from mcp_local_rag_spark.plans.ingest import table_n_buckets
-
-    def chunks_for(idx, term):
-        return spark.createDataFrame(
-            [(f"/d{idx}.md", 0, f"{term} content appears here")],
-            "filePath string, chunkIndex long, text string",
-        )
-
-    path = str(tmp_path / "postings")
-    write_postings(chunks_for(0, "alpha"), path, n_buckets=8)
-    for i, term in enumerate(["beta", "gamma"], start=1):
-        write_postings(chunks_for(i, term), path, mode="append")
-
-    before = {
-        tuple(r) for r in read_postings(spark, path).collect()
-    }
-    buckets_with_many = [
-        b for b in glob.glob(f"{path}/bucket=*")
-        if len(glob.glob(f"{b}/*.parquet")) > 1
-    ] or None  # appends may land in distinct buckets; content check still holds
-
-    compact_postings(spark, path)
-    after_files = {
-        b: len(glob.glob(f"{b}/*.parquet")) for b in glob.glob(f"{path}/bucket=*")
-    }
-    assert all(n == 1 for n in after_files.values()), after_files
-    assert {tuple(r) for r in read_postings(spark, path).collect()} == before
-    assert table_n_buckets(path) == 8
-
-
 def test_persisted_corpus_stats(spark, tmp_path):
     """The index build persists BM25 corpus statistics (N docs, total doc
     length) as table properties, appends update them incrementally, and
@@ -290,37 +254,6 @@ def test_append_to_prestats_index_derives_baseline(spark, tmp_path):
         read_postings(spark, path), ["spark"], materialize=False, stats=stats
     ).collect()
     assert scores and all(r._score is not None for r in scores)
-
-
-def test_compact_recomputes_stats_after_dedup(spark, tmp_path):
-    """A replayed at-least-once append double-counts the persisted corpus
-    counters; compaction drops the duplicate rows AND recomputes the
-    counters from the deduped frame — BM25's n/avgdl must match a clean
-    single-copy index afterwards."""
-    from mcp_local_rag_spark.plans.fts import compact_postings, read_fts_stats
-
-    chunks = _chunks(
-        spark,
-        [
-            ("/a.md", 0, "spark shuffles data across executors"),
-            ("/b.md", 0, "broadcast joins avoid the shuffle"),
-        ],
-    )
-    batch = _chunks(spark, [("/c.md", 0, "late arriving doc")])
-    path = str(tmp_path / "postings")
-    write_postings(chunks, path)
-    write_postings(batch, path, mode="append")
-    write_postings(batch, path, mode="append")  # the replay
-    assert read_fts_stats(path)["n"] == 4  # inflated by the replay
-
-    compact_postings(spark, path)
-    stats = read_fts_stats(path)
-    assert stats["n"] == 3 and stats["total_dl"] == 13
-    assert read_postings(spark, path).count() == (
-        read_postings(spark, path).dropDuplicates(
-            ["filePath", "chunkIndex", "term"]
-        ).count()
-    )
 
 
 def test_refresh_touches_buckets_in_one_write(spark, tmp_path, monkeypatch):

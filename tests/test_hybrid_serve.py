@@ -235,7 +235,7 @@ def test_term_cache_eviction_keeps_this_querys_hit_terms(engine):
 
 def test_stale_postings_raise_unless_stale_ok(spark, tmp_path):
     """The serving-freshness contract (operators/staleness), mirroring
-    test_merge_ivm's SecondaryReader cases: once the chunks table moves
+    plans/secondary's stale_ok lookups: once the chunks table moves
     past the postings' covers-stamp — the state where the ENGINE falls
     back to the index-free scan, which a serving process cannot do — the
     query raises StaleServingError; stale_ok=True serves the postings

@@ -275,48 +275,6 @@ def test_compact_atomic_and_meta_preserving(spark, tmp_path):
     assert not os.path.exists(table + "__rewrite_old")
 
 
-def test_atomic_rewrite_failure_leaves_table_intact(spark, tmp_path):
-    """If the replacement build dies mid-write, the original table (and
-    its meta) must survive untouched — the exact failure the old
-    overwrite-in-place compaction could not survive."""
-    import pytest
-
-    from mcp_local_rag_spark.plans.ingest import (
-        atomic_rewrite,
-        build_chunks,
-        read_table_meta,
-        write_chunks,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (
-                "/a.md",
-                "A document with enough real sentence content to chunk today. "
-                "And one more sentence for good measure.",
-                "A",
-                "h",
-                100,
-            )
-        ],
-        "path string, text string, title string, contentHash string, length long",
-    )
-    table = str(tmp_path / "chunks_fail")
-    write_chunks(build_chunks(docs, dim=16, backend="hashing"), table,
-                 backend="hashing", dim=16)
-    before_rows = spark.read.parquet(table).count()
-    before_meta = read_table_meta(table)
-
-    def _boom(tmp):
-        raise RuntimeError("simulated executor loss mid-write")
-
-    with pytest.raises(RuntimeError, match="simulated"):
-        atomic_rewrite(table, _boom)
-    spark.catalog.refreshByPath(table)
-    assert spark.read.parquet(table).count() == before_rows
-    assert read_table_meta(table) == before_meta
-
-
 def test_delete_documents_df_no_match_is_noop(spark, tmp_path):
     from pyspark.sql import functions as F
 

@@ -360,110 +360,6 @@ def test_ivm_empty_delta_commits_noop_version(spark, tmp_path):
 # Streaming twin
 
 
-def test_stream_ivm_matches_batch_and_replay_is_noop(spark, tmp_path):
-    """The watcher folds arriving parquet batches into the same state the
-    flat aggregate would produce; wiping the CHECKPOINT (worst crash:
-    fold committed, offsets lost) and replaying changes nothing because
-    the batch key rides the manifest commit."""
-    from mcp_local_rag_spark.plans.merge import current_version
-    from mcp_local_rag_spark.streaming.ivm import stream_ivm
-
-    drop = tmp_path / "drop"
-    drop.mkdir()
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-
-    ev = _events(spark, 900)
-    ivm_create(spark, state, ev, KEYS, MEASURES, n_buckets=4)
-    for part in (0, 1, 2):
-        ev.filter(F.pmod("event_id", F.lit(3)) == part).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(drop))
-
-    schema = ev.schema
-    q = stream_ivm(
-        spark, str(drop), state, ckpt, KEYS, MEASURES, schema,
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    assert _view(spark, state) == _flat(spark, ev)
-
-    v_before = current_version(state)
-    import shutil
-
-    shutil.rmtree(ckpt)
-    q2 = stream_ivm(
-        spark, str(drop), state, ckpt, KEYS, MEASURES, schema,
-        available_now=True,
-    )
-    q2.awaitTermination(120)
-    assert _view(spark, state) == _flat(spark, ev)  # not double-counted
-    # replayed folds short-circuited on their recorded batch keys
-    assert current_version(state) == v_before
-
-
-def test_stream_ivm_carries_sketch_measures(spark, tmp_path):
-    """The streaming twin is the same ivm_apply code path, so sketch
-    measures (min/max, HLL, MG top-k, hist) ride foreachBatch unchanged:
-    after the stream drains, every measure equals its batch aggregate."""
-    from mcp_local_rag_spark.streaming.ivm import stream_ivm
-
-    drop, state = tmp_path / "in", str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    drop.mkdir()
-    ev = _events(spark, 600).withColumn(
-        "bin", (F.col("event_id") % 5).cast("string")
-    )
-    measures = [
-        ("cnt", "count", None),
-        ("lo", "min", "amount"),
-        ("ndv_sk", "approx_ndv", "event_id"),
-        ("hot", "approx_topk:8", "bin"),
-        ("h", "hist", "bin"),
-    ]
-    ivm_create(spark, state, ev, KEYS, measures, n_buckets=4)
-    for part in (0, 1, 2):
-        ev.filter(F.pmod("event_id", F.lit(3)) == part).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(drop))
-    q = stream_ivm(
-        spark, str(drop), state, ckpt, KEYS, measures, ev.schema,
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    got = {
-        r["grp"]: (r["cnt"], r["lo"], r["ndv"], dict(r["hot"]), dict(r["h"]))
-        for r in ivm_read(spark, state)
-        .select(
-            "grp", "cnt", "lo",
-            F.hll_sketch_estimate("ndv_sk").alias("ndv"), "hot", "h",
-        )
-        .collect()
-    }
-    # 5 distinct bins ≤ K=8, so the MG summary IS the exact bin counts —
-    # identical to the hist map
-    bins = ev.groupBy("grp", "bin").agg(F.count(F.lit(1)).alias("c"))
-    exp_maps = {
-        r["grp"]: dict(r["m"])
-        for r in bins.groupBy("grp")
-        .agg(F.map_from_entries(F.collect_list(F.struct("bin", "c"))).alias("m"))
-        .collect()
-    }
-    exp = {
-        r["grp"]: (
-            r["cnt"], r["lo"], r["ndv"], exp_maps[r["grp"]], exp_maps[r["grp"]]
-        )
-        for r in ev.groupBy("grp")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.min("amount").alias("lo"),
-            F.hll_sketch_estimate(F.hll_sketch_agg("event_id")).alias("ndv"),
-        )
-        .collect()
-    }
-    assert got == exp
-
-
 # ---------------------------------------------------------------------------
 # Lifecycle: compaction + vacuum
 
@@ -832,58 +728,6 @@ def test_snapshot_rowcount_is_manifest_only_and_tracks_history(spark, table):
     # the manifest carries the stats: no data dir needed to answer
     m = read_manifest(table)
     assert sum(m["rows"].values()) == 200
-
-
-def test_stream_merge_matches_batch_and_replay_is_noop(spark, tmp_path):
-    """CDC micro-batches through the streaming sink converge to the same
-    snapshot a single batch MERGE would produce; checkpoint wipe + replay
-    is a no-op on the recorded batch keys. In-batch multi-change keys
-    collapse last-write-wins on order_col."""
-    from mcp_local_rag_spark.plans.merge import current_version
-    from mcp_local_rag_spark.streaming.merge_sink import stream_merge
-
-    drop = tmp_path / "cdc"
-    drop.mkdir()
-    table = str(tmp_path / "tbl")
-    ckpt = str(tmp_path / "ckpt")
-    create_merge_table(_base(spark), table, "k", n_buckets=4)
-
-    b1 = spark.createDataFrame(
-        [
-            Row(k=5, v=1, tag="stale", is_delete=False, lsn=1),
-            Row(k=5, v=2, tag="fresh", is_delete=False, lsn=2),  # same key, later LSN
-            Row(k=7, v=0, tag="x", is_delete=True, lsn=3),
-        ]
-    )
-    b2 = spark.createDataFrame(
-        [Row(k=900, v=9, tag="ins", is_delete=False, lsn=4)]
-    )
-    b1.coalesce(1).write.mode("append").parquet(str(drop))
-    b2.coalesce(1).write.mode("append").parquet(str(drop))
-
-    q = stream_merge(
-        spark, str(drop), table, ckpt, b1.schema,
-        delete_col="is_delete", order_col="lsn", available_now=True,
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(120)
-    out = {r["k"]: r for r in read_snapshot(spark, table).collect()}
-    assert out[5]["tag"] == "fresh" and out[5]["v"] == 2
-    assert 7 not in out and out[900]["tag"] == "ins"
-    assert len(out) == 200
-
-    v_before = current_version(table)
-    import shutil
-
-    shutil.rmtree(ckpt)
-    q2 = stream_merge(
-        spark, str(drop), table, ckpt, b1.schema,
-        delete_col="is_delete", order_col="lsn", available_now=True,
-        max_files_per_trigger=1,
-    )
-    q2.awaitTermination(120)
-    assert current_version(table) == v_before  # replays short-circuited
-    assert {r["k"]: r["tag"] for r in read_snapshot(spark, table).collect()}[5] == "fresh"
 
 
 def test_applied_keys_are_bounded(spark, tmp_path):
@@ -1274,104 +1118,6 @@ def test_optimize_table_zorder_tightens_both_dims(spark, tmp_path):
         ]
         avg = sum(widths) / len(widths)
         assert avg < 700, (col, widths)  # global width 1000; random ~999
-
-
-# slow (verify-window, r16): secondary-index freshness stays default-covered by test_secondary_index_lookup_and_incremental_sync / test_secondary_index_sync_maintains_shards
-@pytest.mark.slow
-def test_stream_merge_keeps_secondary_index_fresh(spark, tmp_path):
-    """sync_indexes: each CDC micro-batch advances the secondary index
-    right after the merge commits, so a post-drain lookup passes the
-    freshness guard and reflects every batch (insert, tag move, delete)."""
-    from mcp_local_rag_spark.plans.secondary import (
-        create_secondary_index,
-        lookup_by,
-    )
-    from mcp_local_rag_spark.streaming.merge_sink import stream_merge
-
-    drop = tmp_path / "cdcx"
-    drop.mkdir()
-    table = str(tmp_path / "tblx")
-    idx = str(tmp_path / "idxx")
-    ckpt = str(tmp_path / "ckptx")
-    base = spark.range(60).select(
-        F.col("id").alias("k"),
-        (F.col("id") % 3).cast("string").alias("tag"),
-        F.col("id").alias("v"),
-    )
-    create_merge_table(base, table, "k", n_buckets=4)
-    create_secondary_index(spark, table, idx, "tag", n_buckets=4)
-
-    b1 = spark.createDataFrame(
-        [Row(k=0, tag="9", v=0, is_delete=False),    # move 0: 0 -> 9
-         Row(k=3, tag="0", v=3, is_delete=True)]     # delete a tag-0 row
-    )
-    b2 = spark.createDataFrame(
-        [Row(k=777, tag="9", v=7, is_delete=False)]  # insert into 9
-    )
-    b1.coalesce(1).write.mode("append").parquet(str(drop))
-    b2.coalesce(1).write.mode("append").parquet(str(drop))
-    q = stream_merge(
-        spark, str(drop), table, ckpt, b1.schema,
-        delete_col="is_delete", sync_indexes=[idx], available_now=True,
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(120)
-    # freshness guard passes (would raise if any batch left the index behind)
-    assert sorted(r["k"] for r in lookup_by(spark, idx, "9").collect()) == [0, 777]
-    got0 = {r["k"] for r in lookup_by(spark, idx, "0").collect()}
-    exp0 = {
-        r["k"]
-        for r in read_snapshot(spark, table)
-        .filter(F.col("tag") == "0")
-        .collect()
-    }
-    assert got0 == exp0 and 0 not in got0 and 3 not in got0
-
-
-def test_hist_quantile_log_bins_bound_true_quantile(spark, tmp_path):
-    """hist on log2 bins + hist_quantile: the returned bin brackets the
-    true per-group quantile ([2^k, 2^(k+1))), across incremental applies
-    and after a retraction."""
-    from mcp_local_rag_spark.plans.ivm import hist_quantile
-
-    path = str(tmp_path / "ivm_q")
-    ev = _events(spark, 2000).withColumn(
-        "x", (F.col("event_id") % 997 + 1).cast("double")
-    ).withColumn("lb", F.floor(F.log2("x")).cast("string"))
-    measures = [("cnt", "count", None), ("h", "hist", "lb")]
-    ivm_create(spark, path, ev, KEYS, measures, n_buckets=4)
-    for part in (1, 0, 2):
-        ivm_apply(
-            spark, path, ev.filter(F.pmod("event_id", F.lit(3)) == part),
-            KEYS, measures,
-        )
-
-    def check(src):
-        got = {
-            r["grp"]: int(r["qbin"])
-            for r in ivm_read(spark, path)
-            .select("grp", hist_quantile("h", 0.5).alias("qbin"))
-            .collect()
-        }
-        # rank-based quantile (the ceil(q*n)-th value), matching the
-        # bin-cumulative definition — Spark's percentile() interpolates
-        # between ranks and can cross a bin edge
-        import math
-
-        true = {}
-        for r in src.groupBy("grp").agg(
-            F.sort_array(F.collect_list("x")).alias("xs")
-        ).collect():
-            xs = r["xs"]
-            true[r["grp"]] = xs[math.ceil(0.5 * len(xs)) - 1]
-        for g, k in got.items():
-            assert 2**k <= true[g] < 2 ** (k + 1), (g, k, true[g])
-
-    check(ev)
-    ivm_apply(
-        spark, path, ev.filter(F.col("x") < 32), KEYS, measures, weight=-1
-    )
-    check(ev.filter(F.col("x") >= 32))
 
 
 @pytest.mark.slow
@@ -2169,77 +1915,6 @@ def test_secondary_index_as_of_batch_and_range(spark, tmp_path):
             fn(spark, idx, *args, at_source_version=99)
 
 
-def test_secondary_reader_range_parity_and_freshness(spark, tmp_path):
-    """Serving range path: SecondaryReader.range_lookup matches the
-    distributed plans/secondary.range_lookup row-for-row; both serving
-    lanes enforce the freshness contract (raise on a stale index unless
-    stale_ok=True reads as-of-the-cursor)."""
-    from mcp_local_rag_spark.plans.point_read import SecondaryReader
-    from mcp_local_rag_spark.plans.secondary import (
-        create_secondary_index,
-        range_lookup,
-        sync_secondary_index,
-    )
-
-    src = str(tmp_path / "srvrsrc")
-    df = spark.range(200).select(
-        F.col("id").alias("k"), (F.col("id") % 40).alias("score")
-    )
-    create_merge_table(df, src, "k", n_buckets=4)
-    idx = str(tmp_path / "srvridx")
-    create_secondary_index(spark, src, idx, "score", n_buckets=4)
-    reader = SecondaryReader(idx)
-    want = sorted(
-        (r["k"], r["score"])
-        for r in range_lookup(spark, idx, 10, 12).collect()
-    )
-    got = sorted((r["k"], r["score"]) for r in reader.range_lookup(10, 12))
-    assert got == want and got
-    half = sorted(
-        (r["k"], r["score"])
-        for r in reader.range_lookup(10, 12, inclusive=False)
-    )
-    assert half == sorted(
-        (r["k"], r["score"])
-        for r in range_lookup(spark, idx, 10, 12, inclusive=False).collect()
-    )
-    assert reader.range_lookup(1000, 2000) == []
-    with pytest.raises(ValueError, match="selective"):
-        reader.range_lookup(0, 39, cap=10)
-
-    # an unsynced source commit makes BOTH serving lanes raise, and
-    # stale_ok reads as of the index's recorded cursor
-    merge_into(
-        spark, src,
-        spark.createDataFrame([Row(k=500, score=11, is_delete=False)]),
-        delete_col="is_delete",
-    )
-    with pytest.raises(ValueError, match="stale"):
-        reader.range_lookup(10, 12)
-    with pytest.raises(ValueError, match="stale"):
-        reader.lookup_by(11)
-    stale = {r["k"] for r in reader.range_lookup(10, 12, stale_ok=True)}
-    assert 500 not in stale and stale == {k for k, _ in want}
-    sync_secondary_index(spark, idx)
-    reader.invalidate()
-    assert 500 in {r["k"] for r in reader.range_lookup(10, 12)}
-    assert 500 in {r["k"] for r in reader.lookup_by(11)}
-
-    # AS-OF on the SERVING lanes: both resolve the index version by its
-    # recorded cursor and read the source at the requested version —
-    # parity with the distributed lanes' v1 answers
-    asof_pt = {r["k"] for r in reader.lookup_by(11, at_source_version=1)}
-    assert 500 not in asof_pt and asof_pt == {
-        k for k in range(200) if k % 40 == 11
-    }
-    asof_rg = {
-        r["k"] for r in reader.range_lookup(10, 12, at_source_version=1)
-    }
-    assert asof_rg == {k for k, _ in want} and 500 not in asof_rg
-    with pytest.raises(ValueError, match="no index version"):
-        reader.lookup_by(11, at_source_version=99)
-
-
 # ---------------------------------------------------------------------------
 # OPTIMIZE vs MERGE concurrency (round-11): the race must serialize via
 # ConcurrentCommitError/retry or fail loudly — never silently drop the
@@ -2390,31 +2065,6 @@ def test_snapshot_reader_lookup_many(spark, table):
     reader = SnapshotReader(table)
     got = {r["k"]: r["v"] for r in reader.lookup_many([1, 2, 3, 999999])}
     assert got == {1: 3, 2: 6, 3: 9}
-
-
-def test_secondary_reader_parity_with_lookup_by(spark, tmp_path):
-    from mcp_local_rag_spark.plans.point_read import SecondaryReader
-    from mcp_local_rag_spark.plans.secondary import (
-        create_secondary_index,
-        lookup_by,
-    )
-
-    src = _skewed_table(spark, tmp_path)
-    idx = str(tmp_path / "srvidx")
-    create_secondary_index(spark, src, idx, "grp", n_buckets=4)
-    reader = SecondaryReader(idx)
-    for val in ("cold0", "cold3", "absent"):
-        want = sorted(
-            (r["k"], r["grp"], r["v"])
-            for r in lookup_by(spark, idx, val, source_table=src).collect()
-        )
-        got = sorted(
-            (r["k"], r["grp"], r["v"]) for r in reader.lookup_by(val)
-        )
-        assert got == want, val
-    # the skewed value exceeds the serving cap and fails loudly
-    with pytest.raises(ValueError, match="selective"):
-        reader.lookup_by("hot", cap=10)
 
 
 def test_writers_self_heal_wedged_pointer(spark, tmp_path):
@@ -2813,8 +2463,6 @@ def test_savepoint_pins_and_survives_vacuum(spark, table, tmp_path):
     from mcp_local_rag_spark.plans.savepoint import (
         create_savepoint,
         list_savepoints,
-        protect_versions_of,
-        read_at_savepoint,
         verify_savepoint,
     )
 
@@ -2839,15 +2487,15 @@ def test_savepoint_pins_and_survives_vacuum(spark, table, tmp_path):
             delete_col="is_delete",
         )
     compact_snapshots(spark, table)
-    pinned = read_at_savepoint(spark, root, "run-2026-08", table)
+    pin = rec["tables"][os.path.abspath(table)]
+    pinned = read_snapshot(spark, table, version=pin)
     assert pinned.filter(F.col("k") == 1).first()["v"] == 3  # pre-merge
-    assert protect_versions_of(root, table) == 1
 
     # retention WITHOUT protection would retire v1; with it, the pin stays
     vacuum(table, keep_versions=1, grace_seconds=0, protect_savepoints=root)
     assert 1 in list_versions(table)
     assert verify_savepoint(root, "run-2026-08")[os.path.abspath(table)] == "ok"
-    again = read_at_savepoint(spark, root, "run-2026-08", table)
+    again = read_snapshot(spark, table, version=pin)
     assert again.filter(F.col("k") == 1).first()["v"] == 3
 
     # an unprotected vacuum retires the pin; verify reports it loudly

@@ -17,23 +17,6 @@ def test_media_table_schema(media):
     assert len(row.media_meta.content_hash) == 64
 
 
-def test_image_features_with_fake_decoder(media):
-    out = {r.media_id: r for r in mm.image_features(media, decode_fn=mm.fake_image_decoder).collect()}
-    assert set(out) == {"1", "2"}
-    r = out["1"]
-    assert (r.height, r.width, r.channels) == (8, 8, 3)
-    assert abs(sum(r.embedding) - 1.0) < 1e-6
-    # deterministic: same bytes -> same features
-    again = mm.image_features(media, decode_fn=mm.fake_image_decoder).collect()
-    assert {x.media_id: x.mean_luma for x in again} == {k: v.mean_luma for k, v in out.items()}
-
-
-def test_image_default_decoder_raises(media):
-    with pytest.raises(Exception) as e:
-        mm.image_features(media).collect()
-    assert "NotImplementedError" in str(e.value) or "decode" in str(e.value)
-
-
 def test_sample_frames_udtf_shape(spark):
     df = spark.createDataFrame([(7, bytearray(b"videobytes"))], "id long, data binary")
     vids = mm.media_table(df, id_col="id", content_col="data", modality="video")
@@ -202,51 +185,6 @@ def test_captioner_interface_contract(spark):
     assert rows[0].caption.startswith("caption of PNG:0:")
 
 
-def test_audio_window_features_real_wav(spark):
-    """Real PCM WAV decode via stdlib wave: a 440 Hz sine at amplitude 0.5
-    has RMS ~= 0.5/sqrt(2) and zero-crossing rate ~= 2*f/sr in every full
-    window; a stereo file averages to mono."""
-    import io
-    import math
-    import struct
-    import wave
-
-    from mcp_local_rag_spark.operators.multimodal import (
-        audio_window_features,
-        media_table,
-    )
-
-    def make_wav(seconds=2.0, sr=8000, freq=440.0, amp=0.5, channels=1):
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(channels)
-            w.setsampwidth(2)
-            w.setframerate(sr)
-            frames = bytearray()
-            for i in range(int(seconds * sr)):
-                v = int(amp * 32767 * math.sin(2 * math.pi * freq * i / sr))
-                frames += struct.pack("<h", v) * channels
-            w.writeframes(bytes(frames))
-        return buf.getvalue()
-
-    rows = [
-        ("a1", make_wav()),
-        ("a2", make_wav(channels=2)),
-    ]
-    df = spark.createDataFrame(rows, "media_id string, content binary")
-    media = media_table(df, id_col="media_id", content_col="content", modality="audio")
-    out = audio_window_features(media, window_sec=1.0).collect()
-
-    by_id = {}
-    for r in out:
-        by_id.setdefault(r.media_id, []).append(r)
-    assert {len(v) for v in by_id.values()} == {2}  # 2s audio -> 2 windows
-    for r in out:
-        assert abs(r.rms - 0.5 / math.sqrt(2)) < 0.01
-        assert abs(r.zero_crossing_rate - 2 * 440.0 / 8000) < 0.01
-        assert r.n_samples == 8000
-
-
 def test_visual_ingest_end_to_end_real_pdf(spark, tmp_path):
     """ingest_file(visual=True) on REAL pdf bytes: the figure page is
     detected from actual image-XObject blocks, rendered, captioned
@@ -290,37 +228,6 @@ def test_visual_ingest_end_to_end_real_pdf(spark, tmp_path):
 # round-9: real decode lanes for uncompressed containers (no external libs)
 
 import numpy as np
-
-
-def _grad(h, w, seed=0):
-    y, x = np.mgrid[0:h, 0:w]
-    base = (seed * 31 + y * 17 + x * 7) % 256
-    return np.stack([(base + 3 * c) % 256 for c in range(3)], axis=-1).astype(np.uint8)
-
-
-def test_image_features_real_netpbm_and_bmp(spark):
-    img1, img2 = _grad(5, 9, 1), _grad(7, 4, 2)
-    rows = [(1, bytearray(mm.encode_ppm(img1))), (2, bytearray(mm.encode_bmp(img2)))]
-    df = spark.createDataFrame(rows, "id long, data binary")
-    media = mm.media_table(df, id_col="id", content_col="data", modality="image")
-    out = {r.media_id: r for r in mm.image_features(media).collect()}
-    assert (out["1"].height, out["1"].width, out["1"].channels) == (5, 9, 3)
-    assert (out["2"].height, out["2"].width, out["2"].channels) == (7, 4, 3)
-    assert abs(out["1"].mean_luma - float(img1.mean())) < 1e-5
-    assert abs(out["2"].mean_luma - float(img2.mean())) < 1e-5
-
-
-def test_resize_kernels_exact_relations():
-    img = _grad(6, 10, 3)
-    up = mm.resize_nearest(img, 12, 20)
-    # integer upscale replicates pixels: sums scale by the area factor
-    assert int(up.sum()) == 4 * int(img.sum())
-    assert np.array_equal(up[::2, ::2], img)
-    # bilinear at identity size returns the image; downscale midpoints
-    assert np.allclose(mm.resize_bilinear(img, 6, 10), img.astype(np.float32))
-    two = np.array([[0, 255]], dtype=np.uint8)
-    mid = mm.resize_bilinear(two, 1, 1)
-    assert abs(float(mid[0, 0]) - 127.5) < 1e-5
 
 
 def test_sample_frames_real_y4m(spark):

@@ -1,39 +1,6 @@
 from mcp_local_rag_spark.operators import pdf_layout as pl
 
 
-def test_assemble_text_reading_order(spark):
-    # two lines: y=700 "Header Line", y=100 "bottom words"
-    items = spark.createDataFrame(
-        [
-            ("d", 1, 50.0, 700.2, 12.0, "Header"),
-            ("d", 1, 120.0, 700.4, 12.0, "Line"),
-            ("d", 1, 90.0, 100.0, 10.0, "words"),
-            ("d", 1, 40.0, 100.3, 10.0, "bottom"),
-        ],
-        "doc string, page int, x double, y double, font_size double, text string",
-    )
-    row = pl.assemble_text(items).first()
-    assert row.text == "Header Line\nbottom words"
-
-
-def test_header_footer_hints(spark):
-    items = spark.createDataFrame(
-        [
-            ("d", 1, 10.0, 780.0, 6.0, "tiny header", 800.0),
-            ("d", 1, 10.0, 20.0, 6.0, "tiny footer", 800.0),
-            ("d", 1, 10.0, 400.0, 12.0, "body big", 800.0),
-            ("d", 1, 10.0, 790.0, 12.0, "big header band", 800.0),
-        ],
-        "doc string, page int, x double, y double, font_size double, text string, page_height double",
-    )
-    out = {r.text: (r.is_header_hint, r.is_footer_hint) for r in pl.header_footer_hints(items).collect()}
-    assert out["tiny header"] == (True, False)
-    assert out["tiny footer"] == (False, True)
-    assert out["body big"] == (False, False)
-    # big font in the band is NOT a hint (font must be < 0.7 * median)
-    assert out["big header band"] == (False, False)
-
-
 def _blocks(spark, rows):
     return spark.createDataFrame(
         rows,

@@ -225,49 +225,6 @@ def test_resample_grid_has_no_cartesian(spark, qs):
     assert "windowspecdefinition(user_id" in p
 
 
-def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
-    """Catalog-bucketed chunks and postings tables join on filePath with
-    ZERO exchanges — the co-located join the bucket layout exists for."""
-    from mcp_local_rag_spark.plans.bucketed import cogrouped_join, save_bucketed
-
-    rows = spark.range(2000).select(
-        F.concat(F.lit("/d"), (F.col("id") % 50).cast("string")).alias("filePath"),
-        (F.col("id") / 50).cast("int").alias("chunkIndex"),
-        F.concat(F.lit("text "), F.col("id").cast("string")).alias("text"),
-    )
-    postings = rows.select(
-        "filePath", "chunkIndex", F.explode(F.split("text", " ")).alias("term")
-    )
-    import uuid
-
-    suffix = uuid.uuid4().hex[:8]
-    ct, pt = f"chunks_b_{suffix}", f"postings_b_{suffix}"
-    save_bucketed(rows, ct, n_buckets=8)
-    save_bucketed(
-        postings, pt, sort_cols=("filePath", "chunkIndex", "term"), n_buckets=8,
-    )
-    # at toy sizes the planner rightly broadcasts; disable it so the plan
-    # shows what a 100 TB fact-fact join would do with the bucket metadata
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_req = spark.conf.get("spark.sql.requireAllClusterKeysForCoPartition")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    # join keys (filePath, chunkIndex) are a SUPERSET of the bucket key;
-    # co-partition on the subset is exactly what document-aligned buckets
-    # guarantee, so relax the all-keys requirement (skew on filePath is the
-    # AQE skew-join's problem, not this join's)
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    try:
-        joined = cogrouped_join(spark, ct, pt, ["filePath", "chunkIndex"])
-        p = plan(joined)
-        assert "SortMergeJoin" in p
-        # co-located: per-partition Sort is fine, data movement is not
-        assert "Exchange" not in p, p
-        assert joined.count() == postings.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", old_req)
-
-
 def test_decontaminate_gram_join_is_equi_join(spark, qs):
     """The benchmark-overlap join must key on the n-gram (shuffled or
     broadcast hash/merge equi-join) — never a nested-loop over doc pairs."""
@@ -395,12 +352,17 @@ def test_hybrid_batch_single_corpus_scan(spark, qs, monkeypatch):
     corpus serves every query's vector stage (no per-query re-scan), and
     the keyword side reads the postings with the union of all queries'
     terms pushed into the scan. The rerank runs on the driver, so the
-    returned frame is a LocalRelation."""
+    returned frame is a LocalRelation. No executed plan broadcasts or
+    reads a cache, so the batch has no broadcast/cache state for a
+    concurrent caller to race on."""
     plans = _executed_plans(spark, monkeypatch)
     out = qs["hybrid_search_batch"](spark, SF_DIR)
     assert sum("MapInPandas" in p for p in plans) == 1, plans
     assert any("In(term" in p for p in plans)
     assert not any("avgdl" in p for p in plans)  # persisted stats as literals
+    assert not any(
+        "BroadcastExchange" in p or "InMemoryTableScan" in p for p in plans
+    ), plans
     assert "LocalTableScan" in plan(out)
 
 

@@ -51,30 +51,6 @@ def test_model_backend_vs_pseudo_schema_parity(spark):
     assert pseudo.schema["vector"].dataType == model.schema["vector"].dataType
 
 
-@pytest.mark.skipif(not _has("PIL"), reason="Pillow not installed")
-def test_real_image_decoder_through_pipeline(spark):
-    """A real PIL decoder drops into image_features via decode_fn with no
-    plumbing changes — PNG bytes in, (h, w, c, luma, histogram) out."""
-    import io
-
-    import numpy as np
-    from PIL import Image
-
-    from mcp_local_rag_spark.operators.multimodal import image_features, media_table
-
-    def pil_decoder(content: bytes) -> np.ndarray:
-        return np.asarray(Image.open(io.BytesIO(content)).convert("RGB"))
-
-    img = Image.new("RGB", (12, 8), color=(200, 10, 10))
-    buf = io.BytesIO()
-    img.save(buf, format="PNG")
-    df = spark.createDataFrame([("m1", bytearray(buf.getvalue()))], "id string, data binary")
-    media = media_table(df, id_col="id", content_col="data", modality="image")
-    row = image_features(media, decode_fn=pil_decoder).first()
-    assert (row.height, row.width, row.channels) == (8, 12, 3)
-    assert abs(sum(row.embedding) - 1.0) < 1e-6
-
-
 @pytest.mark.skipif(not _has("fitz"), reason="pymupdf not installed")
 def test_real_pdf_decode_through_parse_files(spark, tmp_path):
     """With pymupdf present, parse_text_bytes decodes a real PDF through
@@ -193,19 +169,7 @@ def test_pseudo_paths_always_work(spark):
     import numpy as np
 
     from mcp_local_rag_spark.embedder import embed_text_column
-    from mcp_local_rag_spark.operators.multimodal import (
-        fake_image_decoder,
-        image_features,
-        media_table,
-    )
 
     df = spark.createDataFrame([(0, "text")], "id long, text string")
     row = embed_text_column(df).first()
     assert abs(float(np.linalg.norm(np.array(row.vector))) - 1.0) < 1e-6
-
-    media = media_table(
-        spark.createDataFrame([("m", bytearray(b"bytes"))], "id string, data binary"),
-        id_col="id", content_col="data", modality="image",
-    )
-    feat = image_features(media, decode_fn=fake_image_decoder).first()
-    assert (feat.height, feat.width, feat.channels) == (8, 8, 3)

@@ -19,7 +19,7 @@ _GROUPS = itertools.count()
 
 def _jobs(spark, fn) -> int:
     """Spark jobs submitted while ``fn`` runs (job group + statusTracker,
-    the tools/job_count.py method)."""
+    the tools/time_all_queries.py method)."""
     sc = spark.sparkContext
     group = f"test-session-{next(_GROUPS)}"
     sc.setJobGroup(group, group)
@@ -141,3 +141,20 @@ def test_query_documents_batch_is_four_jobs_and_persists_nothing(
     )) <= 4
     assert sorted(map(tuple, scan_rows)) == sorted(map(tuple, rows))
     assert _persisted_ids(spark) <= before
+
+
+def test_hybrid_search_batch_lane_collects_sorted_with_no_job(spark):
+    """The hybrid_search_batch registry lane returns the driver-reranked
+    rows already in (query_id, score, chunkIndex) order, so collecting
+    its frame submits no Spark job (no Sort/Exchange over the
+    LocalRelation) and the rows arrive in that order."""
+    from mcp_local_rag_spark.queries import queries
+    from tests.test_plans import SF_DIR
+
+    df = queries()["hybrid_search_batch"](spark, SF_DIR)
+    rows = []
+    assert _jobs(spark, lambda: rows.extend(df.collect())) == 0
+    assert {r["query_id"] for r in rows} == {"0", "1", "2"}
+    assert rows == sorted(
+        rows, key=lambda r: (r["query_id"], r["score"], r["chunkIndex"])
+    )

@@ -1,7 +1,7 @@
 from pyspark.sql import functions as F
 
 from mcp_local_rag_spark.operators.similarity import cosine_knn, ivf_assign
-from mcp_local_rag_spark.operators.skew import cap_bucket_size, salted_count
+from mcp_local_rag_spark.operators.skew import salted_count
 
 
 def test_salted_count_matches_plain(spark):
@@ -19,15 +19,6 @@ def test_salted_count_matches_plain(spark):
         for r in df.groupBy("k").agg(F.count("*").alias("n"), F.sum("v").alias("sv")).collect()
     }
     assert salted == plain
-
-
-def test_cap_bucket_size(spark):
-    rows = [(0, "hot", i) for i in range(50)] + [(0, "cold", 1), (0, "cold", 2)]
-    bands = spark.createDataFrame(rows, "band int, band_key string, doc_id int")
-    kept, dropped = cap_bucket_size(bands, max_bucket=10)
-    assert kept.count() == 2
-    d = dropped.first()
-    assert d.band_key == "hot" and d.bucket_size == 50
 
 
 def test_ivf_assign_and_probe(spark):

@@ -1,177 +1,6 @@
-"""Streaming ingest (availableNow drain) and watermarked windows."""
-
-import os
-import time
-
-import pytest
-
-
-def test_stream_ingest_available_now(spark, tmp_path):
-    from mcp_local_rag_spark.streaming.watch import stream_ingest
-
-    watch = tmp_path / "drop"
-    watch.mkdir()
-    (watch / "a.txt").write_text(
-        "Stream Doc\n\nA sufficiently long first sentence about streaming ingestion pipelines.\n"
-    )
-    (watch / "b.txt").write_text(
-        "body line one without a blank after it\nso the title falls back to the filename and this text is long enough.\n"
-    )
-    table = str(tmp_path / "chunks")
-    ckpt = str(tmp_path / "ckpt")
-
-    q = stream_ingest(spark, str(watch), table, ckpt, available_now=True)
-    q.awaitTermination(120)
-    stored = spark.read.parquet(table)
-    assert stored.count() >= 2
-    assert {r.fileTitle for r in stored.collect()} == {"Stream Doc", "b"}
-
-    # exactly-once: draining again with the same checkpoint adds nothing
-    q2 = stream_ingest(spark, str(watch), table, ckpt, available_now=True)
-    q2.awaitTermination(120)
-    spark.catalog.refreshByPath(table)
-    assert spark.read.parquet(table).count() == stored.count()
-
-    # a NEW file gets picked up incrementally
-    (watch / "c.txt").write_text(
-        "Third document appended later with enough characters to form one chunk easily.\n"
-    )
-    q3 = stream_ingest(spark, str(watch), table, ckpt, available_now=True)
-    q3.awaitTermination(120)
-    spark.catalog.refreshByPath(table)
-    assert spark.read.parquet(table).filter("filePath LIKE '%c.txt'").count() >= 1
-
-
-def test_windowed_event_counts_batch_twin(spark):
-    from mcp_local_rag_spark.streaming.watch import windowed_event_counts
-
-    rows = [
-        ("2026-01-01 00:01:00", "click", 1.0),
-        ("2026-01-01 00:05:00", "click", 2.0),
-        ("2026-01-01 00:15:00", "click", 4.0),
-    ]
-    df = spark.createDataFrame(rows, "ts string, event_type string, value double").selectExpr(
-        "CAST(ts AS TIMESTAMP) ts", "event_type", "value"
-    )
-    out = {
-        (str(r.win.start), r.event_type): (r.n, r.total_value)
-        for r in windowed_event_counts(df, window="10 minutes").collect()
-    }
-    assert out[("2026-01-01 00:00:00", "click")] == (2, 3.0)
-    assert out[("2026-01-01 00:10:00", "click")] == (1, 4.0)
-
-
-def test_stateful_sessionize_stream(spark, tmp_path):
-    """Sessions closed by a gap-exceeding later event must match the batch
-    sessionizer's semantics; state carries sessions across microbatches."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from mcp_local_rag_spark.streaming.sessionize import sessionize_stream
-
-    src = tmp_path / "events_src"
-    src.mkdir()
-
-    def write_file(name, rows):
-        df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-        df.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "tmp" / name))
-        # move the data file into the source dir as one atomic new file
-        import glob
-        import shutil
-
-        part = glob.glob(str(tmp_path / "tmp" / name / "part-*.parquet"))[0]
-        shutil.copy(part, str(src / f"{name}.parquet"))
-
-    t = lambda s: dt.datetime.fromisoformat(s)
-    # user 1: session A (09:00, 09:10) closed by the 10:30 event (gap 80min)
-    # user 2: session B (09:05) closed by its 11:00 event
-    write_file("f1", [(1, t("2024-01-01 09:00:00"), 1.0),
-                      (1, t("2024-01-01 09:10:00"), 2.0),
-                      (2, t("2024-01-01 09:05:00"), 5.0)])
-    write_file("f2", [(1, t("2024-01-01 10:30:00"), 3.0),
-                      (2, t("2024-01-01 11:00:00"), 6.0)])
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        sessionize_stream(stream, gap_seconds=1800)
-        .writeStream.format("memory")
-        .queryName("sessions_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events, r.total_value)
-        for r in spark.sql("SELECT * FROM sessions_out").collect()
-    }
-    must_have = {
-        (1, "2024-01-01 09:00:00", "2024-01-01 09:10:00", 2, 3.0),
-        (2, "2024-01-01 09:05:00", "2024-01-01 09:05:00", 1, 5.0),
-    }
-    assert must_have <= got, got
-    # nothing emitted may contradict the batch semantics: the only other
-    # possible rows are the final (timeout-flushed) sessions
-    extras = got - must_have
-    allowed = {
-        (1, "2024-01-01 10:30:00", "2024-01-01 10:30:00", 1, 3.0),
-        (2, "2024-01-01 11:00:00", "2024-01-01 11:00:00", 1, 6.0),
-    }
-    assert extras <= allowed, extras
-
-
-def test_dedupe_event_stream(spark, tmp_path):
-    """Replayed event ids within the watermark are dropped exactly-once in
-    streaming mode; the batch twin dedups the same keys."""
-    import datetime as dt
-    import glob
-    import shutil
-
-    from mcp_local_rag_spark.streaming.watch import dedupe_event_stream
-
-    src = tmp_path / "dup_src"
-    src.mkdir()
-    t = lambda s: dt.datetime.fromisoformat(s)
-
-    def write_file(name, rows):
-        df = spark.createDataFrame(rows, "event_id long, ts timestamp, value double")
-        df.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "tmp2" / name))
-        part = glob.glob(str(tmp_path / "tmp2" / name / "part-*.parquet"))[0]
-        shutil.copy(part, str(src / f"{name}.parquet"))
-
-    write_file("f1", [(1, t("2024-01-01 09:00:00"), 1.0),
-                      (2, t("2024-01-01 09:01:00"), 2.0)])
-    write_file("f2", [(1, t("2024-01-01 09:02:00"), 1.0),   # replay of id 1
-                      (3, t("2024-01-01 09:03:00"), 3.0)])
-
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        dedupe_event_stream(stream, key_cols=("event_id",))
-        .writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    ids = sorted(r.event_id for r in spark.sql("SELECT * FROM dedup_out").collect())
-    assert ids == [1, 2, 3]
-
-    # batch twin: same call site, plain dropDuplicates
-    batch = spark.createDataFrame(
-        [(1, t("2024-01-01 09:00:00"), 1.0), (1, t("2024-01-01 09:02:00"), 1.0)],
-        "event_id long, ts timestamp, value double",
-    )
-    assert dedupe_event_stream(batch).count() == 1
+"""Event-time sessionization against Spark's native session_window,
+chunk compaction (replay dedup, row-group sort) and the stale-delete
+postings refresh."""
 
 
 def test_sessionize_matches_native_session_window(spark):
@@ -231,149 +60,11 @@ def test_sessionize_matches_native_session_window(spark):
     assert ours == native
 
 
-def test_stream_ingest_binary_pdf_and_docx(spark, tmp_path):
-    """The binaryFile watcher streams PDF and DOCX through the SAME
-    parse+chunk pipeline as batch ingest: titles resolve per format,
-    header/footer strip runs, exactly-once per file via the checkpoint."""
-    from mcp_local_rag_spark.sources.pdf_mini import build_pdf
-    from mcp_local_rag_spark.streaming.watch import stream_ingest_binary
-    from tests.test_parsers import _p, make_docx
-
-    watch = tmp_path / "bindrop"
-    watch.mkdir()
-    pdf_pages = []
-    for p in range(1, 4):
-        pdf_pages.append(
-            [
-                (50.0, 780.0, 6.0, "Streamed header boilerplate."),
-                (
-                    50.0,
-                    400.0,
-                    11.0,
-                    f"Page {p} streams structured query planning prose with"
-                    f" enough characters to chunk, variant {p}.",
-                ),
-                (50.0, 10.0, 6.0, "Streamed footer boilerplate."),
-            ]
-        )
-    (watch / "guide.pdf").write_bytes(build_pdf(pdf_pages, title="Streamed Guide"))
-    (watch / "memo.docx").write_bytes(
-        make_docx(
-            _p(
-                "A memo paragraph streamed through the binary watcher with"
-                " comfortably enough text for one chunk."
-            ),
-            core_title="Streamed Memo",
-        )
-    )
-    table = str(tmp_path / "chunks_bin")
-    ckpt = str(tmp_path / "ckpt_bin")
-
-    q = stream_ingest_binary(spark, str(watch), table, ckpt, available_now=True)
-    q.awaitTermination(120)
-    stored = spark.read.parquet(table)
-    titles = {r.fileTitle for r in stored.collect()}
-    assert titles == {"Streamed Guide", "Streamed Memo"}
-    pdf_text = "\n".join(
-        r.text for r in stored.filter("filePath LIKE '%guide.pdf'").collect()
-    )
-    assert "Streamed header" not in pdf_text and "structured query planning" in pdf_text
-
-    # exactly-once on re-drain
-    q2 = stream_ingest_binary(spark, str(watch), table, ckpt, available_now=True)
-    q2.awaitTermination(120)
-    spark.catalog.refreshByPath(table)
-    assert spark.read.parquet(table).count() == stored.count()
-
-
-def test_stream_ingest_maintains_postings_index(spark, tmp_path):
-    from mcp_local_rag_spark.plans.fts import read_postings
-    from mcp_local_rag_spark.streaming.watch import stream_ingest
-
-    watch = tmp_path / "drop"
-    watch.mkdir()
-    (watch / "a.txt").write_text(
-        "Watermark Doc\n\nStreaming watermark semantics bound the state kept for late arrivals.\n"
-    )
-    table = str(tmp_path / "chunks")
-    ckpt = str(tmp_path / "ckpt")
-    postings = str(tmp_path / "postings")
-
-    q = stream_ingest(
-        spark, str(watch), table, ckpt, postings_path=postings, available_now=True
-    )
-    q.awaitTermination(120)
-    idx = read_postings(spark, postings)
-    assert idx.filter("term = 'watermark'").count() >= 1
-
-    # the index grows with a later micro-batch, without reprocessing a.txt
-    (watch / "b.txt").write_text(
-        "Second streamed doc mentioning broadcast joins at a comfortable length for chunking.\n"
-    )
-    q2 = stream_ingest(
-        spark, str(watch), table, ckpt, postings_path=postings, available_now=True
-    )
-    q2.awaitTermination(120)
-    spark.catalog.refreshByPath(postings)
-    idx2 = read_postings(spark, postings)
-    assert idx2.filter("term = 'broadcast'").count() >= 1
-    # a.txt postings present exactly once (no double-append on re-drain)
-    a_rows = idx2.filter("term = 'watermark'").count()
-    assert a_rows == idx.filter("term = 'watermark'").count()
-
-    # postings stayed bucket-aligned with the chunks table
-    from mcp_local_rag_spark.plans.ingest import table_n_buckets
-
-    assert table_n_buckets(postings) == table_n_buckets(table)
-
-
-def test_batch_markers_make_replay_a_noop(spark, tmp_path):
-    """foreachBatch is at-least-once: a marker written after both sink
-    appends makes a full-batch replay a no-op (ADVICE r4). Simulated by
-    wiping the checkpoint (so the source re-delivers batch 0) while
-    keeping the marker directory."""
-    import shutil
-
-    from mcp_local_rag_spark.streaming.watch import (
-        _batch_already_applied,
-        stream_ingest,
-    )
-
-    watch = tmp_path / "drop"
-    watch.mkdir()
-    (watch / "a.txt").write_text(
-        "Marker Doc\n\nA sufficiently long sentence about replayed micro batches.\n"
-    )
-    table = str(tmp_path / "chunks")
-    ckpt = str(tmp_path / "ckpt")
-
-    q = stream_ingest(spark, str(watch), table, ckpt, available_now=True)
-    q.awaitTermination(120)
-    n1 = spark.read.parquet(table).count()
-    assert _batch_already_applied(ckpt, 0)
-
-    # wipe Spark's own offset tracking but keep the applied-batch markers:
-    # the source re-delivers batch 0, the marker suppresses the re-append
-    for sub in ("offsets", "commits", "sources"):
-        shutil.rmtree(f"{ckpt}/{sub}", ignore_errors=True)
-    q2 = stream_ingest(spark, str(watch), table, ckpt, available_now=True)
-    q2.awaitTermination(120)
-    spark.catalog.refreshByPath(table)
-    assert spark.read.parquet(table).count() == n1
-
-
 def test_compaction_dedupes_partial_replay(spark, tmp_path):
-    """The one at-least-once window the batch markers cannot close (crash
-    strictly BETWEEN the chunk append and the marker write, then replay)
-    duplicates rows; compaction keeps one row per (filePath, chunkIndex)
-    and the postings one per (filePath, chunkIndex, term)."""
+    """A replayed append duplicates rows; compaction keeps one row per
+    (filePath, chunkIndex)."""
     from pyspark.sql import functions as F
 
-    from mcp_local_rag_spark.plans.fts import (
-        compact_postings,
-        read_postings,
-        write_postings,
-    )
     from mcp_local_rag_spark.plans.ingest import (
         build_chunks,
         compact_chunks,
@@ -395,11 +86,8 @@ def test_compaction_dedupes_partial_replay(spark, tmp_path):
     )
     chunks = build_chunks(docs, dim=16, backend="hashing").persist()
     table = str(tmp_path / "chunks_replay")
-    postings = str(tmp_path / "postings_replay")
     write_chunks(chunks, table, backend="hashing", dim=16)
-    write_postings(spark.read.parquet(table), postings)
     n = spark.read.parquet(table).count()
-    np_ = read_postings(spark, postings).count()
 
     # simulate the replayed second append
     from mcp_local_rag_spark.plans.ingest import table_n_buckets
@@ -413,320 +101,12 @@ def test_compaction_dedupes_partial_replay(spark, tmp_path):
         .mode("append")
         .parquet(table)
     )
-    write_postings(spark.read.parquet(str(tmp_path / "chunks_replay")).limit(0), postings, mode="append")  # stats-only append noop
     spark.catalog.refreshByPath(table)
     assert spark.read.parquet(table).count() == 2 * n
 
     compact_chunks(spark, table)
     assert spark.read.parquet(table).count() == n
-    compact_postings(spark, postings)
-    assert read_postings(spark, postings).count() == np_
     chunks.unpersist()
-
-
-def test_stream_ingest_stores_plain_decoded_paths(spark, tmp_path):
-    """The file source hands foreachBatch percent-encoded file URIs; the
-    stored filePath must be the PLAIN local path batch ingest would store
-    (same sync key, same hash bucket) — including names with spaces."""
-    from mcp_local_rag_spark.streaming.watch import stream_ingest
-
-    watch = tmp_path / "drop_uri"
-    watch.mkdir()
-    fname = "my doc.txt"
-    (watch / fname).write_text(
-        "Title Line\n\nA sentence long enough to survive chunking comfortably today.\n"
-    )
-    table = str(tmp_path / "chunks_uri")
-    ckpt = str(tmp_path / "ckpt_uri")
-    q = stream_ingest(spark, str(watch), table, ckpt, available_now=True)
-    q.awaitTermination(120)
-    paths = {r.filePath for r in spark.read.parquet(table).select("filePath").collect()}
-    assert paths == {str(watch / fname)}, paths  # no 'file:', '///', or '%20'
-
-
-def test_stream_ingest_picks_up_markdown_by_default(spark, tmp_path):
-    """The documented md/txt hot path: .md files match the default glob."""
-    from mcp_local_rag_spark.streaming.watch import stream_ingest
-
-    watch = tmp_path / "drop_md"
-    watch.mkdir()
-    (watch / "note.md").write_text(
-        "# Markdown Note\n\nBody text with enough length to produce one chunk.\n"
-    )
-    table = str(tmp_path / "chunks_md")
-    ckpt = str(tmp_path / "ckpt_md")
-    q = stream_ingest(spark, str(watch), table, ckpt, available_now=True)
-    q.awaitTermination(120)
-    stored = spark.read.parquet(table)
-    assert stored.count() >= 1
-    assert stored.first().fileTitle == "Markdown Note"
-
-
-def test_sessionize_late_event_extends_start_backward(spark, tmp_path):
-    """A late-but-in-gap event admitted by the watermark lowers
-    session_start (the batch twin takes min(ts)); it must not be merged
-    forward with the open session's start left untouched."""
-    import datetime as dt
-    import glob
-    import shutil
-
-    from mcp_local_rag_spark.streaming.sessionize import sessionize_stream
-
-    src = tmp_path / "late_src"
-    src.mkdir()
-
-    def write_file(name, rows):
-        df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-        df.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "tmp2" / name))
-        part = glob.glob(str(tmp_path / "tmp2" / name / "part-*.parquet"))[0]
-        shutil.copy(part, str(src / f"{name}.parquet"))
-
-    t = lambda s: dt.datetime.fromisoformat(s)
-    write_file("f1", [(3, t("2024-01-01 12:00:00"), 1.0)])
-    # batch 2: a late event 15 min EARLIER (inside the 30-min gap) plus a
-    # far-future event that closes the session by gap
-    write_file("f2", [(3, t("2024-01-01 11:45:00"), 2.0),
-                      (3, t("2024-01-01 14:00:00"), 7.0)])
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        sessionize_stream(stream, gap_seconds=1800, watermark="4 hours")
-        .writeStream.format("memory")
-        .queryName("late_sessions")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events, r.total_value)
-        for r in spark.sql("SELECT * FROM late_sessions").collect()
-    }
-    assert (3, "2024-01-01 11:45:00", "2024-01-01 12:00:00", 2, 3.0) in got, got
-
-
-def test_join_event_streams_interval_attribution(spark, tmp_path):
-    """Stream-stream interval join: purchases attach to the view they
-    followed within 15 minutes, per user; outside-window and cross-user
-    purchases drop. The batch twin through the same call site must return
-    the identical row set."""
-    import datetime as dt
-    import glob
-    import shutil
-
-    from mcp_local_rag_spark.streaming.watch import join_event_streams
-
-    t = lambda s: dt.datetime.fromisoformat(s)
-    view_rows = [
-        (1, t("2024-01-01 09:00:00"), "home"),
-        (1, t("2024-01-01 10:00:00"), "search"),
-        (2, t("2024-01-01 09:05:00"), "home"),
-    ]
-    buy_rows = [
-        (1, t("2024-01-01 09:10:00"), 5.0),   # within 15m of 09:00 view
-        (1, t("2024-01-01 10:20:00"), 7.0),   # 20m after 10:00 view -> drops
-        (2, t("2024-01-01 09:06:00"), 9.0),   # within 1m of user 2's view
-        (3, t("2024-01-01 09:06:00"), 1.0),   # no view at all
-    ]
-    v_schema = "user_id long, ts timestamp, page string"
-    b_schema = "user_id long, ts timestamp, amount double"
-
-    def write_src(name, rows, schema):
-        src = tmp_path / name
-        src.mkdir()
-        df = spark.createDataFrame(rows, schema)
-        df.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "stage" / name))
-        part = glob.glob(str(tmp_path / "stage" / name / "part-*.parquet"))[0]
-        shutil.copy(part, str(src / "data.parquet"))
-        return spark.readStream.schema(schema).parquet(str(src))
-
-    views = write_src("views", view_rows, v_schema)
-    buys = write_src("buys", buy_rows, b_schema)
-    q = (
-        join_event_streams(views, buys)
-        .writeStream.format("memory")
-        .queryName("attrib_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.user_id, r.l_ts.isoformat(), r.r_ts.isoformat(), r.page, r.r_amount)
-        for r in spark.sql("SELECT * FROM attrib_out").collect()
-    }
-    want = {
-        (1, "2024-01-01T09:00:00", "2024-01-01T09:10:00", "home", 5.0),
-        (2, "2024-01-01T09:05:00", "2024-01-01T09:06:00", "home", 9.0),
-    }
-    assert got == want
-
-    # batch twin through the same call site
-    bv = spark.createDataFrame(view_rows, v_schema)
-    bb = spark.createDataFrame(buy_rows, b_schema)
-    batch = {
-        (r.user_id, r.l_ts.isoformat(), r.r_ts.isoformat(), r.page, r.r_amount)
-        for r in join_event_streams(bv, bb).collect()
-    }
-    assert batch == want
-
-
-def test_join_event_streams_self_join_lineage(spark):
-    """Both sides filtered from the SAME parent frame (the common batch
-    backfill shape) must keep the key equality — regression for the
-    trivially-true self-join predicate Spark silently constructs without
-    explicit aliases."""
-    import datetime as dt
-
-    from mcp_local_rag_spark.streaming.watch import join_event_streams
-
-    t = lambda s: dt.datetime.fromisoformat(s)
-    ev = spark.createDataFrame(
-        [
-            (1, t("2024-01-01 09:00:00"), "view", 0.0),
-            (2, t("2024-01-01 09:01:00"), "view", 0.0),
-            (1, t("2024-01-01 09:05:00"), "purchase", 5.0),   # same user: match
-            (2, t("2024-01-01 11:00:00"), "purchase", 9.0),   # outside window
-        ],
-        "user_id long, ts timestamp, event_type string, value double",
-    )
-    v = ev.filter("event_type='view'").select("user_id", "ts")
-    p = ev.filter("event_type='purchase'").select("user_id", "ts", "value")
-    rows = join_event_streams(v, p).collect()
-    assert [(r.user_id, r.r_value) for r in rows] == [(1, 5.0)]
-
-
-def test_streaming_heavy_hitter_candidates(spark, tmp_path):
-    """Sharded MG state over a file stream: the hot key must be in the
-    final candidate set with est <= true count (MG never overcounts), and
-    the batch twin through the same call site retains it too."""
-    import glob
-    import shutil
-
-    from mcp_local_rag_spark.streaming.heavy import heavy_hitter_candidates_stream
-
-    src = tmp_path / "hh_src"
-    src.mkdir()
-
-    def write_file(name, ids):
-        df = spark.createDataFrame([(i,) for i in ids], "user_id long")
-        df.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "st" / name))
-        part = glob.glob(str(tmp_path / "st" / name / "part-*.parquet"))[0]
-        shutil.copy(part, str(src / f"{name}.parquet"))
-
-    # hot key 7 split across two micro-batches + singleton noise
-    write_file("f1", [7] * 40 + list(range(100, 140)))
-    write_file("f2", [7] * 35 + list(range(200, 240)))
-
-    stream = spark.readStream.schema("user_id long").option(
-        "maxFilesPerTrigger", 1
-    ).parquet(str(src))
-    q = (
-        heavy_hitter_candidates_stream(stream, k=5, n_shards=4)
-        .writeStream.format("memory")
-        .queryName("hh_out")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM hh_out").collect()
-    # last emission per (shard, key) is the current state
-    latest = {}
-    for r in rows:
-        latest[(r.shard, r.key)] = r.est_count
-    hot = [(s, k, c) for (s, k), c in latest.items() if k == "7"]
-    assert hot, "hot key must survive MG state across micro-batches"
-    assert hot[0][2] <= 75  # MG never overcounts
-
-    # batch twin: same call site, same guarantee
-    batch = spark.createDataFrame(
-        [(7,)] * 75 + [(i,) for i in list(range(100, 140)) + list(range(200, 240))],
-        "user_id long",
-    )
-    bkeys = {r.key for r in heavy_hitter_candidates_stream(batch, k=5, n_shards=4).collect()}
-    assert "7" in bkeys
-
-
-def test_binary_watcher_preserves_literal_percent_and_space_names(spark, tmp_path):
-    """binaryFile's path column arrives LITERAL (not percent-encoded);
-    unquoting it would corrupt 'a%20b.docx' into 'a b.docx' and orphan the
-    rows from batch-keyed delete/sync forever. The stored filePath must be
-    byte-identical to what batch read_files stores."""
-    from mcp_local_rag_spark.streaming.watch import stream_ingest_binary
-    from tests.test_parsers import _p, make_docx
-
-    watch = tmp_path / "pctdrop"
-    watch.mkdir()
-    body = _p(
-        "A percent-named memo streamed through the binary watcher with"
-        " comfortably enough text for one chunk."
-    )
-    for name in ("a%20b.docx", "with space.docx"):
-        (watch / name).write_bytes(make_docx(body, core_title="Pct"))
-    table = str(tmp_path / "chunks_pct")
-    ckpt = str(tmp_path / "ckpt_pct")
-    q = stream_ingest_binary(spark, str(watch), table, ckpt, available_now=True)
-    q.awaitTermination(120)
-    stored = {
-        r.filePath for r in spark.read.parquet(table).select("filePath").distinct().collect()
-    }
-    assert stored == {str(watch / "a%20b.docx"), str(watch / "with space.docx")}
-
-
-def test_sessionize_merges_mutually_in_gap_late_events(spark, tmp_path):
-    """Two late events within one gap of EACH OTHER (but both > gap before
-    the open session) must close as ONE merged session — the batch twin's
-    maximal-run semantics — not as two single-event sessions."""
-    import datetime as dt
-    import glob
-    import shutil
-
-    from mcp_local_rag_spark.streaming.sessionize import sessionize_stream
-
-    src = tmp_path / "late_src"
-    src.mkdir()
-    t = lambda s: dt.datetime.fromisoformat(s)
-
-    def write_file(name, rows):
-        df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-        df.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "stg" / name))
-        part = glob.glob(str(tmp_path / "stg" / name / "part-*.parquet"))[0]
-        shutil.copy(part, str(src / f"{name}.parquet"))
-
-    # batch 1 opens a session at 12:00; batch 2 delivers two late events
-    # 9:00/9:05 (mutually in gap) plus a 12:10 extension
-    write_file("f1", [(1, t("2024-01-01 12:00:00"), 1.0)])
-    write_file("f2", [
-        (1, t("2024-01-01 09:00:00"), 2.0),
-        (1, t("2024-01-01 09:05:00"), 3.0),
-        (1, t("2024-01-01 12:10:00"), 4.0),
-    ])
-    stream = spark.readStream.schema(
-        "user_id long, ts timestamp, value double"
-    ).option("maxFilesPerTrigger", 1).parquet(str(src))
-    q = (
-        sessionize_stream(stream, gap_seconds=1800, watermark="12 hours")
-        .writeStream.format("memory")
-        .queryName("late_merge_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = sorted(
-        spark.sql("SELECT * FROM late_merge_out").collect(),
-        key=lambda r: r.session_start,
-    )
-    # exactly one closed session for the late pair, merged, n=2
-    late = [r for r in rows if r.session_start.hour == 9]
-    assert len(late) == 1
-    assert late[0].n_events == 2 and late[0].total_value == 5.0
-    assert late[0].session_end.minute == 5
 
 
 def test_compaction_keeps_rowgroup_sort(spark, tmp_path):
@@ -752,48 +132,6 @@ def test_compaction_keeps_rowgroup_sort(spark, tmp_path):
         t = pq.read_table(f, columns=["filePath", "chunkIndex"]).to_pandas()
         key = list(zip(t["filePath"], t["chunkIndex"]))
         assert key == sorted(key), f
-
-
-def test_watcher_resolves_embedding_space_per_batch(spark, tmp_path):
-    """A watcher constructed BEFORE the table exists must embed its
-    batches in the space the table records at processing time, not a
-    construction-time fallback — otherwise a fresh deployment's stream
-    appends foreign-space vectors forever."""
-    from mcp_local_rag_spark.plans.ingest import build_chunks, write_chunks
-    from mcp_local_rag_spark.streaming.watch import stream_ingest
-
-    watch = tmp_path / "spacedrop"
-    watch.mkdir()
-    table = str(tmp_path / "chunks_space")
-    ckpt = str(tmp_path / "ckpt_space")
-
-    # construct the stream while the table does not exist yet
-    stream_q = None
-    # table is then created by batch ingest in a NON-default space
-    docs = spark.createDataFrame(
-        [("/d/seed.md", "Seed document text with plenty of words to chunk"
-          " comfortably for the table bootstrap.", "Seed", "h", 80)],
-        "path string, text string, title string, contentHash string, length long",
-    )
-    write_chunks(
-        build_chunks(docs, dim=32, backend="hashing"), table, backend="hashing", dim=32
-    )
-    (watch / "late.md").write_text(
-        "A streamed document arriving after the table was created, long"
-        " enough to produce at least one chunk of text."
-    )
-    stream_q = stream_ingest(spark, str(watch), table, ckpt, available_now=True)
-    stream_q.awaitTermination(120)
-    from pyspark.sql import functions as F
-
-    dims = {
-        r.d
-        for r in spark.read.parquet(table)
-        .select(F.size("vector").alias("d"))
-        .distinct()
-        .collect()
-    }
-    assert dims == {32}
 
 
 def test_fts_refresh_stale_delete_leaves_buckets_untouched(spark, tmp_path):
@@ -822,616 +160,3 @@ def test_fts_refresh_stale_delete_leaves_buckets_untouched(spark, tmp_path):
         for f in glob.glob(f"{path}/bucket=*/part-*.parquet")
     }
     assert before == after
-
-
-def test_stream_dedup_incremental_pairs(spark, tmp_path):
-    """Streaming near-dup watcher: batch 1 bootstraps the signature table
-    and finds the in-batch duplicate pair; batch 2 (a new near-copy of an
-    OLD document) pairs against the persisted corpus without re-signing
-    it; the pairs log matches what a full batch LSH run would produce."""
-    from mcp_local_rag_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-        shingle_sets,
-    )
-    from mcp_local_rag_spark.streaming.dedup import stream_dedup
-
-    base = (
-        "spark shuffles data between executors during wide transformations "
-        "and broadcast joins avoid that shuffle for small dimension tables "
-        "while caching hot tables reduces repeated scans across queries"
-    )
-    other = (
-        "a completely different document about sailing boats across the "
-        "northern sea with no lexical overlap whatsoever in its shingles "
-        "just maritime words waves harbors anchors and long voyages"
-    )
-    watch = tmp_path / "drop"
-    watch.mkdir()
-    sig = str(tmp_path / "sigs")
-    pairs = str(tmp_path / "pairs")
-    ckpt = str(tmp_path / "ckpt")
-
-    (watch / "a.md").write_text(base)
-    (watch / "b.md").write_text(base + " with a tiny tail difference")
-    (watch / "c.md").write_text(other)
-    q = stream_dedup(spark, str(watch), sig, pairs, ckpt, available_now=True)
-    q.awaitTermination(120)
-
-    got1 = {
-        (r.id1, r.id2)
-        for r in spark.read.parquet(pairs).select("id1", "id2").collect()
-    }
-    a, b, c = (str(watch / f"{n}.md") for n in "abc")
-    assert (a, b) in got1 or (b, a) in got1
-    assert not any(c in p for p in got1)
-
-    # batch 2: a near-copy of a.md arrives later
-    (watch / "d.md").write_text(base + " trailing words appended much later")
-    q2 = stream_dedup(spark, str(watch), sig, pairs, ckpt, available_now=True)
-    q2.awaitTermination(120)
-
-    got2 = {
-        (r.id1, r.id2)
-        for r in spark.read.parquet(pairs).select("id1", "id2").collect()
-    }
-    d = str(watch / "d.md")
-    assert any(d in p and (a in p or b in p) for p in got2 - got1), got2 - got1
-
-    # signature table is current: 4 rows, one per document
-    assert spark.read.parquet(sig).count() == 4
-
-    # stream/batch agreement: a full LSH run over all four docs finds the
-    # same pair set restricted to pairs touching a new doc each round
-    docs = spark.createDataFrame(
-        [(p, (watch / f"{n}.md").read_text()) for n, p in zip("abcd", (a, b, c, d))],
-        "doc_id string, text string",
-    )
-    full = {
-        (r.id1, r.id2)
-        for r in lsh_candidate_pairs(
-            minhash_signatures(shingle_sets(docs, id_col="doc_id"), id_col="doc_id"),
-            id_col="doc_id",
-        ).collect()
-    }
-    assert got2 == full
-
-
-def test_stream_dedup_replay_is_noop(spark, tmp_path):
-    """At-least-once replay safety: both dedup sinks are idempotent per
-    batch (batch_id-partitioned pairs with dynamic overwrite; one
-    deterministically-named signature file per batch), so replaying a
-    fully-applied batch — the worst crash window, signatures already
-    landed, marker lost — changes neither table."""
-    from mcp_local_rag_spark.streaming.dedup import stream_dedup
-
-    base = (
-        "spark shuffles data between executors during wide transformations "
-        "and broadcast joins avoid that shuffle for small dimension tables "
-        "while caching hot tables reduces repeated scans across queries"
-    )
-    watch = tmp_path / "drop"
-    watch.mkdir()
-    sig = str(tmp_path / "sigs")
-    pairs = str(tmp_path / "pairs")
-    ckpt = str(tmp_path / "ckpt")
-
-    (watch / "a.md").write_text(base)
-    (watch / "b.md").write_text(base + " with a tiny tail difference")
-    q = stream_dedup(spark, str(watch), sig, pairs, ckpt, available_now=True)
-    q.awaitTermination(120)
-
-    def snapshot():
-        sig_rows = sorted(
-            tuple(r) for r in spark.read.parquet(sig).collect()
-        )
-        pair_rows = sorted(
-            (r.id1, r.id2, r.batch_id)
-            for r in spark.read.parquet(pairs).collect()
-        )
-        return sig_rows, pair_rows
-
-    before = snapshot()
-    assert len(before[0]) == 2 and len(before[1]) == 1
-
-    # simulate the crash-replay: wipe the checkpoint (stream offsets AND
-    # the applied-batch marker) so the same files re-deliver as the same
-    # batch_id with signatures already present in the table
-    import shutil
-
-    shutil.rmtree(ckpt)
-    spark.catalog.refreshByPath(sig)
-    spark.catalog.refreshByPath(pairs)
-    q2 = stream_dedup(spark, str(watch), sig, pairs, ckpt, available_now=True)
-    q2.awaitTermination(120)
-    spark.catalog.refreshByPath(sig)
-    spark.catalog.refreshByPath(pairs)
-
-    assert snapshot() == before
-
-
-def test_stream_stream_click_attribution(spark, tmp_path):
-    """Watermarked stream-stream interval join (streaming/joins): the
-    availableNow drain equals the batch twin row-for-row; out-of-window
-    clicks never attribute; the streaming plan carries watermarks on
-    both sides (the state-bounding contract)."""
-    import datetime as dt
-    import glob
-    import shutil
-
-    from mcp_local_rag_spark.streaming.joins import (
-        attribute_clicks_batch,
-        attribute_clicks_stream,
-    )
-
-    t = lambda s: dt.datetime.fromisoformat(s)
-    SCHEMA = "event_id long, user_id long, ts timestamp"
-
-    def write_files(dirname, batches):
-        src = tmp_path / dirname
-        src.mkdir()
-        for i, rows in enumerate(batches):
-            df = spark.createDataFrame(rows, SCHEMA)
-            tmp = tmp_path / f"_tmp_{dirname}_{i}"
-            df.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-            part = glob.glob(str(tmp / "part-*.parquet"))[0]
-            shutil.copy(part, str(src / f"b{i}.parquet"))
-        return str(src)
-
-    impressions = [
-        (100, 1, t("2024-01-01 09:00:00")),
-        (101, 1, t("2024-01-01 10:00:00")),
-        (102, 2, t("2024-01-01 09:10:00")),
-        (103, 3, t("2024-01-01 09:20:00")),  # user 3 never clicks
-    ]
-    clicks = [
-        (900, 1, t("2024-01-01 09:10:00")),  # 10 min after imp 100 -> attributed
-        (901, 1, t("2024-01-01 09:45:00")),  # 45 min after 100 (out), before 101 (out)
-        (902, 1, t("2024-01-01 10:05:00")),  # 5 min after imp 101 -> attributed
-        (903, 2, t("2024-01-01 09:39:00")),  # 29 min after imp 102 -> attributed
-        (904, 9, t("2024-01-01 09:15:00")),  # unknown user
-    ]
-    imp_src = write_files("imp_src", [impressions[:2], impressions[2:]])
-    clk_src = write_files("clk_src", [clicks[:3], clicks[3:]])
-
-    stream = attribute_clicks_stream(
-        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(imp_src),
-        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(clk_src),
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("attr_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r.impression_id, r.click_id, r.latency_s)
-        for r in spark.sql("SELECT * FROM attr_out").collect()
-    }
-    want = {
-        (r.impression_id, r.click_id, r.latency_s)
-        for r in attribute_clicks_batch(
-            spark.createDataFrame(impressions, SCHEMA),
-            spark.createDataFrame(clicks, SCHEMA),
-        ).collect()
-    }
-    assert got == want
-    assert got == {(100, 900, 600.0), (101, 902, 300.0), (102, 903, 1740.0)}
-
-
-def test_stream_stream_left_outer_attribution(spark, tmp_path):
-    """LEFT-OUTER stream-stream interval join (streaming/joins.
-    attribute_impressions_stream_outer): unattributed impressions emit
-    with null click columns once the watermark passes their window; the
-    drain equals the batch outer twin; the anti-join form
-    (unattributed_impressions_batch) selects exactly the null rows."""
-    import datetime as dt
-    import glob
-    import shutil
-
-    from mcp_local_rag_spark.streaming.joins import (
-        attribute_impressions_batch_outer,
-        attribute_impressions_stream_outer,
-        unattributed_impressions_batch,
-    )
-
-    t = lambda s: dt.datetime.fromisoformat(s)
-    SCHEMA = "event_id long, user_id long, ts timestamp"
-
-    def write_files(dirname, batches):
-        src = tmp_path / dirname
-        src.mkdir()
-        for i, rows in enumerate(batches):
-            df = spark.createDataFrame(rows, SCHEMA)
-            tmp = tmp_path / f"_tmp_{dirname}_{i}"
-            df.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-            part = glob.glob(str(tmp / "part-*.parquet"))[0]
-            shutil.copy(part, str(src / f"b{i}.parquet"))
-        return str(src)
-
-    impressions = [
-        (100, 1, t("2024-01-01 09:00:00")),  # clicked at 09:10
-        (101, 1, t("2024-01-01 10:00:00")),  # clicked at 10:05
-        (102, 2, t("2024-01-01 09:10:00")),  # user 2's click is at 09:55 (45m, out)
-        (103, 3, t("2024-01-01 09:20:00")),  # user 3 never clicks
-    ]
-    clicks = [
-        (900, 1, t("2024-01-01 09:10:00")),
-        (902, 1, t("2024-01-01 10:05:00")),
-        (903, 2, t("2024-01-01 09:55:00")),  # 45 min after imp 102 -> out of window
-    ]
-    # watermark-advancing sentinels on BOTH sides, far past every window +
-    # lateness: the outer join's null results are emitted only when the
-    # watermark proves no match can arrive, and an availableNow drain
-    # stops at the last batch — without the sentinels the trailing
-    # unmatched impressions would still be sitting in state at stop
-    sent_imp = (999, 99, t("2024-01-02 00:00:00"))
-    sent_clk = (998, 99, t("2024-01-02 00:00:01"))
-    imp_src = write_files("impo_src", [impressions, [sent_imp]])
-    clk_src = write_files("clko_src", [clicks, [sent_clk]])
-
-    stream = attribute_impressions_stream_outer(
-        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(imp_src),
-        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(clk_src),
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("attr_outer")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_outer"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r.impression_id, r.click_id, r.latency_s)
-        for r in spark.sql(
-            "SELECT * FROM attr_outer WHERE user_id != 99"
-        ).collect()
-    }
-    want = {
-        (r.impression_id, r.click_id, r.latency_s)
-        for r in attribute_impressions_batch_outer(
-            spark.createDataFrame(impressions, SCHEMA),
-            spark.createDataFrame(clicks, SCHEMA),
-        ).collect()
-    }
-    assert got == want
-    assert got == {
-        (100, 900, 600.0),
-        (101, 902, 300.0),
-        (102, None, None),  # click exists but outside the window
-        (103, None, None),  # user never clicks
-    }
-
-    # the anti-join form is exactly the null rows of the outer shape
-    unattr = {
-        r.impression_id
-        for r in unattributed_impressions_batch(
-            spark.createDataFrame(impressions, SCHEMA),
-            spark.createDataFrame(clicks, SCHEMA),
-        ).collect()
-    }
-    assert unattr == {102, 103}
-
-
-def test_stream_ingest_shards(spark, tmp_path):
-    """The WebDataset watcher: shards dropped into the directory stream
-    through expand -> text-pick -> parse -> chunk; exactly-once per shard
-    via the checkpoint; a later shard appends incrementally."""
-    from mcp_local_rag_spark.sources.webdataset import write_tar_shard
-    from mcp_local_rag_spark.streaming.watch import stream_ingest_shards
-
-    watch = tmp_path / "sharddrop"
-    watch.mkdir()
-    body = (
-        "Shard-delivered prose about checkpointed file sources and "
-        "exactly-once ingestion. A second sentence keeps the chunker fed "
-        "well past the minimum length gate.\n"
-    )
-    (watch / "train-000.tar").write_bytes(
-        write_tar_shard(
-            [
-                ("a1.md", ("# Shard One\n\n" + body).encode()),
-                ("a1.json", b"{}"),
-                ("a2.txt", ("Shard Two Title\n\n" + body).encode()),
-            ]
-        )
-    )
-    table = str(tmp_path / "chunks_wds")
-    ckpt = str(tmp_path / "ckpt_wds")
-
-    q = stream_ingest_shards(spark, str(watch), table, ckpt, available_now=True)
-    q.awaitTermination(120)
-    stored = spark.read.parquet(table)
-    titles = {r.fileTitle for r in stored.collect()}
-    assert titles == {"Shard One", "Shard Two Title"}
-    assert all(
-        "#" in r.filePath for r in stored.select("filePath").collect()
-    )
-    n1 = stored.count()
-
-    # exactly-once on re-drain, then a new shard appends incrementally
-    q2 = stream_ingest_shards(spark, str(watch), table, ckpt, available_now=True)
-    q2.awaitTermination(120)
-    spark.catalog.refreshByPath(table)
-    assert spark.read.parquet(table).count() == n1
-
-    (watch / "train-001.tar").write_bytes(
-        write_tar_shard([("b1.md", ("# Shard Three\n\n" + body).encode())])
-    )
-    q3 = stream_ingest_shards(spark, str(watch), table, ckpt, available_now=True)
-    q3.awaitTermination(120)
-    spark.catalog.refreshByPath(table)
-    after = spark.read.parquet(table)
-    assert after.count() > n1
-    assert "Shard Three" in {r.fileTitle for r in after.collect()}
-
-
-def test_stream_shard_lifecycle_crash_fuzz(spark, tmp_path, monkeypatch):
-    """VERDICT r14 item 2: crash-fuzz the STREAMING shard path the way
-    r14 fuzzed batch sync_shards. 50 rounds; each round drops 1-2 new
-    shards (good / corrupt / zero-text — shards are immutable-by-name to
-    the watcher, so the lifecycle is append-only) and runs the watcher
-    with ONE crash injected at a random foreachBatch window — membership
-    registration, the chunks append, the postings append, the
-    applied-marker write — or with the checkpoint COMMIT lost after a
-    clean run (forcing a full redelivery the marker must suppress).
-    After a crash, a routine directory sync() races the wounded state
-    (including the registered-but-rowless window) before the stream
-    restarts and replays.
-
-    Invariants every round: served rows equal the pure model with NO
-    duplicates after any crash-retry (the round-15 partial-replay
-    cleanse makes every window duplicate-free, not just full replays),
-    streamed rows survive the racing sync, the recovery intent is
-    retired, and every 10 rounds the postings index is row-identical to
-    a from-scratch rebuild of the final table."""
-    import random
-
-    import mcp_local_rag_spark.plans.fts as fts_mod
-    import mcp_local_rag_spark.plans.ingest as ingest_mod
-    import mcp_local_rag_spark.streaming.watch as watch_mod
-    from mcp_local_rag_spark.engine import RagEngine
-    from mcp_local_rag_spark.plans.engine_txn import read_intent
-    from mcp_local_rag_spark.plans.fts import read_postings, write_postings
-    from mcp_local_rag_spark.sources.webdataset import write_tar_shard
-    from mcp_local_rag_spark.streaming.watch import stream_ingest_shards
-
-    body = (
-        "Streamed crash-fuzz prose about at-least-once replay windows. "
-        "A second sentence keeps it past the minimum chunk gate.\n"
-    )
-    watch = tmp_path / "drop"
-    watch.mkdir()
-    side = tmp_path / "side"
-    side.mkdir()
-    (side / "side.md").write_text("# Side Doc\n\n" + body)
-    table = str(tmp_path / "table")
-    postings = str(tmp_path / "postings")
-    ckpt = str(tmp_path / "ckpt")
-
-    rng = random.Random(1515)
-    served: set[str] = set()
-    next_id = 0
-
-    def drop_shard(kind: str) -> None:
-        nonlocal next_id
-        name = f"s{next_id}"
-        next_id += 1
-        p = watch / f"{name}.tar"
-        if kind == "good":
-            p.write_bytes(
-                write_tar_shard(
-                    [(f"{name}.md", (f"# {name}\n\n" + body).encode())]
-                )
-            )
-            served.add(name)
-        elif kind == "zerotext":
-            p.write_bytes(write_tar_shard([(f"{name}.json", b"{}")]))
-        else:  # corrupt tar bytes: a __corrupt__ member row, no rows served
-            p.write_bytes(b"\x00garbage" * 64 + b"\xff" * 512)
-
-    def run_stream() -> str | None:
-        q = stream_ingest_shards(
-            spark, str(watch), table, ckpt,
-            postings_path=postings, available_now=True,
-        )
-        try:
-            q.awaitTermination(180)
-            return None
-        except Exception as exc:  # StreamingQueryException wraps the boom
-            return str(exc)
-
-    def boom(msg):
-        def _raise(*a, **k):
-            raise RuntimeError(f"crash:{msg}")
-
-        return _raise
-
-    eng = RagEngine(spark, table, postings_path=postings)
-
-    # fast default runs a PREFIX of the seeded sweep (same seed/order);
-    # SPARK_GRAFT_FULL_TESTS=1 restores the full 50 rounds. r16: the
-    # 10-round prefix alone cost 8 s/round wall (the two fuzzes were the
-    # top of the 28m46s default run, tests_ok being the gate) — 4 rounds
-    # keeps every crash window class exercised by the same seeded order.
-    n_rounds = 50 if os.environ.get("SPARK_GRAFT_FULL_TESTS") else 4
-    for rnd in range(n_rounds):
-        for _ in range(rng.randint(1, 2)):
-            drop_shard(
-                rng.choice(["good", "good", "good", "zerotext", "corrupt"])
-            )
-        window = rng.choice(
-            ["none", "register", "chunks", "postings", "mark", "commitloss"]
-        )
-        if window == "register":
-            monkeypatch.setattr(
-                watch_mod, "_register_shard_containers", boom("register")
-            )
-        elif window == "chunks":
-            monkeypatch.setattr(ingest_mod, "write_chunks", boom("chunks"))
-        elif window == "postings":
-            monkeypatch.setattr(fts_mod, "write_postings", boom("postings"))
-        elif window == "mark":
-            monkeypatch.setattr(
-                watch_mod, "_mark_batch_applied", boom("mark")
-            )
-
-        err = run_stream()
-        monkeypatch.undo()
-        if window in ("register", "chunks", "postings", "mark"):
-            assert err is not None and "crash:" in err, (rnd, window, err)
-            # the race: a routine directory sync against the wounded
-            # state (registered-but-rowless after a chunks crash; rows
-            # appended but unmarked after a mark crash) must never prune
-            # streamed rows or wedge recovery
-            eng = RagEngine(spark, table, postings_path=postings)
-            eng.sync(str(side))
-        elif window == "commitloss":
-            assert err is None, (rnd, err)
-            commits = sorted(
-                f for f in os.listdir(f"{ckpt}/commits")
-                if not f.startswith(".")
-            )
-            if commits:
-                os.unlink(f"{ckpt}/commits/{commits[-1]}")
-                # Hadoop's ChecksumFs refuses to rename over a stale
-                # sidecar checksum — a real commit loss takes both files
-                crc = f"{ckpt}/commits/.{commits[-1]}.crc"
-                if os.path.exists(crc):
-                    os.unlink(crc)
-
-        err2 = run_stream()  # replay / redelivery
-        assert err2 is None, (rnd, window, err2)
-
-        eng = RagEngine(spark, table, postings_path=postings)
-        eng.sync(str(side))  # quiesce: streamed rows must survive
-        spark.catalog.refreshByPath(table)
-        rows = eng.chunks().select(
-            "filePath", "chunkIndex", "fileTitle"
-        ).collect()
-        got = {r.fileTitle for r in rows}
-        assert got == served | {"Side Doc"}, (rnd, window, got)
-        keys = [(r.filePath, r.chunkIndex) for r in rows]
-        assert len(keys) == len(set(keys)), (rnd, window)
-        assert eng.index_is_fresh(), (rnd, window)
-        assert read_intent(table) is None, (rnd, window)
-
-        if rnd % 10 == 9:
-            ref = str(tmp_path / f"ref_fts_{rnd}")
-            write_postings(eng.chunks(), ref, n_buckets=4)
-            cols = ("term", "filePath", "chunkIndex", "tf")
-            got_p = {
-                tuple(r)
-                for r in read_postings(spark, postings).select(*cols).collect()
-            }
-            want_p = {
-                tuple(r)
-                for r in read_postings(spark, ref).select(*cols).collect()
-            }
-            assert got_p == want_p, (rnd, window)
-
-
-# slow (verify-window, r16): bounded-recovery invariants stay default-covered by test_sync_crash_recovers_bounded / the watcher-batch recovery tests
-@pytest.mark.slow
-def test_stream_replay_cleanse_keeps_recovery_bounded(
-    spark, tmp_path, monkeypatch
-):
-    """r15 review: the partial-replay cleanse's remnant delete must run
-    attributed and BEHIND the published intent. A crash between the
-    cleanse and the final covers stamp then leaves a version chain the
-    restarted engine walks back to the stamp (bounded refresh of the
-    batch's paths); an unattributed cleanse bump would break the chain
-    and silently degrade recovery to the full O(corpus) rebuild."""
-    import mcp_local_rag_spark.plans.fts as fts_mod
-    import mcp_local_rag_spark.streaming.watch as watch_mod
-    from mcp_local_rag_spark.engine import RagEngine
-    from mcp_local_rag_spark.plans.engine_txn import chain_reaches, read_intent
-    from mcp_local_rag_spark.plans.fts import read_postings, write_postings
-    from mcp_local_rag_spark.plans.ingest import read_table_meta, table_version
-    from mcp_local_rag_spark.sources.webdataset import write_tar_shard
-    from mcp_local_rag_spark.streaming.watch import stream_ingest_shards
-
-    body = (
-        "Bounded-recovery prose about attributed cleanse mutations. "
-        "A second sentence keeps it past the minimum chunk gate.\n"
-    )
-    watch = tmp_path / "drop"
-    watch.mkdir()
-    table = str(tmp_path / "table")
-    postings = str(tmp_path / "postings")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run():
-        q = stream_ingest_shards(
-            spark, str(watch), table, ckpt,
-            postings_path=postings, available_now=True,
-        )
-        try:
-            q.awaitTermination(180)
-            return None
-        except Exception as exc:
-            return str(exc)
-
-    def boom(msg):
-        def _raise(*a, **k):
-            raise RuntimeError(f"crash:{msg}")
-
-        return _raise
-
-    # batch 1: clean — table + postings + covers stamp exist
-    (watch / "s0.tar").write_bytes(
-        write_tar_shard([("s0.md", ("# s0\n\n" + body).encode())])
-    )
-    assert run() is None
-
-    # batch 2: fully applied, crash at the marker -> replay will find
-    # this batch's rows as remnants
-    (watch / "s1.tar").write_bytes(
-        write_tar_shard([("s1.md", ("# s1\n\n" + body).encode())])
-    )
-    monkeypatch.setattr(watch_mod, "_mark_batch_applied", boom("mark"))
-    err = run()
-    assert err is not None and "crash:mark" in err
-    monkeypatch.undo()
-    covered = read_table_meta(postings).get("covers_table_version")
-    assert covered is not None
-
-    # replay: the cleanse deletes the remnant, the chunks re-append, and
-    # the postings append crashes BEFORE the new covers stamp
-    monkeypatch.setattr(fts_mod, "write_postings", boom("postings"))
-    err = run()
-    assert err is not None and "crash:postings" in err
-    monkeypatch.undo()
-
-    # the sharp claim: every bump since the stamp (cleanse delete +
-    # re-append) is attributed, so the chain reaches and a restarted
-    # engine plans a BOUNDED refresh, not the full rebuild
-    it = read_intent(table)
-    assert it is not None and not it.get("full")
-    assert any(p.startswith(str(watch / "s1.tar")) for p in it.get("paths") or ())
-    tv = table_version(table)
-    assert chain_reaches(it, tv, covered), (tv, covered, it)
-    eng = RagEngine(spark, table, postings_path=postings)
-    assert eng._needs_full_index is False
-
-    # converge: replay completes, served state exact, postings equal a
-    # from-scratch rebuild
-    assert run() is None
-    eng = RagEngine(spark, table, postings_path=postings)
-    eng.recover_indexes()
-    spark.catalog.refreshByPath(table)
-    rows = eng.chunks().select("filePath", "chunkIndex", "fileTitle").collect()
-    assert {r.fileTitle for r in rows} == {"s0", "s1"}
-    keys = [(r.filePath, r.chunkIndex) for r in rows]
-    assert len(keys) == len(set(keys))
-    ref = str(tmp_path / "ref_fts")
-    write_postings(eng.chunks(), ref, n_buckets=4)
-    cols = ("term", "filePath", "chunkIndex", "tf")
-    got = {tuple(r) for r in read_postings(spark, postings).select(*cols).collect()}
-    want = {tuple(r) for r in read_postings(spark, ref).select(*cols).collect()}
-    assert got == want

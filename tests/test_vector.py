@@ -7,7 +7,6 @@ from mcp_local_rag_spark.functions.vector import (
     dot,
     dot_distance,
     l2_norm,
-    l2_normalize,
     vec_lit,
 )
 
@@ -27,16 +26,9 @@ def test_cosine_and_norm(spark):
     row = df.select(
         l2_norm(F.col("v")).alias("n"),
         cosine(F.col("v"), vec_lit([3.0, 4.0])).alias("c"),
-        l2_normalize(F.col("v")).alias("u"),
     ).first()
     assert row["n"] == 5.0
     assert abs(row["c"] - 1.0) < 1e-12
-    assert abs(math.hypot(*row["u"]) - 1.0) < 1e-12
-
-
-def test_normalize_zero_vector(spark):
-    df = spark.createDataFrame([([0.0, 0.0],)], "v array<float>")
-    assert df.select(l2_normalize(F.col("v")).alias("u")).first()["u"] == [0.0, 0.0]
 
 
 def test_cosine_pairs_null_embedding_yields_nan_not_crash(spark):

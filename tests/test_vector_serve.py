@@ -187,8 +187,8 @@ def test_unversioned_table_never_pins_a_stale_snapshot(spark, tmp_path):
 def test_at_version_pins_a_consistent_snapshot(spark, tmp_path):
     """at_version (operators/staleness): queries pinned to one table
     content stamp keep reading that snapshot while mutations land; an
-    unreachable pin raises StaleServingError (the SecondaryReader
-    contract, now uniform across the serving tier)."""
+    unreachable pin raises StaleServingError (plans/secondary's
+    at_source_version contract, uniform across the serving tier)."""
     from mcp_local_rag_spark.embedder import embed_text_column
     from mcp_local_rag_spark.operators.staleness import StaleServingError
     from mcp_local_rag_spark.plans.ingest import table_content_stamp

@@ -259,40 +259,6 @@ def test_expand_shards_error_recording(spark):
     assert b"expands past" in bytes(rec[0]["content"])
 
 
-def test_stream_survives_corrupt_shard(spark, tmp_path):
-    """One bad producer copy in the drop directory must not wedge the
-    checkpointed stream: the good shard ingests, the corrupt one is
-    recorded and skipped, and a later drain picks up new shards."""
-    from mcp_local_rag_spark.streaming.watch import stream_ingest_shards
-
-    watch = tmp_path / "drop"
-    watch.mkdir()
-    body = (
-        "Streamed prose with two sentences of comfortable length about "
-        "exactly-once semantics. The second sentence pads well past any "
-        "minimum chunk gate.\n"
-    )
-    (watch / "ok-000.tar").write_bytes(
-        write_tar_shard([("g1.md", ("# Good One\n\n" + body).encode())])
-    )
-    (watch / "bad-000.tar").write_bytes(b"half-copied garbage" + b"\x00" * 512)
-    table = str(tmp_path / "chunks")
-    ckpt = str(tmp_path / "ckpt")
-    q = stream_ingest_shards(spark, str(watch), table, ckpt, available_now=True)
-    q.awaitTermination(120)
-    titles = {r.fileTitle for r in spark.read.parquet(table).collect()}
-    assert titles == {"Good One"}
-
-    (watch / "ok-001.tar").write_bytes(
-        write_tar_shard([("g2.md", ("# Good Two\n\n" + body).encode())])
-    )
-    q2 = stream_ingest_shards(spark, str(watch), table, ckpt, available_now=True)
-    q2.awaitTermination(120)
-    spark.catalog.refreshByPath(table)
-    titles = {r.fileTitle for r in spark.read.parquet(table).collect()}
-    assert titles == {"Good One", "Good Two"}
-
-
 # slow (verify-window, r16): the membership shield stays default-covered by test_stream_ingest_shards_registers_membership_shield
 @pytest.mark.slow
 def test_sync_shards_and_directory_sync_shield(spark, tmp_path):
@@ -585,42 +551,6 @@ def test_sync_shards_zero_text_shard_hash_persisted(spark, tmp_path):
     assert rep4.counters["unchanged"] == 2
 
 
-def test_stream_ingest_shards_registers_membership_shield(spark, tmp_path):
-    """ADVICE r13 (medium): streamed shards must register in the
-    shard_containers property so a routine directory sync() does NOT
-    classify their rows as prune and silently destroy the streamed
-    corpus — the same shield batch ingest_shards rows get."""
-    from mcp_local_rag_spark.engine import RagEngine
-    from mcp_local_rag_spark.streaming.watch import stream_ingest_shards
-
-    body = (
-        "Streamed membership prose long enough to chunk about prune "
-        "shields. A second sentence keeps it past the minimum gate.\n"
-    )
-    watch = tmp_path / "drop"
-    watch.mkdir()
-    (watch / "w0.tar").write_bytes(
-        write_tar_shard([("m1.md", ("# Streamed One\n\n" + body).encode())])
-    )
-    table = str(tmp_path / "table")
-    q = stream_ingest_shards(
-        spark, str(watch), table, str(tmp_path / "ckpt"), available_now=True
-    )
-    q.awaitTermination(120)
-
-    eng = RagEngine(spark, table)
-    assert str(watch / "w0.tar") in eng._shard_containers()
-
-    # a directory sync over an unrelated dir must leave shard rows alone
-    other = tmp_path / "docs"
-    other.mkdir()
-    (other / "x.md").write_text("# Doc X\n\n" + body)
-    eng.sync(str(other))
-    spark.catalog.refreshByPath(table)
-    titles = {r.fileTitle for r in eng.chunks().collect()}
-    assert titles == {"Streamed One", "Doc X"}
-
-
 def test_shard_lifecycle_crash_fuzz(spark, tmp_path, monkeypatch):
     """VERDICT r13 item 5: the model-based shard-sync fuzz composed with
     engine_txn-style crash injection. 50 rounds; each round makes 1-2
@@ -856,37 +786,3 @@ def test_sync_shards_text_members_no_chunks_keeps_rows(spark, tmp_path):
     rep2 = eng.sync_shards(str(drop))
     assert any("produced no chunks" in w for w in rep2.warnings)
     assert {r.fileTitle for r in eng.chunks().collect()} == {"Alpha"}
-
-
-def test_stream_ingest_shards_never_registers_corrupt_shards(spark, tmp_path):
-    """r14 review: the watcher must not record a corrupt shard's hash in
-    shard_containers — a registered hash would make every later batch
-    sync_shards classify it 'unchanged' and the corruption would become
-    permanently invisible. Unregistered, sync_shards re-expands and
-    re-warns (its stated contract)."""
-    from mcp_local_rag_spark.engine import RagEngine
-    from mcp_local_rag_spark.streaming.watch import stream_ingest_shards
-
-    body = (
-        "Corrupt-shard prose long enough to chunk about watcher "
-        "contracts. A second sentence keeps it past the minimum gate.\n"
-    )
-    watch = tmp_path / "drop"
-    watch.mkdir()
-    (watch / "good.tar").write_bytes(
-        write_tar_shard([("g.md", ("# Good\n\n" + body).encode())])
-    )
-    (watch / "bad.tar").write_bytes(b"torn bytes" + b"\xff" * 700)
-    table = str(tmp_path / "table")
-    q = stream_ingest_shards(
-        spark, str(watch), table, str(tmp_path / "ckpt"), available_now=True
-    )
-    q.awaitTermination(120)
-
-    eng = RagEngine(spark, table)
-    containers = eng._shard_containers()
-    assert str(watch / "good.tar") in containers
-    assert str(watch / "bad.tar") not in containers
-    # batch sync over the same dir surfaces the corruption
-    rep = eng.sync_shards(str(watch))
-    assert any("corrupt" in w for w in rep.warnings)

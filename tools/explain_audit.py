@@ -172,8 +172,9 @@ COMMENTARY = {
         "collected once, and the keyword side is one term-grouped "
         "postings aggregate with the UNION of all queries' terms pushed "
         "down. The driver reranks each query's <= 2k candidates with "
-        "hybrid_search's code and returns a LocalRelation; the plan shown "
-        "is the lane's final ORDER BY over that LocalTableScan."
+        "hybrid_search's code and returns a LocalRelation already in "
+        "(query_id, score, chunkIndex) order, so the lane adds no Sort and "
+        "the plan shown is a LocalTableScan."
     ),
     "knn_recall_report": (
         "ANN quality instrumentation: brute-force truth computed once "
@@ -387,9 +388,9 @@ COMMENTARY = {
         "and rank windows (epoch_keys adds no mid-plan sort, so "
         "Catalyst reuses the partitioning), and the final presentation "
         "range sort with the shard rank leading — output partitions "
-        "hold whole shards. The zero-exchange streamed form "
-        "(epoch_shard_order) is a pure driver function pinned equal to "
-        "the in-plan order."
+        "hold whole shards. The zero-exchange streamed form (the "
+        "md5(seed|shard) shard order taken on the driver) is pinned equal "
+        "to the in-plan order in tests."
     ),
     "corpus_pack_sequences": (
         "Round 14: concat-and-chunk token packing composed over the BPE "

@@ -1,10 +1,18 @@
-"""Time every registry query (Spark side only): one timed pass after a
-shared session warm-up, with the ambient numpy probe sampled every 20
-queries so each timing can be read against the container phase it ran in.
+"""Time registry queries (Spark side only) and count the Spark work each
+one submits: one timed pass per lane after a shared session warm-up,
+recording wall seconds plus the jobs, stages and tasks submitted while the
+lane ran (construction + one ``.count()``, via the statusTracker job-group
+API). Job counts don't drift with the box, seconds do, so the ambient
+probe (``bench._ambient_control``) is sampled every 20 lanes and at the
+end, letting each timing be read against the container phase it ran in.
 
-    python tools/time_all_queries.py [sf_dir] [--out OUT.json]
+    python tools/time_all_queries.py [sf_dir] [--out OUT.json] [lane ...]
 
-Ranking tool for the optimization rounds — NOT a correctness gate (use
+With no lane names every registry lane runs, in name order. Job-floor-
+bound lanes show up as many tiny jobs; shuffle-bound lanes as few jobs
+with many stages/tasks.
+
+Ranking tool for optimization work — NOT a correctness gate (use
 tools/check_correctness.py for that) and NOT the bench of record
 (bench.py). Single pass keeps the sweep short; treat small deltas as
 noise and re-measure candidates min-of-N before acting.
@@ -19,50 +27,75 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+AMBIENT_EVERY = 20
 
-def ambient_numpy_ms() -> float:
-    import numpy as np
 
-    rng = np.random.default_rng(7)
-    a = rng.standard_normal((512, 512))
-    ts = []
-    for _ in range(5):
-        t0 = time.time()
-        (a @ a).sum()
-        ts.append((time.time() - t0) * 1000)
-    ts.sort()
-    return round(ts[len(ts) // 2], 2)
+def run_lane(spark, fn, sf_dir: str, group: str) -> dict:
+    """Wall seconds, rows and the jobs/stages/tasks submitted under
+    ``group`` while ``fn(spark, sf_dir).count()`` runs."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    sc.setJobGroup(group, group)
+    t0 = time.time()
+    try:
+        n, err = fn(spark, sf_dir).count(), None
+    except Exception as ex:  # keep sweeping; the gate tool owns failures
+        n, err = -1, f"{type(ex).__name__}: {ex}"[:200]
+    finally:
+        sc.setJobGroup(None, None)
+    dt = round(time.time() - t0, 3)
+    job_ids = st.getJobIdsForGroup(group)
+    stages = tasks = 0
+    for jid in job_ids:
+        ji = st.getJobInfo(jid)
+        if ji is None:
+            continue
+        for sid in ji.stageIds:
+            si = st.getStageInfo(sid)
+            if si is not None:
+                stages += 1
+                tasks += si.numTasks
+    row = {"sec": dt, "rows": n, "jobs": len(job_ids), "stages": stages, "tasks": tasks}
+    if err:
+        row["err"] = err
+    return row
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    argv = sys.argv[1:]
     out = None
-    if "--out" in sys.argv:
-        out = sys.argv[sys.argv.index("--out") + 1]
-    sf_dir = args[0] if args else "/root/testdata/sf0.1"
+    if "--out" in argv:
+        i = argv.index("--out")
+        out = argv[i + 1]
+        del argv[i : i + 2]
+    sf_dir = "/root/testdata/sf0.1"
+    if argv and os.path.isdir(argv[0]):
+        sf_dir = argv.pop(0)
 
+    from bench import _ambient_control
     from mcp_local_rag_spark.queries import queries
     from mcp_local_rag_spark.session import get_spark
 
     spark = get_spark("time-all")
     spark.range(1000).selectExpr("sum(id)").collect()
     qs = queries()
+    names = argv or sorted(qs)
 
     rows = []
-    for i, name in enumerate(sorted(qs)):
-        if i % 20 == 0:
-            rows.append({"ambient_numpy_ms": ambient_numpy_ms()})
+    print(f"{'query':<40} {'sec':>8} {'jobs':>5} {'stages':>7} {'tasks':>7}", file=sys.stderr)
+    for i, name in enumerate(names):
+        if i % AMBIENT_EVERY == 0:
+            rows.append({"ambient": _ambient_control(spark)})
         spark.catalog.clearCache()
-        t0 = time.time()
-        try:
-            n = qs[name](spark, sf_dir).count()
-            err = None
-        except Exception as ex:  # keep sweeping; the gate tool owns failures
-            n, err = -1, f"{type(ex).__name__}: {ex}"[:200]
-        dt = round(time.time() - t0, 3)
-        rows.append({"query": name, "sec": dt, "rows": n, **({"err": err} if err else {})})
-        print(f"{dt:8.3f}s  {name}" + (f"  ERR {err}" if err else ""), file=sys.stderr)
-    rows.append({"ambient_numpy_ms": ambient_numpy_ms()})
+        row = {"query": name, **run_lane(spark, qs[name], sf_dir, f"sweep-{i}")}
+        rows.append(row)
+        print(
+            f"{name:<40} {row['sec']:>8.3f} {row['jobs']:>5} {row['stages']:>7}"
+            f" {row['tasks']:>7}   rows={row['rows']}"
+            + (f"  ERR {row['err']}" if "err" in row else ""),
+            file=sys.stderr,
+        )
+    rows.append({"ambient": _ambient_control(spark)})
 
     doc = {"sf_dir": sf_dir, "rows": rows}
     if out:
