@@ -64,6 +64,13 @@ class SyncReport:
     warnings: list[str] = field(default_factory=list)
 
 
+# columns the reference added after its first release (read migration)
+_MIGRATED_COLS = ("fileTitle", "contentHash")
+
+# the hit columns query_documents answers with, before ``source``
+_HIT_COLS = ("filePath", "chunkIndex", "text", "fileTitle", "score")
+
+
 def _query_terms(text: str) -> list[str]:
     """Tokenize a query with the SAME tokenizer the postings are built
     with (split on [^a-z0-9]+, functions/text.tokens) — a whitespace
@@ -111,6 +118,8 @@ class RagEngine:
         # root, so non-default roots round-trip (reference keeps a single
         # db path, src/server/index.ts constructor).
         self.db_path = db_path
+        # the last chunks/postings frame per path, keyed by table version
+        self._frames: dict = {}
         # mutation tracking for the amortized index refresh in optimize()
         self._dirty_upserts: set[str] = set()
         self._dirty_deletes: set[str] = set()
@@ -318,15 +327,56 @@ class RagEngine:
         gains them as NULL string columns (the addColumns forward
         migration), and empty-string values in those columns normalize to
         null (LanceDB seeds nullable strings with '' because it cannot
-        infer Arrow types from nulls; read converters undo it — P6)."""
-        df = read_parquet(self.spark, self.table_path)
-        for col in ("fileTitle", "contentHash"):
-            if col not in df.columns:
-                df = df.withColumn(col, F.lit(None).cast("string"))
-            else:
-                df = df.withColumn(
-                    col, F.when(F.length(col) > 0, F.col(col))
+        infer Arrow types from nulls; read converters undo it — P6).
+
+        The migration is one ``selectExpr`` projection, and the frame is
+        built once per table version (``_versioned``): a warm read costs
+        one directory listing on the driver and no py4j call."""
+
+        def build():
+            df = read_parquet(self.spark, self.table_path)
+            cols = []
+            for c in df.columns:
+                q = "`" + c.replace("`", "``") + "`"
+                cols.append(
+                    f"CASE WHEN length({q}) > 0 THEN {q} END AS {q}"
+                    if c in _MIGRATED_COLS else q
                 )
+            cols += [
+                f"CAST(NULL AS STRING) AS {c}"
+                for c in _MIGRATED_COLS if c not in df.columns
+            ]
+            return df.selectExpr(*cols)
+
+        return self._versioned(self.table_path, build)
+
+    def _versioned(self, path: str, build) -> DataFrame:
+        """The frame ``build()`` made of ``path`` at its current version.
+        The key is the path's first-level listing signature
+        (session._path_sig, the one _PQ_SCHEMA_CACHE trusts). Every write
+        adds, removes or renames an entry in the table's top directory or
+        in a bucket directory, which changes that directory's mtime or the
+        root's entries, so a write by this engine or by any other writer
+        makes the next call build afresh — a reused frame's file listing
+        is never stale. A writer must keep that rule (see the comment on
+        session._PQ_SCHEMA_CACHE): an in-place rewrite of a file under the
+        same name inside a bucket directory would go unseen. One frame per path, nothing persisted. Safe for
+        concurrent callers without a lock: a frame is stored with the
+        signature taken before it was built, so whichever store wins, a
+        frame older than the table never matches the current signature."""
+        from .session import _path_sig
+
+        # the signature is taken before build(): a write racing the build
+        # only makes the next call build again
+        try:
+            sig = _path_sig(path)
+        except OSError:
+            return build()
+        hit = self._frames.get(path)
+        if hit is not None and hit[0] == sig:
+            return hit[1]
+        df = build()
+        self._frames[path] = (sig, df)
         return df
 
     def index_is_fresh(self) -> bool:
@@ -356,7 +406,10 @@ class RagEngine:
 
         if not self.index_is_fresh():
             return None
-        return read_postings(self.spark, self.postings_path)
+        return self._versioned(
+            self.postings_path,
+            lambda: read_postings(self.spark, self.postings_path),
+        )
 
     def _fts_stats(self) -> dict | None:
         from .plans.fts import read_fts_stats
@@ -379,18 +432,16 @@ class RagEngine:
         limit is clamped to [1, 20] and the hybrid weight to [0, 1] as in
         the reference (src/server/tool-input.ts:76-79,
         src/vectordb/types.ts:19). Raw-data rows get their ``source``
-        restored from the managed path (response shaping, §3.1 step 9,
-        src/server/index.ts:480-497); file rows carry source = NULL.
+        restored from the managed path (``_answer``); file rows carry
+        source = NULL.
         """
-        from .plans.raw_data import restore_sources
-
         limit = max(1, min(20, limit))
         hybrid_weight = max(0.0, min(1.0, hybrid_weight))
         # query vector under the SAME backend as the stored corpus vectors
         qv = self._embed_query(query_text)
         terms = _query_terms(query_text)
         postings = self._postings()
-        hits = search.hybrid_search(
+        rows, schema = search.hybrid_search_rows(
             self.chunks(),
             qv,
             terms,
@@ -402,8 +453,35 @@ class RagEngine:
             max_files=max_files,
             postings=postings,
             bm25_stats=self._fts_stats() if postings is not None else None,
-        ).select("filePath", "chunkIndex", "text", "fileTitle", "score")
-        return restore_sources(hits, db_path=self.db_path)
+        )
+        return self._answer(rows, schema, _HIT_COLS)
+
+    def _answer(self, rows, schema, cols) -> DataFrame:
+        """Response shaping (§3.1 step 9, src/server/index.ts:480-497) of
+        a driver-reranked answer: the pyarrow ``rows``' ``cols`` plus
+        ``source`` restored from each raw-data path by
+        plans/raw_data.path_to_source (the sidecars' formula; NULL for
+        file rows), made into one LocalRelation. A batch's ``query_id``
+        comes out as ``query_index``."""
+        import pyarrow as pa
+        from pyspark.sql.types import StringType, StructField, StructType
+
+        from .plans.raw_data import path_to_source
+
+        names = ["query_index" if c == "query_id" else c for c in cols]
+        fields = [
+            StructField(n, schema[c].dataType, schema[c].nullable)
+            for n, c in zip(names, cols)
+        ] + [StructField("source", StringType())]
+        sources = pa.array(
+            [path_to_source(p, self.db_path)
+             for p in rows.column("filePath").to_pylist()],
+            pa.string(),
+        )
+        table = rows.select(list(cols)).rename_columns(names)
+        return self.spark.createDataFrame(
+            table.append_column("source", sources), schema=StructType(fields)
+        )
 
     def vector_search_batch(
         self, query_texts: list[str], *, limit: int = 10
@@ -457,11 +535,9 @@ class RagEngine:
         ``scope``/``max_distance``/``grouping`` apply to the whole batch
         (one request, one filter set — per-query filters belong in
         per-query query_documents calls). Returns (query_index, filePath,
-        chunkIndex, text, fileTitle, score) — the same hit shape as
-        query_documents plus the query_index — exactly ``limit`` rows per
-        query before any file filter trims further."""
-        from .plans.raw_data import restore_sources
-
+        chunkIndex, text, fileTitle, score, source) — the same hit shape
+        as query_documents plus the query_index — exactly ``limit`` rows
+        per query before any file filter trims further."""
         limit = max(1, min(20, limit))
         hybrid_weight = max(0.0, min(1.0, hybrid_weight))
         qvecs = {
@@ -471,7 +547,7 @@ class RagEngine:
             str(i): _query_terms(t) for i, t in enumerate(query_texts)
         }
         postings = self._postings()
-        out = search.hybrid_search_batch(
+        rows, schema = search.hybrid_search_batch_rows(
             self.chunks(),
             qvecs,
             qterms,
@@ -486,13 +562,7 @@ class RagEngine:
             bm25_stats=self._fts_stats() if postings is not None else None,
             payload_cols=("text", "fileTitle"),
         )
-        out = restore_sources(
-            out.select(
-                "query_id", "filePath", "chunkIndex", "text", "fileTitle", "score"
-            ),
-            db_path=self.db_path,
-        )
-        return out.withColumnRenamed("query_id", "query_index")
+        return self._answer(rows, schema, ("query_id", *_HIT_COLS))
 
     def read_chunk_neighbors(
         self, file_path: str, chunk_index: int, *, before: int = 2, after: int = 2

@@ -12,24 +12,35 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def scope_predicate(path_col: Column, prefixes: list[str]) -> Column:
+def sql_str_lit(s: str) -> str:
+    """Exact Spark SQL single-quoted literal for ``s``. With the default
+    parser (escapedStringLiterals=false) backslash introduces an escape,
+    so doubling backslashes and escaping single quotes reproduces any
+    string byte-for-byte — property-pinned against the F.lit Column form
+    in tests/test_search.py. Lets a per-request predicate be built as one
+    parsed expression instead of a Column chain of synchronous py4j
+    calls."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def scope_predicate(path_col: str, prefixes: list[str]) -> Column:
     """exact-or-descendant: path == p OR path LIKE 'p/%' (separator boundary).
 
     '/a/b' matches scope '/a/b' and '/a/b/c' but NOT '/a/bc'.
     Empty prefix list -> everything matches (no scope restriction).
+    ``path_col`` is a column NAME; the predicate is one parsed SQL
+    expression (one py4j round trip).
     """
     if not prefixes:
         return F.lit(True)
-    cond = F.lit(False)
-    for p in prefixes:
-        p = p.rstrip("/") or "/"
-        if p == "/":
-            # root scope: 'p + "/"' would demand a double slash and match
-            # nothing below root — every absolute path is a descendant
-            cond = cond | path_col.startswith("/")
-        else:
-            cond = cond | (path_col == F.lit(p)) | path_col.startswith(p + "/")
-    return cond
+    # root scope: 'p + "/"' would demand a double slash and match nothing
+    # below root — every absolute path is a descendant
+    col = f"`{path_col}`"
+    return F.expr(" OR ".join(
+        f"startswith({col}, '/')" if p == "/" else
+        f"{col} = {sql_str_lit(p)} OR startswith({col}, {sql_str_lit(p + '/')})"
+        for p in (p.rstrip("/") or "/" for p in prefixes)
+    ))
 
 
 def sync_path_key(path_col: Column, case_fold: bool = False) -> Column:

@@ -17,23 +17,36 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def double_sql(v: float) -> str:
+    """``v`` as Spark SQL double text. ``repr`` of a Python float is the
+    shortest round-trip decimal, and Spark's SQL parser reads
+    ``<decimal>D`` to the nearest double — the same value bit-for-bit;
+    non-finite values (``repr`` text like 'inf' is not SQL) go through
+    the string cast Spark folds to the same literal."""
+    if v != v:
+        return "CAST('NaN' AS DOUBLE)"
+    if v in (float("inf"), float("-inf")):
+        return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+    return f"{v!r}D"
+
+
+def vec_sql(values: Sequence[float]) -> str:
+    """A query vector as SQL text of a literal array<double>."""
+    vs = [float(v) for v in values]
+    if not vs:
+        return "CAST(array() AS ARRAY<DOUBLE>)"
+    return "array(" + ", ".join(double_sql(v) for v in vs) + ")"
+
+
 def vec_lit(values: Sequence[float]) -> Column:
     """A literal array<double> column for a query vector (broadcast by value).
 
-    Built as ONE ``F.expr`` parse instead of dim+1 ``F.lit`` py4j round
-    trips: each functions.* call crosses Python->JVM, and at 64-d that
-    construction overhead (~70 ms clean, whole seconds when the
-    container degrades) lands on every query-path caller. ``repr`` of a
-    Python float is the shortest round-trip decimal, and Spark's SQL
-    parser reads ``<decimal>D`` to the nearest double — the same value
-    bit-for-bit. Non-finite values fall back to the per-element path
-    (``repr`` text like 'inf' is not SQL)."""
-    vs = [float(v) for v in values]
-    if not vs:
-        return F.array().cast("array<double>")
-    if all(v == v and v not in (float("inf"), float("-inf")) for v in vs):
-        return F.expr("array(" + ", ".join(f"{v!r}D" for v in vs) + ")")
-    return F.array(*[F.lit(v) for v in vs])
+    Built as ONE ``F.expr`` parse of ``vec_sql`` instead of dim+1
+    ``F.lit`` py4j round trips: each functions.* call crosses
+    Python->JVM, and at 64-d that construction overhead (~70 ms clean,
+    whole seconds when the container degrades) lands on every query-path
+    caller."""
+    return F.expr(vec_sql(values))
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -60,9 +73,16 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
-def dot_distance(a: Column, b: Column) -> Column:
-    """1 - dot(a, b): the reference's distance for normalized vectors."""
-    return F.lit(1.0) - dot(a, b)
+def dot_distance_sql(a: str, b: str) -> str:
+    """1 - dot(a, b), the reference's distance for normalized vectors, as
+    SQL text over two array expressions: the same fold as ``dot`` (DOUBLE
+    products, 0.0 start, sequential sum) in one parse instead of the ~20
+    py4j round trips of a Column chain."""
+    return (
+        f"1.0D - aggregate(zip_with({a}, {b}, "
+        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "0.0D, (x, y) -> x + y)"
+    )
 
 
 def cosine_pairs_pandas() -> "object":

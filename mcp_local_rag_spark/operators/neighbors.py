@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.paths import sql_str_lit
+
 DEFAULT_BEFORE = 2  # reference src/server/tool-input.ts:186-213
 DEFAULT_AFTER = 2
 MAX_SPAN = 50
@@ -24,17 +26,6 @@ MAX_SPAN = 50
 # tables whose documents span several.
 _INDEX_BLOCK = 65536
 _INT_MAX = 2_147_483_647  # chunkIndex is a 32-bit int (plans/ingest)
-
-
-def _sql_str_lit(s: str) -> str:
-    """Exact Spark SQL single-quoted literal for ``s``. With the default
-    parser (escapedStringLiterals=false) backslash introduces an escape,
-    so doubling backslashes and escaping single quotes reproduces any
-    string byte-for-byte — property-pinned against the F.lit Column form
-    in tests/test_search.py. Lets the one LATENCY-SLO read build its
-    whole predicate as a single parsed expression instead of a Column
-    chain of synchronous py4j calls."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def read_neighbors(
@@ -94,12 +85,12 @@ def read_neighbors(
     # filePath equality used to be a Column chain (F.col == F.lit, then &)
     # — 4 extra synchronous py4j round trips per read, ~35% of a cold
     # read's driver-side construction time. The path is spliced into the
-    # SQL text via _sql_str_lit (exact backslash/quote escaping, pinned
+    # SQL text via paths.sql_str_lit (exact backslash/quote escaping, pinned
     # against the Column form by tests); the parsed tree is identical, so
     # the plan, the pushed filters and the codegen shape (string literals
     # land in the references array) are byte-for-byte what the Column
     # form produced.
-    pred = f"filePath = {_sql_str_lit(file_path)} AND {exact}"
+    pred = f"filePath = {sql_str_lit(file_path)} AND {exact}"
     if "bucket" in chunks.columns:
         # partition pruning: only the document's hash bucket is scanned.
         # ``n_buckets`` must be the TABLE's persisted count (engine passes

@@ -18,7 +18,14 @@ pure functions below (``group_candidates``, ``boost_rows``, ``file_cut``,
 ``top_rows``, plus ``bm25.bm25_sum``) — the same code the pyarrow sidecar
 (operators/hybrid_serve) serves with, so the rerank has one Python
 implementation. Run as Spark plans, the tail cost ~9 jobs of submission
-overhead for <= 20 output rows.
+overhead for <= 20 output rows. The batch's vector stage is one Arrow
+kernel pass whose per-partition candidates the driver cuts to each
+query's top-2k, so it costs one job, like the single query's top-k.
+
+Each Spark stage is built from SQL text (distance, filters, IN lists,
+aggregates), one parse per expression, not as a Column chain whose every
+node is a synchronous py4j round trip: the query's stages went from ~870
+round trips to under 200 with the same optimized plans.
 
 The Spark forms of the tail stay as references: ``grouping_filter`` and
 ``keyword_boost`` serve their own registry lanes, while ``file_topn_filter``
@@ -39,8 +46,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..functions.paths import scope_predicate
-from ..functions.vector import dot_distance, vec_lit
+from ..functions.paths import scope_predicate, sql_str_lit
+from ..functions.vector import double_sql, dot_distance_sql, vec_sql
 from .vector_serve import SCORE_DECIMALS, _exact_round
 
 # reference constants
@@ -53,6 +60,16 @@ def _rounded(col: Column) -> Column:
     # + 0.0 canonicalizes IEEE -0.0 (a 1-dot distance can round to -0.0
     # when dot > 1 by an ulp) so the oracle compare sees one zero
     return F.round(col, SCORE_DECIMALS) + F.lit(0.0)
+
+
+def _rounded_sql(expr: str) -> str:
+    """``_rounded`` as SQL text: the same Round and + 0.0 nodes, parsed
+    once instead of built by a py4j call per node."""
+    return f"round({expr}, {SCORE_DECIMALS}) + 0.0D"
+
+
+def _max_distance_sql(max_distance: float) -> str:
+    return f"score <= {double_sql(float(max_distance))}"
 
 
 def vector_topk(
@@ -78,15 +95,20 @@ def vector_topk(
     whole-stage codegen. (The mapInPandas kernel in operators/similarity
     wins for MULTI-query top-k, where it amortizes the conversion across
     the query matrix and avoids a crossJoin+window.)
+
+    The distance, the scope filter and the ``max_distance`` filter are
+    SQL text, one parse each (the query vector spliced in by
+    ``vec_sql``): built as Column chains they cost ~240 py4j round trips
+    per query for the same optimized plan.
     """
     df = chunks
     if scope:
-        df = df.filter(scope_predicate(F.col("filePath"), scope))
-    df = df.withColumn("score", _rounded(dot_distance(F.col(vec_col), vec_lit(query_vec))))
+        df = df.filter(scope_predicate("filePath", scope))
+    dist = dot_distance_sql(f"`{vec_col}`", vec_sql(query_vec))
+    df = df.withColumn("score", F.expr(_rounded_sql(dist)))
     if max_distance is not None:
-        df = df.filter(F.col("score") <= max_distance)
-    order = [F.col("score").asc()] + [F.col(c).asc() for c in id_cols]
-    return df.orderBy(*order).limit(k * overfetch).drop(vec_col)
+        df = df.filter(_max_distance_sql(max_distance))
+    return df.orderBy("score", *id_cols).limit(k * overfetch).drop(vec_col)
 
 
 def vector_topk_batch(
@@ -106,32 +128,66 @@ def vector_topk_batch(
     ``payload_cols`` ride along in the output without participating in
     the (score, *id_cols) ranking order.
 
-    ``query_vecs``: {query_id: vector}. The query matrix broadcasts into
-    an Arrow kernel (one numpy matmul per corpus batch, same kernel
-    choice as operators/similarity.cosine_knn — the multi-query shape is
-    where Arrow beats the codegen'd column fold); each partition emits
-    only its local top-(k*overfetch) rows PER QUERY, and the global pick
-    is a window over <= queries x partitions x k*overfetch rows. Distance
-    is the same rounded ``1 - dot`` as ``vector_topk``, so per-query
-    results are row-identical to N separate calls.
+    ``query_vecs``: {query_id: vector}. The candidates come from
+    ``_vector_candidates`` (one Arrow kernel pass); the global pick is a
+    ``query_id`` window over them. Distance is the same rounded
+    ``1 - dot`` as ``vector_topk``, so per-query results are
+    row-identical to N separate calls. ``hybrid_search_batch`` skips the
+    window (and the shuffle it costs) and takes the per-query top-n on
+    the driver instead.
     """
+    n = k * overfetch
+    partial = _vector_candidates(
+        chunks, query_vecs, n, vec_col=vec_col, id_cols=id_cols,
+        payload_cols=payload_cols, scope=scope, max_distance=max_distance,
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").asc(), *[F.col(col).asc() for col in id_cols]
+    )
+    return (
+        partial.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= n)
+        .drop("_rn")
+    )
+
+
+def _vector_candidates(
+    chunks: DataFrame,
+    query_vecs: dict,
+    n: int,
+    *,
+    vec_col: str,
+    id_cols: Sequence[str],
+    payload_cols: Sequence[str],
+    scope: list[str] | None,
+    max_distance: float | None,
+) -> DataFrame:
+    """Every query's top-``n`` candidates per corpus partition, in one
+    scan: (query_id, *id_cols, *payload_cols, score) rows, score rounded
+    as ``vector_topk``'s. The query matrix broadcasts into an Arrow
+    kernel (one numpy matmul per corpus batch, same kernel choice as
+    operators/similarity.cosine_knn — the multi-query shape is where
+    Arrow beats the codegen'd column fold), and each Arrow batch emits
+    only its local top-n rows PER QUERY plus rounding ties, so the frame
+    holds at most queries x batches x n rows plus those ties, where a
+    partition of r rows is ceil(r / arrow.maxRecordsPerBatch) batches
+    (10,000 rows each; one batch per partition on every corpus measured
+    so far). A query's first ``n`` rows in (score, *id_cols) order over
+    the whole frame are its global top-n."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    from pyspark.sql.types import DoubleType, StringType, StructField
 
     qids = sorted(query_vecs)
     qmat = np.stack([np.asarray(query_vecs[q], dtype=np.float64) for q in qids])
-    n = k * overfetch
 
     if scope:
         # P4 pushdown, shared by the whole batch (one request, one scope —
         # the filter reaches the parquet scan before the Arrow kernel)
-        chunks = chunks.filter(scope_predicate(F.col("filePath"), scope))
+        chunks = chunks.filter(scope_predicate("filePath", scope))
     carry = list(id_cols) + [col for col in payload_cols if col not in id_cols]
     c = chunks.select(*carry, F.col(vec_col).alias("_v"))
     # query ids are plain strings from the engine surface
-    from pyspark.sql.types import StringType
-
     out_schema = StructType(
         [StructField("query_id", StringType())]
         + [StructField(col, chunks.schema[col].dataType) for col in carry]
@@ -148,7 +204,7 @@ def vector_topk_batch(
             parts = []
             for j, qid in enumerate(qids):
                 # emit the RAW 1-dot distance: rounding happens once,
-                # Spark-side, through the same _rounded() expression
+                # Spark-side, through the same _rounded_sql() expression
                 # vector_topk uses (BigDecimal HALF_UP) — np.round is
                 # half-even and documented as sometimes inexact, so
                 # rounding here could disagree at a 1e-6 boundary and
@@ -189,17 +245,10 @@ def vector_topk_batch(
                 yield pd.concat(parts, ignore_index=True)
 
     partial = c.mapInPandas(_local, out_schema)
-    partial = partial.withColumn("score", _rounded(F.col("score")))
+    partial = partial.withColumn("score", F.expr(_rounded_sql("score")))
     if max_distance is not None:
-        partial = partial.filter(F.col("score") <= max_distance)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").asc(), *[F.col(col).asc() for col in id_cols]
-    )
-    return (
-        partial.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= n)
-        .drop("_rn")
-    )
+        partial = partial.filter(_max_distance_sql(max_distance))
+    return partial
 
 
 def grouping_filter(
@@ -448,16 +497,17 @@ def keyword_postings(
     """One row per matched query term: ``df`` over ALL its postings rows
     (global term weights — restricting candidates must not change them)
     and ``hits``, the (*id_cols, tf, dl) of the candidate ``keys`` only.
-    The terms push into the parquet scan; the keys ride as one SQL IN
-    list (one parse, not a py4j call per literal), so a corpus-common
+    The terms push into the parquet scan; the terms and the keys each
+    ride as one SQL IN list, and the aggregates are parsed text (one
+    parse each, not a py4j call per literal or node), so a corpus-common
     term ships <= len(keys) hits to the driver."""
+    cols = ", ".join(f"`{c}`" for c in id_cols)
     if tuple(id_cols) == ("filePath", "chunkIndex"):
         # the postings key is (filePath, chunkIndex, term): row count ==
         # distinct-doc count, without countDistinct's extra aggregate
-        df_count = F.count("*")
+        df_count = "count(*)"
     else:
-        df_count = F.countDistinct(*id_cols)
-    cols = ", ".join(f"`{c}`" for c in id_cols)
+        df_count = f"count(DISTINCT {cols})"
     types = [postings.schema[c].dataType for c in id_cols]
     in_list = ", ".join(
         "struct(" + ", ".join(
@@ -466,13 +516,11 @@ def keyword_postings(
         ) + ")"
         for key in keys
     )
-    hit = F.expr(
-        f"CASE WHEN struct({cols}) IN ({in_list}) THEN struct({cols}, tf, dl) END"
-    )
+    hit = f"CASE WHEN struct({cols}) IN ({in_list}) THEN struct({cols}, tf, dl) END"
     return (
-        postings.filter(F.col("term").isin(list(terms)))
+        postings.filter(f"term IN ({', '.join(map(sql_str_lit, terms))})")
         .groupBy("term")
-        .agg(df_count.alias("df"), F.collect_list(hit).alias("hits"))
+        .agg(F.expr(f"{df_count} AS df"), F.expr(f"collect_list({hit}) AS hits"))
     )
 
 
@@ -492,18 +540,20 @@ def _rerank(
     postings: DataFrame | None,
     bm25_stats: dict | None,
     query_col: str | None = None,
-) -> DataFrame:
+    n: int | None = None,
+):
     """Steps 5-8 on the driver over the candidates of ``top``, one rerank
     per query: ``query_terms`` maps a ``query_col`` value (None when
-    ``top`` answers one query) to its terms. Spark work is the one Arrow
-    collect of ``top`` plus the keyword stage, shared by every query:
-    with ``postings``, one ``keyword_postings`` aggregate over the union
-    of the queries' terms and grouped candidate keys; without, tf/dl are
-    projected onto ``top`` itself (the bounded candidate rows, not the
-    corpus) and N/avgdl/df come from ``bm25_stats`` or one
-    ``corpus_stats_scan``. Returns the ranked rows (``schema``'s columns,
-    a subset of ``top``'s) as a LocalRelation built from Arrow, so
-    collecting it submits no job."""
+    ``top`` answers one query) to its terms, and with ``n`` each query
+    keeps only its first ``n`` candidates in (score, *id_cols) order.
+    Spark work is the one Arrow collect of ``top`` plus the keyword
+    stage, shared by every query: with ``postings``, one
+    ``keyword_postings`` aggregate over the union of the queries' terms
+    and grouped candidate keys; without, tf/dl are projected onto ``top``
+    itself (the bounded candidate rows, not the corpus) and N/avgdl/df
+    come from ``bm25_stats`` or one ``corpus_stats_scan``. Returns the
+    ranked rows as a pyarrow Table of ``schema``'s columns (a subset of
+    ``top``'s)."""
     import pyarrow as pa
 
     from .bm25 import bm25_sum, corpus_stats_scan, scan_tf_dl
@@ -523,6 +573,10 @@ def _rerank(
     for i, r in enumerate(table.select(need).to_pylist()):
         r["_row"], r["_key"] = i, tuple(r[c] for c in id_cols)
         by_query.setdefault(r[query_col] if query_col else None, []).append(r)
+    if n is not None:
+        by_query = {
+            q: top_rows(rows, n, id_cols=id_cols) for q, rows in by_query.items()
+        }
     cands = {
         q: group_candidates(rows, grouping, id_cols=id_cols)
         for q, rows in sorted(by_query.items())
@@ -579,14 +633,13 @@ def _rerank(
     out = table.select(schema.names).take(
         pa.array([r["_row"] for r in ranked], pa.int64())
     )
-    out = out.set_column(
+    return out.set_column(
         out.schema.get_field_index("score"), "score",
         pa.array([r["score"] for r in ranked], pa.float64()),
     )
-    return chunks.sparkSession.createDataFrame(out, schema=schema)
 
 
-def hybrid_search(
+def hybrid_search_rows(
     chunks: DataFrame,
     query_vec: Sequence[float],
     query_terms: Sequence[str],
@@ -603,14 +656,15 @@ def hybrid_search(
     file_col: str = "filePath",
     postings: DataFrame | None = None,
     bm25_stats: dict | None = None,
-) -> DataFrame:
-    """The full query_documents pipeline (reference §3.1 steps 4-8).
+) -> tuple:
+    """The full query_documents pipeline (reference §3.1 steps 4-8),
+    answered on the driver: the ranked rows as a pyarrow Table, with the
+    Spark schema they have as a frame (``hybrid_search`` makes that
+    frame; the engine first adds ``source`` to the rows).
 
     Spark work is one bounded collect per corpus-touching stage: the
     vector top-k (one job), and with ``postings`` one ``keyword_postings``
-    aggregate. The driver reranks the candidates and returns them as a
-    LocalRelation built from Arrow, so collecting the result submits no
-    job (a Python row list would be RDD-backed: one job per collect).
+    aggregate. The driver reranks the candidates.
 
     Keyword scoring has two shapes. ``postings`` is the maintained BM25
     index and ``bm25_stats`` its persisted corpus statistics
@@ -625,15 +679,24 @@ def hybrid_search(
         chunks, query_vec, k, vec_col=vec_col, id_cols=id_cols,
         scope=scope, max_distance=max_distance,
     )
+    schema = top.schema
     return _rerank(
-        chunks, top, top.schema, {None: query_terms}, k=k, id_cols=id_cols,
+        chunks, top, schema, {None: query_terms}, k=k, id_cols=id_cols,
         text_col=text_col, grouping=grouping, weight=weight,
         max_files=max_files, file_col=file_col, postings=postings,
         bm25_stats=bm25_stats,
-    )
+    ), schema
 
 
-def hybrid_search_batch(
+def hybrid_search(chunks: DataFrame, *args, **kwargs) -> DataFrame:
+    """``hybrid_search_rows`` as a LocalRelation built from Arrow, so
+    collecting the result submits no job (a Python row list would be
+    RDD-backed: one job per collect)."""
+    rows, schema = hybrid_search_rows(chunks, *args, **kwargs)
+    return chunks.sparkSession.createDataFrame(rows, schema=schema)
+
+
+def hybrid_search_batch_rows(
     chunks: DataFrame,
     query_vecs: dict,
     query_terms: dict,
@@ -651,16 +714,21 @@ def hybrid_search_batch(
     payload_cols: Sequence[str] = (),
     scope: list[str] | None = None,
     max_distance: float | None = None,
-) -> DataFrame:
+) -> tuple:
     """The FULL hybrid pipeline for N concurrent queries in ONE corpus
-    scan — `hybrid_search` amortized the way `vector_topk_batch` amortizes
-    W1. Per-query results are row-identical to N separate `hybrid_search`
-    calls (pytest-pinned): the two functions differ only in their vector
-    stage, here one Arrow kernel pass for all queries, collected once.
-    The keyword stage and the driver rerank are `hybrid_search`'s, run
-    per query over that query's <= 2k candidate rows; the indexed
-    keyword side is one postings aggregate over the union of all
-    queries' terms, so no stage re-scans the corpus per query.
+    scan — `hybrid_search_rows` amortized the way `vector_topk_batch`
+    amortizes W1, returning the same (pyarrow Table, Spark schema) pair.
+    Per-query results are row-identical to N separate `hybrid_search`
+    calls (pytest-pinned): the two differ only in their vector stage,
+    here one Arrow kernel pass for all queries (`_vector_candidates`,
+    one job: no `query_id` window), collected once — at most
+    queries x Arrow batches x 2k rows plus rounding ties reach the
+    driver (a batch per partition up to 10,000 rows), which takes each
+    query's top-2k from them. The keyword stage and the
+    driver rerank are `hybrid_search`'s, run per query over that query's
+    <= 2k candidate rows; the indexed keyword side is one postings
+    aggregate over the union of all queries' terms, so no stage
+    re-scans the corpus per query.
 
     BM25 semantics match the single path exactly: per-term df and the
     corpus statistics are GLOBAL (restricting candidates must not change
@@ -683,8 +751,9 @@ def hybrid_search_batch(
     ):
         # the index-free keyword side reads tf/dl off the candidates' text
         extra.append(text_col)
-    top = vector_topk_batch(
-        chunks, query_vecs, k, vec_col=vec_col, id_cols=id_cols,
+    n = k * CANDIDATE_MULTIPLIER
+    top = _vector_candidates(
+        chunks, query_vecs, n, vec_col=vec_col, id_cols=id_cols,
         payload_cols=payload + extra, scope=scope, max_distance=max_distance,
     )
     schema = StructType([f for f in top.schema.fields if f.name not in extra])
@@ -692,5 +761,12 @@ def hybrid_search_batch(
         chunks, top, schema, {str(q): ts for q, ts in query_terms.items()},
         k=k, id_cols=id_cols, text_col=text_col, grouping=grouping,
         weight=weight, max_files=max_files, file_col=file_col,
-        postings=postings, bm25_stats=bm25_stats, query_col="query_id",
-    )
+        postings=postings, bm25_stats=bm25_stats, query_col="query_id", n=n,
+    ), schema
+
+
+def hybrid_search_batch(chunks: DataFrame, *args, **kwargs) -> DataFrame:
+    """``hybrid_search_batch_rows`` as a LocalRelation built from Arrow,
+    so collecting it submits no job."""
+    rows, schema = hybrid_search_batch_rows(chunks, *args, **kwargs)
+    return chunks.sparkSession.createDataFrame(rows, schema=schema)

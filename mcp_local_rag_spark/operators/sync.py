@@ -79,7 +79,7 @@ def plan_sync(
     # boundary-aware exact-or-descendant (reference isUnderOrEqual): an
     # unobserved '/docs/sub' protects '/docs/sub/x.md' but NOT '/docs/subfile.md'
     unobserved = (
-        scope_predicate(F.col(key_col), list(unobserved_prefixes))
+        scope_predicate(key_col, list(unobserved_prefixes))
         if unobserved_prefixes
         else F.lit(False)
     )

@@ -14,11 +14,6 @@ import base64
 import os
 from urllib.parse import urlsplit, urlunsplit
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from ..functions.paths import base64url_decode
-
 
 def normalize_source(source: str) -> str:
     """Strip query+fragment from http(s) URLs ONLY (reference
@@ -39,8 +34,11 @@ def path_to_source(path: str, db_path: str = "/data/db") -> str | None:
 
     Membership is the MANAGED DIRECTORY, not decodability: an ordinary
     document whose basename happens to be valid base64url (e.g.
-    '/docs/dGVzdA.md') must not be misreported as a raw-data row (the
-    column-level twin, restore_sources, applies the same prefix guard)."""
+    '/docs/dGVzdA.md') must not be misreported as a raw-data row.
+
+    The one source-restoration formula: the engine's Spark-path answers
+    (``RagEngine._answer``), the sidecars and the server all restore
+    ``source`` with it, on the driver."""
     if not path.startswith(db_path.rstrip("/") + "/raw-data/"):
         return None
     name = os.path.basename(path)
@@ -52,23 +50,3 @@ def path_to_source(path: str, db_path: str = "/data/db") -> str | None:
         return base64.urlsafe_b64decode(padded.encode()).decode()
     except Exception:
         return None
-
-
-def restore_sources(df: DataFrame, path_col: str = "filePath", db_path: str = "/data/db") -> DataFrame:
-    """Column-level source restoration for result shaping (reference
-    src/server/index.ts:480-497): raw-data rows get a `source` column."""
-    prefix = db_path.rstrip("/") + "/raw-data/"
-    key = F.regexp_extract(F.col(path_col), r"/raw-data/(.+)\.md$", 1)
-    # length(key) > 0 guard: a stray non-.md path under the prefix
-    # extracts '' and would decode to source='' — the python twin
-    # (path_to_source) returns None for it, and downstream IS NOT NULL
-    # checks must agree
-    return df.withColumn(
-        "source",
-        F.when(
-            F.col(path_col).startswith(prefix) & (F.length(key) > 0),
-            base64url_decode(key),
-        ).otherwise(F.lit(None).cast("string")),
-    )
-
-

@@ -9,8 +9,20 @@ pinned to the local core count via SPARK_GRAFT_CPUS.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """The smaller of 16g and half the machine's physical memory: a heap
+    allowed to outgrow the machine lets one JVM (a test run's grew past
+    11 GB RSS on a 15 GB machine) get itself or its neighbours killed."""
+    try:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    except (ValueError, OSError):
+        return "16g"
+    return f"{min(16 * 1024, half_mb)}m"
 
 
 def get_spark(app_name: str = "mcp-local-rag-spark") -> SparkSession:
@@ -51,7 +63,10 @@ def get_spark(app_name: str = "mcp-local-rag-spark") -> SparkSession:
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -64,6 +79,39 @@ def get_spark(app_name: str = "mcp-local-rag-spark") -> SparkSession:
         jvm.org.apache.logging.log4j.Level.ERROR,
     )
     return spark
+
+
+@contextmanager
+def count_py4j(spark: SparkSession):
+    """Count the py4j commands (Python -> JVM round trips) the calling
+    thread sends while the block runs, by wrapping the gateway client's
+    ``send_command``. Yields a dict whose ``"commands"`` holds the count
+    so far. Other threads' commands are not counted: among them are the
+    releases of JVM objects whose Python proxies died, which py4j queues
+    to its finalizer thread and sends whenever that thread wakes (up to a
+    second later), so they block no caller and would land in whichever
+    block happens to be running."""
+    import threading
+
+    caller = threading.get_ident()
+    client = spark.sparkContext._gateway._gateway_client
+    own = "send_command" in vars(client)
+    send = client.send_command
+    counter = {"commands": 0}
+
+    def counted(*args, **kwargs):
+        if threading.get_ident() == caller:
+            counter["commands"] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counted
+    try:
+        yield counter
+    finally:
+        if own:
+            client.send_command = send
+        else:
+            del client.send_command
 
 
 TABLES = (
@@ -114,9 +162,16 @@ def spread(df):
 # write-once-per-version (snapshot data_vN dirs; scratch indexes rebuilt
 # via rmtree+rewrite, which replaces the dir and its mtime) or
 # append-only with a fixed schema, so a signature hit always returns the
-# schema a fresh inference of the same path would. This caches SCHEMAS
-# only — file listing and row reads still happen per query, so no result
-# ever comes from a stale state.
+# schema a fresh inference of the same path would. This cache holds
+# schemas only, but the same signature also keys whole reused frames —
+# schema AND file listing — in engine.RagEngine._versioned, so freshness
+# of every warm engine read rests on it. The rule every table layout must
+# keep: each write adds, removes or renames an entry in the table's top
+# directory or in one of its first-level (bucket) directories. Spark's
+# writers (new part files; overwrite = delete + new files) and the
+# snapshot/rmtree rewrites all do; a writer that replaced a file in place
+# under the same name inside a bucket directory would change no
+# fingerprint, and a reused frame would keep listing the old file.
 #
 # Keyed by (abspath, base_path) -> (signature, schema): a rewrite mints a
 # new signature and REPLACES the old entry, so long-lived processes (the

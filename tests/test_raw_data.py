@@ -3,7 +3,6 @@ from pyspark.sql import functions as F
 from mcp_local_rag_spark.plans.raw_data import (
     normalize_source,
     path_to_source,
-    restore_sources,
     source_to_path,
 )
 
@@ -25,12 +24,36 @@ def test_source_path_roundtrip():
     assert path_to_source("/x/y/file.txt") is None
 
 
-def test_restore_sources_column(spark):
-    p = source_to_path("https://ex.com/article")
-    df = spark.createDataFrame([(p,), ("/plain/doc.md",)], "filePath string")
-    rows = {r.filePath: r.source for r in restore_sources(df).collect()}
-    assert rows[p] == "https://ex.com/article"
-    assert rows["/plain/doc.md"] is None
+def test_engine_answers_restore_sources(spark, tmp_path):
+    """Both Spark-path answers restore ``source`` on the driver
+    (plans/raw_data.path_to_source): the ingest_data row comes back with
+    its normalized source from query_documents and
+    query_documents_batch, and file rows come back with None."""
+    from mcp_local_rag_spark.engine import RagEngine
+
+    doc = tmp_path / "docs" / "plain.md"
+    doc.parent.mkdir()
+    doc.write_text(
+        "A plain file about broadcast joins and shuffle partitions, long"
+        " enough to form one chunk of its own.\n"
+    )
+    eng = RagEngine(spark, str(tmp_path / "t"), db_path=str(tmp_path / "db"))
+    eng.ingest_file(str(doc))
+    eng.ingest_data(
+        "A raw-data note about broadcast joins with plenty of text to chunk.",
+        "https://ex.com/article?utm=1",
+    )
+    want = {str(doc): None}
+    want[source_to_path("https://ex.com/article", str(tmp_path / "db"))] = (
+        "https://ex.com/article"
+    )
+    single = eng.query_documents("broadcast joins", limit=5).collect()
+    batch = eng.query_documents_batch(
+        ["broadcast joins", "raw-data note"], limit=5
+    ).collect()
+    assert {r.query_index for r in batch} == {"0", "1"}
+    for rows in (single, batch):
+        assert {r.filePath: r.source for r in rows} == want
 
 
 def test_compaction(spark, tmp_path):

@@ -55,7 +55,7 @@ def test_scope_predicate_boundary(spark):
     df = spark.createDataFrame([("/a/b",), ("/a/b/c",), ("/a/bc",)], "p string")
     kept = [
         r.p
-        for r in df.filter(paths.scope_predicate(F.col("p"), ["/a/b"])).collect()
+        for r in df.filter(paths.scope_predicate("p", ["/a/b"])).collect()
     ]
     assert kept == ["/a/b", "/a/b/c"]
 
@@ -103,8 +103,6 @@ def test_pii_url_redacted_before_inner_patterns(spark):
 def test_scope_predicate_root_matches_every_absolute_path(spark):
     """A '/' scope means 'everything': the naive p + '/' startswith would
     demand a double slash and shield nothing from sync prune."""
-    from pyspark.sql import functions as F
-
     from mcp_local_rag_spark.functions import paths
 
     df = spark.createDataFrame(
@@ -112,7 +110,7 @@ def test_scope_predicate_root_matches_every_absolute_path(spark):
     )
     got = {
         r.p
-        for r in df.filter(paths.scope_predicate(F.col("p"), ["/"])).collect()
+        for r in df.filter(paths.scope_predicate("p", ["/"])).collect()
     }
     assert got == {"/", "/a", "/a/b.md"}
 

@@ -5,17 +5,19 @@ from pyspark.sql import functions as F
 from mcp_local_rag_spark.functions.vector import (
     cosine,
     dot,
-    dot_distance,
+    dot_distance_sql,
     l2_norm,
     vec_lit,
+    vec_sql,
 )
 
 
 def test_dot_and_distance(spark):
     df = spark.createDataFrame([([1.0, 0.0, 0.0],), ([0.6, 0.8, 0.0],)], "v array<float>")
-    q = vec_lit([1.0, 0.0, 0.0])
+    q = [1.0, 0.0, 0.0]
     rows = df.select(
-        dot(F.col("v"), q).alias("d"), dot_distance(F.col("v"), q).alias("dist")
+        dot(F.col("v"), vec_lit(q)).alias("d"),
+        F.expr(dot_distance_sql("v", vec_sql(q))).alias("dist"),
     ).collect()
     assert rows[0]["d"] == 1.0 and rows[0]["dist"] == 0.0
     assert abs(rows[1]["d"] - 0.6) < 1e-6 and abs(rows[1]["dist"] - 0.4) < 1e-6

@@ -2,9 +2,11 @@
 one submits: one timed pass per lane after a shared session warm-up,
 recording wall seconds plus the jobs, stages and tasks submitted while the
 lane ran (construction + one ``.count()``, via the statusTracker job-group
-API). Job counts don't drift with the box, seconds do, so the ambient
-probe (``bench._ambient_control``) is sampled every 20 lanes and at the
-end, letting each timing be read against the container phase it ran in.
+API) and the py4j commands (Python -> JVM round trips) it sent
+(``session.count_py4j``). Job counts don't drift with the box, seconds
+do, so the ambient probe (``bench._ambient_control``) is sampled every
+20 lanes and at the end, letting each timing be read against the
+container phase it ran in.
 
     python tools/time_all_queries.py [sf_dir] [--out OUT.json] [lane ...]
 
@@ -31,19 +33,22 @@ AMBIENT_EVERY = 20
 
 
 def run_lane(spark, fn, sf_dir: str, group: str) -> dict:
-    """Wall seconds, rows and the jobs/stages/tasks submitted under
-    ``group`` while ``fn(spark, sf_dir).count()`` runs."""
+    """Wall seconds, rows, py4j commands and the jobs/stages/tasks
+    submitted under ``group`` while ``fn(spark, sf_dir).count()`` runs."""
+    from mcp_local_rag_spark.session import count_py4j
+
     sc = spark.sparkContext
     st = sc.statusTracker()
     sc.setJobGroup(group, group)
-    t0 = time.time()
-    try:
-        n, err = fn(spark, sf_dir).count(), None
-    except Exception as ex:  # keep sweeping; the gate tool owns failures
-        n, err = -1, f"{type(ex).__name__}: {ex}"[:200]
-    finally:
-        sc.setJobGroup(None, None)
-    dt = round(time.time() - t0, 3)
+    with count_py4j(spark) as py4j:
+        t0 = time.time()
+        try:
+            n, err = fn(spark, sf_dir).count(), None
+        except Exception as ex:  # keep sweeping; the gate tool owns failures
+            n, err = -1, f"{type(ex).__name__}: {ex}"[:200]
+        finally:
+            sc.setJobGroup(None, None)
+        dt = round(time.time() - t0, 3)
     job_ids = st.getJobIdsForGroup(group)
     stages = tasks = 0
     for jid in job_ids:
@@ -55,7 +60,8 @@ def run_lane(spark, fn, sf_dir: str, group: str) -> dict:
             if si is not None:
                 stages += 1
                 tasks += si.numTasks
-    row = {"sec": dt, "rows": n, "jobs": len(job_ids), "stages": stages, "tasks": tasks}
+    row = {"sec": dt, "rows": n, "py4j": py4j["commands"], "jobs": len(job_ids),
+           "stages": stages, "tasks": tasks}
     if err:
         row["err"] = err
     return row
@@ -82,7 +88,8 @@ def main() -> None:
     names = argv or sorted(qs)
 
     rows = []
-    print(f"{'query':<40} {'sec':>8} {'jobs':>5} {'stages':>7} {'tasks':>7}", file=sys.stderr)
+    print(f"{'query':<40} {'sec':>8} {'py4j':>6} {'jobs':>5} {'stages':>7} {'tasks':>7}",
+          file=sys.stderr)
     for i, name in enumerate(names):
         if i % AMBIENT_EVERY == 0:
             rows.append({"ambient": _ambient_control(spark)})
@@ -90,7 +97,7 @@ def main() -> None:
         row = {"query": name, **run_lane(spark, qs[name], sf_dir, f"sweep-{i}")}
         rows.append(row)
         print(
-            f"{name:<40} {row['sec']:>8.3f} {row['jobs']:>5} {row['stages']:>7}"
+            f"{name:<40} {row['sec']:>8.3f} {row['py4j']:>6} {row['jobs']:>5} {row['stages']:>7}"
             f" {row['tasks']:>7}   rows={row['rows']}"
             + (f"  ERR {row['err']}" if "err" in row else ""),
             file=sys.stderr,
