@@ -23,6 +23,7 @@ from .operators import search
 from .session import read_parquet
 from .operators.bm25 import bm25_scores, build_postings
 from .functions.paths import sync_path_key
+from .functions.text import query_terms
 from .operators.neighbors import read_neighbors
 from .operators.sync import plan_sync, sync_counters
 from .plans.ingest import (
@@ -69,16 +70,6 @@ _MIGRATED_COLS = ("fileTitle", "contentHash")
 
 # the hit columns query_documents answers with, before ``source``
 _HIT_COLS = ("filePath", "chunkIndex", "text", "fileTitle", "score")
-
-
-def _query_terms(text: str) -> list[str]:
-    """Tokenize a query with the SAME tokenizer the postings are built
-    with (split on [^a-z0-9]+, functions/text.tokens) — a whitespace
-    split leaves punctuation attached ('spark,') and such a term can
-    never match any posting, silently dropping the BM25 signal."""
-    import re
-
-    return [t for t in re.split(r"[^a-z0-9]+", text.lower()) if t]
 
 
 class RagEngine:
@@ -439,7 +430,7 @@ class RagEngine:
         hybrid_weight = max(0.0, min(1.0, hybrid_weight))
         # query vector under the SAME backend as the stored corpus vectors
         qv = self._embed_query(query_text)
-        terms = _query_terms(query_text)
+        terms = query_terms(query_text)
         postings = self._postings()
         rows, schema = search.hybrid_search_rows(
             self.chunks(),
@@ -483,34 +474,6 @@ class RagEngine:
             table.append_column("source", sources), schema=StructType(fields)
         )
 
-    def vector_search_batch(
-        self, query_texts: list[str], *, limit: int = 10
-    ) -> DataFrame:
-        """N concurrent vector queries in ONE corpus scan (the serving
-        amortization shape — operators/search.vector_topk_batch). Returns
-        (query_index, filePath, chunkIndex, text, score) rows — exactly
-        ``limit`` rows per query (matching ``query_documents``; the
-        operator's overfetched candidate pool is an internal hybrid-boost
-        input, not the public serving contract), ranked identically to N
-        separate ``vector_topk`` calls. Hybrid boost is per-query work on
-        <=2k rows each — callers needing it route single queries through
-        ``query_documents``."""
-        limit = max(1, min(20, limit))
-        qvecs = {
-            str(i): self._embed_query(t) for i, t in enumerate(query_texts)
-        }
-        # overfetch=1: exactly ``limit`` rows per query, not the
-        # hybrid-boost candidate pool
-        out = search.vector_topk_batch(
-            self.chunks(),
-            qvecs,
-            k=limit,
-            id_cols=("filePath", "chunkIndex"),
-            payload_cols=("text",),
-            overfetch=1,
-        )
-        return out.withColumnRenamed("query_id", "query_index")
-
     def query_documents_batch(
         self,
         query_texts: list[str],
@@ -524,7 +487,7 @@ class RagEngine:
     ) -> DataFrame:
         """The FULL hybrid pipeline (vector + BM25 boost + filters) for N
         concurrent queries in ONE corpus scan — query_documents amortized
-        the way vector_search_batch amortizes the vector stage alone.
+        the way ``search.vector_topk_batch`` amortizes the vector stage.
         Per-query results are row-identical to N query_documents calls at
         the same settings; the keyword side reads the maintained postings
         index when fresh (one pruned scan shared by all queries' terms)
@@ -544,7 +507,7 @@ class RagEngine:
             str(i): self._embed_query(t) for i, t in enumerate(query_texts)
         }
         qterms = {
-            str(i): _query_terms(t) for i, t in enumerate(query_texts)
+            str(i): query_terms(t) for i, t in enumerate(query_texts)
         }
         postings = self._postings()
         rows, schema = search.hybrid_search_batch_rows(
@@ -1663,7 +1626,7 @@ class RagEngine:
         built = postings is None
         if built:
             postings = build_postings(self.chunks(), tokenizer="unigram")
-        terms = _query_terms(query_text)
+        terms = query_terms(query_text)
         scores = bm25_scores(postings, terms, stats=stats, materialize=built)
         return (
             scores.orderBy(F.col("_score").desc(), "filePath", "chunkIndex")

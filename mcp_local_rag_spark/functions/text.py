@@ -13,11 +13,18 @@ re-expresses the same logic in SQL; keep formulas in sync with
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
 # tokenization
+
+# the word-token separator: a run of anything but lowercase ASCII letters
+# and digits (applied after lowercasing)
+TOKEN_SPLIT = "[^a-z0-9]+"
+_TOKEN_SPLIT_RE = re.compile(TOKEN_SPLIT)
 
 
 def tokens(col: Column) -> Column:
@@ -26,7 +33,14 @@ def tokens(col: Column) -> Column:
     ``array_remove`` (codegen'd builtin) rather than a lambda ``F.filter``
     — higher-order functions evaluate interpreted per element, and this
     expression sits on the hottest path of every tokenizing query."""
-    return F.array_remove(F.split(F.lower(col), "[^a-z0-9]+"), "")
+    return F.array_remove(F.split(F.lower(col), TOKEN_SPLIT), "")
+
+
+def query_terms(text: str) -> list[str]:
+    """``tokens`` on the driver, for a query string: the terms the
+    postings are built with. A whitespace split would leave punctuation
+    attached ('spark,'), and such a term can never match a posting."""
+    return [t for t in _TOKEN_SPLIT_RE.split(text.lower()) if t]
 
 
 def char_ngrams(col: Column, n: int) -> Column:
@@ -153,7 +167,7 @@ def normalized_text(col: Column) -> Column:
     """Canonical form for fingerprinting: lowercase, alnum words, single
     spaces. One replace suffices — space is in the replaced class, so the
     output can never contain a run of spaces."""
-    return F.trim(F.regexp_replace(F.lower(col), "[^a-z0-9]+", " "))
+    return F.trim(F.regexp_replace(F.lower(col), TOKEN_SPLIT, " "))
 
 
 def fingerprint(col: Column) -> Column:

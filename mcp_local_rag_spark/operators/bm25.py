@@ -21,9 +21,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.cache import persisted
-
-from ..functions.text import char_ngrams, tokens
+from ..functions.text import TOKEN_SPLIT, char_ngrams, tokens
 
 K1 = 1.2
 B = 0.75
@@ -69,7 +67,7 @@ def build_postings(
     if tokenizer == "unigram":
         exploded = docs.select(
             *id_cols,
-            F.explode(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+")).alias("term"),
+            F.explode(F.split(F.lower(F.col(text_col)), TOKEN_SPLIT)).alias("term"),
         ).filter(F.col("term") != "")
     elif tokenizer == "ngram23":
         # explode positions + substring instead of an array-transform lambda
@@ -187,7 +185,7 @@ def bm25_scores(
     this is moot.
     """
     if materialize:
-        postings = persisted(postings)
+        postings = postings.persist()
     if stats is not None:
         n_col = F.lit(int(stats["n"]))
         avgdl_col = F.lit(float(stats["avgdl"] or 0.0))
@@ -198,7 +196,7 @@ def bm25_scores(
     terms = list(dict.fromkeys(query_terms))
     matched = postings.filter(F.col("term").isin(terms))
     if materialize:
-        matched = persisted(matched)
+        matched = matched.persist()
     df_stats = matched.groupBy("term").agg(F.countDistinct(*id_cols).alias("df"))
     if candidates is not None:
         matched = matched.join(candidates.select(*id_cols), list(id_cols), "left_semi")
@@ -313,11 +311,6 @@ def bm25_scores_ngram_scan(
     return d.filter(any_match).select(*id_cols, score.alias("_score"))
 
 
-def _scan_tokens(text_col: str):
-    """The index-free scorers' unigram tokenizer (build_postings' split)."""
-    return F.array_remove(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), "")
-
-
 def _term_freq(toks, term: str):
     # codegen-friendly tf, no lambda HOF: tokens minus tokens-without-term
     return F.size(toks) - F.size(F.array_remove(toks, term))
@@ -328,7 +321,7 @@ def scan_tf_dl(terms: Sequence[str], text_col: str = "text") -> list:
     text: the tokenizer and tf the index-free scorer uses, as columns a
     caller can project onto a bounded row set (hybrid_search folds them
     into the top-k's projection)."""
-    toks = _scan_tokens(text_col)
+    toks = tokens(F.col(text_col))
     return [F.size(toks).alias("_dl")] + [
         _term_freq(toks, t).alias(f"_tf{i}") for i, t in enumerate(terms)
     ]
@@ -351,7 +344,7 @@ def corpus_stats_scan(
     Zero-token docs are excluded, matching the postings path.
     """
     terms = list(dict.fromkeys(terms))
-    toks = _scan_tokens(text_col)
+    toks = tokens(F.col(text_col))
     d = chunks.select(toks.alias("_toks")).filter(F.size("_toks") > 0)
     row = d.agg(
         F.count("*").alias("n"),
@@ -413,7 +406,7 @@ def bm25_scores_scan(
         return src.select(
             *id_cols, F.lit(None).cast("double").alias("_score")
         ).limit(0)
-    toks = _scan_tokens(text_col)
+    toks = tokens(F.col(text_col))
     cand = chunks.select(*id_cols, toks.alias("_toks"))
     if candidates is not None:
         cand = cand.join(

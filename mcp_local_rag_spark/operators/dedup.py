@@ -78,7 +78,7 @@ def shingle_stream(
     0.46, identical pair set. Use ``shingle_sets`` when exact SET
     semantics matter (Jaccard intersections, containment, novelty).
     """
-    toks = F.array_remove(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), "")
+    toks = tokens(F.col(text_col))
     d = docs.select(F.col(id_col), toks.alias("_toks")).filter(F.size("_toks") >= k)
     return d.select(
         F.col(id_col),

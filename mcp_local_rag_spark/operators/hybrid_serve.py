@@ -29,6 +29,7 @@ from __future__ import annotations
 import os
 
 from ..embedder import embed_query
+from ..functions.text import query_terms
 from ..plans.raw_data import path_to_source
 from .bm25 import bm25_sum
 from .search import (
@@ -46,19 +47,11 @@ class HybridSearchServer:
     """query_documents at serving latency over the persisted tables."""
 
     def __init__(self, table_path: str, postings_path: str | None = None, *,
-                 term_postings_path: str | None = None,
                  db_path: str = "/data/db"):
         if postings_path is None:
             postings_path = table_path.rstrip("/") + "_fts"
         self._table = table_path
         self._postings = postings_path
-        # the TERM-bucketed second copy (plans/fts.write_term_postings):
-        # when present, a cold term's read computes its tbucket locally
-        # (functions/spark_hash, bit-exact with the writer's F.xxhash64)
-        # and PARTITION-prunes to that one directory — at a large index
-        # this replaces row-group pruning across every doc bucket with
-        # opening ~1/n_buckets of the index per new term
-        self._term_postings = term_postings_path
         self._db_path = db_path
         self._vec = VectorSearchServer(table_path)
         self._payload: dict | None = None  # (path, idx) -> (text, fileTitle)
@@ -80,9 +73,7 @@ class HybridSearchServer:
         self._pdataset = None
         self._stats = None
         self._term_cache = {}
-        # the version label goes with the caches it labels — keeping it
-        # would let a pinned read find a "cached" version whose payload
-        # is gone and lazily re-fill it from a NEWER table state
+        # the version label goes with the caches it labels
         self._loaded_version = None
 
     # -- snapshot loads ----------------------------------------------------
@@ -120,15 +111,14 @@ class HybridSearchServer:
         self._payload = payload
         return payload
 
-    def _dataset_of(self, path: str):
-        if self._pdataset is None or self._pdataset[0] != path:
+    def _postings_dataset(self):
+        if self._pdataset is None:
             import pyarrow.dataset as ds
 
-            self._pdataset = (
-                path,
-                ds.dataset(path, format="parquet", partitioning="hive"),
+            self._pdataset = ds.dataset(
+                self._postings, format="parquet", partitioning="hive"
             )
-        return self._pdataset[1]
+        return self._pdataset
 
     def _fts_stats(self) -> dict:
         if self._stats is None:
@@ -155,99 +145,55 @@ class HybridSearchServer:
         grouping: str | None = None,
         hybrid_weight: float = DEFAULT_HYBRID_WEIGHT,
         max_files: int | None = None,
-        backend: str | None = None,
-        dim: int | None = None,
-        at_version: str | None = None,
-        stale_ok: bool = False,
     ) -> list[dict]:
         """Rows (filePath, chunkIndex, text, fileTitle, score, source),
         identical to ``RagEngine.query_documents(...).collect()`` under
-        the same settings. The embedding space defaults to the TABLE'S
-        persisted space (_table_meta.json) — the same resolution the
-        engine applies, so the query embeds where the corpus lives.
+        the same settings. The query embeds in the TABLE'S persisted
+        space (_table_meta.json) — the same resolution the engine
+        applies, so the query embeds where the corpus lives.
 
         Staleness contract (operators/staleness): the postings index is a
         MAINTAINED artifact — when its covers-stamp provably lags the
         chunks table (the state where the engine would fall back to the
         index-free scan, which a serving process cannot do) the query
-        raises StaleServingError unless ``stale_ok=True`` serves the
-        postings as-of their own stamp. ``at_version`` pins the whole
-        read (vector matrix + payload + term cache) to one table content
-        stamp for cross-query consistency."""
-        import re
+        raises StaleServingError."""
+        from ..plans.ingest import (
+            read_table_meta,
+            table_content_stamp,
+            table_embedding,
+        )
+        from .staleness import check_covers
 
-        from ..plans.ingest import table_embedding
-
-        meta_backend, meta_dim = table_embedding(self._table)
-        backend = backend if backend is not None else meta_backend
-        dim = dim if dim is not None else meta_dim
+        backend, dim = table_embedding(self._table)
         limit = max(1, min(20, limit))
         hybrid_weight = max(0.0, min(1.0, hybrid_weight))
         # self-refresh across processes: one cheap meta read per query —
-        # if the chunks table's content version moved since this snapshot
+        # if the chunks table's content stamp (version stamp, or a
+        # filesystem fingerprint on a legacy table) moved since the caches
         # loaded, drop every cached artifact (the vector sidecar performs
-        # the same check for its matrix)
-        from ..plans.ingest import read_table_meta, table_content_stamp
-
-        # version stamp when the table carries one, filesystem fingerprint
-        # otherwise — a legacy table can neither pin a stale snapshot
-        # (None == None) nor pay an always-reload per query
+        # the same check for its matrix). A mutation landing after this
+        # read leaves caches newer than their label, so the next query
+        # reloads them.
         tv = table_content_stamp(self._table)
-        pinned_cache = False
-        if at_version is not None:
-            from .staleness import check_pin
-
-            pinned_cache = (
-                check_pin(
-                    "hybrid serving snapshot",
-                    at_version,
-                    tv,
-                    self._loaded_version,
-                )
-                == "cached"
-            )
-        from .staleness import check_covers
-
-        # against the PIN when one is set: postings covering the pinned
-        # version are exactly consistent with a pinned-cache read
         check_covers(
             f"hybrid postings index {self._postings}",
             read_table_meta(self._postings).get("covers_table_version"),
-            at_version if at_version is not None else tv,
-            stale_ok,
+            tv,
+            False,
         )
-        if tv != self._loaded_version and not pinned_cache:
+        if tv != self._loaded_version:
             self._payload = None
             self._pdataset = None
             self._stats = None
             self._term_cache = {}
             self._loaded_version = tv
-        # whether this query can touch the chunks table lazily: a warm
-        # payload means steps 6-9 read only resident caches (+ the vector
-        # snap, which carries its own stamp-stability protection), so a
-        # stamp moving mid-query cannot contaminate anything
-        payload_was_warm = self._payload is not None
-        if pinned_cache and not payload_was_warm and str(tv) != str(at_version):
-            # belt-and-braces: the label matches the pin but its payload
-            # cache is gone (a crash mid-query can leave that state) and
-            # the table has moved — re-filling would read CURRENT rows
-            # into a cache labeled with the pin
-            from .staleness import StaleServingError
-
-            raise StaleServingError(
-                f"hybrid serving snapshot: pinned version {at_version!r} "
-                "is labeled resident but its payload cache is gone and "
-                f"the table moved on (now {tv!r}); re-pin to a reachable "
-                "stamp"
-            )
         qv = embed_query(query_text, dim, backend)
-        terms = [t for t in re.split(r"[^a-z0-9]+", query_text.lower()) if t]
+        terms = query_terms(query_text)
 
         # §3.1 step 4: vector candidates (k * overfetch pool, shared order)
         cands = self._vec.query(
             qv, limit * CANDIDATE_MULTIPLIER,
             scope=scope, max_distance=max_distance,
-            at_version=at_version,
         )
         # steps 5-8: the shared driver tail — grouping on the raw
         # candidates, BM25 over the persisted postings restricted to them,
@@ -272,30 +218,6 @@ class HybridSearchServer:
                     "source": path_to_source(r["filePath"], self._db_path),
                 }
             )
-        # stamp re-check, ONLY for queries that lazy-loaded the payload:
-        # a mutation landing mid-load can fill the cache with newer rows
-        # than the _loaded_version label claims — a later at_version pin
-        # would then serve that contaminated cache forever as "the pinned
-        # snapshot". If the stamp moved under a lazy load, drop every
-        # cache (nothing mislabeled survives; next query reloads) and
-        # fail a PINNED read instead of lying. A warm-cache read touched
-        # nothing newer, so pinned batches keep serving their snapshot
-        # while ingests land — the advertised contract.
-        if not payload_was_warm and table_content_stamp(self._table) != tv:
-            self._payload = None
-            self._pdataset = None
-            self._stats = None
-            self._term_cache = {}
-            self._loaded_version = None
-            self._vec.invalidate()
-            if at_version is not None:
-                from .staleness import StaleServingError
-
-                raise StaleServingError(
-                    f"hybrid serving snapshot: the table moved past pinned "
-                    f"version {at_version!r} during the read; re-pin to the "
-                    "new stamp"
-                )
         return rows
 
     def _bm25(
@@ -325,23 +247,13 @@ class HybridSearchServer:
         if missing:
             cols = ["filePath", "chunkIndex", "term", "tf", "dl"]
             flt = ds.field("term").isin(missing)
-            if self._term_postings is not None and os.path.isdir(self._term_postings):
-                from ..functions.spark_hash import bucket_of
-                from ..plans.ingest import table_n_buckets
-
-                nb = table_n_buckets(self._term_postings)
-                buckets = sorted({bucket_of(t, nb) for t in missing})
-                flt = flt & ds.field("tbucket").isin(buckets)
-                src_path = self._term_postings
-            else:
-                src_path = self._postings
             try:
-                tbl = self._dataset_of(src_path).to_table(columns=cols, filter=flt)
+                tbl = self._postings_dataset().to_table(columns=cols, filter=flt)
             except (FileNotFoundError, OSError):
                 # self-heal like NeighborServer: a compaction replaced the
                 # files under a cached dataset handle — re-open and retry
                 self._pdataset = None
-                tbl = self._dataset_of(src_path).to_table(columns=cols, filter=flt)
+                tbl = self._postings_dataset().to_table(columns=cols, filter=flt)
             fetched = tbl.to_pandas()
             if len(cache) + len(missing) > self.MAX_CACHED_TERMS:
                 # evict, but seed the replacement with THIS query's hit

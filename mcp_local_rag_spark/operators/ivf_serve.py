@@ -338,8 +338,6 @@ class IvfVectorServer:
         cells: list[int] | None = None,
         exclude_id=None,
         refine: int = 8,
-        at_version: str | None = None,
-        stale_ok: bool = False,
     ) -> list[dict]:
         """Top-k rows from the probed cells as
         [{neighbor_id, cos, cell}] — cosine rounded to 6, ties on
@@ -358,35 +356,21 @@ class IvfVectorServer:
         Staleness contract (operators/staleness): when the index records
         the chunks table it was built from (meta source 'chunks:<path>')
         and a covers-stamp, a query against a table that has moved on
-        raises StaleServingError unless ``stale_ok=True`` serves the
-        index as-of its own stamp (ANN indexes are guarded-stale by
-        design between rebuilds — the engine's ann_index_is_fresh is the
-        same check). ``at_version`` pins to one covered table version:
-        the index either covers it or the query fails; indexes built
-        outside the engine (no source/stamp) carry no proof and serve as
-        before."""
-        chunks_backed = self._source.startswith("chunks:")
-        if at_version is not None or chunks_backed:
-            from ..plans.ingest import read_table_meta, table_content_stamp
-            from .staleness import check_covers, check_pin
+        raises StaleServingError (the engine's ann_index_is_fresh is the
+        same check); indexes built outside the engine (no source/stamp)
+        carry no proof and serve unchecked."""
+        if self._source.startswith("chunks:"):
+            table = self._source[len("chunks:"):]
+            if os.path.isdir(table):
+                from ..plans.ingest import read_table_meta, table_content_stamp
+                from .staleness import check_covers
 
-            covered = read_table_meta(self._path).get("covers_table_version")
-            if at_version is not None:
-                # the covers stamp IS this index's snapshot identity
-                check_pin(
-                    f"ivf index {self._path}", at_version, covered, covered
+                check_covers(
+                    f"ivf index {self._path}",
+                    read_table_meta(self._path).get("covers_table_version"),
+                    table_content_stamp(table),
+                    False,
                 )
-            if chunks_backed:
-                table = self._source[len("chunks:"):]
-                if os.path.isdir(table):
-                    check_covers(
-                        f"ivf index {self._path}",
-                        covered,
-                        at_version
-                        if at_version is not None
-                        else table_content_stamp(table),
-                        stale_ok,
-                    )
         q = np.asarray(query_vec, dtype=np.float64)
         qn = float(np.linalg.norm(q))
         probe = cells if cells is not None else self.probe_cells(q, nprobe)

@@ -58,61 +58,29 @@ class VectorSearchServer:
     def invalidate(self) -> None:
         self._snap = None
 
-    def _load(self, at_version: str | None = None) -> tuple:
+    def _load(self) -> tuple:
         from ..plans.ingest import table_content_stamp as table_version
 
         snap = self._snap
+        # self-refresh: the chunks table stamps a content version on every
+        # mutation (plans/ingest.bump_table_version) — a cheap sidecar meta
+        # read per query detects cross-PROCESS mutations that in-process
+        # invalidate() hooks cannot see. Legacy tables without version
+        # stamps get a filesystem fingerprint instead (table_content_stamp),
+        # so None == None can never keep a stale snapshot — and an
+        # unversioned table still serves warm (reloads only when the files
+        # actually changed)
         current = table_version(self._path)
-        if at_version is not None:
-            from .staleness import check_pin
-
-            # 'fresh' falls through to the normal stamp-checked path
-            # below (current == pin); 'cached' serves the resident
-            # snapshot even though the table moved on — the pin IS the
-            # consistency contract
-            if (
-                check_pin(
-                    "vector serving snapshot",
-                    at_version,
-                    current,
-                    snap[4] if snap is not None else None,
-                )
-                == "cached"
-            ):
-                return snap[:4]
-        if snap is not None:
-            # self-refresh: the chunks table stamps a content version on
-            # every mutation (plans/ingest.bump_table_version) — a cheap
-            # sidecar meta read per query detects cross-PROCESS mutations
-            # that in-process invalidate() hooks cannot see. Legacy tables
-            # without version stamps get a filesystem fingerprint instead
-            # (table_content_stamp), so None == None can never pin a stale
-            # snapshot — and an unversioned table still serves warm
-            # (reloads only when the files actually changed)
-            if snap[4] is not None and snap[4] == current:
-                return snap[:4]
-            self._snap = None
+        if snap is not None and snap[4] is not None and snap[4] == current:
+            return snap[:4]
         import pyarrow.dataset as ds
 
-        # Stamp STABILITY loop: the stamp is read before AND after the
-        # data read, and the snapshot is labeled only when they agree —
-        # labeling with the pre-read stamp alone would let a mutation
-        # landing mid-read produce newer data cached under the old
-        # stamp, which an at_version pin then serves FOREVER as "the
-        # pinned snapshot" (the unpinned path self-heals next query;
-        # the pinned path never re-checks). A load that cannot stabilize
-        # is labeled None: servable now, never cacheable or pinnable.
-        tbl = None
-        for _ in range(4):
-            tbl = ds.dataset(self._path, format="parquet").to_table(
-                columns=["filePath", "chunkIndex", "vector"]
-            )
-            post = table_version(self._path)
-            if post == current:
-                break
-            current = post
-        else:
-            current = None
+        # the snapshot is labeled with the stamp read BEFORE the data: a
+        # mutation landing mid-read leaves data at least as new as the
+        # label, and the next query sees the stamp moved and reloads
+        tbl = ds.dataset(self._path, format="parquet").to_table(
+            columns=["filePath", "chunkIndex", "vector"]
+        )
         vec = tbl["vector"].combine_chunks()
         n = len(tbl)
         if n == 0:
@@ -134,14 +102,6 @@ class VectorSearchServer:
             order = np.lexsort((idx, paths)).argsort()
             snap = (mat, paths, idx, order, current)
         self._snap = snap
-        if at_version is not None and str(current) != str(at_version):
-            from .staleness import StaleServingError
-
-            raise StaleServingError(
-                f"vector serving snapshot: the table moved past pinned "
-                f"version {at_version!r} during the load (now at "
-                f"{current!r}); the pin is no longer reachable"
-            )
         return snap[:4]
 
     def query(
@@ -151,21 +111,12 @@ class VectorSearchServer:
         *,
         scope: list[str] | None = None,
         max_distance: float | None = None,
-        at_version: str | None = None,
-        stale_ok: bool = False,
     ) -> list[dict]:
         """Top-k rows as dicts (filePath, chunkIndex, score), the exact
         first-k prefix of ``vector_topk``'s (score, filePath, chunkIndex)
-        order under the same scope / max-distance filters.
-
-        ``at_version`` pins the read to one table content stamp
-        (operators/staleness): a batch of queries pinned together reads
-        one consistent snapshot even while ingests land mid-batch.
-        ``stale_ok`` is accepted for surface uniformity but has no
-        lagging artifact here — this server reads the table directly and
-        self-refreshes on every stamp change."""
-        del stale_ok  # no maintained artifact can lag: always fresh
-        mat, paths, idx, tiebreak = self._load(at_version)
+        order under the same scope / max-distance filters, over the
+        table's current content."""
+        mat, paths, idx, tiebreak = self._load()
         n = len(idx)
         if n == 0 or k <= 0:
             return []

@@ -22,11 +22,12 @@ from ..operators.dedup import (
 
 # -- staleness contract (operators/staleness, r13 item 7 -> r14) ------------
 #
-# The serving tier got at_version/stale_ok in r12; the dedup index used to
-# answer against whatever was last appended with no freshness guard — a
-# candidate-pairs read against a mid-rebuild index could mix band
-# generations, and a reader holding the corpus's current stamp had no way
-# to learn the index lagged it. Two pieces of persisted state close both:
+# The serving sidecars check their maintained artifacts' covers-stamps;
+# the dedup index used to answer against whatever was last appended with
+# no freshness guard — a candidate-pairs read against a mid-rebuild index
+# could mix band generations, and a reader holding the corpus's current
+# stamp had no way to learn the index lagged it. Two pieces of persisted
+# state close both:
 #
 #   covers_source_stamp   the SOURCE content stamp (plans/ingest.
 #                         table_content_stamp of the docs table, or any

@@ -137,57 +137,6 @@ class SnapshotReader:
             for r in rows
         ]
 
-    def lookup_many(
-        self,
-        key_values: list,
-        *,
-        version: int | None = None,
-        columns: list[str] | None = None,
-    ) -> list[dict[str, Any]]:
-        """Batch point read: one dataset filter per touched bucket."""
-        import pyarrow.dataset as ds
-
-        manifest = self._manifest(version)
-        key, nb = manifest["key"], manifest["n_buckets"]
-        out_cols = columns or list(
-            manifest.get("columns") or self._schema_cols(manifest)
-        )
-        by_bucket: dict[int, list] = {}
-        for v in key_values:
-            by_bucket.setdefault(
-                bucket_of(spark_string_of(v), nb), []
-            ).append(v)
-        log = manifest.get("schema_log", [])
-        rows: list[dict] = []
-        for b, vals in sorted(by_bucket.items()):
-            data_dir = manifest["buckets"].get(str(b))
-            if data_dir is None:
-                continue
-            dset = self._dataset(data_dir, b)
-            dirv = _dir_version(data_dir)
-            fmap = {c: file_column_of(c, dirv, log) for c in out_cols}
-            key_file = file_column_of(key, dirv, log) or key
-            present = {
-                c: fc
-                for c, fc in fmap.items()
-                if fc is not None and fc in dset.schema.names
-            }
-            ktype = dset.schema.field(key_file).type
-            got = dset.to_table(
-                columns=sorted(set(present.values())),
-                filter=ds.field(key_file).isin(
-                    [_coerce_arrow(v, ktype) for v in vals]
-                ),
-            ).to_pylist()
-            rows.extend(
-                {
-                    c: (r[present[c]] if c in present else None)
-                    for c in out_cols
-                }
-                for r in got
-            )
-        return rows
-
     def _schema_cols(self, manifest: dict) -> list[str]:
         # pre-"columns" manifests: derive from the v1 anchor dir's schema
         import pyarrow.dataset as ds

@@ -20,7 +20,6 @@ part of the pipeline-scale extension surface.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, functions as F
@@ -219,25 +218,19 @@ def write_zordered(
         _write_clustered(zdf, path, n_files)
     finally:
         df.unpersist()
-    # record the layout (columns, bits, bucket splits, curve) with
-    # tmp+rename, and LAST: meta presence therefore implies a complete
-    # layout (zorder_is_built), closing the crash window between the
-    # data write and the sidecar
+    # the completion marker, written with tmp+rename and LAST: its
+    # presence therefore implies a complete layout (zorder_is_built),
+    # closing the crash window between the data write and the marker
     tmp = os.path.join(path, ZORDER_META + ".tmp")
     with open(tmp, "w") as f:
-        json.dump(
-            {"cols": list(cols), "bits": bits, "splits": splits,
-             "curve": curve},
-            f,
-        )
+        f.write("{}")
     os.replace(tmp, os.path.join(path, ZORDER_META))
 
 
 def zorder_is_built(path: str) -> bool:
-    """Whether ``path`` holds a COMPLETE z-ordered layout — the meta
-    sidecar is written last via rename, so its presence implies the data
-    write finished (a crashed write leaves no meta and reads as
-    unbuilt)."""
+    """Whether ``path`` holds a COMPLETE z-ordered layout — the marker
+    is written last via rename, so its presence implies the data write
+    finished (a crashed write leaves no marker and reads as unbuilt)."""
     return os.path.isfile(os.path.join(path, ZORDER_META))
 
 

@@ -1745,9 +1745,7 @@ def _bpe_train(spark, sf_dir, rounds: int = 4, words=None):
     its returned plan still reads through the chain). ``words`` overrides
     the corpus-derived base frame (fixture injection for the
     batched-vs-sequential pinning tests)."""
-    from ..plans.cache import persisted
-
-    words = persisted(_bpe_words(spark, sf_dir) if words is None else words)
+    words = (_bpe_words(spark, sf_dir) if words is None else words).persist()
     cur = words
     rows = []
     for step in range(1, rounds + 1):
@@ -1960,11 +1958,9 @@ def _bpe_train_batched(
     (sweep, l, r, merged, count) in (count DESC, l, r) order per sweep."""
     from pyspark.sql import Window
 
-    from ..plans.cache import persisted
-
     if select not in ("local_maxima", "greedy"):
         raise ValueError(f"unknown selection strategy: {select!r}")
-    words = persisted(_bpe_words(spark, sf_dir) if words is None else words)
+    words = (_bpe_words(spark, sf_dir) if words is None else words).persist()
     cur = words
     rows: list[tuple] = []
     pool = 8 * batch_cap
@@ -2345,16 +2341,13 @@ FROM ranked GROUP BY source ORDER BY source""",
 def q_corpus_domain_cap(spark, sf_dir):
     from pyspark.sql import Window
 
-    from ..plans.cache import persisted
-
     docs = load(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(F.col("n_chars").desc(), "doc_id")
-    # plan-outliving persist (the returned agg reads the ranked frame the
-    # driver fold below also materialized); persisted() registers it with
-    # the server's request scope so long-lived sessions still free it
-    ranked = persisted(
-        docs.select("source", "n_chars", F.row_number().over(w).alias("rn"))
-    )
+    # plan-outliving persist: the returned agg reads the ranked frame the
+    # driver fold below also materialized
+    ranked = docs.select(
+        "source", "n_chars", F.row_number().over(w).alias("rn")
+    ).persist()
     # two global scalars, folded on the driver (bounded control-plane
     # reads); integer micro-unit shares keep the division engine-exact
     tot = ranked.agg(

@@ -2511,11 +2511,9 @@ def q_embedding_drift_psi(spark, sf_dir):
         .groupBy("dim", "pop", "bin")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    from ..plans.cache import persisted
-
     # <= 80 rows, but its subtree is the corpus scan+explode: the four
     # consumers below (pops, grid x2, frac's join) must not re-run it
-    binned = persisted(binned)
+    binned = binned.persist()
     pops = binned.groupBy("dim", "pop").agg(F.sum("c").alias("n"))
     # full 10-bin grid so zero-count bins still contribute their smoothed
     # fraction (tiny frames: 4 dims x 2 pops x 10 bins — broadcast-sized)

@@ -950,8 +950,6 @@ def q_customer_deciles(spark, sf_dir):
         )
     )
 
-    from ..plans.cache import persisted
-
     # ONE materialization: the offsets below and the final aggregate must
     # observe the SAME range partitioning. Two independent jobs over
     # repartitionByRange can sample different boundaries (the scan's
@@ -959,7 +957,7 @@ def q_customer_deciles(spark, sf_dir):
     # a differently-bounded run disagree with the ranks — at sf0.1 this
     # produced uneven tiles and a phantom 11th decile. Persisting the
     # ranked rows makes both consumers read one partitioning.
-    ranked = persisted(ranked_parts)
+    ranked = ranked_parts.persist()
 
     # per-partition counts: a handful of rows — cumulative offsets are a
     # driver-side fold broadcast back as a tiny join table. Derived from

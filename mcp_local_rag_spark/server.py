@@ -12,10 +12,8 @@ This module is that surface re-expressed over the Spark engine, in two
 layers:
 
 - :class:`RagRpcServer` — the tool layer. One handler per tool, the
-  mutation guard, the read-retry discipline, and request-scoped persist
-  cleanup (plans/cache.persist_scope — the request unpersists exactly
-  the intermediates it created, never other requests' warm caches). It
-  also speaks bare method-per-tool JSON-RPC for lightweight clients.
+  mutation guard and the read-retry discipline. It also speaks bare
+  method-per-tool JSON-RPC for lightweight clients.
 - :class:`McpServer` — the protocol envelope a real MCP client connects
   to: ``initialize`` capability negotiation, ``tools/list`` serving the
   schemas from tool_definitions.py, ``tools/call`` wrapping each tool result
@@ -48,7 +46,6 @@ from typing import Any, Callable
 from . import __version__
 from .engine import RagEngine
 from .operators.neighbors import NeighborServer
-from .plans.cache import persist_scope
 from .tool_definitions import TOOL_DEFINITIONS
 
 
@@ -676,30 +673,24 @@ class RagRpcServer:
                 if not self._write_guard.acquire(blocking=False):
                     raise MutationOverlap(OVERLAP_MESSAGE)
                 holding = True
-            # request-scoped cache hygiene: the per-query pipelines persist
-            # bounded intermediates (candidate sets, postings projections)
-            # that the collected result no longer needs — unpersist exactly
-            # those, never other requests' warm caches (the old blanket
-            # clearCache() turned every warm in-plan query cold)
-            with persist_scope():
-                try:
-                    result = handler(params)
-                except (RpcError, MutationOverlap):
+            try:
+                result = handler(params)
+            except (RpcError, MutationOverlap):
+                raise
+            except Exception:
+                if mutates:
                     raise
-                except Exception:
-                    if mutates:
-                        raise
-                    # read-during-mutation race: a background sync's bucket
-                    # rewrite can invalidate the file listing under a running
-                    # Spark scan ("underlying files have been updated"). The
-                    # parquet layout has no snapshot isolation (the reference
-                    # tolerates this only because LanceDB is versioned), so
-                    # reads self-heal the same way NeighborServer does:
-                    # refresh the file index once and retry.
-                    self.engine.spark.catalog.refreshByPath(self.engine.table_path)
-                    self.neighbors.invalidate()
-                    self._invalidate_hybrid()
-                    result = handler(params)
+                # read-during-mutation race: a background sync's bucket
+                # rewrite can invalidate the file listing under a running
+                # Spark scan ("underlying files have been updated"). The
+                # parquet layout has no snapshot isolation (the reference
+                # tolerates this only because LanceDB is versioned), so
+                # reads self-heal the same way NeighborServer does:
+                # refresh the file index once and retry.
+                self.engine.spark.catalog.refreshByPath(self.engine.table_path)
+                self.neighbors.invalidate()
+                self._invalidate_hybrid()
+                result = handler(params)
             if method == "sync_start":
                 holding = False  # guard handed to the sync worker thread
             return result

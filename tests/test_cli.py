@@ -60,8 +60,8 @@ def test_cli_surface_end_to_end(spark, tmp_path):
 
 
 def test_cli_query_leaves_no_persisted_frames(spark, tmp_path):
-    """The query command unpersists its own intermediates, as the MCP
-    server's per-request persist_scope does."""
+    """The query command leaves no persisted frame behind: the query
+    collects its Spark stages and answers from the driver."""
     d = tmp_path / "docs"
     d.mkdir()
     (d / "a.md").write_text(DOC)

@@ -513,19 +513,6 @@ def test_sync_protects_managed_rows(spark, corpus, tmp_path):
     assert any("/raw-data/" in f for f in files)  # raw-data still intact
 
 
-def test_vector_search_batch(spark, corpus, tmp_path):
-    eng = RagEngine(spark, str(tmp_path / "chunks_b"))
-    eng.ingest_directory(str(corpus))
-    out = eng.vector_search_batch(["shuffle partitioning", "broadcast joins"], limit=3)
-    rows = out.collect()
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r.query_index, []).append(r)
-    assert set(by_q) == {"0", "1"}
-    assert all(len(v) >= 1 for v in by_q.values())
-    assert all(r.text for r in rows)
-
-
 def test_sync_reconciles_lookalike_record_filename(spark, corpus, tmp_path):
     """A REAL on-disk file whose name merely looks like a record row
     ('notes#r1') and was ingested via sync is a normal document: it must
@@ -556,34 +543,6 @@ def test_sync_reconciles_lookalike_record_filename(spark, corpus, tmp_path):
     assert rep3.counters.get("prune", 0) == 1
     files3 = {r.filePath.rsplit("/", 1)[-1] for r in eng.list_documents().collect()}
     assert "notes#r1.md" not in files3
-
-
-def test_vector_search_batch_returns_exactly_limit(spark, corpus, tmp_path):
-    """The public serving entry point returns exactly ``limit`` rows per
-    query (matching query_documents), never the overfetched internal
-    candidate pool: the first ``limit`` rows, in (score, ids) order, of a
-    single vector_topk call."""
-    from mcp_local_rag_spark.operators.search import vector_topk
-
-    eng = RagEngine(spark, str(tmp_path / "chunks_lim"))
-    n = eng.ingest_directory(str(corpus))
-    limit = min(3, n)
-    texts = ["shuffle partitioning", "broadcast joins"]
-    out = eng.vector_search_batch(texts, limit=limit)
-    by_q = {}
-    for r in out.collect():
-        by_q.setdefault(r.query_index, []).append(
-            (r.score, r.filePath, r.chunkIndex)
-        )
-    assert set(by_q) == {"0", "1"}
-    assert all(len(v) == limit for v in by_q.values())
-    for i, t in enumerate(texts):
-        single = [
-            (r.score, r.filePath, r.chunkIndex)
-            for r in vector_topk(eng.chunks(), eng._embed_query(t), limit)
-            .collect()
-        ]
-        assert sorted(by_q[str(i)]) == sorted(single)[:limit], t
 
 
 def test_sync_migrates_legacy_record_tables(spark, corpus, tmp_path):
@@ -644,10 +603,10 @@ def test_punctuated_query_terms_still_match_postings(spark, corpus, tmp_path):
     """Query tokenization must match the corpus tokenizer: 'spark,' split
     on whitespace would never match any posting and the BM25 signal would
     silently vanish."""
-    from mcp_local_rag_spark.engine import _query_terms
+    from mcp_local_rag_spark.functions.text import query_terms
 
-    assert _query_terms("Spark, streaming!") == ["spark", "streaming"]
-    assert _query_terms("don't foo-bar") == ["don", "t", "foo", "bar"]
+    assert query_terms("Spark, streaming!") == ["spark", "streaming"]
+    assert query_terms("don't foo-bar") == ["don", "t", "foo", "bar"]
 
     eng = RagEngine(spark, str(tmp_path / "chunks_punct"))
     eng.ingest_directory(str(corpus))

@@ -126,30 +126,6 @@ def test_warmed_latency_is_millisecond_scale(engine):
     assert times[len(times) // 2] < 0.05  # p50 well under the Spark floor
 
 
-def test_term_bucketed_copy_gives_identical_results(engine, spark, tmp_path):
-    """With the term-bucketed postings copy configured, cold-term reads
-    partition-prune via the locally computed tbucket (spark_hash) and
-    results stay row-identical to both the doc-bucketed sidecar and the
-    engine."""
-    from mcp_local_rag_spark.plans.fts import read_postings, write_term_postings
-
-    tpath = str(tmp_path / "fts_term")
-    write_term_postings(
-        read_postings(engine.spark, engine.postings_path), tpath, n_buckets=8
-    )
-    base = _server_of(engine)
-    term_srv = HybridSearchServer(
-        engine.table_path,
-        engine.postings_path,
-        term_postings_path=tpath,
-        db_path=engine.db_path,
-    )
-    for q in ("broadcast joins", "spark shuffle during wide transformations"):
-        assert _served_rows(term_srv, q) == _served_rows(base, q) == _engine_rows(
-            engine, q
-        ), q
-
-
 @pytest.mark.slow
 def test_randomized_parity_sweep(engine):
     """Seeded randomized sweep: 12 random query/settings combinations —
@@ -216,6 +192,53 @@ def test_sidecar_self_refreshes_on_table_version_change(spark, tmp_path):
     ]
 
 
+def test_mid_load_mutation_is_served_then_reloaded(spark, tmp_path, monkeypatch):
+    """A write that commits while the sidecar loads its caches (after the
+    stamp read, before the chunk rows are read) must not stick: this
+    query answers from the rows it read, and the next query sees the
+    stamp moved, drops every cache and serves the new rows, identical to
+    the engine."""
+    import pyarrow.dataset as pads
+
+    d = tmp_path / "docs"
+    d.mkdir()
+    (d / "a.md").write_text(
+        "# A\n\nSpark shuffles data between executors during wide stages."
+    )
+    eng = RagEngine(spark, str(tmp_path / "chunks_ml"), db_path=str(tmp_path / "db"))
+    eng.ingest_directory(str(d))
+    server = _server_of(eng)
+    query = "unpersisting frees executor storage"
+
+    real = pads.dataset
+    state = {"armed": True, "rows": None}
+
+    def racy(source, *args, **kw):
+        if source != eng.table_path or state["armed"] is None:
+            return real(source, *args, **kw)
+        if state["armed"]:
+            state["armed"] = False
+            state["rows"] = real(source, *args, **kw).to_table()
+            # the write commits while the first chunk read is in flight
+            state["armed"] = None
+            (d / "b.md").write_text(
+                "# B\n\nUnpersisting frees executor storage for later stages."
+            )
+            eng.ingest_file(str(d / "b.md"))
+            eng.optimize()
+            state["armed"] = False
+        # every chunk read of this query sees the rows as of before it
+        return pads.InMemoryDataset(state["rows"])
+
+    monkeypatch.setattr(pads, "dataset", racy)
+    first = _served_rows(server, query, limit=5)
+    assert first and {r[0] for r in first} == {str(d / "a.md")}
+    state["armed"] = None
+    after = _engine_rows(eng, query, limit=5)
+    assert any(r[0] == str(d / "b.md") for r in after)
+    assert _served_rows(server, query, limit=5) == after
+
+
 def test_term_cache_eviction_keeps_this_querys_hit_terms(engine):
     """Eviction regression: with a tiny cache cap, a query mixing
     already-cached terms with new ones must not KeyError — the evicted
@@ -234,12 +257,11 @@ def test_term_cache_eviction_keeps_this_querys_hit_terms(engine):
 
 
 def test_stale_postings_raise_unless_stale_ok(spark, tmp_path):
-    """The serving-freshness contract (operators/staleness), mirroring
-    plans/secondary's stale_ok lookups: once the chunks table moves
-    past the postings' covers-stamp — the state where the ENGINE falls
-    back to the index-free scan, which a serving process cannot do — the
-    query raises StaleServingError; stale_ok=True serves the postings
-    as-of their own stamp; optimize() restores the strict path."""
+    """The serving-freshness contract (operators/staleness): once the
+    chunks table moves past the postings' covers-stamp — the state where
+    the ENGINE falls back to the index-free scan, which a serving process
+    cannot do — the query raises StaleServingError; optimize() restores
+    the strict path."""
     from mcp_local_rag_spark.operators.staleness import StaleServingError
 
     root = tmp_path
@@ -264,46 +286,5 @@ def test_stale_postings_raise_unless_stale_ok(spark, tmp_path):
     assert not eng.index_is_fresh()
     with pytest.raises(StaleServingError, match="stale"):
         srv.query("shuffle executors")
-    # the escape hatch serves index-as-of-its-stamp (old keyword signal,
-    # current vector matrix), explicitly opted into
-    assert srv.query("shuffle executors", stale_ok=True)
     eng.optimize()
     assert srv.query("shuffle executors")  # strict path restored
-
-
-def test_hybrid_at_version_pins_served_snapshot(spark, tmp_path):
-    from mcp_local_rag_spark.operators.staleness import StaleServingError
-    from mcp_local_rag_spark.plans.ingest import table_content_stamp
-
-    root = tmp_path
-    d = root / "docs"
-    d.mkdir()
-    (d / "a.md").write_text(
-        "# A\n\nSpark shuffles data between executors during wide stages."
-    )
-    eng = RagEngine(spark, str(root / "chunks_pin"), db_path=str(root / "db"))
-    eng.ingest_directory(str(d))
-    srv = HybridSearchServer(eng.table_path, eng.postings_path,
-                             db_path=str(root / "db"))
-    v1 = table_content_stamp(eng.table_path)
-    pinned = srv.query("shuffle executors", at_version=v1)
-    assert {r["filePath"] for r in pinned} == {str(d / "a.md")}
-
-    (d / "b.md").write_text(
-        "# B\n\nShuffle shuffle shuffle executors everywhere in this doc."
-    )
-    eng.ingest_file(str(d / "b.md"))
-    eng.optimize()
-    v2 = table_content_stamp(eng.table_path)
-    # pinned to v1 while the cache still holds v1: same rows, and the
-    # postings covering v2 are judged against the PIN (consistent cache)
-    # ... postings now cover v2 != v1, so the pin read is only consistent
-    # if the caller also accepts the stale postings explicitly
-    assert srv.query("shuffle executors", at_version=v1, stale_ok=True) == pinned
-    with pytest.raises(StaleServingError):
-        srv.query("shuffle executors", at_version=v1)  # postings moved on
-    fresh = srv.query("shuffle executors", at_version=v2)
-    assert {r["filePath"] for r in fresh} >= {str(d / "b.md")}
-    # after the refresh, v1 is no longer resident
-    with pytest.raises(StaleServingError, match="not reachable"):
-        srv.query("shuffle executors", at_version=v1)

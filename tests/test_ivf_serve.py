@@ -798,15 +798,12 @@ def test_split_aborts_if_marker_vanishes_before_commit(
 
 def test_ivf_serving_staleness_contract(spark, tmp_path):
     """operators/staleness on the chunks-backed IVF lane: once the table
-    moves past the index's covers-stamp, queries raise StaleServingError
-    unless stale_ok=True serves the index as-of its stamp; at_version
-    pins to the covered version; a rebuild restores the strict path.
-    Indexes without chunks provenance (built straight from embeddings)
-    carry no proof and keep serving."""
+    moves past the index's covers-stamp, queries raise StaleServingError;
+    a rebuild restores the strict path. Indexes without chunks provenance
+    (built straight from embeddings) carry no proof and keep serving."""
     from mcp_local_rag_spark.embedder import pseudo_embed
     from mcp_local_rag_spark.engine import RagEngine
     from mcp_local_rag_spark.operators.staleness import StaleServingError
-    from mcp_local_rag_spark.plans.ingest import read_table_meta
 
     d = tmp_path / "docs"
     d.mkdir()
@@ -824,9 +821,7 @@ def test_ivf_serving_staleness_contract(spark, tmp_path):
         payload_cols=("filePath", "chunkIndex"),
     )
     qv = pseudo_embed("substantial corpus content", 64)
-    covered = read_table_meta(eng.ann_index_path)["covers_table_version"]
     assert srv.query(qv, 3, nprobe=2)
-    assert srv.query(qv, 3, nprobe=2, at_version=covered)  # pin == covers
 
     eng.ingest_data(
         "A new raw note with plenty of durable content to chunk, long "
@@ -836,33 +831,30 @@ def test_ivf_serving_staleness_contract(spark, tmp_path):
     assert not eng.ann_index_is_fresh()
     with pytest.raises(StaleServingError, match="stale"):
         srv.query(qv, 3, nprobe=2)
-    # explicit opt-in: serve the index as-of its own stamp
-    assert srv.query(qv, 3, nprobe=2, stale_ok=True)
-    # the pin to the covered version is still internally consistent
-    assert srv.query(qv, 3, nprobe=2, at_version=covered)
-    with pytest.raises(StaleServingError, match="not reachable"):
-        srv.query(qv, 3, nprobe=2, at_version="bogus")
 
     eng.build_ann_index(n_cells=2)
     srv.invalidate()
     assert srv.query(qv, 3, nprobe=2)  # strict path restored
 
 
-def test_ivf_index_without_provenance_serves_unchecked(spark, index):
+def test_ivf_index_without_provenance_serves_unchecked(
+    spark, index, monkeypatch
+):
     """The module fixture index is built from embeddings (meta source
-    'label'): no chunks provenance, no covers proof — stale_ok/at_version
-    surface exists but nothing can prove staleness, so it serves."""
-    from mcp_local_rag_spark.embedder import pseudo_embed
-    from mcp_local_rag_spark.operators.staleness import StaleServingError
-
-    srv = IvfVectorServer(index)
-    qv = [0.0] * 64
+    'label'): no chunks provenance, no covers proof — nothing can prove
+    staleness, so it serves without running the covers check."""
     import numpy as np
 
+    from mcp_local_rag_spark.embedder import pseudo_embed
+    from mcp_local_rag_spark.operators import staleness
+
+    def no_check(*args):
+        raise AssertionError("covers check ran on a provenance-free index")
+
+    monkeypatch.setattr(staleness, "check_covers", no_check)
+    srv = IvfVectorServer(index)
     qv = list(np.asarray(pseudo_embed("anything", 64), dtype=float))
-    assert srv.query(qv, 3, nprobe=2) == srv.query(qv, 3, nprobe=2, stale_ok=True)
-    with pytest.raises(StaleServingError, match="not reachable"):
-        srv.query(qv, 3, nprobe=2, at_version="v-that-never-was")
+    assert srv.query(qv, 3, nprobe=2)
 
 
 def test_ivf_maintain_races_live_appender_and_converges(spark, tmp_path):

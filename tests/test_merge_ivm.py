@@ -2059,14 +2059,6 @@ def test_snapshot_reader_stays_fresh_across_commits(spark, table):
     assert reader.lookup(50, version=1)[0]["v"] == 150
 
 
-def test_snapshot_reader_lookup_many(spark, table):
-    from mcp_local_rag_spark.plans.point_read import SnapshotReader
-
-    reader = SnapshotReader(table)
-    got = {r["k"]: r["v"] for r in reader.lookup_many([1, 2, 3, 999999])}
-    assert got == {1: 3, 2: 6, 3: 9}
-
-
 def test_writers_self_heal_wedged_pointer(spark, tmp_path):
     """EVERY writer entry point (not just merge retries) heals a stale
     CURRENT pointer: an ivm_apply against a view whose last committer

@@ -262,14 +262,14 @@ def test_query_terms_match_corpus_tokenizer(text):
     expression in pure Python: split on the same pattern, drop empties."""
     import re
 
-    from mcp_local_rag_spark.engine import _query_terms
+    from mcp_local_rag_spark.functions.text import query_terms
 
     spark_twin = [t for t in re.split(r"[^a-z0-9]+", text.lower()) if t != ""]
-    assert _query_terms(text) == spark_twin
+    assert query_terms(text) == spark_twin
     # and every emitted term is itself a fixpoint (re-tokenizing a term
     # yields the term): terms are always directly matchable postings keys
-    for t in _query_terms(text):
-        assert _query_terms(t) == [t]
+    for t in query_terms(text):
+        assert query_terms(t) == [t]
 
 
 @given(

@@ -282,10 +282,10 @@ def test_batch_fast_path_matches_spark_path(served):
 
 
 def test_request_cache_hygiene(served, spark):
-    """The adapter unpersists exactly the request's own intermediates
-    (plans/cache.persist_scope), never the blanket clearCache() of old:
-    a pre-warmed cached frame must survive unrelated requests, and a
-    request loop must not grow the cache manager."""
+    """Requests leave the cache manager as they found it, never the
+    blanket clearCache() of old: a pre-warmed cached frame must survive
+    unrelated requests, and a request loop must not grow the cache
+    manager."""
     server, _ = served
     # force the SPARK query path: the hybrid sidecar never persists, and
     # neither does hybrid_search (collected stages, LocalRelation answer)

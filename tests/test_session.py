@@ -87,7 +87,7 @@ def test_query_documents_is_three_jobs_and_persists_nothing(
     """Spark runs the vector top-k (one job) and one term-grouped postings
     aggregate; the driver reranks the candidates and returns a
     LocalRelation, so collecting the answer submits no job, and no RDD
-    stays persisted — with no plans.cache.persist_scope around the call."""
+    stays persisted."""
     eng = wide_engine
     query = "shared words about topic7"
     eng.query_documents(query, limit=5).collect()  # warm the schema caches

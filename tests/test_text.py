@@ -116,12 +116,14 @@ def test_scope_predicate_root_matches_every_absolute_path(spark):
 
 
 def test_query_terms_agree_with_spark_tokens_on_adversarial_text(spark):
-    """The Python query tokenizer and the JVM corpus tokenizer must agree
-    byte-for-byte, including unicode case-folding edges — disagreement
-    means a query term that can never match its own document's posting."""
+    """The Python query tokenizer (functions/text.query_terms, shared by
+    the engine and the hybrid sidecar) and the JVM corpus tokenizer must
+    agree byte-for-byte on ASCII words, punctuation, digits and non-Latin
+    scripts, including unicode case-folding edges — disagreement means a
+    query term that can never match its own document's posting."""
     from pyspark.sql import functions as F
 
-    from mcp_local_rag_spark.engine import _query_terms
+    from mcp_local_rag_spark.functions.text import query_terms
     from mcp_local_rag_spark.functions import text as TX
 
     cases = [
@@ -135,6 +137,14 @@ def test_query_terms_agree_with_spark_tokens_on_adversarial_text(spark):
         "",
         "    ",
         "...!!!",
+        "a.b,c;d:e!f?g(h)i[j]k{l}m/n\\o|p-q_r+s=t*u&v^w%x$y#z@",
+        "0 42 007 3.14 1e9 v2 2024-10-19",
+        "Ελληνικά ΣΟΦΙΑ σοφός",  # non-Latin scripts: every letter separates
+        "Русский ТЕКСТ ёж",
+        "中文文本 日本語テキスト 한국어",
+        "العربية ٣٤٥ עברית",  # non-ASCII digits separate too
+        "हिन्दी १२३ ไทย",
+        "KÅ kelvin İi ı ǅ ﬁ x²",  # KELVIN SIGN lowercases to ASCII 'k'
     ]
     df = spark.createDataFrame([(c,) for c in cases], "t string")
     jvm = {
@@ -142,4 +152,4 @@ def test_query_terms_agree_with_spark_tokens_on_adversarial_text(spark):
         for r in df.select("t", TX.tokens(F.col("t")).alias("toks")).collect()
     }
     for c in cases:
-        assert _query_terms(c) == jvm[c], repr(c)
+        assert query_terms(c) == jvm[c], repr(c)

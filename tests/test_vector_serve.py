@@ -184,117 +184,50 @@ def test_unversioned_table_never_pins_a_stale_snapshot(spark, tmp_path):
     ]
 
 
-def test_at_version_pins_a_consistent_snapshot(spark, tmp_path):
-    """at_version (operators/staleness): queries pinned to one table
-    content stamp keep reading that snapshot while mutations land; an
-    unreachable pin raises StaleServingError (plans/secondary's
-    at_source_version contract, uniform across the serving tier)."""
+def test_mid_load_mutation_is_served_then_reloaded(spark, tmp_path, monkeypatch):
+    """A write that commits while a snapshot loads (after the stamp read,
+    before the rows are read) must not stick: this query answers from the
+    rows it read, and the next query sees the stamp moved and reloads the
+    new rows. The snapshot is labeled with the stamp read BEFORE the data,
+    so a label can only be older than the rows it holds."""
+    import pyarrow.dataset as pads
+
     from mcp_local_rag_spark.embedder import embed_text_column
-    from mcp_local_rag_spark.operators.staleness import StaleServingError
-    from mcp_local_rag_spark.plans.ingest import table_content_stamp
-
-    table = str(tmp_path / "pin_chunks")
-    rows = spark.range(40).select(
-        F.concat(F.lit("/p/d"), F.col("id").cast("string"), F.lit(".md")).alias(
-            "filePath"
-        ),
-        F.lit(0).alias("chunkIndex"),
-        F.concat(F.lit("text "), F.col("id").cast("string")).alias("text"),
-    )
-    write_chunks(embed_text_column(rows, "text", "vector", dim=32), table)
-    srv = VectorSearchServer(table)
-    qv = pseudo_embed("text 7", 32)
-    v1 = table_content_stamp(table)
-    pinned = srv.query(qv, 5, at_version=v1)
-    assert len(pinned) == 5
-
-    # mutation lands; an unpinned query self-refreshes, the pinned one
-    # keeps serving the v1 snapshot from the resident cache
-    extra = spark.range(40, 80).select(
-        F.concat(F.lit("/p/x"), F.col("id").cast("string"), F.lit(".md")).alias(
-            "filePath"
-        ),
-        F.lit(0).alias("chunkIndex"),
-        F.concat(F.lit("text "), F.col("id").cast("string")).alias("text"),
-    )
-    write_chunks(
-        embed_text_column(extra, "text", "vector", dim=32), table, mode="append"
-    )
-    v2 = table_content_stamp(table)
-    assert v2 != v1
-    assert srv.query(qv, 5, at_version=v1) == pinned  # pinned: stable
-    fresh = srv.query(qv, 80, at_version=v2)
-    assert len(fresh) == 80  # the new stamp serves the grown corpus
-    # v1 is no longer resident (the v2 load replaced the snapshot)
-    with pytest.raises(StaleServingError, match="not reachable"):
-        srv.query(qv, 5, at_version=v1)
-    with pytest.raises(StaleServingError, match="not reachable"):
-        srv.query(qv, 5, at_version="nonsense")
-    # stale_ok is accepted (uniform surface) and a no-op here
-    assert srv.query(qv, 80, stale_ok=True) == fresh
-
-
-def test_mid_load_mutation_never_mislabels_a_pinned_snapshot(
-    spark, tmp_path, monkeypatch
-):
-    """Round-13 review finding: the stamp used to be read only BEFORE the
-    data, so a mutation landing mid-load produced newer data cached under
-    the old stamp — which an at_version pin then served forever as 'the
-    pinned snapshot'. The stability loop re-reads the stamp after the
-    data; a load that lands past the pin raises instead of lying, and the
-    snapshot is labeled with the version it actually holds."""
-    from mcp_local_rag_spark.embedder import embed_text_column
-    from mcp_local_rag_spark.operators import vector_serve as vs_mod
-    from mcp_local_rag_spark.operators.staleness import StaleServingError
-    from mcp_local_rag_spark.plans.ingest import table_content_stamp
 
     table = str(tmp_path / "midload")
-    rows = spark.range(20).select(
-        F.concat(F.lit("/m/d"), F.col("id").cast("string"), F.lit(".md")).alias(
-            "filePath"
-        ),
-        F.lit(0).alias("chunkIndex"),
-        F.concat(F.lit("text "), F.col("id").cast("string")).alias("text"),
-    )
-    write_chunks(embed_text_column(rows, "text", "vector", dim=16), table)
-    v1 = table_content_stamp(table)
+
+    def rows(lo, hi):
+        return embed_text_column(
+            spark.range(lo, hi).select(
+                F.concat(F.lit("/m/d"), F.col("id").cast("string"), F.lit(".md"))
+                .alias("filePath"),
+                F.lit(0).alias("chunkIndex"),
+                F.concat(F.lit("text "), F.col("id").cast("string")).alias("text"),
+            ),
+            "text", "vector", dim=16,
+        )
+
+    write_chunks(rows(0, 20), table)
     srv = VectorSearchServer(table)
     qv = pseudo_embed("text 3", 16)
 
-    # simulate: the pre-read stamp says v1, every later read says v2
-    # (an ingest committed between the stamp read and the data read)
-    calls = {"n": 0}
-    import mcp_local_rag_spark.plans.ingest as ingest_mod
+    real = pads.dataset
+    state = {"armed": True}
 
-    real = ingest_mod.table_content_stamp
+    def racy(source, *args, **kw):
+        if source != table or not state["armed"]:
+            return real(source, *args, **kw)
+        state["armed"] = False
+        before = real(source, *args, **kw).to_table()  # the rows read...
+        write_chunks(rows(20, 40), table, mode="append")  # ...as a write lands
+        return pads.InMemoryDataset(before)
 
-    def racy(path):
-        calls["n"] += 1
-        return v1 if calls["n"] == 1 else "v2-after-mutation"
-
-    monkeypatch.setattr(ingest_mod, "table_content_stamp", racy)
-    with pytest.raises(StaleServingError, match="moved past pinned"):
-        srv.query(qv, 3, at_version=v1)
-    # the resident snapshot is labeled with what it actually holds (the
-    # POST stamp), never the pre-read v1 — so a later v1 pin cannot hit
-    # a contaminated cache
-    assert srv._snap[4] == "v2-after-mutation"
-    with pytest.raises(StaleServingError, match="not reachable"):
-        srv.query(qv, 3, at_version=v1)
-    monkeypatch.setattr(ingest_mod, "table_content_stamp", real)
-
-    # a stamp that NEVER stabilizes labels the snapshot None: servable,
-    # never cacheable/pinnable (the next query reloads)
-    calls2 = {"n": 0}
-
-    def thrash(path):
-        calls2["n"] += 1
-        return f"v{calls2['n']}"
-
-    monkeypatch.setattr(ingest_mod, "table_content_stamp", thrash)
-    srv2 = VectorSearchServer(table)
-    assert len(srv2.query(qv, 3)) == 3  # still serves
-    assert srv2._snap[4] is None
-    monkeypatch.setattr(ingest_mod, "table_content_stamp", real)
-    assert len(srv2.query(qv, 3)) == 3
-    assert srv2._snap[4] == table_content_stamp(table)  # healed
+    monkeypatch.setattr(pads, "dataset", racy)
+    assert len(srv.query(qv, 100)) == 20
+    assert not state["armed"]
+    got = srv.query(qv, 100)
+    assert len(got) == 40
+    assert got == [
+        {"filePath": r[0], "chunkIndex": r[1], "score": r[2]}
+        for r in _spark_topk(spark, table, qv, 100)
+    ]
