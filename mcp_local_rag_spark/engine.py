@@ -18,7 +18,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .embedder import embed_query, embed_text_column, pseudo_embed  # noqa: F401
+from .embedder import embed_query
 from .operators import search
 from .session import read_parquet
 from .operators.bm25 import bm25_scores, build_postings
@@ -32,12 +32,11 @@ from .plans.ingest import (
     compact_chunks,
     delete_document,
     delete_documents,
-    delete_documents_df,
     ingest_directory,
+    parse_hashed,
     table_n_buckets,
     write_chunks,
 )
-from .sources.parsers import parse_files
 from .sources.scan import read_files, scan_directory
 
 
@@ -80,7 +79,7 @@ class RagEngine:
         *,
         dim: int = 64,
         backend: str = "pseudo",
-        postings_path: str | None = "auto",
+        postings_path: str = "auto",
         db_path: str = "/data/db",
     ):
         """``postings_path`` names the maintained BM25 postings index
@@ -88,10 +87,9 @@ class RagEngine:
         optimize(), and query_documents/keyword_search score against it
         instead of re-tokenizing the corpus per query — the reference's
         transparent FTS index (src/vectordb/index.ts:243-324). The index
-        is ON by default (``"auto"`` resolves to ``<table_path>_fts``,
-        matching the reference where the FTS index is an unconditional
-        part of the table, src/vectordb/index.ts:243-282); pass ``None``
-        to opt OUT, which keeps scoring on the index-free scan shape."""
+        is an unconditional part of the table, as in the reference
+        (src/vectordb/index.ts:243-282); ``"auto"`` resolves to
+        ``<table_path>_fts``."""
         self.spark = spark
         self.table_path = table_path
         self.dim = dim
@@ -128,17 +126,6 @@ class RagEngine:
         self._intent_ann: dict | None = None
         self._load_index_intent()
 
-    def _attributed(self):
-        """attribute_mutations for this engine's table — or a no-op when
-        the postings index is opted out (postings_path=None): with no
-        intent consumer, recording version chains would only grow an
-        orphan sidecar nothing ever clears."""
-        from contextlib import nullcontext
-
-        if self.postings_path is None:
-            return nullcontext()
-        return attribute_mutations(self.table_path)
-
     def _mark_index_dirty(
         self,
         *,
@@ -160,8 +147,6 @@ class RagEngine:
         self._dirty_deletes.difference_update(upserts)
         self._dirty_deletes.update(deletes)
         self._dirty_upserts.difference_update(deletes)
-        if self.postings_path is None:
-            return
         from .plans.engine_txn import publish_intent
 
         publish_intent(
@@ -193,7 +178,7 @@ class RagEngine:
         if it.get("full") or it.get("refreshing"):
             self._needs_full_index = True
             return
-        if self._needs_full_index and self.postings_path is not None:
+        if self._needs_full_index:
             from .plans.fts import index_has_data, read_fts_stats
             from .plans.ingest import read_table_meta, table_version
 
@@ -220,7 +205,7 @@ class RagEngine:
         with its recorded parameters. Idempotent; a clean engine is a
         no-op. Returns {"fts": bool, "ann": bool} (what actually ran)."""
         report = {"fts": False, "ann": False}
-        if self.postings_path is not None and self._exists() and not self.index_is_fresh():
+        if self._exists() and not self.index_is_fresh():
             self.optimize()
             report["fts"] = True
         if self._intent_ann is not None and self._exists():
@@ -277,7 +262,7 @@ class RagEngine:
         from .plans.fts import index_has_data, read_fts_stats
         from .plans.ingest import read_table_meta, table_version
 
-        if self.postings_path is None or not os.path.isdir(self.postings_path):
+        if not os.path.isdir(self.postings_path):
             return False
         tv = table_version(self.table_path)
         if tv is None:  # legacy table without version stamps
@@ -379,8 +364,7 @@ class RagEngine:
         from .plans.fts import index_has_data
 
         return not (
-            self.postings_path is None
-            or self._needs_full_index
+            self._needs_full_index
             or self._dirty_upserts
             or self._dirty_deletes
             or not os.path.isdir(self.postings_path)
@@ -405,7 +389,7 @@ class RagEngine:
     def _fts_stats(self) -> dict | None:
         from .plans.fts import read_fts_stats
 
-        return read_fts_stats(self.postings_path) if self.postings_path else None
+        return read_fts_stats(self.postings_path)
 
     def query_documents(
         self,
@@ -635,7 +619,9 @@ class RagEngine:
         the maintained postings index without any explicit caller step."""
         eb, ed = self._space()
         chunks, _ = ingest_directory(self.spark, root, dim=ed, backend=eb)
-        return self._bulk_commit(chunks, eb, ed)
+        self._commit(chunks, eb, ed)
+        self.optimize()
+        return self.chunks().count()
 
     def ingest_shards(self, shard_paths: list[str]) -> int:
         """Bulk ingest from WebDataset tar shards — same commit shape as
@@ -660,21 +646,81 @@ class RagEngine:
         }
         eb, ed = self._space()
         chunks = ingest_webdataset(self.spark, shard_paths, dim=ed, backend=eb)
-        n = self._bulk_commit(chunks, eb, ed)
+        self._commit(chunks, eb, ed)
+        self.optimize()
         self._set_shard_containers({**self._shard_containers(), **hashes})
-        return n
+        return self.chunks().count()
 
-    def _bulk_commit(self, chunks: DataFrame, eb: str, ed: int) -> int:
-        """The shared bulk-ingest commit tail: append/overwrite write,
-        full index-dirty mark, one optimize(). One code path so the two
-        bulk sources can never diverge on commit ordering."""
-        mode = "append" if self._exists() else "overwrite"
-        self._mark_index_dirty(full=True)
-        with self._attributed():
+    def _commit(
+        self,
+        chunks: DataFrame,
+        eb: str,
+        ed: int,
+        *,
+        upserts: list[str] | set[str] | None = None,
+        replace: bool = False,
+    ) -> None:
+        """The one write tail of every ingest source: record the index
+        work, delete the stored rows being replaced, append the new rows
+        (or create the table) and refresh Spark's listing of it.
+
+        ``upserts`` are the paths whose postings the next optimize()
+        re-derives; None records a full index rebuild (bulk ingest).
+        ``replace`` deletes the stored rows of exactly those paths before
+        the write — the parquet analogue of the reference's backup/
+        delete/insert transaction (src/server/index.ts:644-702). Writers
+        whose stale rows are not the upserted paths prune them first
+        (``_prune``). The intent is recorded before the table changes
+        (crash-durable ordering, plans/engine_txn)."""
+        self._mark_index_dirty(full=upserts is None, upserts=upserts or ())
+        with attribute_mutations(self.table_path):
+            if replace and self._exists():
+                delete_documents(self.spark, self.table_path, sorted(upserts))
+            mode = "append" if self._exists() else "overwrite"
             write_chunks(chunks, self.table_path, mode=mode, backend=eb, dim=ed)
         self.spark.catalog.refreshByPath(self.table_path)
-        self.optimize()
-        return self.chunks().count()
+
+    def _prune(self, keys: DataFrame, *, stored: bool) -> int:
+        """Delete every row whose key is in the one-column ``keys`` frame,
+        recording the index work first. Returns the number of keys.
+
+        ``stored`` says the keys are stored ``filePath`` spellings, deleted
+        by exact match; otherwise they are sync keys, matched against the
+        table's sync keys (case-folded on case-folding platforms). The
+        index refresh stays per path when the paths are known and bounded
+        (``_bounded``); sync keys on a case-folding platform, or more than
+        PRUNE_COLLECT_CAP paths, mark a full rebuild instead. The keys are
+        persisted: one snapshot serves the count, the collect and the
+        delete, which rewrites the files they may be read from."""
+        from .plans.ingest import delete_documents_df
+
+        keys = keys.persist()
+        try:
+            paths = self._bounded(keys) if stored or not CASE_FOLD_KEYS else None
+            n = len(paths) if paths is not None else keys.count()
+            if n:
+                self._mark_index_dirty(full=paths is None, deletes=paths or ())
+                with attribute_mutations(self.table_path):
+                    delete_documents_df(
+                        self.spark,
+                        self.table_path,
+                        keys,
+                        case_fold=CASE_FOLD_KEYS and not stored,
+                    )
+        finally:
+            keys.unpersist()
+        return n
+
+    @staticmethod
+    def _bounded(paths: DataFrame) -> list[str] | None:
+        """The values of the one-column ``paths`` when there are at most
+        PRUNE_COLLECT_CAP of them, else None: a larger change rebuilds
+        the index instead of materializing an unbounded path list on the
+        driver (at most PRUNE_COLLECT_CAP + 1 values are collected)."""
+        rows = paths.limit(PRUNE_COLLECT_CAP + 1).collect()
+        if len(rows) > PRUNE_COLLECT_CAP:
+            return None
+        return [r[0] for r in rows]
 
     def _shard_containers(self) -> dict[str, str]:
         """Tar shards whose ``<shard>#<sample>.<slot>`` rows this engine
@@ -728,7 +774,7 @@ class RagEngine:
         replaces any stored rows from a previously text-bearing version."""
         import glob as _glob
 
-        from .plans.ingest import delete_documents_df, ingest_webdataset
+        from .plans.ingest import ingest_webdataset
         from .plans.repack import recover_pending_repack
 
         spark = self.spark
@@ -846,59 +892,26 @@ class RagEngine:
             # was parsed successfully (parse-before-delete satisfied), so
             # its new truth — no rows — replaces the stored ones.
             replaced = [p for p in upserts if p in produced or p in clean_empty]
-            kept = chunks.filter(shard_of.isin(sorted(produced)))
-            stale_paths: list[str] = []
             if self._exists() and replaced:
-                stale = (
+                # the stale rows are stored spellings: exact-match delete
+                self._prune(
                     self.chunks()
                     .filter(self._shard_row_pred(replaced))
-                    .select(F.col("filePath").alias("key"))
-                    .distinct()
-                    .persist()
+                    .select("filePath")
+                    .distinct(),
+                    stored=True,
                 )
-                n_stale = stale.count()
-                stale_paths = (
-                    [r["key"] for r in stale.collect()]
-                    if n_stale <= PRUNE_COLLECT_CAP
-                    else []
-                )
-                stale_is_bounded = n_stale <= PRUNE_COLLECT_CAP
-            else:
-                stale = None
-                stale_is_bounded = True
-            # index-dirty marking is INCREMENTAL when the touched path
-            # sets are bounded — a 2-shard edit must cost an O(changed)
-            # postings refresh, not an O(corpus) rebuild (the directory
-            # sync's PRUNE_COLLECT_CAP discipline). Paths are recorded
-            # BEFORE the mutation (crash-durable intent ordering).
-            new_paths = [
-                r["filePath"]
-                for r in kept.select("filePath").distinct().limit(
-                    PRUNE_COLLECT_CAP + 1
-                ).collect()
-            ]
-            if (
-                not CASE_FOLD_KEYS
-                and stale_is_bounded
-                and len(new_paths) <= PRUNE_COLLECT_CAP
-            ):
-                self._mark_index_dirty(
-                    upserts=new_paths,
-                    deletes=set(stale_paths) - set(new_paths),
-                )
-            else:
-                self._mark_index_dirty(full=True)
-            if stale is not None:
-                with self._attributed():
-                    delete_documents_df(
-                        spark, self.table_path, stale, case_fold=CASE_FOLD_KEYS
-                    )
-                stale.unpersist()
             if produced:
-                mode = "append" if self._exists() else "overwrite"
-                with self._attributed():
-                    write_chunks(kept, self.table_path, mode=mode, backend=eb, dim=ed)
-                spark.catalog.refreshByPath(self.table_path)
+                # per-path index refresh while the touched path set is
+                # bounded — a 2-shard edit costs an O(changed) postings
+                # refresh, not an O(corpus) rebuild
+                kept = chunks.filter(shard_of.isin(sorted(produced)))
+                self._commit(
+                    kept,
+                    eb,
+                    ed,
+                    upserts=self._bounded(kept.select("filePath").distinct()),
+                )
             chunks.unpersist()
             counters["upsert_new"] = len(
                 [p for p in new if p in produced or p in clean_empty]
@@ -908,26 +921,13 @@ class RagEngine:
             )
 
         if gone and self._exists():
-            stale = (
+            self._prune(
                 self.chunks()
                 .filter(self._shard_row_pred(gone))
-                .select(F.col("filePath").alias("key"))
-                .distinct()
-                .persist()
+                .select("filePath")
+                .distinct(),
+                stored=True,
             )
-            n_stale = stale.count()
-            if n_stale:
-                if n_stale <= PRUNE_COLLECT_CAP and not CASE_FOLD_KEYS:
-                    self._mark_index_dirty(
-                        deletes=[r["key"] for r in stale.collect()]
-                    )
-                else:
-                    self._mark_index_dirty(full=True)
-                with self._attributed():
-                    delete_documents_df(
-                        spark, self.table_path, stale, case_fold=CASE_FOLD_KEYS
-                    )
-            stale.unpersist()
             counters["prune"] = len(gone)
 
         if upserts or gone:
@@ -995,32 +995,27 @@ class RagEngine:
         chunks after the document's text chunks before the write.
         """
         file_path = os.path.abspath(file_path)
-        spark = self.spark
-        content = read_files(spark, [file_path])
-        hashed = content.withColumn(
-            "contentHash", F.lower(F.sha2(F.col("content"), 256))
-        )
-        parsed = parse_files(hashed).join(
-            hashed.select("path", "contentHash", "length"), "path"
-        )
-        docs = parsed.filter(F.col("parse_error").isNull())
-        # one materialization serves both the error gate and the returned
-        # title — re-deriving the title after the write would re-read and
-        # re-parse the file (and could even describe content replaced on
-        # disk after the ingest)
-        head = parsed.select("parse_error", "title").first()
-        if head and head["parse_error"]:
-            raise ValueError(f"parse failed for {file_path}: {head['parse_error']}")
-        eb, ed = self._space()
-        new_chunks = build_chunks(docs, dim=ed, backend=eb).persist()
-        n = new_chunks.count()
+        files = read_files(self.spark, [file_path])
+        # the file is read and parsed once: the persisted row serves the
+        # error gate, the returned title and the chunk build
+        parsed = parse_hashed(files).persist()
+        try:
+            head = parsed.select("parse_error", "title").first()
+            if head and head["parse_error"]:
+                raise ValueError(
+                    f"parse failed for {file_path}: {head['parse_error']}"
+                )
+            eb, ed = self._space()
+            docs = parsed.filter(F.col("parse_error").isNull())
+            new_chunks = build_chunks(docs, dim=ed, backend=eb).persist()
+            n = new_chunks.count()
+        finally:
+            parsed.unpersist()
         if n and visual and file_path.lower().endswith(".pdf"):
             from .embedder import embed_text_column
             from .operators.multimodal import visual_caption_rows
 
-            cap = visual_caption_rows(
-                hashed, new_chunks, quality=visual_quality
-            )
+            cap = visual_caption_rows(files, new_chunks, quality=visual_quality)
             cap = embed_text_column(cap, "text", "vector", dim=ed, backend=eb)
             meta = new_chunks.select(
                 "filePath", "metadata", "fileTitle", "contentHash"
@@ -1045,19 +1040,14 @@ class RagEngine:
             n = merged.count()
             new_chunks.unpersist()
             new_chunks = merged
-        if n == 0:
+        try:
+            if n == 0:
+                raise ValueError(
+                    f"no chunks produced for {file_path}; existing rows left intact"
+                )
+            self._commit(new_chunks, eb, ed, upserts=[file_path], replace=True)
+        finally:
             new_chunks.unpersist()
-            raise ValueError(
-                f"no chunks produced for {file_path}; existing rows left intact"
-            )
-        self._mark_index_dirty(upserts=[file_path])
-        with self._attributed():
-            if self._exists():
-                delete_document(spark, self.table_path, file_path)
-            mode = "append" if self._exists() else "overwrite"
-            write_chunks(new_chunks, self.table_path, mode=mode, backend=eb, dim=ed)
-        new_chunks.unpersist()
-        spark.catalog.refreshByPath(self.table_path)
         return {
             "filePath": file_path,
             "chunkCount": n,
@@ -1114,20 +1104,15 @@ class RagEngine:
         )
         eb, ed = self._space()
         new_chunks = build_chunks(docs, dim=ed, backend=eb).persist()
-        n = new_chunks.count()
-        if n == 0:
+        try:
+            n = new_chunks.count()
+            if n == 0:
+                raise ValueError(
+                    f"no chunks produced for {source}; existing rows left intact"
+                )
+            self._commit(new_chunks, eb, ed, upserts=[path], replace=True)
+        finally:
             new_chunks.unpersist()
-            raise ValueError(
-                f"no chunks produced for {source}; existing rows left intact"
-            )
-        self._mark_index_dirty(upserts=[path])
-        with self._attributed():
-            if self._exists():
-                delete_document(self.spark, self.table_path, path)
-            mode = "append" if self._exists() else "overwrite"
-            write_chunks(new_chunks, self.table_path, mode=mode, backend=eb, dim=ed)
-        new_chunks.unpersist()
-        self.spark.catalog.refreshByPath(self.table_path)
         return n
 
     def ingest_records_file(self, file_path: str) -> dict:
@@ -1148,8 +1133,7 @@ class RagEngine:
         from .sources.structured import parse_structured_files
 
         file_path = os.path.abspath(file_path)
-        spark = self.spark
-        content = read_files(spark, [file_path])
+        content = read_files(self.spark, [file_path])
         # ONE materialization of the parsed container: the error check,
         # record count, and chunk build below all read the persisted
         # records instead of re-reading + re-parsing the file per job
@@ -1184,32 +1168,28 @@ class RagEngine:
                 )
         finally:
             records.unpersist()
-        stale: list[str] = []
-        if self._exists():
-            # every stored row of this container, under any previous record
-            # set — prefix match on '<file>#r', one batched delete
-            stale = [
-                r["filePath"]
-                for r in self.chunks()
-                .select("filePath")
-                .where(F.col("filePath").startswith(file_path + "#r"))
-                .distinct()
-                .collect()
-            ]
-        # index dirtiness is tracked at RECORD granularity — the postings
-        # refresh filters chunks by exact filePath, and stored rows live
-        # under the per-record paths, not the container path
-        new_paths = {f"{file_path}#r{i}" for i in range(n_records)}
-        self._mark_index_dirty(
-            upserts=new_paths, deletes=set(stale) - new_paths
-        )
-        with self._attributed():
-            if stale:
-                delete_documents(spark, self.table_path, stale)
-            mode = "append" if self._exists() else "overwrite"
-            write_chunks(new_chunks, self.table_path, mode=mode, backend=eb, dim=ed)
-        new_chunks.unpersist()
-        spark.catalog.refreshByPath(self.table_path)
+        try:
+            if self._exists():
+                # every stored row of this container, under any previous
+                # record set — prefix match on '<file>#r', one batched delete
+                self._prune(
+                    self.chunks()
+                    .select("filePath")
+                    .where(F.col("filePath").startswith(file_path + "#r"))
+                    .distinct(),
+                    stored=True,
+                )
+            # index dirtiness is tracked at RECORD granularity — the
+            # postings refresh filters chunks by exact filePath, and stored
+            # rows live under the per-record paths, not the container path
+            self._commit(
+                new_chunks,
+                eb,
+                ed,
+                upserts={f"{file_path}#r{i}" for i in range(n_records)},
+            )
+        finally:
+            new_chunks.unpersist()
         # record container membership as a table property: sync classifies
         # record rows by THIS set, never by the '#rN' path shape alone
         self._set_record_containers(self._record_containers() | {file_path})
@@ -1264,17 +1244,14 @@ class RagEngine:
         # leaves the path in the dirty sets, which the next optimize()
         # re-derives as a no-op — conservative, never wrong
         self._mark_index_dirty(deletes=[file_path])
-        with self._attributed():
-            n = delete_document(self.spark, self.table_path, file_path)
-        return n
+        with attribute_mutations(self.table_path):
+            return delete_document(self.spark, self.table_path, file_path)
 
     def optimize(self) -> None:
         """S9 + index refresh — the reference's amortized per-bulk-run
         ``optimize()`` (compaction + FTS refresh in one call,
         src/vectordb/index.ts:310-324)."""
         compact_chunks(self.spark, self.table_path)
-        if self.postings_path is None:
-            return
         from .plans.engine_txn import clear_fts_intent, publish_intent
         from .plans.fts import refresh_postings, write_postings
 
@@ -1493,14 +1470,8 @@ class RagEngine:
             # 'existing rows left intact' contract. Deleting first would
             # turn a transient parse failure into permanent data loss that
             # the report counts as a successful upsert.
-            content = read_files(spark, upsert_paths)
-            hashed = content.withColumn(
-                "contentHash", F.lower(F.sha2(F.col("content"), 256))
-            )
-            parsed = parse_files(hashed).join(
-                hashed.select("path", "contentHash", "length"), "path"
-            )
-            docs = parsed.filter(F.col("parse_error").isNull())
+            docs = parse_hashed(read_files(spark, upsert_paths))
+            docs = docs.filter(F.col("parse_error").isNull())
             eb, ed = self._space()
             new_chunks = build_chunks(docs, dim=ed, backend=eb).persist()
             produced = {
@@ -1512,33 +1483,25 @@ class RagEngine:
                     upsert_warnings.append(
                         f"upsert skipped (parse failed or no chunks), stored rows kept: {p}"
                     )
-            produced_keys = sorted(_py_sync_key(p) for p in produced)
-            done_paths = [p for p in upsert_paths if p in produced]
-            self._mark_index_dirty(upserts=done_paths)
-            if self._exists() and produced_keys:
-                if CASE_FOLD_KEYS:
-                    # stored spellings differing from the re-ingested path
-                    # can hold postings rows the per-path refresh would
-                    # miss; on case-folding platforms a spelling-churn sync
-                    # rebuilds the index instead of guessing
-                    self._mark_index_dirty(full=True)
-                # ALL stored spellings of the SUCCESSFULLY re-parsed keys
-                # go in ONE DataFrame-native batched delete (anti-join
-                # bucket rewrite, one dynamic-partition-overwrite job).
-                with self._attributed():
-                    delete_documents_df(
-                        spark,
-                        self.table_path,
-                        plan.filter(F.col("action").isin("upsert", "upsert_new"))
-                        .filter(F.col("key").isin(produced_keys))
-                        .select("key"),
-                        case_fold=CASE_FOLD_KEYS,
-                    )
             if produced:
-                mode = "append" if self._exists() else "overwrite"
-                with self._attributed():
-                    write_chunks(new_chunks, self.table_path, mode=mode, backend=eb, dim=ed)
-                spark.catalog.refreshByPath(self.table_path)
+                if self._exists():
+                    # ALL stored spellings of the SUCCESSFULLY re-parsed
+                    # keys go in ONE DataFrame-native batched delete
+                    # (anti-join bucket rewrite). On case-folding
+                    # platforms a stored spelling differing from the
+                    # re-ingested path can hold postings rows the per-path
+                    # refresh would miss, so the prune marks a rebuild.
+                    produced_keys = sorted(_py_sync_key(p) for p in produced)
+                    self._prune(
+                        plan.filter(F.col("key").isin(produced_keys)).select("key"),
+                        stored=False,
+                    )
+                self._commit(
+                    new_chunks,
+                    eb,
+                    ed,
+                    upserts=[p for p in upsert_paths if p in produced],
+                )
             new_chunks.unpersist()
 
         n_prunes = counters.get("prune", 0)
@@ -1546,19 +1509,10 @@ class RagEngine:
             # the prune key set stays a DataFrame end-to-end — the delete
             # routes bucket rewrites by anti join, collecting only bucket
             # ids, so pruning the whole corpus never materializes its paths
-            prune_df = plan.filter(F.col("action") == "prune").select("key")
-            if n_prunes <= PRUNE_COLLECT_CAP and not CASE_FOLD_KEYS:
-                # small prune sets keep the postings refresh incremental
-                # (keys ARE stored paths on case-sensitive filesystems);
-                # beyond that a rebuild is proportional work anyway
-                pruned = [r["key"] for r in prune_df.collect()]
-                self._mark_index_dirty(deletes=pruned)
-            else:
-                self._mark_index_dirty(full=True)
-            with self._attributed():
-                delete_documents_df(
-                    spark, self.table_path, prune_df, case_fold=CASE_FOLD_KEYS
-                )
+            self._prune(
+                plan.filter(F.col("action") == "prune").select("key"),
+                stored=False,
+            )
 
         # record-container rows were excluded from the plan; the one sync
         # action they DO honor is container deletion — records of a
@@ -1572,31 +1526,18 @@ class RagEngine:
             # immune to lookalike file names
             gone = sorted(c for c in containers if c and not os.path.isfile(c))
             if gone:
-                # persist = a stable snapshot of the doomed record paths:
-                # the delete below rewrites the very files this frame reads
-                stale_df = (
+                n_stale_records = self._prune(
                     self.chunks()
                     .filter(F.col("filePath").rlike(r"#r\d+$"))
                     .filter(
                         F.regexp_extract("filePath", r"^(.*)#r\d+$", 1).isin(gone)
                     )
                     .select("filePath")
-                    .distinct()
-                    .persist()
+                    .distinct(),
+                    stored=True,
                 )
-                n_stale_records = stale_df.count()
                 if n_stale_records:
-                    if n_stale_records <= PRUNE_COLLECT_CAP:
-                        pruned = [r["filePath"] for r in stale_df.collect()]
-                        self._mark_index_dirty(deletes=pruned)
-                    else:
-                        self._mark_index_dirty(full=True)
-                    with self._attributed():
-                        delete_documents_df(
-                            spark, self.table_path, stale_df, case_fold=CASE_FOLD_KEYS
-                        )
                     counters["prune"] = counters.get("prune", 0) + n_stale_records
-                stale_df.unpersist()
                 # drop the pruned containers from the membership property
                 # (after the delete, so a failed delete keeps them managed)
                 self._set_record_containers(set(containers) - set(gone))

@@ -46,10 +46,8 @@ from .vector_serve import VectorSearchServer
 class HybridSearchServer:
     """query_documents at serving latency over the persisted tables."""
 
-    def __init__(self, table_path: str, postings_path: str | None = None, *,
+    def __init__(self, table_path: str, postings_path: str, *,
                  db_path: str = "/data/db"):
-        if postings_path is None:
-            postings_path = table_path.rstrip("/") + "_fts"
         self._table = table_path
         self._postings = postings_path
         self._db_path = db_path

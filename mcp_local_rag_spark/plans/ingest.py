@@ -208,15 +208,25 @@ def ingest_directory(
     Returns (chunks DataFrame, unobserved_prefixes coverage facts).
     """
     scan = scan_directory(root)
-    files = read_files(spark, [f["path"] for f in scan.files])
-    # content hash BEFORE parse — a mid-ingest rewrite re-ingests next sync
-    # (reference race-direction rationale, src/server/index.ts:583-591)
-    hashed = files.withColumn("contentHash", F.lower(F.sha2(F.col("content"), 256)))
-    parsed = parse_files(hashed).join(
-        hashed.select("path", "contentHash", "length"), "path"
-    )
-    docs = parsed.filter(F.col("parse_error").isNull())
+    docs = parse_hashed(read_files(spark, [f["path"] for f in scan.files]))
+    docs = docs.filter(F.col("parse_error").isNull())
     return build_chunks(docs, dim=dim, backend=backend), scan.unobserved_prefixes
+
+
+def parse_hashed(files: DataFrame) -> DataFrame:
+    """(path, length, content) -> parse_files' rows carrying
+    ``contentHash`` and ``length``: one scan of the bytes, one parse pass.
+    The hash is of the bytes the parse read, taken before the parse — a
+    mid-ingest rewrite re-ingests next sync (reference race-direction
+    rationale, src/server/index.ts:583-591)."""
+    return parse_files(
+        files.select(
+            "path",
+            "length",
+            "content",
+            F.lower(F.sha2(F.col("content"), 256)).alias("contentHash"),
+        )
+    )
 
 
 def build_chunks(
@@ -560,11 +570,5 @@ def ingest_webdataset(
     from ..sources.webdataset import pick_text_members, read_webdataset
 
     picked = pick_text_members(read_webdataset(spark, shard_paths, errors=errors))
-    hashed = picked.withColumn(
-        "contentHash", F.lower(F.sha2(F.col("content"), 256))
-    )
-    parsed = parse_files(hashed).join(
-        hashed.select("path", "contentHash", "length"), "path"
-    )
-    docs = parsed.filter(F.col("parse_error").isNull())
+    docs = parse_hashed(picked).filter(F.col("parse_error").isNull())
     return build_chunks(docs, dim=dim, backend=backend)

@@ -284,8 +284,7 @@ def repack_shards(
         # candidates' rowless text samples; a sample that yields no
         # chunks could never have contributed rows, so its absence from
         # the table is NOT curation and it must be kept
-        from ..sources.parsers import parse_files
-        from .ingest import build_chunks
+        from .ingest import build_chunks, parse_hashed
 
         dead = picked.filter(F.col("shard").isin(prelim)).join(
             live_text.select("shard", "sample_key"),
@@ -293,13 +292,12 @@ def repack_shards(
             "left_anti",
         )
         dead_ids = dead.select("shard", "sample_key", "text_path")
-        hashed = dead.select(
-            F.col("text_path").alias("path"),
-            "content",
-            F.col("size").alias("length"),
-        ).withColumn("contentHash", F.lower(F.sha2(F.col("content"), 256)))
-        parsed = parse_files(hashed).join(
-            hashed.select("path", "contentHash", "length"), "path"
+        parsed = parse_hashed(
+            dead.select(
+                F.col("text_path").alias("path"),
+                "content",
+                F.col("size").alias("length"),
+            )
         )
         producible_paths = (
             build_chunks(

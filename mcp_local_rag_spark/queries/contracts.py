@@ -67,8 +67,7 @@ def q_title_extraction_chains(spark, sf_dir):
             F.when(F.col("doc_id") % 2 == 0, md).otherwise(txt), "utf-8"
         ).alias("content"),
     )
-    parsed = parse_files(files).join(files.select("doc_id", "path"), "path")
-    return parsed.select(
+    return parse_files(files).select(
         "doc_id", F.col("title").alias("fileTitle")
     ).orderBy("doc_id")
 

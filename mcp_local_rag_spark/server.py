@@ -154,12 +154,8 @@ class RagRpcServer:
         # Spark path, whose scan fallback stays correct on a stale index
         from .operators.hybrid_serve import HybridSearchServer
 
-        self._hybrid = (
-            HybridSearchServer(
-                engine.table_path, engine.postings_path, db_path=engine.db_path
-            )
-            if engine.postings_path is not None
-            else None
+        self._hybrid = HybridSearchServer(
+            engine.table_path, engine.postings_path, db_path=engine.db_path
         )
         # the reference's single-writer mutation guard: one mutating tool
         # at a time; read-only tools bypass it (src/server/index.ts:396-403)
@@ -190,10 +186,6 @@ class RagRpcServer:
             "delete_document": (self._delete_document, True),
         }
 
-    def _invalidate_hybrid(self) -> None:
-        if self._hybrid is not None:
-            self._hybrid.invalidate()
-
     # -- read-only tools --------------------------------------------------
 
     def _query_documents(self, params: dict) -> dict:
@@ -204,7 +196,7 @@ class RagRpcServer:
             max_distance=_max_distance(params),
             grouping=_grouping(params),
         )
-        if self._hybrid is not None and self.engine.index_is_fresh():
+        if self.engine.index_is_fresh():
             return {"results": self._hybrid.query(q, **kw)}
         rows = self.engine.query_documents(q, **kw).collect()
         return {"results": [r.asDict() for r in rows]}
@@ -233,7 +225,7 @@ class RagRpcServer:
             max_distance=_max_distance(params),
             grouping=_grouping(params),
         )
-        if self._hybrid is not None and self.engine.index_is_fresh():
+        if self.engine.index_is_fresh():
             # the batch contract IS "row-identical to N single calls"
             # (engine.query_documents_batch docstring), so the sidecar
             # serves each query in ~10 ms — N small matmuls against the
@@ -315,7 +307,6 @@ class RagRpcServer:
         import resource
 
         eng = self.engine.get_status()
-        fts = self.engine.postings_path is not None
         # ru_maxrss is KiB on Linux
         rss_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024
         return {
@@ -323,8 +314,8 @@ class RagRpcServer:
             "chunkCount": eng["chunkCount"],
             "memoryUsage": int(rss_mb),
             "uptime": round(time.time() - self._started, 3),
-            "ftsIndexEnabled": fts,
-            "searchMode": "hybrid" if fts else "vector-only",
+            "ftsIndexEnabled": True,
+            "searchMode": "hybrid",
             # extension beyond the reference shape: ANN serving-tier
             # coverage, so a RESTARTED engine can report whether its
             # persisted IVF index still covers the current table version
@@ -442,7 +433,7 @@ class RagRpcServer:
         res = self.engine.ingest_file(fp, visual=visual, visual_quality=vq)
         self.engine.optimize()
         self.neighbors.invalidate()
-        self._invalidate_hybrid()
+        self._hybrid.invalidate()
         return {**res, "timestamp": _now_iso()}
 
     def _ingest_data(self, params: dict) -> dict:
@@ -464,7 +455,7 @@ class RagRpcServer:
         n = self.engine.ingest_data(content, source, format=fmt)
         self.engine.optimize()
         self.neighbors.invalidate()
-        self._invalidate_hybrid()
+        self._hybrid.invalidate()
         return {
             "filePath": source_to_path(source, self.engine.db_path),
             "source": source,
@@ -479,7 +470,7 @@ class RagRpcServer:
         n = self.engine.delete_document(fp)
         self.engine.optimize()
         self.neighbors.invalidate()
-        self._invalidate_hybrid()
+        self._hybrid.invalidate()
         return {"filePath": fp, "deletedChunks": n}
 
     def _delete_file(self, params: dict) -> dict:
@@ -497,7 +488,7 @@ class RagRpcServer:
         n = self.engine.delete_document(target)
         self.engine.optimize()
         self.neighbors.invalidate()
-        self._invalidate_hybrid()
+        self._hybrid.invalidate()
         return {
             "filePath": target,
             "deleted": True,
@@ -572,7 +563,7 @@ class RagRpcServer:
                 record["state"] = "failed"
             finally:
                 self.neighbors.invalidate()
-                self._invalidate_hybrid()
+                self._hybrid.invalidate()
                 self._write_guard.release()
 
         threading.Thread(target=_run, daemon=True).start()
@@ -689,7 +680,7 @@ class RagRpcServer:
                 # refresh the file index once and retry.
                 self.engine.spark.catalog.refreshByPath(self.engine.table_path)
                 self.neighbors.invalidate()
-                self._invalidate_hybrid()
+                self._hybrid.invalidate()
                 result = handler(params)
             if method == "sync_start":
                 holding = False  # guard handed to the sync worker thread

@@ -98,21 +98,23 @@ def parse_text_bytes(path: str, content: bytes) -> dict:
     raise ValueError(f"unsupported extension: {path}")
 
 
-PARSED_SCHEMA = StructType(
-    [
-        StructField("path", StringType()),
-        StructField("text", StringType()),
-        StructField("title", StringType()),
-        StructField("atomic_ranges", ArrayType(ArrayType(IntegerType()))),
-        StructField("parse_error", StringType()),
-    ]
-)
+# the columns the parse adds; the input's other columns pass through
+_PARSED_FIELDS = [
+    StructField("text", StringType()),
+    StructField("title", StringType()),
+    StructField("atomic_ranges", ArrayType(ArrayType(IntegerType()))),
+    StructField("parse_error", StringType()),
+]
 
 
 def parse_files(files: DataFrame) -> DataFrame:
-    """(path, content) -> (path, text, title, atomic_ranges, parse_error);
-    unparseable files carry the error instead of failing the job (coverage,
-    not crash)."""
+    """(path, content, *carried) -> (path, *carried, text, title,
+    atomic_ranges, parse_error); unparseable files carry the error instead
+    of failing the job (coverage, not crash). Every input column but
+    ``content`` passes through the same pass (a content hash, the file
+    length, a row id), so a caller never joins the parse back to its
+    input — that join scans the bytes a second time."""
+    names = [f.name for f in _PARSED_FIELDS]
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -121,13 +123,15 @@ def parse_files(files: DataFrame) -> DataFrame:
                 try:
                     parsed = parse_text_bytes(path, bytes(content))
                     rows.append(
-                        (path, parsed["text"], parsed["title"],
+                        (parsed["text"], parsed["title"],
                          parsed.get("atomic_ranges") or [], None)
                     )
                 except Exception as e:  # noqa: BLE001 — coverage fact, not crash
-                    rows.append((path, None, None, None, f"{type(e).__name__}: {e}"))
-            yield pd.DataFrame(
-                rows, columns=["path", "text", "title", "atomic_ranges", "parse_error"]
-            )
+                    rows.append((None, None, None, f"{type(e).__name__}: {e}"))
+            carried = pdf.drop(columns="content").reset_index(drop=True)
+            yield pd.concat([carried, pd.DataFrame(rows, columns=names)], axis=1)
 
-    return files.select("path", "content").mapInPandas(_parse, PARSED_SCHEMA)
+    schema = StructType(
+        [f for f in files.schema.fields if f.name != "content"] + _PARSED_FIELDS
+    )
+    return files.mapInPandas(_parse, schema)

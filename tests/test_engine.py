@@ -577,6 +577,46 @@ def test_sync_migrates_legacy_record_tables(spark, corpus, tmp_path):
     assert eng._record_containers() == {str(cont)}
 
 
+def test_case_folding_prunes_mixed_case_containers(spark, corpus, tmp_path, monkeypatch):
+    """On a case-folding platform, a gone shard's and a gone record
+    container's rows are deleted by their STORED spellings: the keys come
+    from the table itself, so folding only the table side of the match
+    would leave a mixed-case container's rows behind forever."""
+    import json
+    import os
+
+    from mcp_local_rag_spark import engine as engine_mod
+    from mcp_local_rag_spark.sources.webdataset import write_tar_shard
+
+    monkeypatch.setattr(engine_mod, "CASE_FOLD_KEYS", True)
+    body = (
+        "A paragraph of prose long enough to chunk, discussing bucketed "
+        "rewrites. Another sentence pads it comfortably past the gate.\n"
+    )
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    shard = drop / "Shard_A.tar"
+    shard.write_bytes(write_tar_shard([("a.md", ("# Alpha\n\n" + body).encode())]))
+    cont = tmp_path / "Records.jsonl"
+    cont.write_text(
+        "\n".join(json.dumps({"id": i, "text": f"Record {i}. {body}"}) for i in range(2))
+    )
+    eng = RagEngine(spark, str(tmp_path / "chunks_cf"))
+    eng.ingest_shards([str(shard)])
+    eng.ingest_records_file(str(cont))
+    stored = lambda: {r.filePath for r in eng.list_documents().collect()}  # noqa: E731
+    assert any(p.startswith(str(shard) + "#") for p in stored())
+    assert any(p.startswith(str(cont) + "#r") for p in stored())
+
+    shard.unlink()
+    cont.unlink()
+    assert eng.sync_shards(str(drop)).counters["prune"] == 1
+    assert eng.sync(str(corpus)).counters.get("prune", 0) == 2
+    left = stored()
+    assert not any("Shard_A" in p or "Records" in p for p in left)
+    assert {os.path.basename(p) for p in left} == {"alpha.md", "beta.txt"}
+
+
 def test_query_documents_batch_matches_single(spark, corpus, tmp_path):
     """The batched serving entry returns, per query, the same ranked rows
     as N separate query_documents calls (same limit, default settings)."""
@@ -714,7 +754,7 @@ def test_legacy_table_forward_migration(spark, tmp_path):
     )
     write_chunks(embed_text_column(rows, "text", "vector", dim=64), table)
 
-    eng = RagEngine(spark, table, postings_path=None)
+    eng = RagEngine(spark, table)
     docs = {r.filePath: r for r in eng.list_documents().collect()}
     assert len(docs) == 2
     assert all(r.fileTitle is None and r.contentHash is None for r in docs.values())
@@ -724,7 +764,7 @@ def test_legacy_table_forward_migration(spark, tmp_path):
     with_empty = spark.read.parquet(table).withColumn("fileTitle", F.lit("")).withColumn("contentHash", F.lit("abc"))
     table2 = str(tmp_path / "empty_title")
     write_chunks(with_empty, table2)
-    eng2 = RagEngine(spark, table2, postings_path=None)
+    eng2 = RagEngine(spark, table2)
     r = eng2.list_documents().first()
     assert r.fileTitle is None and r.contentHash == "abc"
 

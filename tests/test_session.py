@@ -179,3 +179,43 @@ def test_hybrid_search_batch_lane_collects_sorted_with_no_job(spark):
     assert rows == sorted(
         rows, key=lambda r: (r["query_id"], r["score"], r["chunkIndex"])
     )
+
+
+def test_ingest_directory_scans_and_parses_each_file_once(spark, wide_engine):
+    """Building plans.ingest.ingest_directory's chunks frame submits no
+    job, and its plan reads the files' bytes once per parse: the content
+    hash and the file length ride through the parse pass instead of being
+    joined back from a second binaryFile scan (that join made the plan
+    hold 4 scans for its 2 parses, and build_chunks' partition count
+    submitted a job to plan the join)."""
+    from mcp_local_rag_spark.plans.ingest import ingest_directory
+
+    docs = os.path.join(os.path.dirname(wide_engine.table_path), "docs")
+    built = []
+    assert _jobs(spark, lambda: built.append(ingest_directory(spark, docs))) == 0
+    chunks, _ = built[0]
+    executed = chunks._jdf.queryExecution().executedPlan().toString()
+    parses = executed.count("MapInPandas _parse")
+    assert parses > 0
+    assert executed.count("FileScan binaryFile") == parses
+
+
+def test_ingest_file_parses_its_file_once(spark, tmp_path):
+    """A one-note ingest_file reads and parses the note once: the parsed
+    row is persisted before the parse-error gate, and the title, the
+    chunk build and the write read it from there. Measured on 4 CPUs: 11
+    jobs into a new table and 13 into an existing one (delete included).
+    With the parse joined back to a second scan and re-run by each job,
+    the same calls took 15 and 17."""
+    eng = RagEngine(spark, str(tmp_path / "chunks"))
+    counts = []
+    for i in range(2):
+        note = tmp_path / f"note{i}.md"
+        note.write_text(
+            f"# Note {i}\n\nA one-note ingest with a full sentence of content"
+            f" number {i} that survives chunking comfortably.\n"
+        )
+        acks = []
+        counts.append(_jobs(spark, lambda: acks.append(eng.ingest_file(str(note)))))
+        assert acks[0]["chunkCount"] == 1 and acks[0]["fileTitle"] == f"Note {i}"
+    assert counts[0] <= 13 and counts[1] <= 13, counts
